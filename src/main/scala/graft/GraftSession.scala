@@ -11,8 +11,28 @@ import org.apache.spark.sql.SparkSession
   * time zone is pinned to UTC — the reference stamps UTC at ingest
   * (`/root/reference/src/collector/main.py:90`) and the DuckDB oracle
   * compares in UTC.
+  *
+  * Generated-code cache: [[configure]] sizes Spark's codegen class
+  * cache to [[CodegenCacheEntries]]. That conf is STATIC — it is read
+  * once per JVM, when the first class is generated — so only sessions
+  * built through [[configure]] ([[local]], `Bench`, `Verify`) get it.
+  * An externally created session that is only [[prepare]]d keeps
+  * Spark's default of 100 entries and recompiles its working set.
   */
 object GraftSession {
+
+  /** Entries of Spark's generated-class cache
+    * (`spark.sql.codegen.cache.maxEntries`, default 100). At 100
+    * entries the classes of one medallion tick are evicted before the
+    * next tick uses them again: a non-empty tick ran about 80 Janino
+    * compiles (4 at this size) and the JIT warmed the fresh classes
+    * again. One pass over every declared query at sf0.01 generates
+    * about 2700 distinct classes; 4096 is the smallest power of two
+    * above that working set. A retained class costs about 25 KB of
+    * heap, so a session that runs every query holds at most about
+    * 100 MB.
+    */
+  val CodegenCacheEntries = 4096
 
   /** Engine configuration applied to every session (batch, bench,
     * verify, tests). Kept in one place so all entry points agree.
@@ -44,6 +64,8 @@ object GraftSession {
     // under the pinned UTC session.
     .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
     .config("spark.ui.enabled", "false")
+    .config("spark.sql.codegen.cache.maxEntries",
+      CodegenCacheEntries.toString)
 
   def local(cores: Int = 32): SparkSession = {
     val spark = configure(
@@ -56,7 +78,9 @@ object GraftSession {
   }
 
   /** Apply the dynamic subset of the engine confs to an
-    * externally-created session (the driver's Verify/Bench sessions).
+    * externally-created session, such as the one `SparkEntry` is handed.
+    * Static confs — the codegen cache size among them — cannot be set
+    * on a running session; see the object doc.
     */
   def prepare(spark: SparkSession): SparkSession = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")

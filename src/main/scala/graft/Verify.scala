@@ -1,8 +1,10 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+import scala.util.control.NonFatal
+/** Correctness dump: each SparkEntry.queries result → parquet, plus
+  * oracle_sql.json, for the DuckDB compare. A query that fails does not
+  * stop the others from being written, but the run then exits non-zero
+  * and names every failed query. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
@@ -10,27 +12,25 @@ object Verify {
     val only = args.lift(2).map(_.split(",").map(_.trim).toSet)
     def keep(name: String) = only.forall(_.contains(name))
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftSession.prepare(spark)
+    val spark = GraftSession.prepare(GraftSession.local(cpus.toInt))
     new java.io.File(outDir).mkdirs()
     // SPARK_GRAFT_SQL_ONLY=1: dump only oracle_sql.json (the DuckDB
     // replay side of tools/bench_medians.py needs the SQLs without
     // paying a full result-dump pass)
     val sqlOnly = sys.env.get("SPARK_GRAFT_SQL_ONLY").contains("1")
-    SparkEntry.queries.foreach { case (name, fn) =>
-      if (!sqlOnly && keep(name)) {
-        try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
-        catch { case e: Throwable =>
-          System.err.println(s"[verify] $name failed: ${e.getMessage}")
+    // a fatal JVM error (OOM) ends the run: the remaining outputs of a
+    // damaged JVM are not worth writing
+    val failed = SparkEntry.queries.toSeq.flatMap {
+      case (name, fn) if !sqlOnly && keep(name) =>
+        try {
+          fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+            .parquet(s"$outDir/$name")
+          None
+        } catch { case NonFatal(e) =>
+          System.err.println(s"[verify] $name failed: $e")
+          Some(name)
         }
-      }
+      case _ => None
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
@@ -48,5 +48,10 @@ object Verify {
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(s"[verify] ${failed.size} queries FAILED: " +
+        failed.mkString(", "))
+      sys.exit(1)
+    }
   }
 }

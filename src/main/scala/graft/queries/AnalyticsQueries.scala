@@ -1010,21 +1010,26 @@ object AnalyticsQueries {
     * gathers each group; at 100 TB swap in `approx_percentile` — the
     * exact form is what a serial oracle can replay.)
     */
-  /** Exact percentile interpolation on a SORTED array — Spark's own
-    * `percentile` formula (`lower + (higher − lower) · frac`,
-    * ULP-probed in r22: the probe value matches this lerp form
-    * bit-for-bit and differs from the `lo·(1−f) + hi·f` convex form),
-    * so array-side medians are bit-identical to the aggregate's.
+  /** Exact median of a SORTED array in Spark's own `percentile`
+    * arithmetic (`PercentileBase.getPercentile`, Spark 4.1): the key
+    * itself when both middle keys are equal, else the convex form
+    * `(hi − pos)·lower + (pos − lo)·higher`. The convex form never
+    * overflows on a wide mixed-sign middle pair (`lower + (higher −
+    * lower)·frac` does) and rounds like the aggregate, so array-side
+    * medians are bit-identical to `percentile(x, 0.5)`.
     */
-  private def medianOfSorted(arr: Column): Column = {
+  private[graft] def medianOfSorted(arr: Column): Column = {
     val pos = (size(arr).cast("double") - lit(1.0)) * lit(0.5)
     val lo = floor(pos)
+    val hi = ceil(pos)
     val vLo = element_at(arr, lo.cast("int") + 1)
-    val vHi = element_at(arr, ceil(pos).cast("int") + 1)
+    val vHi = element_at(arr, hi.cast("int") + 1)
     // all-null group ⇒ empty gather: yield NULL like the percentile
     // aggregate (the when-guard also keeps ANSI element_at off the
     // empty array)
-    when(size(arr) > 0, vLo + (vHi - vLo) * (pos - lo))
+    when(size(arr) === 0, lit(null).cast("double"))
+      .when(vLo === vHi, vLo)
+      .otherwise((hi - pos) * vLo + (pos - lo) * vHi)
   }
 
   def outlierMad(spark: SparkSession, dir: String): DataFrame = {

@@ -5,13 +5,7 @@ import org.apache.spark.sql.functions._
 /** Scratch profiling main (dev tool). */
 object Prof {
   def main(args: Array[String]): Unit = {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.GraftSession.prepare(spark)
+    val spark = graft.GraftSession.prepare(graft.GraftSession.local(32))
     val dir = "/root/testdata/sf0.1"
     println("===== AFTER (sessionize full incl. sized compaction) =====")
     graft.queries.PipelineQueries.defs("streaming_sessionize")(spark, dir)

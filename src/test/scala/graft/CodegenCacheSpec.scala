@@ -1,0 +1,49 @@
+package graft
+
+import java.nio.file.Files
+
+import org.apache.spark.metrics.source.CodegenMetrics
+
+import graft.pipeline.Medallion
+
+/** Spark's generated-class cache holds the engine's working set, so
+  * re-running the same plans costs their data work and no compiles.
+  */
+class CodegenCacheSpec extends SparkSpec {
+
+  /** Janino compiles in this JVM so far (one per cache miss). */
+  private def compiles: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
+  /** Declared queries with no literal baked into their generated code
+    * that changes between runs. Together they generate about 260
+    * distinct classes at sf0.001, well past Spark's default cache of
+    * 100, so at that size the second pass recompiles every one.
+    */
+  private val Warm = Seq("set_ops", "graph_triangles", "assign_dense_ids",
+    "select_token_budget", "profile_inclusion", "approx_distinct",
+    "binning_equidepth", "drift_ks", "outlier_mad")
+
+  private def runWarm(): Unit = Warm.foreach { q =>
+    SparkEntry.queries(q)(spark, sf).write.format("noop").mode("overwrite").save()
+  }
+
+  test("GraftSession.local sessions carry the codegen cache size") {
+    assert(spark.conf.get("spark.sql.codegen.cache.maxEntries") ===
+      GraftSession.CodegenCacheEntries.toString)
+  }
+
+  test("a warm re-run compiles nothing") {
+    val root = Files.createTempDirectory("graft-codegen-cache").toString
+    // build, then two no-op runs: the high-watermark literals baked
+    // into the generated code change until the second one
+    (1 to 3).foreach(_ => Medallion.run(spark, sf, root))
+    runWarm()
+    val c0 = compiles
+    runWarm()
+    assert(compiles - c0 === 0, s"warm re-run of ${Warm.mkString(", ")}")
+    // the queries above ran between the two no-op runs
+    val c1 = compiles
+    Medallion.run(spark, sf, root)
+    assert(compiles - c1 === 0, "no-new-data medallion re-run")
+  }
+}

@@ -72,4 +72,47 @@ object QuantilePropertySpec extends Properties("graft.quantiles") {
         }.toMap
       got == want
     }
+
+  /** A group whose two middle values (after sorting) are the pair
+    * (a, b), mixed-sign and up to ±MaxValue wide, or equal: the rest
+    * are infinities outside them, so the median depends only on the
+    * pair. Odd-sized groups add one value between the pair. */
+  private val wide: Gen[Double] = Gen.frequency(
+    3 -> Gen.choose(-1e6, 1e6),
+    2 -> Gen.choose(1e300, Double.MaxValue),
+    2 -> Gen.choose(Double.MinValue, -1e300),
+    1 -> Gen.choose(-1e-300, 1e-300),
+    1 -> Gen.oneOf(4.9e-324, -4.9e-324, 1e-310, -1e-310))
+  private val medianGroup: Gen[Seq[Double]] = for {
+    a <- wide
+    b <- Gen.frequency(4 -> wide, 1 -> Gen.const(a), 1 -> Gen.const(-a))
+    odd <- Gen.oneOf(false, true)
+    side <- Gen.choose(0, 3)
+  } yield {
+    val (lo, hi) = (math.min(a, b), math.max(a, b))
+    val mids = if (odd) Seq(lo, lo / 2 + hi / 2, hi) else Seq(lo, hi)
+    Seq.fill(side)(Double.NegativeInfinity) ++ mids ++
+      Seq.fill(side)(Double.PositiveInfinity)
+  }
+
+  property("array median matches the percentile aggregate bit for bit") =
+    Prop.forAll(Gen.listOfN(12, medianGroup)) { groups =>
+      import spark.implicits._
+      // a fixed pair whose difference overflows: lo + (hi − lo)·½ is
+      // +Inf, Spark's convex form is 0
+      val all = Seq(-1.5e308, 1.5e308) +: groups
+      // signed zeros compare equal, so which of -0.0 and 0.0 is the
+      // middle key depends on arrival order on both sides: left out of
+      // a bit-level compare
+      val df = all.zipWithIndex
+        .flatMap { case (vs, g) => vs.filterNot(_ == 0.0).map(g -> _) }
+        .toDF("g", "v")
+      df.groupBy("g")
+        .agg(expr("percentile(v, 0.5)").as("p"),
+          graft.queries.AnalyticsQueries.medianOfSorted(
+            sort_array(collect_list(col("v")))).as("m"))
+        .collect()
+        .forall(r => java.lang.Double.doubleToLongBits(r.getDouble(1)) ==
+          java.lang.Double.doubleToLongBits(r.getDouble(2)))
+    }
 }

@@ -19,7 +19,7 @@ class RobustStatsSpec extends SparkSpec {
   test("outlier_mad one-pass array form equals the 3-pass percentile twin") {
     // the r22 rewrite gathers each group once and derives med/MAD/
     // outliers from the sorted array; medianOfSorted replicates
-    // Spark's percentile lerp bit-for-bit (ULP-probed), so the full
+    // Spark's percentile arithmetic bit-for-bit, so the full
     // rows — including the UNROUNDED med/mad feeding n_outliers —
     // must match the 3-pass twin exactly
     val a = graft.queries.AnalyticsQueries.defs("outlier_mad")(spark, sf)
@@ -191,6 +191,39 @@ class RobustStatsSpec extends SparkSpec {
         sliceCap = 100, aggCap = 50)
     }
     assert(inverted.getMessage.contains("aggCap"), inverted.getMessage)
+  }
+
+  test("grouped quantiles: the fetch window is per session, so two sessions do not serialize") {
+    // fetchHist raises a SESSION conf around its blocking take; the
+    // window is serialized per session, so holding one session's lock
+    // (as a long fetch would) must not stall a fetch on another
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    val other = GraftSession.prepare(spark.newSession())
+    val lock = graft.ext.Quantiles.fetchConfLock(spark)
+    assert(lock eq graft.ext.Quantiles.fetchConfLock(spark))
+    assert(lock ne graft.ext.Quantiles.fetchConfLock(other))
+    val held, release = new CountDownLatch(1)
+    val holder = new Thread(() => lock.synchronized {
+      held.countDown(); release.await()
+    })
+    holder.start()
+    try {
+      assert(held.await(30, TimeUnit.SECONDS))
+      val df = other.range(1, 41).selectExpr("cast(id % 2 as string) as g",
+        "cast(id as double) as v")
+      val got = new java.util.concurrent.atomic.AtomicReference[
+        Map[String, Double]]()
+      val fetch = new Thread(() => got.set(graft.ext.Quantiles
+        .groupedExact(df, "g", "v", Seq(0.5))
+        .map { case (g, _, vs) => (g, vs.head.get) }.toMap))
+      fetch.start()
+      fetch.join(TimeUnit.MINUTES.toMillis(2))
+      assert(!fetch.isAlive, "a fetch on another session waited on this session's lock")
+      assert(got.get == Map("0" -> 21.0, "1" -> 20.0), got.get)
+    } finally {
+      release.countDown()
+      holder.join()
+    }
   }
 
   test("graft_sortable_bits is order-isomorphic to Double.compare on the edge doubles") {
