@@ -109,7 +109,7 @@ object MergeWriter {
     val incoming = updates.withColumn("_src", lit(1))
     val unioned =
       if (!exists(spark, dir)) incoming
-      else spark.read.parquet(dir).withColumn("_src", lit(0))
+      else graft.Tables.parquet(spark, dir).withColumn("_src", lit(0))
         .unionByName(incoming, allowMissingColumns = true)
     val merged = LatestPerKey(unioned, keys, versionCols :+ "_src").drop("_src")
     swapWrite(spark, dir, merged)
@@ -131,39 +131,53 @@ object MergeWriter {
     * the target with the crash-recoverable rename dance of
     * [[swapWrite]]. No dynamic-partition-overwrite second write, no
     * session-wide conf mutation.
-    */
-  /** @param filesPerPartition write fan-out per partition dir. The
+    *
+    * @param filesPerPartition write fan-out per partition dir. The
     *        default (1) co-locates each `partCol` value into ONE task
     *        and one file — right for day-sized partitions. At 100 TB a
     *        HOT day is bigger than any single task should be: raise it
     *        and each partition's rows spread over `filesPerPartition`
     *        tasks/files, salted by the merge keys (key-disjoint, so
     *        latest-per-key is unaffected).
+    * @param touched the `partCol` values of `updates`, when the caller
+    *        already knows them: the merge then reads `updates` once and
+    *        skips its own checkpoint and distinct collect. It MUST hold
+    *        every value `updates` carries — a partition missing from it
+    *        would be swapped in without its existing rows. Extra values
+    *        only rewrite those partitions unchanged. Ignored when the
+    *        target does not exist yet.
+    * @return the partition values the merge touched: `Some(values)`
+    *         for a merge into an existing table (empty when `updates`
+    *         is, and nothing was written), `None` for the first build
+    *         of a table, which writes every partition `updates` has.
     */
   def upsertPartitioned(spark: SparkSession, dir: String, updates: DataFrame,
       keys: Seq[String], versionCols: Seq[String], partCol: String,
-      filesPerPartition: Int = 1): Unit = {
+      filesPerPartition: Int = 1,
+      touched: Option[Seq[Any]] = None): Option[Seq[Any]] = {
     spark.catalog.refreshByPath(dir)
     val fresh = !exists(spark, dir)
-    // the non-fresh path reads `updates` twice (touched-partition values,
-    // then the merge itself) — materialize the batch once so an expensive
-    // upstream plan (at 100 TB: a filtered source scan) runs once, not
-    // twice; localCheckpoint spills per-partition blocks, no driver heap
-    val inc0 = if (fresh) updates else updates.localCheckpoint()
+    // without `touched`, the non-fresh path reads `updates` twice
+    // (touched-partition values, then the merge itself) — materialize
+    // the batch once so an expensive upstream plan (at 100 TB: a
+    // filtered source scan) runs once, not twice; localCheckpoint
+    // spills per-partition blocks, no driver heap
+    val inc0 =
+      if (fresh || touched.isDefined) updates else updates.localCheckpoint()
     val incoming = inc0.withColumn("_src", lit(1))
     // driver-side touched-partition values (bounded by |partitions|,
     // metadata-sized): an isin filter partition-PRUNES the target
     // scan — only touched dirs are listed into the plan, no join,
     // no exchange (vs a broadcast semi join, which still scans the
     // full partition listing through the probe side)
-    val touched =
+    val parts =
       if (fresh) None
-      else Some(boundedPartitionValues(inc0, partCol))
+      else touched.orElse(Some(boundedPartitionValues(inc0, partCol)))
     // an empty update set touches no partitions: the merge is a true
     // no-op (no empty temp write, no swap loop, no listing refresh) —
     // the cheap idle path an incremental pipeline replays constantly
-    if (touched.exists(_.isEmpty)) return
-    val unioned = touched match {
+    if (parts.exists(_.isEmpty)) return parts
+    val unioned = parts match {
       case None => incoming
       case Some(vals) =>
         // a NULL partition value needs its own predicate: isInCollection
@@ -177,7 +191,7 @@ object MergeWriter {
           if (nonNull.size == vals.size) col(partCol).isInCollection(nonNull)
           else if (nonNull.isEmpty) col(partCol).isNull
           else col(partCol).isInCollection(nonNull) || col(partCol).isNull
-        val target = spark.read.parquet(dir)
+        val target = graft.Tables.parquet(spark, dir)
         // a target written WITHOUT the partition layout (a legacy
         // unpartitioned table handed to the partitioned merge) must
         // fail with the actual problem, not an unresolved-column error
@@ -203,7 +217,7 @@ object MergeWriter {
         // AQE coalesce small outputs back into one task, silently
         // undoing the fan-out. Pinned to touched-dirs × fan-out (fresh
         // bulk loads fall back to the session shuffle setting).
-        val n = touched.map(_.size * filesPerPartition)
+        val n = parts.map(_.size * filesPerPartition)
           .getOrElse(ShuffleWidth.session(spark).toInt)
           .max(filesPerPartition)
         merged0.repartition(n, col(partCol),
@@ -226,7 +240,7 @@ object MergeWriter {
       val f = fs(spark, dst)
       val wroteData = f.listStatus(dst)
         .exists(s => s.isDirectory && s.getPath.getName.startsWith(partCol + "="))
-      if (!wroteData) { f.delete(dst, true); return }
+      if (!wroteData) { f.delete(dst, true); return None }
     } else {
       val tmp = new Path(dir + ".merge.tmp-" +
         java.util.UUID.randomUUID().toString.take(8))
@@ -240,6 +254,7 @@ object MergeWriter {
       f.delete(tmp, true)
     }
     spark.catalog.refreshByPath(dir)
+    parts
   }
 
   /** Small-file compaction: rewrite the parquet table at `dir` into
@@ -288,7 +303,7 @@ object MergeWriter {
       targetFileBytes: Long, hiddenStaging: Boolean): Unit = {
     val bytes = fs(spark, dst).getContentSummary(dst).getLength
     val n = math.max(1L, (bytes + targetFileBytes - 1) / targetFileBytes).toInt
-    val df = spark.read.parquet(dst.toString).repartition(n)
+    val df = graft.Tables.parquet(spark, dst.toString).repartition(n)
     if (!hiddenStaging) swapWrite(spark, dst.toString, df)
     else {
       val tmp = new Path(dst.getParent, "." + dst.getName + ".tmp-" +

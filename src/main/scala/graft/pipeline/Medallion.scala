@@ -1,10 +1,10 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.operators.{DailyRollup, Incremental, LatestPerKey, MergeWriter, StageExtract}
+import graft.operators.{DailyRollup, MergeWriter, StageExtract}
 import graft.quality.Checks
 
 /** The full medallion pipeline as an ordered layer DAG — the engine's
@@ -60,35 +60,46 @@ object Medallion {
     val stgWm: Option[Long] =
       if (!MergeWriter.exists(spark, stgDir)) None
       else MergeWriter.maxDayPartition(spark, stgDir, "day").flatMap { d =>
-        val r = spark.read.parquet(stgDir)
+        val r = Tables.parquet(spark, stgDir)
           .filter(col("day") === lit(d))
           .agg(max(unix_micros(col("ts")))).head()
         if (r.isNullAt(0)) None else Some(r.getLong(0))
       }
-    // observe: per-layer row metrics surface on the QueryExecution
-    // listener bus without a second scan (SURVEY A4's affected-row
-    // counts, done the Spark way). The watermark predicate sits on the
-    // bare bronze ts column → parquet row-group stats skip
-    // already-landed files (F2 semantics — strict `>`, COALESCE-on-
-    // empty preserved by the None branch admitting every row).
+    // The watermark predicate sits on the bare bronze ts column →
+    // parquet row-group stats skip already-landed files (F2 semantics —
+    // strict `>`, COALESCE-on-empty preserved by the None branch
+    // admitting every row).
     val stgInc = stgWm match {
       case None => bronze
       case Some(v) => bronze.filter(col("ts") > timestamp_micros(lit(v)))
     }
-    val stg = stgInc
+    val stgRows = stgInc
       .select(col("event_id"), col("ts"), col("user_id"), col("event_type"),
         col("value"),
         StageExtract.jsonField(col("props"), "$.k").cast("int").as("k"))
       .withColumn("day", to_date(col("ts")))
-      .observe("stg_metrics", count(lit(1)).as("rows_in"),
-        count(when(col("k").isNull, 1)).as("null_k"))
-    MergeWriter.upsertPartitioned(spark, stgDir, stg,
+    // observe: per-layer row metrics surface on the QueryExecution
+    // listener bus without a second scan (SURVEY A4's affected-row
+    // counts, done the Spark way), and the batch's max ts rides the
+    // same pass: it gives every downstream layer its stats below
+    val stgObs = Observation("stg_metrics")
+    val stg = stgRows.observe(stgObs, count(lit(1)).as("rows_in"),
+      count(when(col("k").isNull, 1)).as("null_k"),
+      max(unix_micros(col("ts"))).as("max_ts"))
+    // the merge always runs the batch once (the fresh write, or the
+    // touched-partition checkpoint), so the observation completes
+    val stgTouched = MergeWriter.upsertPartitioned(spark, stgDir, stg,
       keys = Seq("event_id"), versionCols = Seq("ts"), partCol = "day")
+    // max ts of stg after the merge: stg only grows by merges whose
+    // rows lie above stgWm, and a merge replaces a row only by one with
+    // a later ts, so the max is the larger of the two
+    val stgMax: Option[Long] =
+      (stgWm ++ stgObs.get.get("max_ts").collect { case v: Long => v }).maxOption
     // an empty-source FIRST build materializes nothing (the fresh-empty
     // merge is a deliberate no-write); downstream sees a typed empty
     val stgOut =
-      if (MergeWriter.exists(spark, stgDir)) spark.read.parquet(stgDir)
-      else stg.limit(0)
+      if (MergeWriter.exists(spark, stgDir)) Tables.parquet(spark, stgDir)
+      else stgRows.limit(0)
 
     // Downstream layers scope incrementally from stg rows above their
     // OWN durable watermark (a 1-row sidecar recording the max stg ts
@@ -102,6 +113,9 @@ object Medallion {
     // keyed merges are idempotent). A missing sidecar (first build, or
     // crash before the first write) scopes to the full stg table —
     // self-healing by construction.
+    // A layer's stats need no scan of its own: its pending rows are the
+    // stg rows above its watermark, so it has some iff stgMax is above
+    // the watermark, and their max — its new watermark — is stgMax.
     // A sidecar that exists but holds no usable watermark (torn or
     // unparseable — a partial/corrupt write) degrades to the same
     // self-healing full rebuild as a missing sidecar, never an NPE.
@@ -159,45 +173,31 @@ object Medallion {
         .filter(col("ts") > timestamp_micros(lit(v)))
     }
 
+    // a layer with no watermark (first build, lost or torn sidecar)
+    // rebuilds unconditionally; one with a watermark merges only when
+    // stg holds rows above it
+    def stale(wm: Option[Long]): Boolean =
+      wm.forall(w => stgMax.exists(_ > w))
+
     // int: latest state per key, merged on the key (20-row dimension
     // in the reference; |users| here). Incremental scope: latest-per-
     // key is DECOMPOSABLE — latest(history ∪ batch) = latest(latest
     // (history), latest(batch)) under the same total order — and the
     // keyed upsert's own LatestPerKey merge on (ts, event_id) computes
-    // exactly that outer step against the target's existing row. So an
-    // incremental run reduces ONLY the pending rows and never rejoins
-    // or rescans stg history: per-batch cost ∝ batch. (An earlier
-    // shape semi-joined stg back to the pending users — O(|stg|) scan
-    // + shuffle per batch, superlinear in corpus on the steady state.)
+    // exactly that against the target's existing rows, reducing the
+    // pending rows in the same aggregation. So an incremental run
+    // reduces ONLY the pending rows and never rejoins or rescans stg
+    // history: per-batch cost ∝ batch. (An earlier shape semi-joined
+    // stg back to the pending users — O(|stg|) scan + shuffle per
+    // batch, superlinear in corpus on the steady state.)
     val intDir = s"$root/int_latest"
     val intWmDir = s"$root/int_latest_wm"
     val intWm = if (!MergeWriter.exists(spark, intDir)) None
       else layerWm(intWmDir)
-    if (intWm.isEmpty) {
-      // FIRST build: the merge runs unconditionally, and the pending
-      // stat is only needed for the sidecar — so its max(ts) rides the
-      // merge write itself as an `observe` metric (rows flow through
-      // the observation node on the way into LatestPerKey) instead of
-      // paying a dedicated full stg scan before the merge. Incremental
-      // runs keep the pre-merge head(): it GATES the merge (empty
-      // pending = no write at all) and its watermark predicate is
-      // row-group-pruned, so it costs ∝ batch, not ∝ corpus.
-      val obs = org.apache.spark.sql.Observation()
-      val src = stgOut.observe(obs, max(unix_micros(col("ts"))).as("m"))
-      MergeWriter.upsert(spark, intDir,
-        LatestPerKey(src, Seq("user_id"), Seq("ts", "event_id")),
+    if (stale(intWm)) {
+      MergeWriter.upsert(spark, intDir, pendingFor(intWm),
         keys = Seq("user_id"), versionCols = Seq("ts", "event_id"))
-      obs.get.get("m").collect { case v: Long => writeLayerWm(intWmDir, v) }
-    } else {
-      val intPending = pendingFor(intWm)
-      val intStat = intPending
-        .agg(max(unix_micros(col("ts"))).as("m"), count(lit(1)).as("n")).head()
-      if (intStat.getLong(1) > 0) {
-        MergeWriter.upsert(spark, intDir,
-          LatestPerKey(intPending, Seq("user_id"), Seq("ts", "event_id")),
-          keys = Seq("user_id"), versionCols = Seq("ts", "event_id"))
-        if (!intStat.isNullAt(0)) writeLayerWm(intWmDir, intStat.getLong(0))
-      }
+      stgMax.foreach(writeLayerWm(intWmDir, _))
     }
 
     // dwh: daily mart merged on the surrogate key, PARTITIONED by day —
@@ -213,61 +213,43 @@ object Medallion {
     val dwhWmDir = s"$root/${cfg.schema}_daily_wm"
     val dwhWm = if (!MergeWriter.exists(spark, dwhDir)) None
       else layerWm(dwhWmDir)
-    if (dwhWm.isEmpty) {
-      // FIRST build: same observe-instead-of-scan shape as the int
-      // layer — the rollup consumes stgOut anyway, so the sidecar's
-      // max(ts) rides its write action for free.
-      val obs = org.apache.spark.sql.Observation()
-      val src = stgOut.observe(obs, max(unix_micros(col("ts"))).as("m"))
-      val daily = DailyRollup(src, key = "user_id", tsCol = "ts",
+    def rollup(src: DataFrame): DataFrame =
+      DailyRollup(src, key = "user_id", tsCol = "ts",
         metrics = Seq(
           round(avg(col("value")), 4).as("avg_value"),
           max(col("value")).as("max_value"),
           min(col("value")).as("min_value"),
           count(lit(1)).as("n_events")))
-      MergeWriter.upsertPartitioned(spark, dwhDir, daily,
-        keys = Seq("user_id_date"), versionCols = Seq("n_events"),
-        partCol = "day")
-      obs.get.get("m").collect { case v: Long => writeLayerWm(dwhWmDir, v) }
-    } else {
-      val dwhPending = pendingFor(dwhWm)
-      val dwhStat = dwhPending
-        .agg(max(unix_micros(col("ts"))).as("m"), count(lit(1)).as("n")).head()
-      if (dwhStat.getLong(1) > 0) {
-        // driver-side day values: bounded by the CALENDAR (one value
-        // per day carrying unincorporated rows — with in-order
-        // arrival, the days of this batch), never by data volume.
-        // The cap turns a mis-keyed source (e.g. a per-row value
-        // leaking into the day column) into a loud failure instead
-        // of a driver OOM. `day` is stg's PARTITION column, so the
-        // distinct is metadata-cheap and the isin filter prunes at
-        // the directory-listing layer — untouched days never enter
-        // the plan.
-        val touchedDays = MergeWriter.boundedPartitionValues(
-            dwhPending.select(col("day")), "day")
-        val dailySrc = stgOut.filter(col("day").isInCollection(touchedDays))
-        val daily = DailyRollup(dailySrc, key = "user_id", tsCol = "ts",
-          metrics = Seq(
-            round(avg(col("value")), 4).as("avg_value"),
-            max(col("value")).as("max_value"),
-            min(col("value")).as("min_value"),
-            count(lit(1)).as("n_events")))
-        MergeWriter.upsertPartitioned(spark, dwhDir, daily,
-          keys = Seq("user_id_date"), versionCols = Seq("n_events"),
-          partCol = "day")
-        if (!dwhStat.isNullAt(0)) writeLayerWm(dwhWmDir, dwhStat.getLong(0))
+    if (stale(dwhWm)) {
+      // the days carrying unincorporated rows. When dwh is level with
+      // stg's pre-merge watermark, its pending rows are exactly this
+      // run's stg batch, whose days the stg merge already returned.
+      // Otherwise (a lagging dwh after a crash) they are collected:
+      // driver-side day values, bounded by the CALENDAR (one value per
+      // day carrying unincorporated rows), never by data volume. The
+      // cap turns a mis-keyed source (e.g. a per-row value leaking into
+      // the day column) into a loud failure instead of a driver OOM.
+      // `day` is stg's PARTITION column, so the distinct is
+      // metadata-cheap and the isin filter prunes at the
+      // directory-listing layer — untouched days never enter the plan.
+      // A FIRST build (no watermark) rolls up all of stg.
+      val touchedDays: Option[Seq[Any]] = dwhWm.flatMap { _ =>
+        if (dwhWm == stgWm) stgTouched
+        else Some(MergeWriter.boundedPartitionValues(
+          pendingFor(dwhWm).select(col("day")), "day"))
       }
+      val dailySrc = touchedDays.fold(stgOut)(days =>
+        stgOut.filter(col("day").isInCollection(days)))
+      MergeWriter.upsertPartitioned(spark, dwhDir, rollup(dailySrc),
+        keys = Seq("user_id_date"), versionCols = Seq("n_events"),
+        partCol = "day", touched = touchedDays)
+      stgMax.foreach(writeLayerWm(dwhWmDir, _))
     }
     // schema-bearing empty when the empty-source first build wrote
     // nothing (mirrors the stgOut guard)
     val dwhOut =
-      if (MergeWriter.exists(spark, dwhDir)) spark.read.parquet(dwhDir)
-      else DailyRollup(stgOut.limit(0), key = "user_id", tsCol = "ts",
-        metrics = Seq(
-          round(avg(col("value")), 4).as("avg_value"),
-          max(col("value")).as("max_value"),
-          min(col("value")).as("min_value"),
-          count(lit(1)).as("n_events")))
+      if (MergeWriter.exists(spark, dwhDir)) Tables.parquet(spark, dwhDir)
+      else rollup(stgOut.limit(0))
 
     // Post-build quality gate (SURVEY §2.10 applied to own layers),
     // SCOPED to what this run could have changed: partitions untouched

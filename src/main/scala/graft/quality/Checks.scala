@@ -91,15 +91,17 @@ object Checks {
     * only (dbt `warn` behavior — the pipeline proceeds).
     */
   def enforce(checks: Seq[DataFrame]): DataFrame = {
-    // tiny (one row per check); materialized so the error scan and the
-    // returned report share one computation without a lingering cache
-    val report = summary(checks).localCheckpoint()
-    val bad = report
-      .filter(col("violations") > 0 && col("severity") === Error).collect()
+    // tiny (one row per check): ONE collect runs every check, and the
+    // error scan, the ordering and the returned report work on the
+    // collected rows — no checkpoint, no range-sampling sort job
+    val all = checks.reduce(_ unionByName _)
+    val rows = all.collect().sortBy(_.getString(0))
+    val bad = rows.filter(r => r.getLong(1) > 0 && r.getString(2) == Error)
     if (bad.nonEmpty)
       throw new AssertionError(
         "quality checks failed: " +
           bad.map(r => s"${r.getString(0)}=${r.getLong(1)}").mkString(", "))
-    report
+    all.sparkSession.createDataFrame(
+      java.util.Arrays.asList(rows: _*), all.schema)
   }
 }

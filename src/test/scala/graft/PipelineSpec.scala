@@ -61,6 +61,67 @@ class PipelineSpec extends SparkSpec {
       "recovered stg row never reached the daily mart")
   }
 
+  test("medallion converges after a crash between a layer's swap and its watermark write") {
+    val landing = Files.createTempDirectory("graft-medallion-sidecar")
+    val events = s"$landing/events.parquet"
+    val root = landing.resolve("mat").toString
+    val all = Tables.events(spark, sf)
+    def land(from: String, until: String): Unit =
+      all.filter(col("ts") >= lit(from).cast("timestamp") &&
+          col("ts") < lit(until).cast("timestamp"))
+        .write.mode("append").parquet(events)
+    val hfs = new org.apache.hadoop.fs.Path(root)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def path(rel: String) = new org.apache.hadoop.fs.Path(s"$root/$rel")
+    def sidecar(layer: String) = s"${layer}_wm"
+    // through Hadoop's FS, which keeps the checksum files current
+    def rewind(layer: String, body: Array[Byte]): Unit = {
+      val out = hfs.create(path(sidecar(layer)), true)
+      try out.write(body) finally out.close()
+    }
+    val dwh = s"${graft.Config().schema}_daily"
+    def assertOneShot(what: String): Unit = {
+      val oneShot = landing.resolve(s"oneshot-$what").toString
+      Medallion.run(spark, landing.toString, oneShot)
+      for (layer <- Seq(dwh, "int_latest")) {
+        val got = spark.read.parquet(s"$root/$layer").collect().toSeq
+        val want = spark.read.parquet(s"$oneShot/$layer").collect().toSeq
+        assert(got.diff(want).isEmpty && want.diff(got).isEmpty,
+          s"$what: $layer differs from a one-shot build: " +
+            s"${got.diff(want).size} rows only incremental, e.g. ${got.diff(want).take(3)}; " +
+            s"${want.diff(got).size} rows only one-shot, e.g. ${want.diff(got).take(3)}")
+      }
+    }
+
+    land("2000-01-01", "2024-01-20 12:00:00")
+    Medallion.run(spark, landing.toString, root)
+    val older = Seq("int_latest", dwh).map(l =>
+      l -> Files.readAllBytes(java.nio.file.Paths.get(root, sidecar(l)))).toMap
+    org.apache.hadoop.fs.FileUtil.copy(hfs, path("int_latest"), hfs,
+      path("int_latest.before"), false, spark.sparkContext.hadoopConfiguration)
+    land("2024-01-20 12:00:00", "2024-01-25 12:00:00")
+    Medallion.run(spark, landing.toString, root)
+
+    // dwh's swap loop died after the boundary day and before the last
+    // full day, so its sidecar still holds the older watermark; the
+    // recovering run also lands a new slice, so dwh's pending days
+    // span two slices
+    assert(hfs.delete(path(s"$dwh/day=2024-01-24"), true))
+    rewind(dwh, older(dwh))
+    land("2024-01-25 12:00:00", "2100-01-01")
+    Medallion.run(spark, landing.toString, root)
+    assertOneShot("dwh")
+
+    // int swaps in one rename: the crash left it as it was before both
+    // slices, with the older sidecar. The next run brings nothing new,
+    // so stg's own increment is empty.
+    assert(hfs.delete(path("int_latest"), true))
+    assert(hfs.rename(path("int_latest.before"), path("int_latest")))
+    rewind("int_latest", older("int_latest"))
+    Medallion.run(spark, landing.toString, root)
+    assertOneShot("int")
+  }
+
   test("medallion: empty-source first build materializes nothing, then self-heals") {
     val emptyDir = Files.createTempDirectory("graft-empty-src").toString
     Tables.events(spark, sf).limit(0)

@@ -13,20 +13,25 @@ trait SparkSpec extends AnyFunSuite {
     * LSH suites.
     */
   def jobsDuring[A](f: => A): (A, Int, Seq[String]) = {
-    val sites = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val (out, props) = jobPropertiesDuring(f)
+    (out, props.size,
+      props.map(p => Option(p.getProperty("callSite.short")).getOrElse("")))
+  }
+
+  /** The local properties of every Spark job started while `f` runs. */
+  def jobPropertiesDuring[A](f: => A): (A, Seq[java.util.Properties]) = {
+    val props = new java.util.concurrent.ConcurrentLinkedQueue[java.util.Properties]()
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(
           js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        sites.add(Option(js.properties)
-          .flatMap(p => Option(p.getProperty("callSite.short")))
-          .getOrElse(""))
+        props.add(Option(js.properties).getOrElse(new java.util.Properties()))
     }
     org.apache.spark.graft.TestBus.drain(spark.sparkContext)
     spark.sparkContext.addSparkListener(listener)
     try {
       val out = f
       org.apache.spark.graft.TestBus.drain(spark.sparkContext)
-      (out, sites.size, sites.toArray(Array.empty[String]).toSeq)
+      (out, props.toArray(Array.empty[java.util.Properties]).toSeq)
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 }
