@@ -144,7 +144,7 @@ object SignLsh {
     // plane)), not as per-plane literal expression trees: tables ×
     // bits inlined [[signature]] columns blow the signature stage out
     // of whole-stage codegen — measured 4.5× slower than this
-    // data-driven form at 12 × 6 (`graft.tools.ProfileSlshM`). The
+    // data-driven form at 12 × 6 (ProfileSlshM, round 9). The
     // groupBy collapses map-side (each vector's plane rows are
     // partition-local under the cross join, so partial aggregation
     // finishes before the exchange) — the shuffle moves exactly the

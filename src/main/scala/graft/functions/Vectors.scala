@@ -46,10 +46,6 @@ object Vectors {
 
   def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
 
-  def l2Distance(a: Column, b: Column): Column =
-    sqrt(aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)),
-      lit(0.0), (acc, v) => acc + v))
-
   /** Symmetric int8 quantization scale: 127 / max|x|. Stored per
     * vector; dequantize = q * (1/scale). An all-zero vector (padding
     * row / dead embedding) gets scale 1.0 — the unguarded 127/0 =

@@ -112,7 +112,7 @@ object MergeWriter {
       else graft.Tables.parquet(spark, dir).withColumn("_src", lit(0))
         .unionByName(incoming, allowMissingColumns = true)
     val merged = LatestPerKey(unioned, keys, versionCols :+ "_src").drop("_src")
-    swapWrite(spark, dir, merged)
+    replace(spark, dir, merged)
   }
 
   /** K5: append-only with schema widening (new columns null-filled on
@@ -129,16 +129,10 @@ object MergeWriter {
     * The merged rows are written ONCE to a temp layout partitioned by
     * `partCol`, then each touched `partCol=x` directory is swapped into
     * the target with the crash-recoverable rename dance of
-    * [[swapWrite]]. No dynamic-partition-overwrite second write, no
-    * session-wide conf mutation.
+    * [[swapDir]]. No dynamic-partition-overwrite second write, no
+    * session-wide conf mutation. Each touched `partCol` value is
+    * written by ONE task, as one file.
     *
-    * @param filesPerPartition write fan-out per partition dir. The
-    *        default (1) co-locates each `partCol` value into ONE task
-    *        and one file — right for day-sized partitions. At 100 TB a
-    *        HOT day is bigger than any single task should be: raise it
-    *        and each partition's rows spread over `filesPerPartition`
-    *        tasks/files, salted by the merge keys (key-disjoint, so
-    *        latest-per-key is unaffected).
     * @param touched the `partCol` values of `updates`, when the caller
     *        already knows them: the merge then reads `updates` once and
     *        skips its own checkpoint and distinct collect. It MUST hold
@@ -153,7 +147,6 @@ object MergeWriter {
     */
   def upsertPartitioned(spark: SparkSession, dir: String, updates: DataFrame,
       keys: Seq[String], versionCols: Seq[String], partCol: String,
-      filesPerPartition: Int = 1,
       touched: Option[Seq[Any]] = None): Option[Seq[Any]] = {
     spark.catalog.refreshByPath(dir)
     val fresh = !exists(spark, dir)
@@ -207,22 +200,9 @@ object MergeWriter {
     }
     // co-locate each partition's rows before the partitionBy write (32
     // shuffle partitions x |days| would otherwise write a small-file
-    // storm); > 1 file per dir only when the caller asks for hot-
-    // partition fan-out
-    val merged0 = LatestPerKey(unioned, keys, versionCols :+ "_src").drop("_src")
-    val merged =
-      if (filesPerPartition <= 1) merged0.repartition(col(partCol))
-      else {
-        // explicit partition count: an expression-only repartition lets
-        // AQE coalesce small outputs back into one task, silently
-        // undoing the fan-out. Pinned to touched-dirs × fan-out (fresh
-        // bulk loads fall back to the session shuffle setting).
-        val n = parts.map(_.size * filesPerPartition)
-          .getOrElse(ShuffleWidth.session(spark).toInt)
-          .max(filesPerPartition)
-        merged0.repartition(n, col(partCol),
-          pmod(hash(keys.map(col): _*), lit(filesPerPartition)))
-      }
+    // storm)
+    val merged = LatestPerKey(unioned, keys, versionCols :+ "_src").drop("_src")
+      .repartition(col(partCol))
     if (fresh) {
       // a fresh EMPTY write would leave a schema-less dir (partitionBy
       // with zero rows emits only _SUCCESS, no data files, unlike the
@@ -304,7 +284,7 @@ object MergeWriter {
     val bytes = fs(spark, dst).getContentSummary(dst).getLength
     val n = math.max(1L, (bytes + targetFileBytes - 1) / targetFileBytes).toInt
     val df = graft.Tables.parquet(spark, dst.toString).repartition(n)
-    if (!hiddenStaging) swapWrite(spark, dst.toString, df)
+    if (!hiddenStaging) replace(spark, dst.toString, df)
     else {
       val tmp = new Path(dst.getParent, "." + dst.getName + ".tmp-" +
         java.util.UUID.randomUUID().toString.take(8))
@@ -337,10 +317,6 @@ object MergeWriter {
     swapDir(f, tmp, dst)
     spark.catalog.refreshByPath(dir)
   }
-
-  /** Materialize `df` then replace `dir` with it. */
-  private def swapWrite(spark: SparkSession, dir: String, df: DataFrame): Unit =
-    replace(spark, dir, df)
 
   /** Crash-recoverable directory replace: the previous content is
     * renamed to `.<dst>.old` before the new content renames in, so a

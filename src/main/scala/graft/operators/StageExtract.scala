@@ -1,8 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
 
 /** Typed staging extraction from a semi-structured payload column —
   * the reference's `stg` layer (`payload ->> 'k'` + `::cast`s,
@@ -10,24 +9,12 @@ import org.apache.spark.sql.types.StructType
   * and its guarded int cast / regex filter in `ods`
   * (`/root/reference/dbt/models/ods/ods_metar_latest.sql:13-23`).
   *
-  * Two extraction strategies:
-  *  - [[fromJsonStruct]]: one `from_json` parse into a `StructType`,
-  *    then struct-field projection — parses each payload ONCE however
-  *    many fields are extracted (preferred; the reference re-parses
-  *    JSONB per `->>`).
-  *  - [[jsonField]]: per-field `get_json_object`, for ad-hoc single
-  *    extractions.
-  *
   * Cast semantics: Postgres casts are strict; Spark 4 runs ANSI mode by
   * default which matches. Where the reference deliberately guards a
   * cast with a regex (`ods…sql:13-16`) use [[guardedIntCast]], which
   * reproduces null-on-nonnumeric without disabling ANSI.
   */
 object StageExtract {
-
-  def fromJsonStruct(df: DataFrame, payloadCol: String, schema: StructType,
-      as: String = "_parsed"): DataFrame =
-    df.withColumn(as, from_json(col(payloadCol), schema))
 
   def jsonField(payload: Column, jsonPath: String): Column =
     get_json_object(payload, jsonPath)

@@ -557,8 +557,7 @@ object AnalyticsQueries {
     // broadcast thresholds and the only exchange left carries
     // (group, bin)-grain partial aggregates — 20 rows. Measured 30×
     // alternating A/B (ProfileBinningShapes, equality-pinned):
-    // see COVERAGE round-18. The window form stays below as the
-    // equality twin.
+    // see COVERAGE round-18. The oracle SQL keeps the window form.
     equidepthBins(Tables.events(spark, dir)
       .select(col("event_type"), col("value"),
         round(col("value") * 100).cast("long").as("cents")))
@@ -579,7 +578,7 @@ object AnalyticsQueries {
     * bin 0, exactly like percent_rank. Thresholds reach tasks as a
     * broadcast row per group, null-safe on the group key, so NULL
     * and separator-bearing group values bin exactly. The integer
-    * threshold arithmetic equals the twin's IEEE
+    * threshold arithmetic equals the window form's IEEE
     * floor(percent_rank·4) for any group under ~10¹⁶ rows (the
     * division is correctly rounded and the k/4 boundaries are
     * representable).
@@ -620,24 +619,6 @@ object AnalyticsQueries {
             .otherwise(0) +
           when(col("_t3").isNotNull && col("value") > col("_t3"), 1)
             .otherwise(0)).cast("long")))
-      .groupBy(col("event_type"), col("bin"))
-      .agg(count(lit(1)).as("n_rows"),
-        min(col("value")).as("lo"), max(col("value")).as("hi"),
-        sum(col("cents")).as("bin_cents"))
-      .orderBy("event_type", "bin")
-  }
-
-  /** The one-window-per-group form of [[binningEquidepth]] — the
-    * derivation the DuckDB oracle replays, kept as the equality twin.
-    */
-  private[graft] def binningEquidepthWindow(spark: SparkSession,
-      dir: String): DataFrame = {
-    val w = Window.partitionBy(col("event_type")).orderBy(col("value"))
-    Tables.events(spark, dir)
-      .select(col("event_type"), col("value"),
-        round(col("value") * 100).cast("long").as("cents"))
-      .withColumn("bin",
-        least(floor(percent_rank().over(w) * 4), lit(3.0)).cast("long"))
       .groupBy(col("event_type"), col("bin"))
       .agg(count(lit(1)).as("n_rows"),
         min(col("value")).as("lo"), max(col("value")).as("hi"),

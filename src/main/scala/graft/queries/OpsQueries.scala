@@ -35,13 +35,13 @@ object OpsQueries {
     * events feed lands in two day-split batches on one landing dir,
     * `Medallion.run` re-runs against the same materialization root
     * (watermark scoping, partitioned merges, per-layer sidecars — the
-    * steady-state machinery MedallionSteady measures), and the final
-    * mart must equal DuckDB's one-shot aggregation of the full feed.
-    * `avg_value` is deliberately excluded from the gate: float
-    * summation ORDER differs between the two-merge layout and a
+    * steady-state machinery perfbench's `medallion_arrivals` measures),
+    * and the final mart must equal DuckDB's one-shot aggregation of the
+    * full feed. `avg_value` is deliberately excluded from the gate:
+    * float summation ORDER differs between the two-merge layout and a
     * one-shot plan, which can flip `round(avg, 4)`'s last digit
-    * (MedallionSteady holds it to 1e-3); max/min/count are selection/
-    * integer aggregates and must match exactly.
+    * (`medallion_arrivals` holds it to 1e-3); max/min/count are
+    * selection/integer aggregates and must match exactly.
     *
     * Lifecycle split (the `join_bucketed` contract, applied to the
     * write path): the pre-arrival BASE state — part-1 corpus landed +

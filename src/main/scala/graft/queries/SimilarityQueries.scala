@@ -256,7 +256,7 @@ object SimilarityQueries {
   /** 32 subspaces × 2 dims, codebooks trained on 40 cells (the 10
     * labels deterministically split 4 ways — [[pqCorpus]]), on the
     * [[pqTrainHex]] hash-sample of the corpus. Tuned where the bench
-    * runs (`graft.tools.TunePq`/`TunePqSample` sf0.1 sweeps): recall@10
+    * runs (TunePq/TunePqSample sf0.1 sweeps): recall@10
     * vs brute force is 0.17 at the old 16 × 10-cell defaults, 0.416 at
     * sampled 32 × 40 (0.624 at sf0.001). Finer subspaces quantize less
     * away per slice; more codewords cut within-cell variance — both
@@ -296,7 +296,7 @@ object SimilarityQueries {
   private val embDim = 64
 
   /** Multi-table sign-LSH defaults — the recall knob, tuned where the
-    * bench runs (sf0.1 sweep, `graft.tools.TuneSlsh`): 8 bits × 4
+    * bench runs (sf0.1 sweep, TuneSlsh): 8 bits × 4
     * tables certified only 0.06 recall at the 0.25-cosine floor;
     * 6 bits × 12 tables measures 0.42 (0.424 at sf0.001). Fewer bits
     * per table = denser buckets = higher per-table collision odds;

@@ -544,7 +544,7 @@ object TextQueries {
     // A/B (ProfilePerplexPhases, equality-pinned): model fold 0.55 s
     // (two-exchange) → 0.48 s steady (TIA); the r15/r16 negatives
     // (derived-c1 table chain 2× slower, transform+concat fusion
-    // slower) stay recorded in ProfilePerplexVariants/Fuse.
+    // slower) were measured in ProfilePerplexVariants/Fuse.
     val model = pc
       .agg(call_function("graft_bigram_table", col("bc")).as("c2arr"),
         collect_set(col("solo")).as("sup"))

@@ -69,14 +69,30 @@ class MergeWriterSpec extends SparkSpec {
   test("partitioned upsert rewrites only touched partitions") {
     import spark.implicits._
     val dir = tmp()
-    val b1 = Seq((1L, "2024-01-01", 10L), (2L, "2024-01-02", 10L))
+    val b1 = (1L to 40L)
+      .map(id => (id, if (id % 2 == 0) "2024-01-02" else "2024-01-01", 10L))
       .toDF("id", "day", "v")
-    MergeWriter.upsertPartitioned(spark, dir, b1, Seq("id"), Seq("v"), "day")
     val b2 = Seq((2L, "2024-01-02", 11L)).toDF("id", "day", "v")
-    MergeWriter.upsertPartitioned(spark, dir, b2, Seq("id"), Seq("v"), "day")
+    // with AQE coalescing on, these tiny shuffle outputs land in one task
+    // whatever the merge does; off, a day's rows span every shuffle
+    // partition unless the merge co-locates them
+    val coalesce = "spark.sql.adaptive.coalescePartitions.enabled"
+    val prior = spark.conf.get(coalesce)
+    spark.conf.set(coalesce, "false")
+    try {
+      MergeWriter.upsertPartitioned(spark, dir, b1, Seq("id"), Seq("v"), "day")
+      MergeWriter.upsertPartitioned(spark, dir, b2, Seq("id"), Seq("v"), "day")
+    } finally spark.conf.set(coalesce, prior)
     val got = spark.read.parquet(dir).orderBy("id")
-    assert(got.count() === 2)
+    assert(got.count() === 40)
     assert(got.filter(col("id") === 2).select("v").head().getLong(0) === 11L)
+    // each touched day dir (both by the first build, 01-02 again by the
+    // merge) holds exactly one data file
+    Seq("2024-01-01", "2024-01-02").foreach { day =>
+      val files = new java.io.File(dir, s"day=$day").listFiles()
+        .filter(f => f.getName.endsWith(".parquet") && !f.getName.startsWith("."))
+      assert(files.length === 1, s"day=$day holds ${files.length} data files")
+    }
   }
 
   test("partitioned upsert partition-PRUNES the target scan (plan guard)") {
@@ -125,57 +141,6 @@ class MergeWriterSpec extends SparkSpec {
           s"expected 1 pruned partition (day=2024-01-02), scan listed $selected")
       }
     } finally spark.listenerManager.unregister(ql)
-  }
-
-  test("hot-partition fan-out: filesPerPartition spreads a day over key-salted files") {
-    import spark.implicits._
-    val dir = tmp()
-    // one hot day, 90 keys; fan-out 3 must split it across <= 3 files
-    // (key-salted, so latest-per-key still collapses within one task)
-    val b1 = (1L to 90L).map(id => (id, "2024-01-01", id * 10L))
-      .toDF("id", "day", "v")
-    MergeWriter.upsertPartitioned(spark, dir, b1, Seq("id"), Seq("v"), "day",
-      filesPerPartition = 3)
-    val b2 = (1L to 90L).map(id => (id, "2024-01-01", id * 10L + 1L))
-      .toDF("id", "day", "v")
-    MergeWriter.upsertPartitioned(spark, dir, b2, Seq("id"), Seq("v"), "day",
-      filesPerPartition = 3)
-    val files = new java.io.File(dir, "day=2024-01-01").listFiles()
-      .filter(f => f.getName.endsWith(".parquet") && !f.getName.startsWith("."))
-    assert(files.length > 1 && files.length <= 3,
-      s"expected 2-3 fan-out files, got ${files.length}")
-    val got = spark.read.parquet(dir)
-    assert(got.count() === 90)
-    // every key took the b2 version exactly once — fan-out kept keys disjoint
-    assert(got.filter(col("v") % 10 === 1).count() === 90)
-  }
-
-  test("fan-out under skew: hot day splits wide, latest-per-key survives the mix") {
-    import spark.implicits._
-    val dir = tmp()
-    // skewed volume: one hot day carrying 400 keys next to a 2-key day
-    // — the shape that motivates the knob (at 100 TB the hot day is
-    // bigger than any single task should be)
-    val hot = (1L to 400L).map(id => (id, "2024-01-01", id))
-    val cold = Seq((1001L, "2024-01-02", 1L), (1002L, "2024-01-02", 2L))
-    MergeWriter.upsertPartitioned(spark, dir, (hot ++ cold).toDF("id", "day", "v"),
-      Seq("id"), Seq("v"), "day", filesPerPartition = 4)
-    // second batch bumps every hot key — the merge must keep exactly
-    // one (latest) version per key across the salted files
-    MergeWriter.upsertPartitioned(spark, dir,
-      hot.map { case (id, d, v) => (id, d, v + 1000L) }.toDF("id", "day", "v"),
-      Seq("id"), Seq("v"), "day", filesPerPartition = 4)
-    def parts(day: String) = new java.io.File(dir, s"day=$day").listFiles()
-      .filter(f => f.getName.endsWith(".parquet") && !f.getName.startsWith("."))
-    // (day, salt) hash-partitions into n=4 tasks; two salts can share a
-    // task, so the guarantee is "spread wide", not "exactly 4 files"
-    assert(parts("2024-01-01").length >= 2 && parts("2024-01-01").length <= 4,
-      s"hot day should fan out to 2-4 files, got ${parts("2024-01-01").length}")
-    assert(parts("2024-01-02").length <= 2) // 2 keys can't need more
-    val got = spark.read.parquet(dir)
-    assert(got.count() === 402)
-    assert(got.filter(col("day") === "2024-01-01" && col("v") > 1000L)
-      .count() === 400) // every hot key took the second version exactly once
   }
 
   /** Recursive (path, size, mtime, checksum-ish first bytes) listing of

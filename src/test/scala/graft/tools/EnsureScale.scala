@@ -1,9 +1,8 @@
 package graft.tools
 
 /** Materialize ScaleCurve's x{m} replica dirs without timing anything
-  * — the profiling tools (ProfilePpJoinPhases, ProfileSliceBits, …)
-  * point SPARK_GRAFT_SF_DIR / GRAFT_AB_DIR at these, and /tmp does not
-  * survive between rounds.
+  * — `graft.Bench` (SPARK_GRAFT_SF_DIR) and `tools/bench_scaling.py`
+  * run on these, and /tmp does not survive a reboot.
   */
 object EnsureScale {
   def main(args: Array[String]): Unit = {
@@ -11,7 +10,8 @@ object EnsureScale {
     val root = sys.env.getOrElse("GRAFT_SCALE_ROOT", "/tmp/graft-scale")
     val factors = sys.env.getOrElse("GRAFT_SCALE_FACTORS", "30")
       .split(",").map(_.trim.toInt).toSeq
-    val spark = Harness.session()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = graft.GraftSession.prepare(graft.GraftSession.local(cpus))
     factors.foreach { m =>
       val dir = ScaleCurve.ensureScaled(spark, sfDir, root, m)
       println(s"""{"scaled":$m,"dir":"$dir"}""")
