@@ -81,8 +81,9 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.prepare(GraftSession.local(cpus.toInt))
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS")
+      .fold(GraftSession.DefaultCores)(_.toInt)
+    val spark = GraftSession.prepare(GraftSession.local(cpus))
     // optional comma-separated subset for targeted tuning runs
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").map(_.trim).toSet)
@@ -108,9 +109,9 @@ object Bench {
         .start()
       q.awaitTermination()
     }
-    canary(spark, cpus.toInt) // untimed: first call pays probe-plan codegen
+    canary(spark, cpus) // untimed: first call pays probe-plan codegen
     fsCanary() // untimed: first call pays dir-entry/page-cache warmup
-    val canaryStart = canary(spark, cpus.toInt)
+    val canaryStart = canary(spark, cpus)
     val fsStart = fsCanary()
     val results = selected.map { case (name, fn) =>
       val idxPre = publishedIndexes(spark)
@@ -168,7 +169,7 @@ object Bench {
       .mkString("{", ",", "}")
     val total = results.collect { case (_, v, true, _, _) => v }.sum
     // degradation can start mid-sweep: probe both ends of the run
-    val canaryEnd = canary(spark, cpus.toInt)
+    val canaryEnd = canary(spark, cpus)
     val fsEnd = fsCanary()
     val degraded = math.max(canaryStart, canaryEnd) > 3 * CanaryPinSec
     // the canary-to-pin multiplier, stamped so the single-run artifact

@@ -43,7 +43,4 @@ final case class Config(env: Map[String, String] = sys.env) {
     * `dwh`) — names the dwh layer directory of the medallion DAG.
     */
   def schema: String = str("DBT_SCHEMA", "dwh")
-
-  /** JDBC sink batch size (rows per executeBatch). */
-  def jdbcBatchSize: Int = int("GRAFT_JDBC_BATCH", 500)
 }

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan auditor: prints the formatted physical plan for the named
   * queries (default: a representative set) so scan pruning
   * (`ReadSchema`), predicate pushdown (`PushedFilters`), join
@@ -17,7 +15,8 @@ object Explain {
       if (args.length > 1) args.drop(1).toSeq
       else Seq("q1_agg", "join_regional_revenue", "metar_latest_per_key",
         "metar_daily_metrics", "asof_signup", "similarity_topk")
-    val spark = GraftSession.local(8)
+    val spark = GraftSession.local(sys.env.get("SPARK_GRAFT_CPUS")
+      .fold(GraftSession.DefaultCores)(_.toInt))
     names.foreach { n =>
       println(s"\n========== $n ==========")
       SparkEntry.queries(n)(spark, sfDir).explain("formatted")

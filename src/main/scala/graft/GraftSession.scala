@@ -34,6 +34,12 @@ object GraftSession {
     */
   val CodegenCacheEntries = 4096
 
+  /** Local cores of a session built by [[local]] without an argument,
+    * and of every main (`Bench`, `Verify`, `Explain`, `ScaleCurve`,
+    * `EnsureScale`) when `SPARK_GRAFT_CPUS` is unset.
+    */
+  val DefaultCores = 32
+
   /** Engine configuration applied to every session (batch, bench,
     * verify, tests). Kept in one place so all entry points agree.
     *
@@ -44,7 +50,7 @@ object GraftSession {
     *        per shuffle on a 4-core run).
     */
   def configure(b: SparkSession.Builder,
-      defaultCores: Int = 32): SparkSession.Builder = b
+      defaultCores: Int = DefaultCores): SparkSession.Builder = b
     .config("spark.sql.shuffle.partitions",
       sys.env.getOrElse("SPARK_GRAFT_CPUS", defaultCores.toString))
     .config("spark.sql.adaptive.enabled", "true")
@@ -67,7 +73,7 @@ object GraftSession {
     .config("spark.sql.codegen.cache.maxEntries",
       CodegenCacheEntries.toString)
 
-  def local(cores: Int = 32): SparkSession = {
+  def local(cores: Int = DefaultCores): SparkSession = {
     val spark = configure(
       SparkSession.builder().master(s"local[$cores]").appName("graft"),
       defaultCores = cores

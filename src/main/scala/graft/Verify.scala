@@ -11,8 +11,9 @@ object Verify {
     // optional 3rd arg: comma-separated query-name filter (dev loop)
     val only = args.lift(2).map(_.split(",").map(_.trim).toSet)
     def keep(name: String) = only.forall(_.contains(name))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.prepare(GraftSession.local(cpus.toInt))
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS")
+      .fold(GraftSession.DefaultCores)(_.toInt)
+    val spark = GraftSession.prepare(GraftSession.local(cpus))
     new java.io.File(outDir).mkdirs()
     // SPARK_GRAFT_SQL_ONLY=1: dump only oracle_sql.json (the DuckDB
     // replay side of tools/bench_medians.py needs the SQLs without

@@ -28,7 +28,8 @@ import org.apache.spark.sql.functions._
   * Cluster deployment: `localCheckpoint` truncates lineage onto
   * executor-local blocks — an executor loss fails the job instead of
   * recomputing; swap for reliable `checkpoint()`/replicated persist on
-  * lossy clusters (COVERAGE "Materialization barriers").
+  * lossy clusters ("Materialization barriers" in COVERAGE.md at
+  * ff8d9ba).
   */
 object Clusters {
 

@@ -50,21 +50,8 @@ object Dedup {
         .withColumn("bands", MinHash.bands(col("sig"), numBands, rowsPerBand))
   }
 
-  /** LSH candidate pairs (id_a < id_b): explode band keys, self-join on
-    * (band index, band key). The join input is |docs| x numBands short
-    * rows; AQE handles degenerate-bucket skew.
-    */
-  def minhashCandidates(banded: DataFrame, idCol: String): DataFrame = {
-    val exploded = banded
-      .select(col(idCol), posexplode(col("bands")).as(Seq("band_idx", "band_key")))
-    val a = exploded.select(col(idCol).as("id_a"), col("band_idx"), col("band_key"))
-    val b = exploded.select(col(idCol).as("id_b"), col("band_idx"), col("band_key"))
-    a.join(b, Seq("band_idx", "band_key"))
-      .filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b").distinct()
-  }
-
-  /** The grouped formulation of [[minhashCandidates]]: instead of a
+  /** The grouped formulation of the LSH candidate pairs (id_a < id_b)
+    * of a banded frame ([[minhashBands]]): instead of a
     * posting-list SELF-JOIN on (band index, band key) — two exchanges
     * + sorts of the full posting list, generating both pair orders and
     * filtering half away — collect each bucket's sorted distinct id
@@ -434,8 +421,9 @@ object Dedup {
     // prefixes. graft_edit_pairs unpacks each group's prefixes once
     // and runs the n²/2 thresholded distances in a tight loop,
     // calling Spark's own UTF8String.levenshteinDistance(other, k) —
-    // bit-parity with the joined twin below, which stays as the
-    // spec's equality reference and the oracle's derivation.
+    // bit-parity with the joined twin (the oracle's derivation; its
+    // test-scope copy `graft.ref.DedupRef.fuzzyPairsJoined` is the
+    // spec's equality reference).
     val idType = df.schema(idCol).dataType
     require(idType match {
       case org.apache.spark.sql.types.ByteType |
@@ -480,28 +468,6 @@ object Dedup {
         col("e.edit_dist").as("edit_dist"))
   }
 
-  /** The blocked self-join form of [[fuzzyPairsBlocked]] — the
-    * derivation the DuckDB oracle replays, kept as the equality twin
-    * for the salted-kernel rewrite's spec and scale A/B.
-    */
-  private[graft] def fuzzyPairsJoined(df: DataFrame, idCol: String,
-      textCol: String, blockCol: String, prefixLen: Int,
-      maxDist: Int): DataFrame = {
-    val p = df.select(col(blockCol), col(idCol),
-      substring(col(textCol), 1, prefixLen).as("_p"))
-    val a = p.select(col(blockCol), col(idCol).as("id_a"), col("_p").as("_pa"))
-    val b = p.select(col(blockCol), col(idCol).as("id_b"), col("_p").as("_pb"))
-    a.join(b, Seq(blockCol))
-      .filter(col("id_a") < col("id_b"))
-      // thresholded levenshtein runs the banded O(p·maxDist) algorithm
-      // and returns -1 past the cutoff — same kept pairs, ~O(p/maxDist)×
-      // cheaper on the (dominant) far pairs
-      .withColumn("edit_dist",
-        levenshtein(col("_pa"), col("_pb"), maxDist).cast("long"))
-      .filter(col("edit_dist") >= 0 && col("edit_dist") <= maxDist)
-      .select(col("id_a"), col("id_b"), col("edit_dist"))
-  }
-
   /** Blocked embedding near-duplicate pairs. CONTRACT: `idCol` must be
     * an integral column (byte/short/int/long) — ids ride the native
     * pair kernel as longs, and a string/UUID id would silently cast to
@@ -535,79 +501,6 @@ object Dedup {
         blockCol -> blockCol)
       .withColumnRenamed("_uv", "_u")
     embeddingNearDupsUnit(e, idCol, "_u", blockCol, minCosine)
-  }
-
-  /** Add a CHECKED xxhash64 surrogate long id `out` for a
-    * non-integral id column — the documented path onto the integral-id
-    * contract of [[embeddingNearDupsUnit]] (and any other long-keyed
-    * kernel). A 64-bit birthday collision is ~n²/2⁶⁵ — vanishing below
-    * 10⁹ distinct ids but REAL at 10¹⁰ (≈3 expected), hence checked,
-    * never assumed: one two-column scalar fold compares distinct
-    * source ids to distinct surrogates and fails loud on any
-    * collision. A corpus that trips the check needs a dense-id lookup
-    * (the `assign_dense_ids` zipWithIndex pattern) instead of a hash.
-    * A NULL id gets a NULL surrogate (never `xxhash64`'s seed value,
-    * which would hand every null row ONE shared fake identity and
-    * skew the collision check) — downstream long-keyed kernels filter
-    * null ids exactly as they do on the direct integral path.
-    */
-  def withSurrogateIds(df: DataFrame, idCol: String,
-      out: String): DataFrame = {
-    val keyed = df.withColumn(out,
-      when(col(idCol).isNotNull, xxhash64(col(idCol))))
-    val c = keyed.agg(count_distinct(col(idCol)).as("di"),
-      count_distinct(col(out)).as("ds")).collect().head
-    require(c.getLong(0) == c.getLong(1),
-      s"xxhash64 surrogate collision: ${c.getLong(0)} distinct " +
-        s"'$idCol' values map to ${c.getLong(1)} distinct surrogates " +
-        "— two source ids share a 64-bit hash; use a dense-id lookup " +
-        "(assign_dense_ids) instead of a hash surrogate")
-    keyed
-  }
-
-  /** [[embeddingNearDups]] for a corpus whose id column is NOT
-    * integral (string/UUID/decimal): ids ride the native kernel as
-    * checked xxhash64 surrogates ([[withSurrogateIds]]) and the
-    * threshold-bounded pair stream joins back to source ids — two
-    * pair-grain joins against the (surrogate, id) lookup, never a
-    * corpus-grain reshuffle of the vectors. Output pairs are
-    * normalized so `id_a < id_b` in the SOURCE id's own ordering
-    * (the surrogate order is hash noise).
-    */
-  def embeddingNearDupsSurrogate(df: DataFrame, idCol: String,
-      vecCol: String, blockCol: String, minCosine: Double): DataFrame = {
-    val sid = when(col(idCol).isNotNull, xxhash64(col(idCol)))
-    // ONE id-grain distinct pass serves both the collision check and
-    // the pair join-back, localCheckpoint'ed because two downstream
-    // routes re-run an un-materialized subtree per route — without it
-    // this helper pays three corpus scans (check, kernel, lookup)
-    // instead of two (lookup-build + kernel)
-    val look = df.select(sid.as("_sid"), col(idCol))
-      .filter(col(idCol).isNotNull).distinct().localCheckpoint()
-    val c = look.agg(count_distinct(col(idCol)).as("di"),
-      count_distinct(col("_sid")).as("ds")).collect().head
-    require(c.getLong(0) == c.getLong(1),
-      s"xxhash64 surrogate collision: ${c.getLong(0)} distinct " +
-        s"'$idCol' values map to ${c.getLong(1)} distinct surrogates " +
-        "— two source ids share a 64-bit hash; use a dense-id lookup " +
-        "(assign_dense_ids) instead of a hash surrogate")
-    // null-id rows are EXCLUDED here, not left for the kernel: the
-    // kernel reads a null long id as 0, so null-id rows would pair
-    // under one shared fake identity (and alias a real id whose
-    // xxhash64 happens to be 0) — the inner join-back would then
-    // silently drop or mislabel those pairs. Filtering matches the
-    // direct integral path's null-id contract.
-    val keyed = df.filter(col(idCol).isNotNull).withColumn("_sid", sid)
-    val pairs = embeddingNearDups(keyed, "_sid", vecCol, blockCol,
-      minCosine)
-    val la = look.select(col("_sid").as("_ka"), col(idCol).as("_ia"))
-    val lb = look.select(col("_sid").as("_kb"), col(idCol).as("_ib"))
-    pairs.join(la, col("id_a") === col("_ka"))
-      .join(lb, col("id_b") === col("_kb"))
-      .select(col(blockCol),
-        least(col("_ia"), col("_ib")).as("id_a"),
-        greatest(col("_ia"), col("_ib")).as("id_b"),
-        col("cosine"))
   }
 
   /** [[embeddingNearDups]] on ALREADY unit-normalized double vectors —
@@ -665,24 +558,6 @@ object Dedup {
           col("_i") === col("_j"), lit(minCosine))).as("p"))
       .select(col(blockCol), col("p.id_a").as("id_a"),
         col("p.id_b").as("id_b"), col("p.cosine").as("cosine"))
-  }
-
-  /** The blocked self-join form of [[embeddingNearDups]] — the
-    * derivation the DuckDB oracle replays, kept as the equality twin
-    * for the salted-kernel rewrite's spec and scale A/B.
-    */
-  private[graft] def embeddingNearDupsJoined(df: DataFrame, idCol: String,
-      vecCol: String, blockCol: String, minCosine: Double): DataFrame = {
-    val e = Vectors.unitized(df, vecCol, idCol -> idCol,
-        blockCol -> blockCol)
-      .withColumnRenamed("_uv", "_u")
-    val a = e.select(col(blockCol), col(idCol).as("id_a"), col("_u").as("_va"))
-    val b = e.select(col(blockCol), col(idCol).as("id_b"), col("_u").as("_vb"))
-    a.join(b, Seq(blockCol))
-      .filter(col("id_a") < col("id_b"))
-      .withColumn("cosine", round(Vectors.dot(col("_va"), col("_vb")), 4))
-      .filter(col("cosine") >= minCosine)
-      .select(col(blockCol), col("id_a"), col("id_b"), col("cosine"))
   }
 
   /** SemDeDup (semantic dedup): cluster embeddings with the

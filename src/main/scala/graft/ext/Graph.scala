@@ -27,8 +27,8 @@ import org.apache.spark.sql.functions._
   * Cluster deployment: every `localCheckpoint` here truncates lineage
   * onto executor-local blocks — an executor loss fails the job (re-run
   * the round) instead of recomputing; swap for reliable
-  * `checkpoint()`/replicated persist on lossy clusters (COVERAGE
-  * "Materialization barriers").
+  * `checkpoint()`/replicated persist on lossy clusters
+  * ("Materialization barriers" in COVERAGE.md at ff8d9ba).
   */
 object Graph {
 
@@ -219,7 +219,7 @@ object Graph {
     // size is modest, broadcast it and the wedges never shuffle at
     // all: they close map-side straight out of the wedge join's
     // partitions (the single-node analogue of a shared hash table,
-    // and what DuckDB does here). Byte-guarded like Joins.dimJoin —
+    // and what DuckDB does here). Byte-guarded —
     // past the cap (graphs whose edge list is itself huge) the close
     // falls back to a plain shuffle join, which is the correct 1000x
     // shape: the wedge stream shuffles once on its closing key,

@@ -35,7 +35,7 @@ object Hll {
   private val M = 256 // registers (p = 8 bits of bucket index)
 
   /** rho (1 + leading-zero bits) of the 40-bit tail of an md5 hex. */
-  private def rho(hex: Column): Column = {
+  private[graft] def rho(hex: Column): Column = {
     val tail = substring(hex, 3, 10)
     val stripped = regexp_replace(tail, "^0+", "")
     val zeroNibbles = lit(10) - length(stripped)
@@ -57,8 +57,8 @@ object Hll {
   def registers(df: DataFrame, groupCols: Seq[String], valueCol: String): DataFrame = {
     val g = groupCols.map(col)
     // ONE native digest per row ([[graft.plans.HllReg]], spec-checked
-    // bit-equal to the hex derivation [[hexRegister]] the oracle
-    // replays): the declarative hex form references the md5 in five
+    // bit-equal to the hex derivation the oracle replays,
+    // `graft.ref.HllRef.hexRegister`): the declarative hex form references the md5 in five
     // sub-expressions the aggregate's projection does not reliably
     // share — measured ~4 s of approx_distinct's 5 s at bench sf0.1
     val reg = call_function("graft_hll_reg", col(valueCol).cast("string"))
@@ -67,17 +67,6 @@ object Hll {
         :+ reg.getField("rho").as("_r"): _*)
       .groupBy(g :+ col("_b"): _*)
       .agg(max(col("_r")).as("_m"))
-  }
-
-  /** The portable hex-string register derivation — the formulation the
-    * DuckDB oracle replays and [[graft.plans.HllReg]] is spec-checked
-    * bit-equal against. Schema: (bucket, rho).
-    */
-  def hexRegister(value: Column): Column = {
-    val hex = md5(value.cast("string"))
-    struct(
-      conv(substring(hex, 1, 2), 16, 10).cast("int").as("bucket"),
-      rho(hex).as("rho"))
   }
 
   /** Fold a register table (as produced by [[registers]], or any

@@ -1,7 +1,6 @@
 package graft.ext
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.Vectors
@@ -52,7 +51,8 @@ object KMeans {
     * expression. The previous form expanded every vector into k
     * centroid rows and ranked them back with a `row_number` window —
     * a k× blowup plus a full vector-grain exchange+sort per
-    * iteration ([[assignWindow]], kept as the equality twin).
+    * iteration (`graft.ref.KMeansRef.assignWindow`, the test-scope
+    * equality twin).
     */
   private[graft] def assign(vecs: DataFrame, centroids: DataFrame, idCol: String): DataFrame = {
     val model = centroids.agg(
@@ -65,22 +65,6 @@ object KMeans {
       .filter(col("_a").isNotNull) // empty model = the join's empty side
       .select(col(idCol), col("_a.cluster").as("cluster"), col("_uv"),
         col("_a.similarity").as("similarity"))
-  }
-
-  /** The k×-expand + rank-window form of [[assign]] — the derivation
-    * the DuckDB oracles replay, kept as the equality twin for the
-    * native rewrite's spec.
-    */
-  private[graft] def assignWindow(vecs: DataFrame, centroids: DataFrame,
-      idCol: String): DataFrame = {
-    val w = Window.partitionBy(col(idCol))
-      .orderBy(round(col("_sim"), 9).desc, col("cluster").asc)
-    vecs.crossJoin(broadcast(centroids))
-      .withColumn("_sim", Vectors.cosine(col("_uv"), col("_centroid")))
-      .withColumn("_rn", row_number().over(w))
-      .filter(col("_rn") === 1)
-      .select(col(idCol), col("cluster"), col("_uv"),
-        round(col("_sim"), 6).as("similarity"))
   }
 
   /** @param initCol column providing the initial partition (cluster ids

@@ -122,13 +122,6 @@ object PpJoin {
       .localCheckpoint()
   }
 
-  /** [[canonicalFromLex]] over a raw document frame — the audit/spec
-    * entry point ([[candidates]]' input shape).
-    */
-  private[graft] def canonicalSets(df: DataFrame, idCol: String,
-      textCol: String, shingleN: Int): DataFrame =
-    canonicalFromLex(lexSets(df, idCol, textCol, shingleN))
-
   /** The prefix posting relation (token, id, size, 0-based position)
     * both candidate forms consume; prefix length
     * L = sz - ceil(t*sz) + 1 (>= 1 for t <= 1).

@@ -41,7 +41,7 @@ object SignLsh {
     * driver-blocking job per call, the pattern the index specs guard
     * against everywhere else.
     */
-  private def resolveDim(df: DataFrame, vecCol: String, dim: Int): Int = {
+  private[graft] def resolveDim(df: DataFrame, vecCol: String, dim: Int): Int = {
     if (dim > 0) return dim
     // probe a NON-NULL vector: size(null) = -1, and a -1 dim would
     // build empty hyperplanes → every row signs to the same bucket →
@@ -76,29 +76,10 @@ object SignLsh {
     // self-join capped parallelism at 2^bits (16 at the 4-bit
     // default) and paid per-pair join machinery for ~n²/2^bits
     // verified dots — the r16 cosine-dedup finding, 6.9× → see
-    // ProfileCosinePairs/COVERAGE. Each vector has exactly one
+    // ProfileCosinePairs/COVERAGE.md at ff8d9ba. Each vector has one
     // bucket, so the pair set is unchanged.
     graft.ext.Dedup.embeddingNearDupsUnit(e, idCol, "_u", "_bucket",
         minCosine)
-      .select(col("id_a"), col("id_b"), col("cosine"))
-  }
-
-  /** The bucket self-join form of [[nearDupPairs]] — the derivation
-    * the DuckDB oracle replays, kept as the equality twin.
-    */
-  private[graft] def nearDupPairsJoined(df: DataFrame, idCol: String,
-      vecCol: String, bits: Int, minCosine: Double,
-      dim: Int = -1): DataFrame = {
-    val planes = hyperplanes(bits, resolveDim(df, vecCol, dim))
-    val e = Vectors.unitized(df, vecCol, idCol -> idCol)
-      .withColumnRenamed("_uv", "_u")
-      .withColumn("_bucket", signature(col("_u"), planes))
-    val a = e.select(col("_bucket"), col(idCol).as("id_a"), col("_u").as("_ua"))
-    val b = e.select(col("_bucket"), col(idCol).as("id_b"), col("_u").as("_ub"))
-    a.join(b, Seq("_bucket"))
-      .filter(col("id_a") < col("id_b"))
-      .withColumn("cosine", round(Vectors.dot(col("_ua"), col("_ub")), 4))
-      .filter(col("cosine") >= minCosine)
       .select(col("id_a"), col("id_b"), col("cosine"))
   }
 

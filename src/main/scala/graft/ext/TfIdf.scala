@@ -1,7 +1,6 @@
 package graft.ext
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.Text
@@ -77,7 +76,8 @@ object TfIdf {
     * in the native [[graft.plans.Bm25TopK]] expression. Nothing
     * document-grain ever shuffles — the composed form moved the token
     * stream through two exchanges and the scored stream through two
-    * more ([[bm25TopTermsComposed]], kept as the equality twin).
+    * more (`graft.ref.TfIdfRef.bm25TopTermsComposed`, the test-scope
+    * equality twin).
     */
   def bm25TopTerms(docs: DataFrame, idCol: String, textCol: String, k: Int,
       k1: Double = 1.2, b: Double = 0.75): DataFrame = {
@@ -124,43 +124,11 @@ object TfIdf {
         col("r.term").as("term"), col("r.bm25").as("bm25"))
   }
 
-  /** The exploded-postings + window form of [[bm25TopTerms]] — the
-    * derivation the DuckDB oracle replays, kept as the equality twin
-    * for the native rewrite's spec and scale A/B.
-    */
-  private[graft] def bm25TopTermsComposed(docs: DataFrame, idCol: String,
-      textCol: String, k: Int, k1: Double = 1.2,
-      b: Double = 0.75): DataFrame = {
-    // drop the empty-string pseudo-term a cleaned-to-empty document
-    // emits (split("", " ") = [""]): it would otherwise acquire a df
-    // and rank as a "term" (same convention as Bpe.wordCounts; dl
-    // deliberately stays size(tokens) on both engine and oracle sides)
-    val toks = docs.select(col(idCol),
-        explode(Text.tokens(col(textCol))).as("term"))
-      .filter(length(col("term")) >= 1)
-    val tf = toks.groupBy(col(idCol), col("term")).agg(count(lit(1)).as("tf"))
-    val df = toks.groupBy(col("term")).agg(countDistinct(col(idCol)).as("df"))
-    val dl = docs.select(col(idCol), size(Text.tokens(col(textCol))).cast("long").as("dl"))
-    val stats = docs.agg(countDistinct(col(idCol)).as("n_docs"))
-      .crossJoin(dl.agg(avg(col("dl")).as("avgdl")))
-    val scored = tf.join(df, "term").join(dl, idCol)
-      .crossJoin(broadcast(stats))
-      .withColumn("idf", log((col("n_docs") - col("df") + 0.5) / (col("df") + 0.5) + 1))
-      .withColumn("bm25", round(
-        col("idf") * (col("tf") * (k1 + 1)) /
-          (col("tf") + lit(k1) * (lit(1 - b) + col("dl") * b / col("avgdl"))), 6))
-    val w = Window.partitionBy(col(idCol))
-      .orderBy(round(col("bm25"), 9).desc, col("term").asc)
-    scored
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col(idCol), col("rank"), col("term"), col("bm25"))
-  }
-
   /** Top-k terms per document by `tf * ln(N / df)` — same one-pass
     * count + one-row broadcast model + map-side selection shape as
     * [[bm25TopTerms]] (native [[graft.plans.TfIdfTopK]]); the
-    * exploded-postings window form stays as [[topTermsComposed]].
+    * exploded-postings window form is the test-scope
+    * `graft.ref.TfIdfRef.topTermsComposed`.
     */
   def topTerms(docs: DataFrame, idCol: String, textCol: String, k: Int): DataFrame = {
     // deliberately lazy count pass — see bm25TopTerms (measured A/B)
@@ -184,28 +152,5 @@ object TfIdf {
         col("tc"), col("model"), lit(k))).as("r"))
       .select(col(idCol), col("r.rank").as("rank"),
         col("r.term").as("term"), col("r.tfidf").as("tfidf"))
-  }
-
-  /** The exploded-postings + window form of [[topTerms]] — the
-    * derivation the DuckDB oracle replays, kept as the equality twin.
-    */
-  private[graft] def topTermsComposed(docs: DataFrame, idCol: String,
-      textCol: String, k: Int): DataFrame = {
-    // same empty-pseudo-term guard as [[bm25TopTerms]]
-    val toks = docs.select(col(idCol),
-        explode(Text.tokens(col(textCol))).as("term"))
-      .filter(length(col("term")) >= 1)
-    val tf = toks.groupBy(col(idCol), col("term")).agg(count(lit(1)).as("tf"))
-    val df = toks.groupBy(col("term")).agg(countDistinct(col(idCol)).as("df"))
-    val n = docs.agg(countDistinct(col(idCol)).as("n_docs"))
-    val scored = tf.join(df, "term")
-      .crossJoin(broadcast(n))
-      .withColumn("tfidf", round(col("tf") * log(col("n_docs") / col("df")), 6))
-    val w = Window.partitionBy(col(idCol))
-      .orderBy(round(col("tfidf"), 9).desc, col("term").asc)
-    scored
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col(idCol), col("rank"), col("term"), col("tfidf"))
   }
 }

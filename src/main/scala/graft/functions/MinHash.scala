@@ -33,15 +33,6 @@ object MinHash {
   def signature(shingleSet: Column, numHashes: Int): Column =
     call_function("graft_minhash", shingleSet, lit(numHashes), lit("md5"))
 
-  /** Builtin-HOF md5 signature — byte-identical to [[signature]]; kept
-    * as the cross-check the spec compares the native expression against
-    * (and as the no-extension-registration fallback).
-    */
-  def signatureHof(shingleSet: Column, numHashes: Int): Column =
-    transform(sequence(lit(0), lit(numHashes - 1)),
-      i => array_min(transform(shingleSet,
-        s => md5(concat(i.cast("string"), lit("|"), s)))))
-
   /** Production-fast signature: seeded polynomial hash family
     * (array<long>), roughly an order of magnitude cheaper than md5 and
     * still engine-portable — DuckDB reproduces it with

@@ -6,46 +6,26 @@ import org.apache.spark.sql.functions._
 /** SimHash near-duplicate fingerprinting: each token votes +1/-1 on
   * every signature bit according to its hash; the signature bit is 1
   * where the vote total is positive. Near-identical documents differ
-  * in few bits (compare with [[hammingDistance]]).
+  * in few bits.
   *
   * Bits are derived from the token's md5 hex digits (digit >= '8'
   * &harr; high bit set), giving a 32-bit signature that any engine with
   * md5 reproduces exactly — same portability argument as [[MinHash]].
   *
-  * Computed entirely with higher-order array functions — a per-row
-  * fold, no explode, no shuffle: at 100 TB this is pure map-side work.
+  * Computed per row by a native expression — no explode, no shuffle:
+  * at 100 TB this is pure map-side work.
   */
 object SimHash {
-
-  val Bits = 32
 
   /** 32-char '0'/'1' signature string for a token array. Duplicate
     * tokens vote multiple times (term frequency weighting). Computed
     * by the native [[graft.plans.SimHashExpr]] (one loop over digest
-    * nibbles); [[simhash32Hof]] is the byte-identical builtin fold it
-    * is spec-checked against (interpreted lambda frames + a fresh
+    * nibbles); `graft.ref.SimHashRef.simhash32Hof` is the
+    * byte-identical builtin fold it is spec-checked against
+    * (interpreted lambda frames + a fresh
     * 32-element array per token — measured 9.2 s vs sub-second at
     * bench sf0.1).
     */
   def simhash32(toks: Column): Column =
     call_function("graft_simhash", toks)
-
-  /** Builtin-HOF simhash (no extension registration needed). */
-  def simhash32Hof(toks: Column): Column = {
-    val votes = aggregate(
-      toks,
-      array_repeat(lit(0), Bits),
-      (acc, t) => {
-        val h = md5(t)
-        zip_with(acc,
-          transform(sequence(lit(1), lit(Bits)),
-            j => when(h.substr(j, lit(1)) >= "8", 1).otherwise(-1)),
-          (a, b) => a + b)
-      })
-    concat_ws("", transform(votes, v => when(v > 0, lit("1")).otherwise(lit("0"))))
-  }
-
-  /** Hamming distance between two equal-length bit strings. */
-  def hammingDistance(a: Column, b: Column): Column =
-    size(filter(zip_with(split(a, ""), split(b, ""), (x, y) => x =!= y), b => b))
 }

@@ -41,18 +41,11 @@ object Text {
     * to a single whole-text shingle so every document has a non-empty
     * shingle set. Computed by the codegen'd native
     * [[graft.plans.Shingles]] expression (the hottest per-row loop in
-    * the dedup queries); [[shinglesHof]] is the byte-identical builtin
-    * formulation it is spec-checked against.
+    * the dedup queries); `graft.ref.TextRef.shinglesHof` is the
+    * byte-identical builtin formulation it is spec-checked against.
     */
   def shingles(toks: Column, n: Int): Column =
     call_function("graft_shingles", toks, lit(n))
-
-  /** Builtin-HOF shingles (no extension registration needed). */
-  def shinglesHof(toks: Column, n: Int): Column =
-    when(size(toks) >= n,
-      transform(sequence(lit(1), size(toks) - (n - 1)),
-        i => concat_ws(" ", slice(toks, i, lit(n)))))
-      .otherwise(array(concat_ws(" ", toks)))
 
   /** BPE-ish subword count heuristic: word tokens plus an extra token
     * per 6 characters of word length beyond the first 6 (long words
@@ -75,9 +68,7 @@ object Text {
 
   /** Marker-word language scores: count of per-language stopword hits.
     * Deterministic argmax with lexicographic tie-break on the language
-    * code. (A char-trigram profile scorer lives in [[LangProfiles]]
-    * for real-world text; this marker variant is SQL-expressible for
-    * the oracle gate.)
+    * code. The marker variant is SQL-expressible for the oracle gate.
     */
   def langScores(toks: Column, markers: Map[String, Seq[String]]): Map[String, Column] =
     markers.map { case (lang, words) => lang -> countIn(toks, words) }
@@ -98,23 +89,12 @@ object Text {
     * boilerplate/stutter normalization every corpus-cleaning pass
     * runs before dedup. Computed by the codegen'd native
     * [[graft.plans.CollapseRepeats]] (the HOF formulation
-    * [[collapseRepeatsHof]] evaluates an interpreted lambda frame per
-    * token; spec-checked equal). Pure per-row array work — map-only,
+    * `graft.ref.TextRef.collapseRepeatsHof` evaluates an interpreted
+    * lambda frame per token; spec-checked equal). Pure per-row array work — map-only,
     * zero shuffle.
     */
   def collapseRepeats(toks: Column): Column =
     call_function("graft_collapse", toks)
-
-  /** Builtin-HOF collapse (no extension registration needed): keeps
-    * each token not null-safe-equal to its predecessor. The position-0
-    * disjunct is NOT redundant: `get` is null out-of-bounds, so for a
-    * NULL first token `t <=> get(toks, -1)` is `null <=> null` = TRUE
-    * and the bare predicate would drop the run's first element — the
-    * native [[graft.plans.CollapseRepeats]] (correctly) keeps the
-    * first element of every run, null runs included.
-    */
-  def collapseRepeatsHof(toks: Column): Column =
-    filter(toks, (t, i) => (i === lit(0)) || !(t <=> get(toks, i - lit(1))))
 
   /** One-pass native token statistics
     * ([[graft.plans.TextStats]]): struct(n_tokens, n_distinct,
@@ -139,21 +119,12 @@ object Text {
       regexp_replace(c, pat, rep)
     }
 
-  /** Winnowing (local-min fingerprint selection over a sliding window
-    * of shingle hashes): the standard rolling-fingerprint dedup trick —
-    * returns the distinct window-minimum hashes.
-    */
-  def winnow(shingleHashes: Column, window: Int): Column =
-    array_distinct(
-      when(size(shingleHashes) >= window,
-        transform(sequence(lit(1), size(shingleHashes) - (window - 1)),
-          i => array_min(slice(shingleHashes, i, lit(window)))))
-        .otherwise(array(array_min(shingleHashes))))
-
   /** One-pass native fingerprint over SHINGLES (not hashes):
     * `struct(min_shingle_hash, n_winnow)` ==
     * `(array_min(transform(sh, md5)), size(winnow(transform(sh, md5),
-    * w)))` — [[graft.plans.Fingerprint]], spec-checked equal to the
+    * w)))` with `winnow` the sliding-window-minimum selection of
+    * `graft.ref.TextRef.winnow` — [[graft.plans.Fingerprint]],
+    * spec-checked equal to the
     * HOF composition it replaces on the corpus hot path (the HOF form
     * pays interpreted lambda frames + three intermediate arrays per
     * row).

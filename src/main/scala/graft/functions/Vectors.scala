@@ -15,15 +15,12 @@ object Vectors {
   def asDouble(v: Column): Column = v.cast("array<double>")
 
   /** Codegen'd native dot product (graft.plans.DotProduct); bit-equal
-    * to the HOF formulation [[dotHof]] (same ascending-index fold).
+    * to the HOF formulation `graft.ref.VectorsRef.dotHof` (same
+    * ascending-index fold).
     * Requires the function registered via GraftExtensions (done by
     * GraftSession.prepare/local).
     */
   def dot(a: Column, b: Column): Column = call_function("graft_dot", a, b)
-
-  /** Builtin-HOF dot product (no extension registration needed). */
-  def dotHof(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, v) => acc + v)
 
   def norm(a: Column): Column = sqrt(dot(a, a))
 

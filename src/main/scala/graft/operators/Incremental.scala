@@ -1,38 +1,23 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** High-watermark incremental filters — the reference's hand-rolled
-  * incremental-view-maintenance predicates:
-  * `WHERE observed > (SELECT COALESCE(MAX(observed), <epoch>) FROM {{this}})`
+/** High-watermark incremental filter — the reference's hand-rolled
+  * incremental-view-maintenance predicates, in the trailing-window
+  * `>=` form of
+  * `/root/reference/dbt/models/ods/ods_metar_latest.sql:34-39` and
+  * `/root/reference/dbt/models/dwh/dw_daily_airport_metrics.sql:31-37`.
+  * The strict `>` staging watermark
   * (`/root/reference/dbt/models/stg/stg_metar_observations.sql:14-19`,
-  * strict `>`) and the `>=` variants
-  * (`/root/reference/dbt/models/ods/ods_metar_latest.sql:34-39`,
-  * `/root/reference/dbt/models/dwh/dw_daily_airport_metrics.sql:31-37`).
+  * F2) is applied by [[graft.pipeline.Medallion]]'s stg layer.
   *
-  * The watermark is a 1-row aggregate of the *target* table. Instead of
-  * collecting it to the driver we broadcast the 1-row aggregate and
-  * cross-join — the filter stays fully distributed and the scalar is
-  * computed exactly once per run regardless of source size. The
-  * `COALESCE(.., epoch)` default fixes the reference's own latent bug
-  * (`int_metar_latest.sql:41-44` lacks it, so an empty target yields a
-  * NULL comparison and an empty refresh).
+  * The watermark is a 1-row aggregate. Instead of collecting it to the
+  * driver we broadcast the 1-row aggregate and cross-join — the filter
+  * stays fully distributed and the scalar is computed exactly once per
+  * run regardless of source size.
   */
 object Incremental {
-
-  /** Rows of `source` with `tsCol` strictly above the max of
-    * `watermarkOf(tsCol)` (or all rows when the target is empty).
-    */
-  def aboveWatermark(source: DataFrame, watermarkOf: DataFrame, tsCol: String,
-      inclusive: Boolean = false): DataFrame = {
-    val wm = watermarkOf.agg(max(col(tsCol)).as("_wm"))
-    val joined = source.crossJoin(broadcast(wm))
-    val pred: Column =
-      if (inclusive) col(tsCol) >= col("_wm") else col(tsCol) > col("_wm")
-    // NULL watermark (empty target) must admit every row:
-    joined.filter(col("_wm").isNull || pred).drop("_wm")
-  }
 
   /** Trailing-window variant: rows with `tsCol >= max(tsCol) - lag`.
     * Used when the "target" is the source itself (reprocess the recent

@@ -1,45 +1,19 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, ShortType}
 
-/** Strategy-adaptive dimension join — the sizing decision a user
-  * shouldn't hand-tune per query:
-  *
-  *  - dim fits the broadcast budget → `broadcast()` hash join, fact
-  *    side never shuffles;
-  *  - dim too large to broadcast as rows → bloom-prefiltered shuffle
-  *    join ([[BloomPrune]]): the dim's keys broadcast as a bitset
-  *    (~16 bits/key), the fact side shrinks to the dim's selectivity
-  *    BEFORE the exchange, and the exact join finishes.
-  *
-  * Both paths return identical results (the bloom path admits false
-  * positives only, removed by the join) — `JoinsSpec` pins the plan
-  * shape per regime and the cross-regime equality.
-  *
-  * Sizing comes from Catalyst plan statistics (CBO row counts when
-  * available, else file-size ÷ schema row width), so the regime
-  * decision costs ZERO Spark jobs — no `count()` action per call. The
-  * estimate errs conservatively: an underestimated row count only
-  * shrinks the bloom (higher fpp, still correct); an overestimate only
-  * skips a broadcast that barely fit. Broadcast-side bound: `dim` up
-  * to `broadcastRowLimit` estimated rows AND `broadcastByteLimit`
-  * plan-stat bytes is materialized on every executor — the byte cap
-  * protects against the width heuristic under-counting rows on wide
-  * dims — callers joining genuinely large dims rely on the bloom
-  * regime, never row broadcast.
+/** Plan-statistics sizing for operators that size their shuffles
+  * before running anything ([[graft.ext.Clusters]]' label-propagation
+  * width, [[graft.ext.Pq]]'s index-build and encode widths). The
+  * estimate costs ZERO Spark jobs — no `count()` action per call.
   */
 object Joins {
 
-  private def integral(dt: DataType): Boolean = dt match {
-    case ByteType | ShortType | IntegerType | LongType => true
-    case _ => false
-  }
-
   /** Estimated row count from the optimized plan's statistics — CBO
     * rowCount when present, else sizeInBytes over the schema's default
-    * row width. Never launches a job.
+    * row width. Never launches a job. The width heuristic can
+    * undercount rows 10x+ on wide or well-compressed inputs, so
+    * callers treat it as a sizing hint, never as a correctness bound.
     */
   private[graft] def estimatedRows(df: DataFrame): Long = {
     val stats = df.queryExecution.optimizedPlan.stats
@@ -47,41 +21,5 @@ object Joins {
       val width = df.schema.fields.map(_.dataType.defaultSize.toLong).sum.max(1L)
       (stats.sizeInBytes / width).min(BigInt(Long.MaxValue)).toLong.max(1L)
     }
-  }
-
-  /** Estimated materialized size from the optimized plan's statistics.
-    * Never launches a job.
-    */
-  private[graft] def estimatedBytes(df: DataFrame): Long =
-    df.queryExecution.optimizedPlan.stats.sizeInBytes
-      .min(BigInt(Long.MaxValue)).toLong
-
-  def dimJoin(fact: DataFrame, dim: DataFrame, factKey: String,
-      dimKey: String, broadcastRowLimit: Long = 1L << 20,
-      broadcastByteLimit: Long = 256L << 20): DataFrame = {
-    val n = estimatedRows(dim)
-    // The row estimate divides compressed sizeInBytes by the schema's
-    // default row width, which can UNDERCOUNT rows 10x+ on wide or
-    // well-compressed dims — a wrongly-taken explicit broadcast()
-    // bypasses autoBroadcastJoinThreshold and can OOM executors. The
-    // byte cap gates the broadcast regime independently of the row
-    // estimate: a dim whose plan-stat size is already large never
-    // broadcasts, however few rows the width heuristic claims.
-    val small = n <= broadcastRowLimit && estimatedBytes(dim) <= broadcastByteLimit
-    // bloom hashes bigint keys only — casting a non-integral key (on
-    // EITHER side: a string/double fact key long-casts lossily too)
-    // would null or truncate and turn into false NEGATIVES, so such
-    // pairs skip the prefilter and take the plain shuffle join
-    val bloomable = integral(dim.schema(dimKey).dataType) &&
-      integral(fact.schema(factKey).dataType)
-    val probe =
-      if (small || !bloomable) fact
-      else fact.filter(BloomPrune.mightContain(fact(factKey),
-        BloomPrune.build(dim, dimKey, BloomPrune.sizeBits(n))))
-    val d = if (small) broadcast(dim) else dim
-    // same-named keys would be ambiguous after the join: USING form
-    // (which also dedups the key column)
-    if (factKey == dimKey) probe.join(d, Seq(factKey))
-    else probe.join(d, probe(factKey) === d(dimKey))
   }
 }

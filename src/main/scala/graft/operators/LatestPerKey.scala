@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** "Latest full row per key" — the reference's `int` layer semantics:
@@ -17,9 +16,10 @@ import org.apache.spark.sql.functions._
   *    key only, because the struct buffer is not UnsafeRow-mutable —
   *    but never orders the full data.) This is the plan you want at
   *    scale.
-  *  - [[viaWindow]]: the literal window-function translation. It
-  *    shuffles *every* row and sorts each partition — kept for parity
-  *    testing and for when the full ranked output is needed.
+  *  - the literal window-function translation shuffles *every* row
+  *    and sorts each partition; [[graft.plans.LatestWindowToMaxBy]]
+  *    rewrites that shape into [[apply]]'s (its test-scope copy is
+  *    `graft.ref.LatestPerKeyRef.viaWindow`).
   *
   * Determinism: callers must make `orderCols` a total order (append a
   * unique tie-breaker column, e.g. the row id); otherwise ties are
@@ -36,17 +36,5 @@ object LatestPerKey {
     df.groupBy(keys.map(col): _*)
       .agg(max_by(payload, ord).as("_latest"))
       .select(df.columns.map(c => col(s"_latest.`$c`").as(c)).toSeq: _*)
-  }
-
-  /** Literal window translation of the reference SQL (shuffles + sorts
-    * all rows; prefer [[apply]] at scale).
-    */
-  def viaWindow(df: DataFrame, keys: Seq[String], orderCols: Seq[String]): DataFrame = {
-    val w = Window
-      .partitionBy(keys.map(col): _*)
-      .orderBy(orderCols.map(c => col(c).desc): _*)
-    df.withColumn("_rn", row_number().over(w))
-      .filter(col("_rn") === 1)
-      .drop("_rn")
   }
 }

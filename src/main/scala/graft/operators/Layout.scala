@@ -30,20 +30,14 @@ object Layout {
     * manifest. One scan pruned to the indexed columns, partial min/max
     * per file before the (#files)-row shuffle; the index is file-count
     * sized, not data sized. Persist it with [[writeStatsIndex]] and
-    * maintenance re-runs only when files change.
+    * rebuild it when files change.
     */
-  def statsIndex(spark: SparkSession, path: String, cols: Seq[String]): DataFrame =
-    fileStats(spark.read.parquet(path), cols)
-
-  /** Per-file stats of an already-opened scan — the one definition of
-    * the index schema (statsIndex and refreshStatsIndex both fold
-    * through here, so they cannot drift).
-    */
-  private def fileStats(df: DataFrame, cols: Seq[String]): DataFrame = {
+  def statsIndex(spark: SparkSession, path: String, cols: Seq[String]): DataFrame = {
     val aggs = cols.flatMap(c =>
       Seq(min(col(c)).as(s"min_$c"), max(col(c)).as(s"max_$c"))) :+
       count(lit(1)).as("n_rows")
-    df.select(col("_metadata.file_path").as("file") +: cols.map(col): _*)
+    spark.read.parquet(path)
+      .select(col("_metadata.file_path").as("file") +: cols.map(col): _*)
       .groupBy(col("file"))
       .agg(aggs.head, aggs.tail: _*)
   }
@@ -54,106 +48,6 @@ object Layout {
   def writeStatsIndex(spark: SparkSession, path: String, cols: Seq[String]): Unit =
     statsIndex(spark, path, cols).repartition(1)
       .write.mode("overwrite").parquet(path + "_stats")
-
-  /** Incrementally refresh the persisted index after appends/compaction:
-    * stats are computed ONLY for files not yet indexed (scan cost is
-    * proportional to new data, the append-heavy maintenance shape),
-    * entries for vanished files drop, untouched entries carry over
-    * byte-for-byte. A crash mid-refresh leaves the old index (swap via
-    * [[MergeWriter.replace]]), which is safe: the index admits false
-    * positives but a STALE-MISSING file would be a false negative, so
-    * readers must refresh after writes they depend on.
-    */
-  /** Scheme-free path component as a COLUMN — the join key between
-    * the listing (`file:/x`) and Spark's `_metadata.file_path`
-    * (`file:///x`), whose scheme renderings differ. Mirrors
-    * `new Path(s).toUri.getPath`: strip `scheme://authority` then the
-    * single-slash `scheme:/` form.
-    */
-  private def normPath(c: Column): Column =
-    regexp_replace(
-      regexp_replace(c, "^[a-zA-Z][a-zA-Z0-9+.-]*://[^/]*", ""),
-      "^[a-zA-Z][a-zA-Z0-9+.-]*:/", "/")
-
-  /** Distributed RECURSIVE listing of the table's current parquet
-    * files: one row per file, NEVER a driver-side array of all files
-    * (a 100 TB table has ~10^6 of them). The driver holds only the
-    * per-level DIRECTORY list (partition metadata — the same thing a
-    * Delta/Iceberg manifest enumerates); each level's children are
-    * listed by executors. Hidden components (swap staging `.X.old` /
-    * `.X.tmp-*`, metadata `_` dirs) are dropped at every level the way
-    * partition discovery drops them — indexing a crash leftover would
-    * make prunedRead read a partition's rows twice. Recursion matters:
-    * on a Hive layout the top level is `col=value` directories; a flat
-    * listing would see zero files and commit an empty index.
-    */
-  private def listCurrentFiles(spark: SparkSession, path: String): DataFrame = {
-    import spark.implicits._
-    val conf = new org.apache.spark.util.SerializableConfiguration(
-      spark.sparkContext.hadoopConfiguration)
-    val root = new org.apache.hadoop.fs.Path(path)
-    val rootFs = root.getFileSystem(conf.value)
-    var dirs = Seq(rootFs.makeQualified(root).toString)
-    var files = Seq.empty[String].toDF("file")
-    while (dirs.nonEmpty) {
-      val level = spark.createDataset(dirs)
-        .flatMap { d =>
-          val p = new org.apache.hadoop.fs.Path(d)
-          // files are emitted in Path.toUri URL-ENCODED rendering —
-          // the same encoding `_metadata.file_path` carries — so the
-          // normPath join keys agree even for paths with encodable
-          // characters (a space in a dir name would otherwise make
-          // every semi/anti join miss and silently degrade refresh to
-          // a full rebuild); directories stay raw for recursion
-          p.getFileSystem(conf.value).listStatus(p).toSeq
-            .map(s => (if (s.isDirectory) s.getPath.toString
-                       else s.getPath.toUri.toString, s.isDirectory))
-        }.toDF("file", "is_dir")
-        .filter(!element_at(split(col("file"), "/"), -1).rlike("^[._]"))
-        .localCheckpoint() // consumed twice: once per branch below
-      dirs = level.filter(col("is_dir")).select("file").as[String]
-        .collect().toSeq
-      files = files.unionByName(
-        level.filter(!col("is_dir") && col("file").endsWith(".parquet"))
-          .select("file"))
-    }
-    files
-  }
-
-  def refreshStatsIndex(spark: SparkSession, path: String, cols: Seq[String]): Unit = {
-    val idxPath = path + "_stats"
-    if (!MergeWriter.exists(spark, idxPath)) { writeStatsIndex(spark, path, cols); return }
-    val current = listCurrentFiles(spark, path)
-      .withColumn("_nfile", normPath(col("file"))).localCheckpoint()
-    spark.catalog.refreshByPath(idxPath)
-    val allOld = spark.read.parquet(idxPath)
-      .withColumn("_nfile", normPath(col("file")))
-    // carry over stats ONLY for files that still exist — a semi join,
-    // not a driver Set of every indexed file (index is file-count
-    // sized; the keep set must stay distributed at 10^6 files).
-    // Checkpointed because MergeWriter.replace swaps idxPath out from
-    // under the lazy read below.
-    val old = allOld
-      .join(current.select("_nfile"), Seq("_nfile"), "left_semi")
-      .drop("_nfile").localCheckpoint()
-    // fresh = current files the index has not seen: an anti join whose
-    // RESULT is collected — proportional to NEW data since the last
-    // refresh (the append-heavy incremental contract), never the full
-    // table listing
-    val fresh = current
-      .join(allOld.select("_nfile"), Seq("_nfile"), "left_anti")
-      .select("file").as[String](org.apache.spark.sql.Encoders.STRING)
-      .collect().toSeq.sorted
-    val merged =
-      if (fresh.isEmpty) old
-      // basePath keeps partition columns resolvable when the fresh
-      // files are leaves of a hive layout (a bare leaf-file read has
-      // no `col=value` context and an index over a partition column
-      // would fail UNRESOLVED_COLUMN on refresh)
-      else old.unionByName(fileStats(
-        spark.read.option("basePath", path).parquet(fresh: _*), cols))
-    MergeWriter.replace(spark, idxPath, merged.repartition(1))
-  }
 
   /** Read `path` scanning ONLY files whose [min,max] envelope overlaps
     * every `(col, lo, hi)` bound, using the persisted stats index; the

@@ -237,64 +237,6 @@ object MergeWriter {
     parts
   }
 
-  /** Small-file compaction: rewrite the parquet table at `dir` into
-    * ~`targetFileBytes`-sized files (same crash-recoverable swap as
-    * every merge). Streaming merge sinks and frequent small upserts
-    * accumulate files far below the scan-efficient size; at 100 TB the
-    * resulting per-file open/footer overhead and tiny row groups
-    * dominate scan cost, so compaction is a first-class maintenance
-    * op, run off the write path. File count derives from the CURRENT
-    * on-disk byte size, so repeated compactions are stable.
-    *
-    * Hive-partitioned layouts ([[upsertPartitioned]] targets) are
-    * detected via `col=value` subdirectories — at ANY nesting depth
-    * (`a=1/b=2/...`) — and compacted per LEAF partition dir,
-    * preserving the full layout. A flat rewrite of such a dir would
-    * leave full-table files next to partition dirs (duplicating rows
-    * on a later partition swap); a one-level rewrite of a multi-level
-    * layout would fold the inner partition columns into the data
-    * files and destroy the nested directory structure.
-    */
-  def compact(spark: SparkSession, dir: String,
-      targetFileBytes: Long = 128L * 1024 * 1024): Unit = {
-    val dst = new Path(dir)
-    val f = fs(spark, dst)
-    def leaves(p: Path): Seq[Path] = {
-      val parts = f.listStatus(p).toSeq.filter { s =>
-        val n = s.getPath.getName
-        s.isDirectory && n.contains("=") && !n.startsWith("_") && !n.startsWith(".")
-      }
-      if (parts.isEmpty) Seq(p) else parts.flatMap(s => leaves(s.getPath))
-    }
-    val targets = leaves(dst)
-    if (targets == Seq(dst))
-      compactFlat(spark, dst, targetFileBytes, hiddenStaging = false)
-    else targets.foreach(p => compactFlat(spark, p, targetFileBytes,
-      hiddenStaging = true))
-  }
-
-  /** `hiddenStaging` stages the rewrite under a dot-prefixed sibling
-    * (ignored by partition discovery) — REQUIRED when `dst` is a
-    * partition dir inside a table root, where a visible `<name>.tmp-*`
-    * sibling would be listed as a bogus partition and double rows for
-    * concurrent readers.
-    */
-  private def compactFlat(spark: SparkSession, dst: Path,
-      targetFileBytes: Long, hiddenStaging: Boolean): Unit = {
-    val bytes = fs(spark, dst).getContentSummary(dst).getLength
-    val n = math.max(1L, (bytes + targetFileBytes - 1) / targetFileBytes).toInt
-    val df = graft.Tables.parquet(spark, dst.toString).repartition(n)
-    if (!hiddenStaging) replace(spark, dst.toString, df)
-    else {
-      val tmp = new Path(dst.getParent, "." + dst.getName + ".tmp-" +
-        java.util.UUID.randomUUID().toString.take(8))
-      val f = fs(spark, dst)
-      df.write.mode("overwrite").parquet(tmp.toString)
-      swapDir(f, tmp, dst)
-      spark.catalog.refreshByPath(dst.toString)
-    }
-  }
-
   /** Atomically replace the table at `dir` with `df` (crash-recoverable
     * swap; see [[swapDir]]) — the persistence primitive behind upsert
     * and the view-maintenance sinks ([[Ivm]]). An optional

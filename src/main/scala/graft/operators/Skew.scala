@@ -3,18 +3,13 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** Skew mitigation utilities. AQE's runtime skew-join splitting
-  * (enabled in [[graft.GraftSession]]) handles most cases; these are
-  * the explicit tools for planned skew — a handful of keys carrying a
-  * large fraction of a 100 TB fact table:
-  *
-  *  - [[saltedJoin]]: the big side is salted with a deterministic hash
-  *    of a spreading column; the small side is replicated once per
-  *    salt. A hot key's rows then spread over `salts` reducers instead
-  *    of one.
-  *  - [[saltedAgg]]: two-phase aggregation — partial aggregate on
-  *    (key, salt), final aggregate on key. Useful when even map-side
-  *    combine leaves one reducer with a giant hot-key partition.
+/** Skew mitigation. AQE's runtime skew-join splitting (enabled in
+  * [[graft.GraftSession]]) handles most cases; [[saltedJoin]] is the
+  * explicit tool for planned skew — a handful of keys carrying a large
+  * fraction of a 100 TB fact table: the big side is salted with a
+  * deterministic hash of a spreading column; the small side is
+  * replicated once per salt. A hot key's rows then spread over `salts`
+  * reducers instead of one.
   */
 object Skew {
 
@@ -28,20 +23,5 @@ object Skew {
     val smallS = small.withColumn("_salt",
       explode(sequence(lit(0), lit(salts - 1))))
     bigS.join(smallS, keys :+ "_salt").drop("_salt")
-  }
-
-  /** Two-phase salted count/sum per key. `aggs` maps output name →
-    * (partial aggregate over raw rows, final aggregate over partials).
-    */
-  def saltedAgg(df: DataFrame, key: String, spread: Column, salts: Int,
-      aggs: Map[String, (Column, Column)]): DataFrame = {
-    val partial = df
-      .withColumn("_salt", pmod(hash(spread), lit(salts)))
-      .groupBy(col(key), col("_salt"))
-      .agg(aggs.head._2._1.as(aggs.head._1),
-        aggs.tail.map { case (n, (p, _)) => p.as(n) }.toSeq: _*)
-    partial.groupBy(col(key))
-      .agg(aggs.head._2._2.as(aggs.head._1),
-        aggs.tail.map { case (n, (_, f)) => f.as(n) }.toSeq: _*)
   }
 }

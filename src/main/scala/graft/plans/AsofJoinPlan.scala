@@ -79,9 +79,9 @@ case class AsofJoinNode(
     copy(left = newLeft, right = newRight)
 }
 
-/** Plans [[AsofJoinNode]] as [[AsofJoinExec]]; registered through
-  * [[GraftExtensions]] (`injectPlannerStrategy` at session build,
-  * `experimental.extraStrategies` on existing sessions).
+/** Plans [[AsofJoinNode]] as [[AsofJoinExec]]; registered as an
+  * `experimental.extraStrategies` entry by
+  * [[GraftExtensions.registerOn]].
   */
 object AsofJoinStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {

@@ -1,79 +1,25 @@
 package graft.plans
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.Expression
 
-/** Engine extension points. Registers the native functions so they are
-  * callable from SQL and via `call_function`:
-  *
-  *  - `graft_dot(a, b)` — codegen'd [[DotProduct]]
-  *
-  * Two registration paths: [[GraftExtensions]] for
-  * `spark.sql.extensions=graft.plans.GraftExtensions` at session build
-  * (the production cluster path), and [[registerOn]] for an existing
-  * session (tests / driver-owned sessions).
+/** Engine extension points, installed on a session by [[registerOn]]
+  * (run by `GraftSession.local`/`prepare` and every `SparkEntry.queries`
+  * call): the native functions — callable from SQL and via
+  * `call_function`, e.g. `graft_dot(a, b)` ([[DotProduct]]) — the
+  * planner strategies and the optimizer rule.
   */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectFunction(GraftExtensions.dotFunction)
-    e.injectFunction(GraftExtensions.pqAdcFunction)
-    e.injectFunction(GraftExtensions.minhashFunction)
-    e.injectFunction(GraftExtensions.shinglesFunction)
-    e.injectFunction(GraftExtensions.fingerprintFunction)
-    e.injectFunction(GraftExtensions.simhashFunction)
-    e.injectFunction(GraftExtensions.hllRegFunction)
-    e.injectFunction(GraftExtensions.collapseFunction)
-    e.injectFunction(GraftExtensions.textstatsFunction)
-    e.injectFunction(GraftExtensions.gramStatsFunction)
-    e.injectFunction(GraftExtensions.sortedPairsFunction)
-    e.injectFunction(GraftExtensions.sortedPairsPackedFunction)
-    e.injectFunction(GraftExtensions.firstCollisionFunction)
-    e.injectFunction(GraftExtensions.bloomPosFunction)
-    e.injectFunction(GraftExtensions.bloomMightFunction)
-    e.injectFunction(GraftExtensions.hllAggFunction)
-    e.injectFunction(GraftExtensions.bigramTableFunction)
-    e.injectFunction(GraftExtensions.shingleExplodeFunction)
-    e.injectFunction(GraftExtensions.removeSpansFunction)
-    e.injectFunction(GraftExtensions.termCountsFunction)
-    e.injectFunction(GraftExtensions.bigramCountsFunction)
-    e.injectFunction(GraftExtensions.bm25TopKFunction)
-    e.injectFunction(GraftExtensions.perplexityFunction)
-    e.injectFunction(GraftExtensions.prefixC1Function)
-    e.injectFunction(GraftExtensions.perplexityModelFunction)
-    e.injectFunction(GraftExtensions.cosinePairsFunction)
-    e.injectFunction(GraftExtensions.assignNearestFunction)
-    e.injectFunction(GraftExtensions.tfidfTopKFunction)
-    e.injectFunction(GraftExtensions.dsirBucketsFunction)
-    e.injectFunction(GraftExtensions.dsirScoreFunction)
-    e.injectFunction(GraftExtensions.sortableBitsFunction)
-    e.injectFunction(GraftExtensions.sortedOverlapFunction)
-    e.injectFunction(GraftExtensions.editPairsFunction)
-    e.injectPlannerStrategy(_ => AsofJoinStrategy)
-    e.injectPlannerStrategy(_ => PrefixPairsStrategy)
-    // the optimizer rule must ride the production path too: without it
-    // a cluster configured via spark.sql.extensions would run the
-    // rn=1-window form at full shuffle width — the exact regression
-    // the rewrite exists to prevent (registerOn adds the same rule via
-    // experimental.extraOptimizations)
-    e.injectOptimizerRule(_ => LatestWindowToMaxBy)
-  }
-}
-
 object GraftExtensions {
 
-  private val dotFunction: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("graft_dot"),
-    new ExpressionInfo(classOf[DotProduct].getName, "graft_dot"),
+  private val dotFunction: (String, Seq[Expression] => Expression) = (
+    "graft_dot",
     (children: Seq[Expression]) => {
       requireArity(children, 2, "graft_dot(a, b)")
       DotProduct(children(0), children(1))
     })
 
-  private val pqAdcFunction: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("graft_pq_adc"),
-    new ExpressionInfo(classOf[PqAdc].getName, "graft_pq_adc"),
+  private val pqAdcFunction: (String, Seq[Expression] => Expression) = (
+    "graft_pq_adc",
     (children: Seq[Expression]) => {
       requireArity(children, 2, "graft_pq_adc(codes, lut)")
       PqAdc(children(0), children(1))
@@ -98,9 +44,8 @@ object GraftExtensions {
     MinHashSignature(children(0), k, fam)
   }
 
-  private val minhashFunction: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("graft_minhash"),
-    new ExpressionInfo(classOf[MinHashSignature].getName, "graft_minhash"),
+  private val minhashFunction: (String, Seq[Expression] => Expression) = (
+    "graft_minhash",
     buildMinhash _)
 
   /** `graft_shingles(tokens, n)` — n must be an int literal. */
@@ -115,9 +60,8 @@ object GraftExtensions {
     Shingles(children(0), n)
   }
 
-  private val shinglesFunction: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("graft_shingles"),
-    new ExpressionInfo(classOf[Shingles].getName, "graft_shingles"),
+  private val shinglesFunction: (String, Seq[Expression] => Expression) = (
+    "graft_shingles",
     buildShingles _)
 
   /** `graft_textstats(tokens, stopwords...)` — stopwords as trailing
@@ -135,72 +79,61 @@ object GraftExtensions {
     TextStats(children.head, words)
   }
 
-  private val hllRegFunction: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("graft_hll_reg"),
-    new ExpressionInfo(classOf[HllReg].getName, "graft_hll_reg"),
+  private val hllRegFunction: (String, Seq[Expression] => Expression) = (
+    "graft_hll_reg",
     (children: Seq[Expression]) => {
       requireArity(children, 1, "graft_hll_reg(value)")
       HllReg(children.head)
     })
 
-  private val simhashFunction: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("graft_simhash"),
-    new ExpressionInfo(classOf[SimHashExpr].getName, "graft_simhash"),
+  private val simhashFunction: (String, Seq[Expression] => Expression) = (
+    "graft_simhash",
     (children: Seq[Expression]) => {
       requireArity(children, 1, "graft_simhash(tokens)")
       SimHashExpr(children.head)
     })
 
-  private val fingerprintFunction: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("graft_fingerprint"),
-    new ExpressionInfo(classOf[Fingerprint].getName, "graft_fingerprint"),
+  private val fingerprintFunction: (String, Seq[Expression] => Expression) = (
+    "graft_fingerprint",
     (children: Seq[Expression]) => {
       requireArity(children, 2, "graft_fingerprint(shingles, window)")
       Fingerprint(children(0), children(1))
     })
 
-  private val collapseFunction: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("graft_collapse"),
-    new ExpressionInfo(classOf[CollapseRepeats].getName, "graft_collapse"),
+  private val collapseFunction: (String, Seq[Expression] => Expression) = (
+    "graft_collapse",
     (children: Seq[Expression]) => {
       requireArity(children, 1, "graft_collapse(tokens)")
       CollapseRepeats(children.head)
     })
 
-  private val textstatsFunction: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("graft_textstats"),
-    new ExpressionInfo(classOf[TextStats].getName, "graft_textstats"),
+  private val textstatsFunction: (String, Seq[Expression] => Expression) = (
+    "graft_textstats",
     buildTextStats _)
 
-  private val gramStatsFunction: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("graft_gram_stats"),
-    new ExpressionInfo(classOf[GramRepetitionStats].getName, "graft_gram_stats"),
+  private val gramStatsFunction: (String, Seq[Expression] => Expression) = (
+    "graft_gram_stats",
     (children: Seq[Expression]) => {
       requireArity(children, 1, "graft_gram_stats(tokens)")
       GramRepetitionStats(children.head)
     })
 
-  private val sortedPairsFunction: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("graft_sorted_pairs"),
-    new ExpressionInfo(classOf[SortedPairs].getName, "graft_sorted_pairs"),
+  private val sortedPairsFunction: (String, Seq[Expression] => Expression) = (
+    "graft_sorted_pairs",
     (children: Seq[Expression]) => {
       requireArity(children, 1, "graft_sorted_pairs(sorted_bigint_array)")
       SortedPairs(children.head)
     })
 
-  private val firstCollisionFunction: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("graft_first_collision"),
-    new ExpressionInfo(classOf[FirstCollision].getName,
-      "graft_first_collision"),
+  private val firstCollisionFunction: (String, Seq[Expression] => Expression) = (
+    "graft_first_collision",
     (children: Seq[Expression]) => {
       requireArity(children, 2, "graft_first_collision(codes_a, codes_b)")
       FirstCollision(children(0), children(1))
     })
 
-  private val sortedPairsPackedFunction: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("graft_sorted_pairs_packed"),
-    new ExpressionInfo(classOf[SortedPairsPacked].getName,
-      "graft_sorted_pairs_packed"),
+  private val sortedPairsPackedFunction: (String, Seq[Expression] => Expression) = (
+    "graft_sorted_pairs_packed",
     (children: Seq[Expression]) => {
       requireArity(children, 1,
         "graft_sorted_pairs_packed(sorted_bigint_array)")
@@ -246,22 +179,19 @@ object GraftExtensions {
       intLit(children(2), "graft_bloom_might", "numHashes"))
   }
 
-  private val bloomPosFunction: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("graft_bloom_pos"),
-    new ExpressionInfo(classOf[BloomPositions].getName, "graft_bloom_pos"),
+  private val bloomPosFunction: (String, Seq[Expression] => Expression) = (
+    "graft_bloom_pos",
     buildBloomPos _)
 
-  private val bloomMightFunction: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("graft_bloom_might"),
-    new ExpressionInfo(classOf[BloomMightContain].getName, "graft_bloom_might"),
+  private val bloomMightFunction: (String, Seq[Expression] => Expression) = (
+    "graft_bloom_might",
     buildBloomMight _)
 
   /** `graft_hll(value_string)` — the analyzer wraps the returned
     * AggregateFunction in its AggregateExpression.
     */
-  private val hllAggFunction: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("graft_hll"),
-    new ExpressionInfo(classOf[HllAgg].getName, "graft_hll"),
+  private val hllAggFunction: (String, Seq[Expression] => Expression) = (
+    "graft_hll",
     (children: Seq[Expression]) => {
       requireArity(children, 1, "graft_hll(value)")
       HllAgg(children.head)
@@ -270,9 +200,8 @@ object GraftExtensions {
   /** `graft_bigram_table(bc)` — imperative aggregate; the analyzer
     * wraps it in its AggregateExpression.
     */
-  private val bigramTableFunction: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("graft_bigram_table"),
-    new ExpressionInfo(classOf[BigramTableAgg].getName, "graft_bigram_table"),
+  private val bigramTableFunction: (String, Seq[Expression] => Expression) = (
+    "graft_bigram_table",
     (children: Seq[Expression]) => {
       requireArity(children, 1, "graft_bigram_table(bc)")
       // the builder runs at analysis time on the driver, so the knob
@@ -290,9 +219,8 @@ object GraftExtensions {
       intLit(children(1), "graft_shingle_explode", "n"))
   }
 
-  private val shingleExplodeFunction: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("graft_shingle_explode"),
-    new ExpressionInfo(classOf[ShingleExplode].getName, "graft_shingle_explode"),
+  private val shingleExplodeFunction: (String, Seq[Expression] => Expression) = (
+    "graft_shingle_explode",
     buildShingleExplode _)
 
   /** `graft_remove_spans(tokens, positions, k)` — k is a literal. */
@@ -302,22 +230,19 @@ object GraftExtensions {
       intLit(children(2), "graft_remove_spans", "k"))
   }
 
-  private val removeSpansFunction: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("graft_remove_spans"),
-    new ExpressionInfo(classOf[RemoveSpans].getName, "graft_remove_spans"),
+  private val removeSpansFunction: (String, Seq[Expression] => Expression) = (
+    "graft_remove_spans",
     buildRemoveSpans _)
 
-  private val termCountsFunction: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("graft_term_counts"),
-    new ExpressionInfo(classOf[TermCounts].getName, "graft_term_counts"),
+  private val termCountsFunction: (String, Seq[Expression] => Expression) = (
+    "graft_term_counts",
     (children: Seq[Expression]) => {
       requireArity(children, 1, "graft_term_counts(tokens)")
       TermCounts(children.head)
     })
 
-  private val bigramCountsFunction: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("graft_bigram_counts"),
-    new ExpressionInfo(classOf[BigramCounts].getName, "graft_bigram_counts"),
+  private val bigramCountsFunction: (String, Seq[Expression] => Expression) = (
+    "graft_bigram_counts",
     (children: Seq[Expression]) => {
       requireArity(children, 1, "graft_bigram_counts(tokens)")
       BigramCounts(children.head)
@@ -339,71 +264,62 @@ object GraftExtensions {
       doubleLit(children(5), "graft_bm25_topk", "b"))
   }
 
-  private val bm25TopKFunction: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("graft_bm25_topk"),
-    new ExpressionInfo(classOf[Bm25TopK].getName, "graft_bm25_topk"),
+  private val bm25TopKFunction: (String, Seq[Expression] => Expression) = (
+    "graft_bm25_topk",
     buildBm25TopK _)
 
-  private val perplexityFunction: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("graft_perplexity"),
-    new ExpressionInfo(classOf[PerplexityScore].getName, "graft_perplexity"),
+  private val perplexityFunction: (String, Seq[Expression] => Expression) = (
+    "graft_perplexity",
     (children: Seq[Expression]) => {
       requireArity(children, 2, "graft_perplexity(bc, model)")
       PerplexityScore(children(0), children(1))
     })
 
-  private val prefixC1Function: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("graft_prefix_c1"),
-    new ExpressionInfo(classOf[PrefixContextCounts].getName, "graft_prefix_c1"),
+  private val prefixC1Function: (String, Seq[Expression] => Expression) = (
+    "graft_prefix_c1",
     (children: Seq[Expression]) => {
       requireArity(children, 1, "graft_prefix_c1(c2arr)")
       PrefixContextCounts(children.head)
     })
 
-  private val cosinePairsFunction: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("graft_cosine_pairs"),
-    new ExpressionInfo(classOf[CosinePairs].getName, "graft_cosine_pairs"),
+  private val cosinePairsFunction: (String, Seq[Expression] => Expression) = (
+    "graft_cosine_pairs",
     (children: Seq[Expression]) => {
       requireArity(children, 4, "graft_cosine_pairs(a, b, same, minCosine)")
       CosinePairs(children(0), children(1), children(2),
         doubleLit(children(3), "graft_cosine_pairs", "minCosine"))
     })
 
-  private val perplexityModelFunction: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("graft_perplexity_model"),
-    new ExpressionInfo(classOf[PerplexityModel].getName, "graft_perplexity_model"),
+  private val perplexityModelFunction: (String, Seq[Expression] => Expression) = (
+    "graft_perplexity_model",
     (children: Seq[Expression]) => {
       requireArity(children, 2, "graft_perplexity_model(c2arr, sup)")
       PerplexityModel(children(0), children(1))
     })
 
-  private val dsirBucketsFunction: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("graft_dsir_buckets"),
-    new ExpressionInfo(classOf[DsirBuckets].getName, "graft_dsir_buckets"),
+  private val dsirBucketsFunction: (String, Seq[Expression] => Expression) = (
+    "graft_dsir_buckets",
     (children: Seq[Expression]) => {
       requireArity(children, 1, "graft_dsir_buckets(tokens)")
       DsirBuckets(children.head)
     })
 
-  private val dsirScoreFunction: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("graft_dsir_score"),
-    new ExpressionInfo(classOf[DsirScore].getName, "graft_dsir_score"),
+  private val dsirScoreFunction: (String, Seq[Expression] => Expression) = (
+    "graft_dsir_score",
     (children: Seq[Expression]) => {
       requireArity(children, 2, "graft_dsir_score(bcnts, lrarr)")
       DsirScore(children(0), children(1))
     })
 
-  private val sortableBitsFunction: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("graft_sortable_bits"),
-    new ExpressionInfo(classOf[SortableBits].getName, "graft_sortable_bits"),
+  private val sortableBitsFunction: (String, Seq[Expression] => Expression) = (
+    "graft_sortable_bits",
     (children: Seq[Expression]) => {
       requireArity(children, 1, "graft_sortable_bits(v)")
       SortableBits(children.head)
     })
 
-  private val sortedOverlapFunction: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("graft_sorted_overlap"),
-    new ExpressionInfo(classOf[SortedOverlap].getName, "graft_sorted_overlap"),
+  private val sortedOverlapFunction: (String, Seq[Expression] => Expression) = (
+    "graft_sorted_overlap",
     (children: Seq[Expression]) => {
       requireArity(children, 3, "graft_sorted_overlap(a, b, req)")
       SortedOverlap(children(0), children(1), children(2))
@@ -413,9 +329,8 @@ object GraftExtensions {
     * (it parameterizes the banded DP, plan-time fixed like
     * graft_cosine_pairs' threshold).
     */
-  private val editPairsFunction: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("graft_edit_pairs"),
-    new ExpressionInfo(classOf[EditPairs].getName, "graft_edit_pairs"),
+  private val editPairsFunction: (String, Seq[Expression] => Expression) = (
+    "graft_edit_pairs",
     (children: Seq[Expression]) => {
       requireArity(children, 4, "graft_edit_pairs(a, b, same, maxDist)")
       val k = intLit(children(3), "graft_edit_pairs", "maxDist")
@@ -424,18 +339,16 @@ object GraftExtensions {
     })
 
   /** `graft_tfidf_topk(tc, model, k)` — k is a literal. */
-  private val tfidfTopKFunction: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("graft_tfidf_topk"),
-    new ExpressionInfo(classOf[TfIdfTopK].getName, "graft_tfidf_topk"),
+  private val tfidfTopKFunction: (String, Seq[Expression] => Expression) = (
+    "graft_tfidf_topk",
     (children: Seq[Expression]) => {
       requireArity(children, 3, "graft_tfidf_topk(tc, model, k)")
       TfIdfTopK(children(0), children(1),
         intLit(children(2), "graft_tfidf_topk", "k"))
     })
 
-  private val assignNearestFunction: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("graft_assign_nearest"),
-    new ExpressionInfo(classOf[AssignNearest].getName, "graft_assign_nearest"),
+  private val assignNearestFunction: (String, Seq[Expression] => Expression) = (
+    "graft_assign_nearest",
     (children: Seq[Expression]) => {
       requireArity(children, 2, "graft_assign_nearest(uv, cents)")
       AssignNearest(children(0), children(1))
@@ -459,9 +372,9 @@ object GraftExtensions {
         perplexityModelFunction, cosinePairsFunction, assignNearestFunction,
         tfidfTopKFunction, dsirBucketsFunction, dsirScoreFunction,
         sortableBitsFunction, sortedOverlapFunction, editPairsFunction)
-      .foreach { case (ident, _, builder) =>
+      .foreach { case (name, builder) =>
         spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-          ident.funcName, builder, "built-in")
+          name, builder, "built-in")
       }
     if (!spark.experimental.extraOptimizations.contains(LatestWindowToMaxBy))
       spark.experimental.extraOptimizations =

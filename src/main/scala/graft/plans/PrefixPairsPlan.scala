@@ -93,8 +93,8 @@ object PrefixPairsNode {
   }
 }
 
-/** Plans [[PrefixPairsNode]] as [[PrefixPairsExec]]; registered through
-  * [[GraftExtensions]] alongside [[AsofJoinStrategy]].
+/** Plans [[PrefixPairsNode]] as [[PrefixPairsExec]]; registered by
+  * [[GraftExtensions.registerOn]] alongside [[AsofJoinStrategy]].
   */
 object PrefixPairsStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {

@@ -8,8 +8,8 @@ import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Word n-gram shingles as one codegen'd pass — semantics identical to
-  * the HOF formulation in [[graft.functions.Text.shingles]]
-  * (`transform(sequence(...), i -> concat_ws(" ", slice(toks, i, n)))`
+  * the HOF formulation `graft.ref.TextRef.shinglesHof` (test scope;
+  * `transform(sequence(...), i -> concat_ws(" ", slice(toks, i, n)))`
   * with the shorter-than-n whole-text fallback), but without the
   * per-shingle lambda frame, slice allocation and separate concat walk
   * the interpreted HOF pipeline pays. This feeds every dedup signature

@@ -241,8 +241,8 @@ object AnalyticsQueries {
     // 3 corpus scans + a distinct shuffle → 2 corpus scans; the
     // estimate↔exact join is between two frames derived from one
     // checkpointed aggregation.
-    // (cluster deployment: lineage-truncating barrier — COVERAGE
-    // "Materialization barriers")
+    // (cluster deployment: lineage-truncating barrier —
+    // "Materialization barriers" in COVERAGE.md at ff8d9ba)
     val exact = ev.filter(col("user_id").isNotNull)
       .groupBy(col("user_id")).agg(count(lit(1)).as("exact_n"))
       .localCheckpoint()
@@ -557,7 +557,8 @@ object AnalyticsQueries {
     // broadcast thresholds and the only exchange left carries
     // (group, bin)-grain partial aggregates — 20 rows. Measured 30×
     // alternating A/B (ProfileBinningShapes, equality-pinned):
-    // see COVERAGE round-18. The oracle SQL keeps the window form.
+    // see round 18 in COVERAGE.md at ff8d9ba. The oracle SQL keeps the
+    // window form.
     equidepthBins(Tables.events(spark, dir)
       .select(col("event_type"), col("value"),
         round(col("value") * 100).cast("long").as("cents")))
@@ -984,13 +985,6 @@ object AnalyticsQueries {
       .orderBy("bucket")
   }
 
-  /** Robust outlier detection: per-group median / MAD (median absolute
-    * deviation) and the |x − med| > 3·MAD outlier rate. Two exact
-    * grouped percentiles with the tiny per-group stats broadcast back
-    * between passes — the corpus never re-shuffles. (Exact percentile
-    * gathers each group; at 100 TB swap in `approx_percentile` — the
-    * exact form is what a serial oracle can replay.)
-    */
   /** Exact median of a SORTED array in Spark's own `percentile`
     * arithmetic (`PercentileBase.getPercentile`, Spark 4.1): the key
     * itself when both middle keys are equal, else the convex form
@@ -1013,6 +1007,12 @@ object AnalyticsQueries {
       .otherwise((hi - pos) * vLo + (pos - lo) * vHi)
   }
 
+  /** Robust outlier detection: per-group median / MAD (median absolute
+    * deviation) and the |x − med| > 3·MAD outlier rate, from one sorted
+    * gather per group. The 3-pass percentile form the DuckDB oracle
+    * replays is the test-scope equality twin
+    * `graft.ref.AnalyticsQueriesRef.outlierMadJoined`.
+    */
   def outlierMad(spark: SparkSession, dir: String): DataFrame = {
     // ONE scan, ONE shuffle (r22, VERDICT r21 #10): the 3-pass form
     // (median agg, broadcast-back deviation pass, MAD agg + final
@@ -1037,31 +1037,6 @@ object AnalyticsQueries {
         size(filter(col("_a"),
           x => abs(x - col("_med")) > lit(3.0) * col("_mad")))
           .cast("long").as("n_outliers"))
-      .withColumn("outlier_frac",
-        col("n_outliers").cast("double") / col("n"))
-      .orderBy("event_type")
-  }
-
-  /** The 3-pass broadcast-back form of [[outlierMad]] — kept as the
-    * one-pass rewrite's equality twin (the derivation the DuckDB
-    * oracle replays; AnalyticsSpec pins array == aggregate medians).
-    */
-  private[graft] def outlierMadJoined(spark: SparkSession,
-      dir: String): DataFrame = {
-    val ev = Tables.events(spark, dir).select(col("event_type"), col("value"))
-    val med = ev.groupBy(col("event_type"))
-      .agg(expr("percentile(value, 0.5)").as("med"))
-    val dev = ev.join(broadcast(med), "event_type")
-    val mad = dev.groupBy(col("event_type"))
-      .agg(expr("percentile(abs(value - med), 0.5)").as("mad"))
-    dev.join(broadcast(mad), "event_type")
-      .groupBy(col("event_type"))
-      .agg(
-        round(max(col("med")), 4).as("med"),
-        round(max(col("mad")), 4).as("mad"),
-        count(lit(1)).as("n"),
-        sum(when(abs(col("value") - col("med")) > lit(3.0) * col("mad"), 1L)
-          .otherwise(0L)).as("n_outliers"))
       .withColumn("outlier_frac",
         col("n_outliers").cast("double") / col("n"))
       .orderBy("event_type")
@@ -1312,8 +1287,8 @@ object AnalyticsQueries {
       // scans total; AQE stage reuse does not collapse them — same
       // finding as text_collocations). The cohort grid is
       // weeks²-bounded — the cheap side to pin. Cluster deployment:
-      // lineage-truncating barrier — COVERAGE "Materialization
-      // barriers".
+      // lineage-truncating barrier — "Materialization barriers" in
+      // COVERAGE.md at ff8d9ba.
       .localCheckpoint()
     val sizes = cells.filter(col("week_offset") === 0)
       .select(col("cohort_week"), col("n_active").as("cohort_size"))

@@ -380,12 +380,6 @@ object OpsQueries {
       .orderBy("candidate")
   }
 
-  /** Inclusion-dependency (foreign-key) discovery — the companion of
-    * [[profileKeys]]: for each candidate reference, orphan rows and
-    * orphan keys counted from ONE key-grain exchange per pair. The
-    * deliberately-bad candidate (events.user_id → supplier) shows
-    * real violation counts, not just all-green.
-    */
   /** Loud integral-key contract for [[profileInclusion]]'s unioned
     * legs: every leg casts its key to `long` so all four pairs share
     * one union schema — lossless for integral keys, but a string/UUID/
@@ -393,7 +387,7 @@ object OpsQueries {
     * into an orphan and dropping every reference key (the same
     * silent-cast hazard the embedding pair kernel fails loud on). A
     * non-integral candidate key must map through a surrogate integral
-    * id first (e.g. [[graft.ext.Dedup.withSurrogateIds]]).
+    * id first (a collision-checked hash or a dense-id lookup).
     */
   private[graft] def inclusionKey(df: DataFrame, k: String): Column = {
     import org.apache.spark.sql.types._
@@ -408,6 +402,12 @@ object OpsQueries {
     col(k).cast("long")
   }
 
+  /** Inclusion-dependency (foreign-key) discovery — the companion of
+    * [[profileKeys]]: for each candidate reference, orphan rows and
+    * orphan keys counted from ONE key-grain exchange per pair. The
+    * deliberately-bad candidate (events.user_id → supplier) shows
+    * real violation counts, not just all-green.
+    */
   def profileInclusion(spark: SparkSession, dir: String): DataFrame = {
     // Round-17 shape: ALL FOUR dependency pairs ride ONE key-grain
     // exchange under a (pair, side) tag. The r16 form was already
@@ -422,7 +422,8 @@ object OpsQueries {
     // Null semantics unchanged from the join this family replaced:
     // right-side nulls are filtered (null never matches), null probe
     // keys count as orphan rows, never as keys. Measured 30× A/B
-    // (ProfileInclusionShapes, equality-pinned — COVERAGE r18): a
+    // (ProfileInclusionShapes, equality-pinned — r18 in COVERAGE.md at
+    // ff8d9ba): a
     // WASH vs the per-pair form (3.88 vs 3.66 s medians, overlapping
     // reps — the saved cadence is offset by lost fold concurrency);
     // kept for the structural shape: one exchange instead of four.

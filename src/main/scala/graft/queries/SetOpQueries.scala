@@ -99,8 +99,8 @@ object SetOpQueries {
     // slices holding the order statistics are collected; the former
     // global (min,max) pass fell to IEEE-754 order-isomorphic
     // slicing in r18). Interpolation replicates the
-    // aggregate bit-for-bit; the aggregate form stays below as the
-    // equality twin.
+    // aggregate bit-for-bit; the aggregate form is the test-scope
+    // equality twin `graft.ref.SetOpQueriesRef.percentilesAgg`.
     val res = graft.ext.Quantiles.groupedExact(Tables.orders(spark, dir),
       "o_orderpriority", "o_totalprice", Seq(0.5, 0.9, 0.99))
     def r4(d: Option[Double]): Option[Double] = d.map(x =>
@@ -111,20 +111,6 @@ object SetOpQueries {
       .toDF("o_orderpriority", "p50", "p90", "p99", "n")
       .orderBy("o_orderpriority")
   }
-
-  /** The `percentile`-aggregate form of [[percentiles]] — the
-    * derivation the DuckDB oracle replays, kept as the equality twin.
-    */
-  private[graft] def percentilesAgg(spark: SparkSession,
-      dir: String): DataFrame =
-    Tables.orders(spark, dir)
-      .groupBy(col("o_orderpriority"))
-      .agg(
-        round(expr("percentile(o_totalprice, 0.5)"), 4).as("p50"),
-        round(expr("percentile(o_totalprice, 0.9)"), 4).as("p90"),
-        round(expr("percentile(o_totalprice, 0.99)"), 4).as("p99"),
-        count(lit(1)).as("n"))
-      .orderBy("o_orderpriority")
 
   val defs: Map[String, Q] = Map(
     "set_ops" -> (setOps _),

@@ -2,13 +2,12 @@ package graft.queries
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.ext.{Clusters, Dedup, Dsir, HeavyHitters, Pack, PpJoin, Sampling, TfIdf}
-import graft.functions.{SimHash, Text}
-import graft.operators.Versioned
+import graft.functions.Text
 
 /** Text-analysis and deduplication surface over the `documents` corpus
   * (north-star extensions: token statistics, quality signals, language
@@ -471,7 +470,8 @@ object TextQueries {
     // tokenized once instead of four times (the 100 TB lever).
     // Cluster deployment: localCheckpoint truncates lineage onto
     // executor-local blocks (executor loss ⇒ job re-run, not
-    // recompute) — see COVERAGE "Materialization barriers".
+    // recompute) — see "Materialization barriers" in COVERAGE.md at
+    // ff8d9ba.
     val c12 = bg.groupBy("w1", "w2").agg(count(lit(1)).as("c12"))
       .localCheckpoint()
     val cL = c12.groupBy("w1").agg(sum("c12").as("c1"))
@@ -507,9 +507,9 @@ object TextQueries {
     * pattern); scoring happens map-side in the
     * native [[graft.plans.PerplexityScore]] expression via binary
     * search over the sorted model arrays. Nothing document-grain ever
-    * shuffles — the composed form ([[textPerplexityComposed]], the
-    * equality twin) moved the full bigram stream through a join and a
-    * per-doc re-aggregation. Everything is exact integer counts until
+    * shuffles — the composed form (the test-scope equality twin
+    * `graft.ref.TextQueriesRef.textPerplexityComposed`) moved the
+    * full bigram stream through a join and a per-doc re-aggregation. Everything is exact integer counts until
     * the final ln/avg, which rounds to 4 decimals on both engines.
     */
   def textPerplexity(spark: SparkSession, dir: String): DataFrame = {
@@ -566,40 +566,6 @@ object TextQueries {
       .orderBy("doc_id")
   }
 
-  /** The exploded-bigram + model-join form of [[textPerplexity]] — the
-    * derivation the DuckDB oracle replays, kept as the equality twin
-    * for the native rewrite's spec and scale A/B.
-    */
-  private[graft] def textPerplexityComposed(spark: SparkSession,
-      dir: String): DataFrame = {
-    val t = col("_t")
-    val docs = Tables.documents(spark, dir)
-    val toks = docs.select(col("doc_id"), Text.tokens(col("text")).as("_t"))
-    val bg = toks.filter(size(t) >= 2)
-      .select(col("doc_id"), explode(arrays_zip(
-        slice(t, lit(1), size(t) - 1).as("w1"),
-        slice(t, lit(2), size(t) - 1).as("w2"))).as("_bg"))
-      .select(col("doc_id"), col("_bg.w1").as("w1"),
-        concat_ws(" ", col("_bg.w1"), col("_bg.w2")).as("bg"))
-    val c2 = bg.groupBy("bg").agg(count(lit(1)).as("_c2"))
-    val c1 = bg.groupBy("w1").agg(count(lit(1)).as("_c1"))
-    val v = toks.select(explode(t).as("_tok"))
-      .agg(countDistinct(col("_tok")).as("_vs"))
-    val scored = bg
-      .join(c2, "bg").join(c1, "w1")
-      .crossJoin(broadcast(v))
-      .withColumn("_lp", log((col("_c2") + lit(1)).cast("double") /
-        (col("_c1") + col("_vs")).cast("double")))
-    val agg = scored.groupBy("doc_id")
-      .agg(count(lit(1)).as("n_bigrams"),
-        round(-sum(col("_lp")) / count(lit(1)), 4).as("avg_nll"))
-    docs.select(col("doc_id"))
-      .join(agg, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        coalesce(col("n_bigrams"), lit(0L)).as("n_bigrams"), col("avg_nll"))
-      .orderBy("doc_id")
-  }
-
   /** PII redaction over the corpus ([[Text.redactPii]]): the synthetic
     * corpus carries no PII, so deterministic spans (an email, a phone,
     * an IP derived from doc_id) are injected first — the redaction
@@ -630,9 +596,9 @@ object TextQueries {
     * computed per ROW by the one-pass native expression
     * [[graft.plans.GramRepetitionStats]] (`graft_gram_stats`) — a
     * zero-shuffle projection. The composed explode → (doc, n, gram)
-    * shuffle-count form this replaced ([[textRepetitionComposed]],
-    * kept as the spec twin) moved ~3× the token volume through an
-    * exchange to aggregate a per-document quantity — at 10× the
+    * shuffle-count form this replaced (the test-scope twin
+    * `graft.ref.TextQueriesRef.textRepetitionComposed`) moved ~3×
+    * the token volume through an exchange to aggregate a per-document quantity — at 10× the
     * corpus the projection form measured ~4× faster, and at 100 TB
     * the exchange it deletes would be the operator's entire cost.
     * Fractions are exact-integer divisions (engine-portable).
@@ -653,54 +619,6 @@ object TextQueries {
         (col("s.d3").cast("double") / col("s.t3")).as("dup_trigram_frac"))
       // sort-sampling rule (30× A/B 0.78 → 0.67 s, ProfileSortFamily)
       .localCheckpoint()
-      .orderBy("doc_id")
-  }
-
-  /** The composed (explode + shuffle-count) form of [[textRepetition]]
-    * — the derivation the DuckDB oracle replays, kept as the equality
-    * twin for the native expression's spec and A/B profile.
-    */
-  private[graft] def textRepetitionComposed(spark: SparkSession,
-      dir: String): DataFrame = {
-    // project the token array ONCE: n-gram lambdas below index into it
-    // per element, and indexing an attribute is O(1) while indexing the
-    // `split(...)` expression would re-split the document per element
-    // (O(len²) per doc — measured 27 s → 2 s at sf0.1)
-    val docs = Tables.documents(spark, dir)
-      .select(col("doc_id"), split(col("text"), " ").as("w"))
-    val w = col("w")
-    def gram(n: Int): Column = {
-      val g = transform(sequence(lit(1), size(w) - lit(n - 1)), i =>
-        struct(lit(n).as("n"),
-          concat_ws(" ", (0 until n).map(k => element_at(w, i + lit(k))): _*)
-            .as("gram")))
-      if (n == 1) g
-      else when(size(w) >= lit(n), g)
-        .otherwise(expr("CAST(array() AS array<struct<n:int,gram:string>>)"))
-    }
-    docs
-      .select(col("doc_id"),
-        explode(concat(gram(1), gram(2), gram(3))).as("g"))
-      .select(col("doc_id"), col("g.n").as("n"), col("g.gram").as("gram"))
-      .groupBy(col("doc_id"), col("n"), col("gram"))
-      .agg(count(lit(1)).as("c"))
-      .groupBy(col("doc_id"), col("n"))
-      .agg(max(col("c")).as("top"), sum(col("c")).as("tot"),
-        sum(when(col("c") >= 2, col("c")).otherwise(0L)).as("dup"))
-      .groupBy(col("doc_id"))
-      .agg(
-        max(when(col("n") === 1, col("tot"))).as("n_words"),
-        max(when(col("n") === 1, col("top"))).as("_m1"),
-        max(when(col("n") === 2, col("top"))).as("_m2"),
-        max(when(col("n") === 2, col("tot"))).as("_t2"),
-        max(when(col("n") === 3, col("top"))).as("_m3"),
-        max(when(col("n") === 3, col("tot"))).as("_t3"),
-        max(when(col("n") === 3, col("dup"))).as("_d3"))
-      .select(col("doc_id"), col("n_words"),
-        (col("_m1").cast("double") / col("n_words")).as("top_word_frac"),
-        (col("_m2").cast("double") / col("_t2")).as("top_bigram_frac"),
-        (col("_m3").cast("double") / col("_t3")).as("top_trigram_frac"),
-        (col("_d3").cast("double") / col("_t3")).as("dup_trigram_frac"))
       .orderBy("doc_id")
   }
 
@@ -885,8 +803,8 @@ object TextQueries {
     // for the normalizer — AQE stage reuse does not collapse the
     // duplicated subtrees (measured on the sibling shape,
     // ProfileCollocReuse). Exact integer counts either way. Cluster
-    // deployment: lineage-truncating barrier — COVERAGE
-    // "Materialization barriers".
+    // deployment: lineage-truncating barrier — "Materialization
+    // barriers" in COVERAGE.md at ff8d9ba.
     val types = bg.distinct().localCheckpoint()
     val cont = types.groupBy(col("w2").as("word"))
       .agg(count(lit(1)).as("cont_count"))

@@ -261,20 +261,20 @@ object Streams {
     * micro-batches, which means the event-time watermark genuinely
     * advances between batches and evicts closed-window state — the
     * shape a production landing zone has.
-    */
-  /** With `flushSentinel` the landing zone gets one final single-row
+    *
+    * With `flushSentinel` the landing zone gets one final single-row
     * micro-batch far in event-time future (user_id = -1; filter it
     * from results): its only job is to advance the watermark past
     * every open window so append-mode aggregations flush their
     * trailing state — the finite-replay analogue of the stream
     * staying live past the last real event.
-    */
-  /** With `duplicated` the whole events file is staged TWICE (two
+    *
+    * With `duplicated` the whole events file is staged TWICE (two
     * micro-batches of identical content): the at-least-once delivery
     * shape whose duplicates a streaming `dropDuplicates` must absorb
     * through its keyed state.
-    */
-  /** With `filesPerBatch > 1` each arrival is N part files sharing one
+    *
+    * With `filesPerBatch > 1` each arrival is N part files sharing one
     * modification time (the production landing shape: a batch lands as
     * many parallel part files, never serialized through one writer) and
     * the reader takes N files per trigger, so trigger boundaries still
@@ -614,7 +614,7 @@ object Streams {
     // aggregate over coords, which would run the whole two-pass global
     // rank a second time before the join below recomputes it
     // (per-batch fixed cost is the streaming family's dominant floor;
-    // see the COVERAGE adjudication)
+    // see the adjudication in COVERAGE.md at ff8d9ba)
     val (coords, nRows) = graft.ext.Sampling.shuffleShardsCounted(
       b.select("doc_id"), "doc_id", docsPerShard, seed)
     val nSealed = (nRows + docsPerShard - 1) / docsPerShard

@@ -78,7 +78,7 @@ class ApproxSpec extends SparkSpec {
       .select(col("l_partkey").cast("string").as("v"))
       .union((0 until 5000).map(i => s"synthetic-$i").toDF("v"))
     val native = call_function("graft_hll_reg", col("v"))
-    val hexF = graft.ext.Hll.hexRegister(col("v"))
+    val hexF = graft.ref.HllRef.hexRegister(col("v"))
     val bad = keys.select(
         native.getField("bucket").as("a1"), native.getField("rho").as("a2"),
         hexF.getField("bucket").as("b1"), hexF.getField("rho").as("b2"))

@@ -12,7 +12,6 @@ class ConfigSpec extends SparkSpec {
     val d = Config(Map.empty)
     assert(d.schema === "dwh")
     assert(d.httpTimeoutSeconds === 15)
-    assert(d.jdbcBatchSize === 500)
     assert(d.checkwxApiKey === None)
 
     val c = Config(Map("DBT_SCHEMA" -> "analytics",

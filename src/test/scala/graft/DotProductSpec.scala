@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.functions.Vectors
+import graft.ref.VectorsRef
 
 /** Native DotProduct expression: bit-equality with the HOF fold, null
   * semantics, SQL callability, codegen plan shape.
@@ -14,7 +15,7 @@ class DotProductSpec extends SparkSpec {
       .select(Vectors.asDouble(col("embedding")).as("v"))
     val diff = e.select(
         Vectors.dot(col("v"), col("v")).as("a"),
-        Vectors.dotHof(col("v"), col("v")).as("b"))
+        VectorsRef.dotHof(col("v"), col("v")).as("b"))
       .filter(col("a") =!= col("b"))
     assert(diff.isEmpty)
   }
@@ -24,7 +25,7 @@ class DotProductSpec extends SparkSpec {
     val df = Seq((Seq(1.0, 2.0, 3.0), Seq(1.0, 2.0))).toDF("a", "b")
     val res = df.select(
       Vectors.dot(col("a"), col("b")).as("native"),
-      Vectors.dotHof(col("a"), col("b")).as("hof")).head()
+      VectorsRef.dotHof(col("a"), col("b")).as("hof")).head()
     assert(res.isNullAt(0) && res.isNullAt(1))
   }
 

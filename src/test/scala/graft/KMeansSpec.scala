@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.ext.KMeans
 import graft.functions.Vectors
+import graft.ref.KMeansRef
 
 /** Round-14 map-only nearest-centroid assignment
   * (`graft_assign_nearest`) vs the k×-expand + rank-window form:
@@ -27,7 +28,7 @@ class KMeansSpec extends SparkSpec {
     val (vecs, cents) = corpusPieces
     val nat = KMeans.assign(vecs, cents, "vec_id")
       .select("vec_id", "cluster", "similarity")
-    val win = KMeans.assignWindow(vecs, cents, "vec_id")
+    val win = KMeansRef.assignWindow(vecs, cents, "vec_id")
       .select("vec_id", "cluster", "similarity")
     assert(nat.exceptAll(win).isEmpty && win.exceptAll(nat).isEmpty)
   }
@@ -50,7 +51,7 @@ class KMeansSpec extends SparkSpec {
     val cents = KMeans.centroidsOf(
       vecs.join(base.select(col("vec_id"), col("cluster")), "vec_id"))
     val thrown = intercept[Exception] {
-      KMeans.assignWindow(vecs, cents, "vec_id").collect()
+      KMeansRef.assignWindow(vecs, cents, "vec_id").collect()
     }
     assert(thrown.getMessage.contains("DIVIDE_BY_ZERO"))
     val zeroRow = KMeans.assign(vecs, cents, "vec_id")

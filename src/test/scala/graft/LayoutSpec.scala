@@ -112,71 +112,30 @@ class LayoutSpec extends SparkSpec {
       Seq(("zx", 999L, 1000L))).count() === 0)
   }
 
-  test("refreshStatsIndex: new files indexed, vanished dropped, old entries untouched") {
+  test("writeStatsIndex covers appended files and a hive-partitioned layout") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-refresh").toString + "/t"
+    val dir = Files.createTempDirectory("graft-stats").toString + "/t"
     (0L until 100L).map(i => (i, i % 10)).toDF("id", "zx")
       .repartition(2).write.parquet(dir)
     Layout.writeStatsIndex(spark, dir, Seq("zx"))
-    val before = spark.read.parquet(dir + "_stats")
-      .orderBy("file").collect().toSeq
-    // append new files, then refresh
+    // append new files, then rebuild: every current file is indexed
     (100L until 160L).map(i => (i, 10L + i % 5)).toDF("id", "zx")
       .repartition(3).write.mode("append").parquet(dir)
-    Layout.refreshStatsIndex(spark, dir, Seq("zx"))
+    Layout.writeStatsIndex(spark, dir, Seq("zx"))
     val after = spark.read.parquet(dir + "_stats").collect()
     assert(after.length === 5)
-    // totals agree with the table; old entries carried over verbatim
     assert(after.map(_.getAs[Long]("n_rows")).sum === 160L)
-    val afterByFile = after.map(r => r.getAs[String]("file") -> r).toMap
-    before.foreach(b =>
-      assert(afterByFile(b.getAs[String]("file")) === b))
-    // refresh equals a from-scratch rebuild
-    val rebuilt = Layout.statsIndex(spark, dir, Seq("zx"))
-      .orderBy("file").collect().toSeq
-    assert(spark.read.parquet(dir + "_stats").orderBy("file")
-      .collect().toSeq === rebuilt)
-    // pruning keeps working through the refreshed index
     assert(Layout.prunedRead(spark, dir, Seq(("zx", 12L, 14L)))
       .count() === (100L until 160L).count(i => (10 + i % 5) >= 12 && (10 + i % 5) <= 14))
-  }
-
-  test("refreshStatsIndex survives a hive-partitioned layout") {
-    import spark.implicits._
-    val dir = Files.createTempDirectory("graft-refresh-part").toString + "/t"
-    // data files live two levels down (day=X/part-*.parquet): a flat
-    // top-level listing sees only directories, would treat every
-    // indexed file as vanished, and commit an EMPTY index — prunedRead
-    // would then silently return zero files for a table full of data
+    // data files two levels down (day=X/part-*.parquet), the partition
+    // column itself indexed
+    val part = Files.createTempDirectory("graft-stats-part").toString + "/t"
     (0L until 100L).map(i => (i, i % 10, s"2024-01-0${i % 3 + 1}"))
       .toDF("id", "zx", "day")
-      .write.partitionBy("day").parquet(dir)
-    Layout.writeStatsIndex(spark, dir, Seq("zx"))
-    val n0 = spark.read.parquet(dir + "_stats").count()
-    assert(n0 > 0)
-    // a crash-leftover hidden staging dir with a stale parquet copy:
-    // partition discovery ignores it, so the refresh listing must too
-    // (indexing it would make prunedRead read those rows twice)
-    val root = new java.io.File(dir)
-    val hidden = new java.io.File(root, ".day=2024-01-01.old")
-    org.apache.commons.io.FileUtils.copyDirectory(
-      new java.io.File(root, "day=2024-01-01"), hidden)
-    Layout.refreshStatsIndex(spark, dir, Seq("zx"))
-    val after = spark.read.parquet(dir + "_stats")
-    assert(after.count() === n0, "refresh emptied a partitioned index")
-    assert(after.agg(sum(col("n_rows"))).head().getLong(0) === 100L)
-    assert(after.filter(col("file").contains(".old")).count() === 0,
-      "hidden staging leftovers were indexed")
-    // appending and indexing THE PARTITION COLUMN itself must survive
-    // refresh: fresh leaf files carry no day column, so the read needs
-    // the basePath context
-    Layout.writeStatsIndex(spark, dir, Seq("zx", "day"))
-    (100L until 130L).map(i => (i, 10L, "2024-01-09"))
-      .toDF("id", "zx", "day")
-      .write.mode("append").partitionBy("day").parquet(dir)
-    Layout.refreshStatsIndex(spark, dir, Seq("zx", "day"))
-    val after2 = spark.read.parquet(dir + "_stats")
-    assert(after2.agg(sum(col("n_rows"))).head().getLong(0) === 130L)
-    assert(after2.filter(col("min_day") === "2024-01-09").count() >= 1)
+      .write.partitionBy("day").parquet(part)
+    Layout.writeStatsIndex(spark, part, Seq("zx", "day"))
+    val idx = spark.read.parquet(part + "_stats")
+    assert(idx.agg(sum(col("n_rows"))).head().getLong(0) === 100L)
+    assert(idx.filter(col("min_day") === "2024-01-02").count() >= 1)
   }
 }

@@ -4,11 +4,11 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Incremental, MergeWriter}
+import graft.operators.MergeWriter
 
 /** Merge-sink contract (K2/K4-K7): replay idempotence, update-wins,
-  * schema widening on append, and the empty-target watermark default
-  * that fixes the reference's latent `int` bug (SURVEY §5 / §7.4).
+  * schema widening on append, partition-scoped merges and their
+  * crash-recoverable swaps.
   */
 class MergeWriterSpec extends SparkSpec {
 
@@ -47,23 +47,6 @@ class MergeWriterSpec extends SparkSpec {
     val got = spark.read.option("mergeSchema", "true").parquet(dir)
     assert(got.columns.toSet === Set("id", "a", "b"))
     assert(got.filter(col("id") === 1 && col("b").isNull).count() === 1)
-  }
-
-  test("empty-target watermark admits all rows (reference int-layer bug fixed)") {
-    import spark.implicits._
-    val source = Seq((1L, "2024-01-01 00:00:00"), (2L, "2024-01-02 00:00:00"))
-      .toDF("id", "ts").withColumn("ts", col("ts").cast("timestamp"))
-    val emptyTarget = source.filter(lit(false))
-    val got = Incremental.aboveWatermark(source, emptyTarget, "ts")
-    assert(got.count() === 2)
-  }
-
-  test("strict > vs inclusive >= watermark boundaries (F2 vs F3)") {
-    import spark.implicits._
-    val df = Seq((1L, "2024-01-01 00:00:00"), (2L, "2024-01-02 00:00:00"))
-      .toDF("id", "ts").withColumn("ts", col("ts").cast("timestamp"))
-    assert(Incremental.aboveWatermark(df, df, "ts").count() === 0)
-    assert(Incremental.aboveWatermark(df, df, "ts", inclusive = true).count() === 1)
   }
 
   test("partitioned upsert rewrites only touched partitions") {
@@ -196,88 +179,6 @@ class MergeWriterSpec extends SparkSpec {
       "pre-existing null-partition row was dropped by the merge")
   }
 
-  test("compact shrinks a fragmented table without changing its contents") {
-    import spark.implicits._
-    val dir = tmp()
-    // 32 tiny files
-    (1 to 320).map(i => (i.toLong, s"row$i")).toDF("id", "s")
-      .repartition(32).write.parquet(dir)
-    def files() = new java.io.File(dir).listFiles()
-      .count(_.getName.endsWith(".parquet"))
-    assert(files() === 32)
-    val before = spark.read.parquet(dir).orderBy("id").collect().toSeq
-    MergeWriter.compact(spark, dir) // 128 MB target -> 1 file here
-    assert(files() === 1)
-    assert(spark.read.parquet(dir).orderBy("id").collect().toSeq === before)
-    // stable under repetition
-    MergeWriter.compact(spark, dir)
-    assert(files() === 1)
-    // no leftover swap dirs
-    val leftovers = new java.io.File(dir).getParentFile.listFiles()
-      .map(_.getName).filter(n => n.contains(".tmp") || n.endsWith(".old"))
-    assert(leftovers.isEmpty, leftovers.mkString(","))
-  }
-
-  test("compact preserves a hive-partitioned layout (per-partition rewrite)") {
-    import spark.implicits._
-    val dir = tmp()
-    // fragmented partitioned table: 8 files per day= dir
-    (1 to 160).map(i => (i.toLong, s"2024-01-0${i % 2 + 1}", i.toLong))
-      .toDF("id", "day", "v")
-      .repartition(8).write.partitionBy("day").parquet(dir)
-    val root = new java.io.File(dir)
-    def dayDirs() = root.listFiles().filter(f =>
-      f.isDirectory && f.getName.startsWith("day="))
-    assert(dayDirs().forall(_.listFiles()
-      .count(_.getName.endsWith(".parquet")) === 8))
-    val before = spark.read.parquet(dir).orderBy("id").collect().toSeq
-    MergeWriter.compact(spark, dir)
-    // layout preserved: still two day= dirs, one file each, nothing flat
-    assert(dayDirs().map(_.getName).sorted.toSeq ===
-      Seq("day=2024-01-01", "day=2024-01-02"))
-    assert(dayDirs().forall(_.listFiles()
-      .count(_.getName.endsWith(".parquet")) === 1))
-    assert(root.listFiles().count(_.getName.endsWith(".parquet")) === 0)
-    assert(spark.read.parquet(dir).orderBy("id").collect().toSeq === before)
-    // a later partition swap still works against the compacted layout
-    MergeWriter.upsertPartitioned(spark, dir,
-      Seq((1L, "2024-01-02", 999L)).toDF("id", "day", "v"),
-      Seq("id"), Seq("v"), "day")
-    val got = spark.read.parquet(dir)
-    assert(got.count() === 160)
-    assert(got.filter(col("id") === 1).select("v").head().getLong(0) === 999L)
-    // no staging/old leftovers inside the root — and the ones that do
-    // exist transiently are dot-prefixed, invisible to discovery
-    val inside = root.listFiles().map(_.getName)
-      .filter(n => n.contains(".tmp") || n.contains(".old"))
-    assert(inside.isEmpty, inside.mkString(","))
-  }
-
-  test("compact preserves a MULTI-LEVEL hive layout (leaf-partition rewrite)") {
-    import spark.implicits._
-    val dir = tmp()
-    // two-level layout a=X/b=Y, 4 files per leaf
-    (1 to 80).map(i => (i.toLong, (i % 2).toString, (i % 3).toString))
-      .toDF("id", "a", "b")
-      .repartition(4).write.partitionBy("a", "b").parquet(dir)
-    val root = new java.io.File(dir)
-    def leafDirs() = root.listFiles().filter(_.getName.startsWith("a="))
-      .flatMap(_.listFiles()).filter(f =>
-        f.isDirectory && f.getName.startsWith("b="))
-    assert(leafDirs().length === 6)
-    val before = spark.read.parquet(dir).orderBy("id").collect().toSeq
-    MergeWriter.compact(spark, dir)
-    // nested structure intact: a= dirs contain ONLY b= dirs, one file each
-    assert(leafDirs().length === 6)
-    assert(leafDirs().forall(_.listFiles()
-      .count(_.getName.endsWith(".parquet")) === 1))
-    assert(root.listFiles().filter(_.getName.startsWith("a=")).forall(
-      _.listFiles().filterNot(f => f.getName.startsWith(".") ||
-        f.getName.startsWith("_")).forall(f =>
-        f.isDirectory && f.getName.startsWith("b="))))
-    assert(spark.read.parquet(dir).orderBy("id").collect().toSeq === before)
-  }
-
   test("maxDayPartition: listing-only max, null partition ignored") {
     import spark.implicits._
     val dir = tmp()
@@ -338,15 +239,24 @@ class MergeWriterSpec extends SparkSpec {
   test("partition swap staging is never visible to partition discovery") {
     import spark.implicits._
     val dir = tmp()
+    // fragmented layout: 4 files per day= dir
     (1 to 40).map(i => (i.toLong, s"2024-01-0${i % 2 + 1}", i.toLong))
       .toDF("id", "day", "v")
       .repartition(4).write.partitionBy("day").parquet(dir)
-    MergeWriter.compact(spark, dir)
+    MergeWriter.upsertPartitioned(spark, dir,
+      Seq((1L, "2024-01-02", 999L)).toDF("id", "day", "v"),
+      Seq("id"), Seq("v"), "day")
     // everything non-hidden under the root must be a real partition dir
     val visible = new java.io.File(dir).listFiles()
       .filter(f => !f.getName.startsWith(".") && !f.getName.startsWith("_"))
     assert(visible.forall(f => f.isDirectory && f.getName.matches("day=[^.]+")),
       visible.map(_.getName).mkString(","))
-    assert(spark.read.parquet(dir).count() === 40)
+    val got = spark.read.parquet(dir)
+    assert(got.count() === 40)
+    assert(got.filter(col("id") === 1).select("v").head().getLong(0) === 999L)
+    // no staging/old leftovers inside the root once the swap is done
+    val inside = new java.io.File(dir).listFiles().map(_.getName)
+      .filter(n => n.contains(".tmp") || n.contains(".old"))
+    assert(inside.isEmpty, inside.mkString(","))
   }
 }

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.functions.{MinHash, Text}
+import graft.ref.{MinHashRef, TextRef}
 
 /** The native codegen'd minhash expression must agree with the
   * builtin-HOF md5 formulation byte-for-byte (same family definition),
@@ -20,14 +21,14 @@ class MinHashSignatureSpec extends SparkSpec {
     val docs = Tables.documents(spark, sf)
     val diff = docs.select(
         Text.shingles(Text.tokens(col("text")), 3).as("native"),
-        Text.shinglesHof(Text.tokens(col("text")), 3).as("hof"))
+        TextRef.shinglesHof(Text.tokens(col("text")), 3).as("hof"))
       .filter(not(col("native") <=> col("hof")))
     assert(diff.isEmpty)
     // short-document fallback + concat_ws null-skip parity
     import spark.implicits._
     val edge = Seq(Seq("one", "two"), Seq("a", null, "b", "c")).toDF("toks")
       .select(Text.shingles(col("toks"), 3).as("native"),
-        Text.shinglesHof(col("toks"), 3).as("hof"))
+        TextRef.shinglesHof(col("toks"), 3).as("hof"))
       .filter(not(col("native") <=> col("hof")))
     assert(edge.isEmpty)
   }
@@ -35,7 +36,7 @@ class MinHashSignatureSpec extends SparkSpec {
   test("native md5 signature == HOF md5 signature") {
     val df = shingled
       .withColumn("native", MinHash.signature(col("s"), 16))
-      .withColumn("hof", MinHash.signatureHof(col("s"), 16))
+      .withColumn("hof", MinHashRef.signatureHof(col("s"), 16))
       .filter(not(col("native") <=> col("hof")))
     assert(df.isEmpty)
   }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.LatestPerKey
 import graft.quality.Checks
+import graft.ref.{LatestPerKeyRef, SimHashRef, TextRef}
 
 /** Operator-level contracts: max_by and window latest-per-key agree,
   * quality checks count violations correctly.
@@ -14,7 +15,7 @@ class OperatorSpec extends SparkSpec {
     val ev = Tables.events(spark, sf)
       .select("user_id", "ts", "event_id", "event_type", "value")
     val a = LatestPerKey(ev, Seq("user_id"), Seq("ts", "event_id"))
-    val b = LatestPerKey.viaWindow(ev, Seq("user_id"), Seq("ts", "event_id"))
+    val b = LatestPerKeyRef.viaWindow(ev, Seq("user_id"), Seq("ts", "event_id"))
     assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty)
   }
 
@@ -50,7 +51,7 @@ class OperatorSpec extends SparkSpec {
     assert(m("a") !== m("c"))
     val d = df.as("x").crossJoin(df.as("y"))
       .filter(col("x.id") === "a" && col("y.id") === "c")
-      .select(SimHash.hammingDistance(col("x.sh"), col("y.sh"))).head().getInt(0)
+      .select(SimHashRef.hammingDistance(col("x.sh"), col("y.sh"))).head().getInt(0)
     assert(d > 0 && d <= 32)
   }
 
@@ -78,7 +79,7 @@ class OperatorSpec extends SparkSpec {
     import graft.functions.Text
     val df = Seq(("a", "one two"), ("b", "one two three four five")).toDF("id", "text")
       .withColumn("sh", Text.shingles(Text.tokens(col("text")), 3))
-      .withColumn("win", Text.winnow(transform(col("sh"), s => md5(s)), 4))
+      .withColumn("win", TextRef.winnow(transform(col("sh"), s => md5(s)), 4))
     val rows = df.orderBy("id").collect()
     assert(rows(0).getSeq[String](2) === Seq("one two")) // whole-text shingle
     assert(rows(0).getSeq[String](3).length === 1)

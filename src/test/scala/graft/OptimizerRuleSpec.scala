@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.LatestPerKey
+import graft.ref.LatestPerKeyRef
 
 /** LatestWindowToMaxBy: the rn=1 window idiom must rewrite to a
   * partially-aggregating max_by and still produce identical rows.
@@ -11,7 +12,7 @@ class OptimizerRuleSpec extends SparkSpec {
     .select("user_id", "ts", "event_id", "event_type", "value")
 
   test("rn=1 descending window dedup rewrites to max_by") {
-    val win = LatestPerKey.viaWindow(ev, Seq("user_id"), Seq("ts", "event_id"))
+    val win = LatestPerKeyRef.viaWindow(ev, Seq("user_id"), Seq("ts", "event_id"))
     val optimized = win.queryExecution.optimizedPlan.toString
     assert(optimized.contains("max_by"), optimized.take(600))
     assert(!optimized.contains("row_number"), optimized.take(600))

@@ -122,6 +122,38 @@ class PipelineSpec extends SparkSpec {
     assertOneShot("int")
   }
 
+  test("medallion stg watermark: a first build stages every row, a boundary-ts arrival is not restaged (F2)") {
+    val landing = Files.createTempDirectory("graft-medallion-f2")
+    val events = s"$landing/events.parquet"
+    val root = landing.resolve("mat").toString
+    val slice = Tables.events(spark, sf)
+      .filter(col("ts") < lit("2024-01-20 12:00:00").cast("timestamp"))
+    slice.write.parquet(events)
+    Medallion.run(spark, landing.toString, root)
+    // empty target: every landed row is staged (the reference's
+    // watermark lacks the COALESCE and would stage nothing)
+    val stg = spark.read.parquet(s"$root/stg_events").select("event_id")
+    val landed = slice.select("event_id")
+    assert(stg.exceptAll(landed).isEmpty && landed.exceptAll(stg).isEmpty)
+    // strict `>`: a new event_id AT the watermark ts is not staged, one
+    // a microsecond above it is
+    val wm = spark.read.parquet(s"$root/stg_events").agg(max(col("ts")))
+      .head().getTimestamp(0)
+    val newId = slice.agg(max(col("event_id"))).head().getLong(0) + 1
+    val at = slice.limit(1).withColumn("event_id", lit(newId))
+      .withColumn("ts", lit(wm))
+    val above = slice.limit(1).withColumn("event_id", lit(newId + 1))
+      .withColumn("ts", timestamp_micros(lit(
+        org.apache.spark.sql.catalyst.util.DateTimeUtils.fromJavaTimestamp(wm) + 1)))
+    at.unionByName(above).write.mode("append").parquet(events)
+    Medallion.run(spark, landing.toString, root)
+    val staged = spark.read.parquet(s"$root/stg_events")
+      .filter(col("event_id") >= newId).select("event_id")
+      .collect().map(_.getLong(0)).toSeq
+    assert(staged === Seq(newId + 1),
+      "stg staged the boundary-ts row (>= instead of >) or missed the later one")
+  }
+
   test("medallion: empty-source first build materializes nothing, then self-heals") {
     val emptyDir = Files.createTempDirectory("graft-empty-src").toString
     Tables.events(spark, sf).limit(0)

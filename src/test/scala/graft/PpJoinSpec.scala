@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.ext.{Dsir, PpJoin}
 import graft.functions.Text
+import graft.ref.PpJoinRef
 
 /** PPJoin prefix-filtered similarity join: lossless pruning (result ==
   * brute-force all-pairs), real candidate reduction, and the DSIR
@@ -84,7 +85,7 @@ class PpJoinSpec extends SparkSpec {
     val allPairs = n * (n - 1) / 2
     // the PRODUCTION canonical-set construction (package-private hook),
     // so the pruning measurement can never drift from what pairs() runs
-    val sets = PpJoin.canonicalSets(docs, "doc_id", "text", 3)
+    val sets = PpJoinRef.canonicalSets(docs, "doc_id", "text", 3)
     val cands = PpJoin.candidates(sets, 0.5).count()
     assert(cands < allPairs / 20,
       s"prefix filter left $cands of $allPairs pairs — pruning too weak")
@@ -93,7 +94,7 @@ class PpJoinSpec extends SparkSpec {
   test("native PrefixPairs node == composed self-join candidates") {
     import spark.implicits._
     val sets =
-      PpJoin.canonicalSets(Tables.documents(spark, sf), "doc_id", "text", 3)
+      PpJoinRef.canonicalSets(Tables.documents(spark, sf), "doc_id", "text", 3)
     // 0.5 (exact ceil boundaries everywhere) and a threshold whose
     // t/(1+t) is irrational-ish — the 1e-9 slack path
     Seq(0.5, 0.3333).foreach { t =>
@@ -108,7 +109,7 @@ class PpJoinSpec extends SparkSpec {
 
   test("native PrefixPairs: one shuffle + one sort below the node") {
     val sets =
-      PpJoin.canonicalSets(Tables.documents(spark, sf), "doc_id", "text", 3)
+      PpJoinRef.canonicalSets(Tables.documents(spark, sf), "doc_id", "text", 3)
     val plan = PpJoin.candidates(sets, 0.5).queryExecution.executedPlan
       .toString
     assert(plan.contains("PrefixPairs"), plan.take(1500))
@@ -130,7 +131,7 @@ class PpJoinSpec extends SparkSpec {
     val docs = (0L until 120L)
       .map(i => (i, s"common common common filler$i filler$i extra$i"))
       .toDF("doc_id", "text")
-    val sets = PpJoin.canonicalSets(docs, "doc_id", "text", 3)
+    val sets = PpJoinRef.canonicalSets(docs, "doc_id", "text", 3)
     val t = 0.25
     val native = PpJoin.candidates(sets, t).as[(Long, Long)].collect().toSet
     val composed =

@@ -4,13 +4,12 @@ import java.nio.file.Files
 
 import org.scalacheck.{Gen, Prop, Properties, Test}
 
-import org.apache.spark.sql.functions._
-
-import graft.operators.{Incremental, LatestPerKey, MergeWriter}
+import graft.operators.{LatestPerKey, MergeWriter}
+import graft.ref.LatestPerKeyRef
 
 /** ScalaCheck properties over the incremental/merge machinery
-  * (SURVEY §5: idempotence of merge writes and watermark semantics are
-  * exactly the bug class the reference cannot catch).
+  * (SURVEY §5: idempotence of merge writes is exactly the bug class
+  * the reference cannot catch).
   */
 object PropertySpec extends Properties("graft") {
 
@@ -62,18 +61,7 @@ object PropertySpec extends Properties("graft") {
   property("max_by latest == window latest") = Prop.forAll(batchGen) { rows =>
     val d = df(rows)
     val a = LatestPerKey(d, Seq("id"), Seq("v", "p")).collect().toSet
-    val b = LatestPerKey.viaWindow(d, Seq("id"), Seq("v", "p")).collect().toSet
+    val b = LatestPerKeyRef.viaWindow(d, Seq("id"), Seq("v", "p")).collect().toSet
     a == b
   }
-
-  property("strict watermark excludes the boundary; inclusive admits it") =
-    Prop.forAll(batchGen.suchThat(_.nonEmpty)) { rows =>
-      val d = df(rows).withColumn("ts",
-        timestamp_seconds(col("v") % 100000))
-      val strict = Incremental.aboveWatermark(d, d, "ts").count()
-      val incl = Incremental.aboveWatermark(d, d, "ts", inclusive = true).count()
-      val maxTs = d.agg(max(col("ts"))).head().getTimestamp(0)
-      val atMax = d.filter(col("ts") === lit(maxTs)).count()
-      strict == 0L && incl == atMax
-    }
 }

@@ -12,7 +12,7 @@ class RobustStatsSpec extends SparkSpec {
 
   test("quantile selection equals the percentile aggregate on the corpus") {
     val sel = graft.queries.SetOpQueries.percentiles(spark, sf)
-    val agg = graft.queries.SetOpQueries.percentilesAgg(spark, sf)
+    val agg = graft.ref.SetOpQueriesRef.percentilesAgg(spark, sf)
     assert(sel.exceptAll(agg).isEmpty && agg.exceptAll(sel).isEmpty)
   }
 
@@ -23,7 +23,7 @@ class RobustStatsSpec extends SparkSpec {
     // rows — including the UNROUNDED med/mad feeding n_outliers —
     // must match the 3-pass twin exactly
     val a = graft.queries.AnalyticsQueries.defs("outlier_mad")(spark, sf)
-    val b = graft.queries.AnalyticsQueries.outlierMadJoined(spark, sf)
+    val b = graft.ref.AnalyticsQueriesRef.outlierMadJoined(spark, sf)
     assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty)
   }
 

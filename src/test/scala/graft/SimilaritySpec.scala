@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.ext.{Dedup, Similarity, SignLsh}
+import graft.ref.{DedupRef, SignLshRef}
 
 /** ANN contracts: brute force is sane (no self-matches, scores in
   * [-1,1], k rows per query) and IVF recall against brute force is at
@@ -18,7 +19,7 @@ class SimilaritySpec extends SparkSpec {
     // 4-decimal cosines — and stay exact under a different salt count
     val nd = Dedup.embeddingNearDups(emb, "vec_id", "embedding",
       blockCol = "label", minCosine = 0.3)
-    val tw = Dedup.embeddingNearDupsJoined(emb, "vec_id", "embedding",
+    val tw = DedupRef.embeddingNearDupsJoined(emb, "vec_id", "embedding",
       blockCol = "label", minCosine = 0.3)
     assert(nd.exceptAll(tw).isEmpty && tw.exceptAll(nd).isEmpty)
     spark.conf.set("spark.graft.pairs.salts", "3")
@@ -40,7 +41,7 @@ class SimilaritySpec extends SparkSpec {
     val docs = Tables.documents(spark, sf)
     val nd = Dedup.fuzzyPairsBlocked(docs, "doc_id", "text",
       blockCol = "source", prefixLen = 40, maxDist = 12)
-    val tw = Dedup.fuzzyPairsJoined(docs, "doc_id", "text",
+    val tw = DedupRef.fuzzyPairsJoined(docs, "doc_id", "text",
       blockCol = "source", prefixLen = 40, maxDist = 12)
     assert(nd.exceptAll(tw).isEmpty && tw.exceptAll(nd).isEmpty)
     spark.conf.set("spark.graft.pairs.salts", "3")
@@ -78,7 +79,7 @@ class SimilaritySpec extends SparkSpec {
     for (k <- Seq(0, 3, 12, 40)) {
       val got = Dedup.fuzzyPairsBlocked(docs, "doc_id", "text",
         blockCol = "source", prefixLen = 40, maxDist = k)
-      val tw = Dedup.fuzzyPairsJoined(docs, "doc_id", "text",
+      val tw = DedupRef.fuzzyPairsJoined(docs, "doc_id", "text",
         blockCol = "source", prefixLen = 40, maxDist = k)
       assert(got.exceptAll(tw).isEmpty && tw.exceptAll(got).isEmpty,
         s"ASCII DP diverged from Spark's levenshtein at maxDist=$k")
@@ -102,7 +103,7 @@ class SimilaritySpec extends SparkSpec {
     ).toDF("doc_id", "text", "source")
     val got = Dedup.fuzzyPairsBlocked(planted, "doc_id", "text",
       blockCol = "source", prefixLen = 40, maxDist = 12)
-    val tw = Dedup.fuzzyPairsJoined(planted, "doc_id", "text",
+    val tw = DedupRef.fuzzyPairsJoined(planted, "doc_id", "text",
       blockCol = "source", prefixLen = 40, maxDist = 12)
     assert(got.exceptAll(tw).isEmpty && tw.exceptAll(got).isEmpty)
     assert(got.collect().map(r =>
@@ -131,7 +132,7 @@ class SimilaritySpec extends SparkSpec {
     ).toDF("doc_id", "text", "source")
     val got = Dedup.fuzzyPairsBlocked(dirty, "doc_id", "text",
       blockCol = "source", prefixLen = 40, maxDist = 12)
-    val tw = Dedup.fuzzyPairsJoined(dirty, "doc_id", "text",
+    val tw = DedupRef.fuzzyPairsJoined(dirty, "doc_id", "text",
       blockCol = "source", prefixLen = 40, maxDist = 12)
     assert(got.exceptAll(tw).isEmpty && tw.exceptAll(got).isEmpty)
     assert(got.filter(col("id_a") === col("id_b")).isEmpty,
@@ -170,50 +171,7 @@ class SimilaritySpec extends SparkSpec {
     assert(e.getMessage.contains("integral"), e.getMessage)
   }
 
-  test("string ids run the native kernel via checked xxhash64 surrogates") {
-    // the integral-id contract's documented on-ramp: surrogate ids
-    // ride the salted kernel, the pair stream joins back to source
-    // ids, and the pair set equals the blocked self-join run directly
-    // on the STRING ids (pairs re-normalized to the source ordering)
-    val sEmb = emb.withColumn("sid",
-      concat(lit("doc-"), col("vec_id"))).drop("vec_id")
-    val got = Dedup.embeddingNearDupsSurrogate(sEmb, "sid", "embedding",
-      blockCol = "label", minCosine = 0.3)
-    val tw = Dedup.embeddingNearDupsJoined(sEmb, "sid", "embedding",
-        blockCol = "label", minCosine = 0.3)
-      .select(col("label"), least(col("id_a"), col("id_b")).as("id_a"),
-        greatest(col("id_a"), col("id_b")).as("id_b"), col("cosine"))
-    assert(got.exceptAll(tw).isEmpty && tw.exceptAll(got).isEmpty)
-    assert(got.schema("id_a").dataType ==
-      org.apache.spark.sql.types.StringType)
-  }
-
-  test("surrogate ids fail loud on a 64-bit hash collision") {
-    import spark.implicits._
-    // two distinct source ids sharing a surrogate must never pair
-    // silently under the wrong identity; forcing a collision through
-    // real xxhash64 needs 2^32 work, so pin the CHECK itself: distinct
-    // source ids vs distinct surrogates — duplicate ROWS of one id are
-    // fine (1 id, 1 surrogate), a true collision is not reachable in a
-    // spec, but the fold arithmetic is
-    val dup = Seq(("a", 1L), ("a", 2L), ("b", 3L)).toDF("id", "x")
-    val ok = Dedup.withSurrogateIds(dup, "id", "_sid")
-    assert(ok.select("_sid").distinct().count() == 2)
-    // a NULL id gets a NULL surrogate — never xxhash64's seed, which
-    // would give every null row one shared fake identity AND trip the
-    // collision check backwards (count_distinct skips null ids but
-    // would count their shared non-null surrogate)
-    val withNull = Seq(Some("a"), Some("b"), None)
-      .zipWithIndex.map { case (id, i) => (id.orNull, i.toLong) }
-      .toDF("id", "x")
-    val kn = Dedup.withSurrogateIds(withNull, "id", "_sid")
-    assert(kn.filter(col("id").isNull).select("_sid").collect()
-      .forall(_.isNullAt(0)), "null id must map to null surrogate")
-    assert(kn.filter(col("id").isNotNull)
-      .select("_sid").distinct().count() == 2)
-  }
-
-  test("null-id rows never reach the pair kernel on either id path") {
+  test("null-id rows never reach the pair kernel") {
     import spark.implicits._
     // the kernel's getLong reads a null id slot as 0, so null-id rows
     // would pair under ONE shared fake identity 0 (and alias a real id
@@ -230,19 +188,12 @@ class SimilaritySpec extends SparkSpec {
       .select("id_a", "id_b").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSeq
     assert(direct == Seq((1L, 2L)), s"direct path: $direct")
-    val sRows = rows.withColumn("sid",
-      when(col("vec_id").isNotNull, concat(lit("doc-"), col("vec_id"))))
-    val surr = Dedup.embeddingNearDupsSurrogate(sRows, "sid", "embedding",
-        blockCol = "label", minCosine = 0.5)
-      .select("id_a", "id_b").collect()
-      .map(r => (r.getString(0), r.getString(1))).toSeq
-    assert(surr == Seq(("doc-1", "doc-2")), s"surrogate path: $surr")
   }
 
   test("sign-LSH near-dups: salted kernel equals the bucket self-join") {
     val nd = SignLsh.nearDupPairs(emb, "vec_id", "embedding",
       bits = 4, minCosine = 0.25)
-    val tw = SignLsh.nearDupPairsJoined(emb, "vec_id", "embedding",
+    val tw = SignLshRef.nearDupPairsJoined(emb, "vec_id", "embedding",
       bits = 4, minCosine = 0.25)
     assert(nd.exceptAll(tw).isEmpty && tw.exceptAll(nd).isEmpty)
   }
@@ -424,7 +375,7 @@ class SimilaritySpec extends SparkSpec {
       .union(Tables.documents(spark, sf).filter(col("doc_id") === 3)
         .withColumn("doc_id", lit(8888L)))
     val banded = Dedup.minhashBands(docs, "doc_id", "text", fastHash = true)
-    val cands = Dedup.minhashCandidates(banded, "doc_id")
+    val cands = Dedup.minhashCandidatesGrouped(banded, "doc_id")
     assert(cands.filter(col("id_a") === 3 && col("id_b") === 8888).count() === 1)
   }
 
@@ -433,7 +384,7 @@ class SimilaritySpec extends SparkSpec {
       .union(Tables.documents(spark, sf).filter(col("doc_id") === 0)
         .withColumn("doc_id", lit(9999L)))
     val banded = Dedup.minhashBands(docs, "doc_id", "text")
-    val joined = Dedup.minhashCandidates(banded, "doc_id")
+    val joined = DedupRef.minhashCandidates(banded, "doc_id")
     val grouped = Dedup.minhashCandidatesGrouped(banded, "doc_id")
     assert(joined.exceptAll(grouped).isEmpty)
     assert(grouped.exceptAll(joined).isEmpty)
@@ -572,7 +523,7 @@ class SimilaritySpec extends SparkSpec {
       .union(Tables.documents(spark, sf).filter(col("doc_id") === 0)
         .withColumn("doc_id", lit(9999L)))
     val banded = Dedup.minhashBands(docs, "doc_id", "text")
-    val cands = Dedup.minhashCandidates(banded, "doc_id")
+    val cands = Dedup.minhashCandidatesGrouped(banded, "doc_id")
     val verified = Dedup.verifyJaccard(cands, banded, "doc_id")
     val dup = verified.filter(col("id_a") === 0 && col("id_b") === 9999)
     assert(dup.count() === 1)

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Skew, TypedLatest}
+import graft.operators.Skew
 
 class SkewSpec extends SparkSpec {
 
@@ -16,33 +16,5 @@ class SkewSpec extends SparkSpec {
     val plain = big.join(small, "k")
     val salted = Skew.saltedJoin(big, small, Seq("k"), col("row_id"), salts = 8)
     assert(salted.exceptAll(plain).isEmpty && plain.exceptAll(salted).isEmpty)
-  }
-
-  test("salted two-phase agg == direct agg") {
-    val ev = Tables.events(spark, sf)
-    val direct = ev.groupBy(col("user_id"))
-      .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("s"))
-    val salted = Skew.saltedAgg(ev, "user_id", col("event_id"), salts = 8,
-      aggs = Map(
-        "n" -> (count(lit(1)), sum(col("n"))),
-        "s" -> (sum(col("value")), round(sum(col("s")), 2))))
-    assert(salted.exceptAll(direct).isEmpty && direct.exceptAll(salted).isEmpty)
-  }
-
-  test("typed Aggregator latest-per-key matches untyped max_by path") {
-    import spark.implicits._
-    import graft.streaming.Streams.Ev
-    val evs = Tables.events(spark, sf)
-      .select("event_id", "ts", "user_id", "event_type", "value").as[Ev]
-    def newer(a: Ev, b: Ev): Ev = {
-      val c = a.ts.compareTo(b.ts)
-      if (c > 0 || (c == 0 && a.event_id > b.event_id)) a else b
-    }
-    val typed = evs.groupByKey(_.user_id)
-      .agg(TypedLatest.of[Ev](newer).toColumn.name("latest"))
-      .map(_._2)
-      .toDF().select("user_id", "event_id", "event_type", "value")
-    val untyped = graft.queries.ParityQueries.latestPerKey(spark, sf)
-    assert(typed.exceptAll(untyped).isEmpty && untyped.exceptAll(typed).isEmpty)
   }
 }

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.functions.Text
+import graft.ref.{SimHashRef, TextRef}
 
 /** Native codegen'd text expressions vs their builtin-HOF
   * formulations: byte-identical on the corpus.
@@ -17,7 +18,7 @@ class TextFeaturesSpec extends SparkSpec {
     val toks = Text.tokens(col("text"))
     val d = docs.select(
         Text.collapseRepeats(toks).as("nat"),
-        Text.collapseRepeatsHof(toks).as("hof"))
+        TextRef.collapseRepeatsHof(toks).as("hof"))
       .filter(not(col("nat") <=> col("hof"))).count()
     assert(d == 0)
   }
@@ -34,7 +35,7 @@ class TextFeaturesSpec extends SparkSpec {
       (Seq(null, null, "a"), Seq(null, "a")))
       .toDF("in", "want")
     val bad = df.select(Text.collapseRepeats(col("in")).as("got"),
-        Text.collapseRepeatsHof(col("in")).as("hof"), col("want"))
+        TextRef.collapseRepeatsHof(col("in")).as("hof"), col("want"))
       .filter(not(col("got") <=> col("want")) ||
         not(col("hof") <=> col("want"))).count()
     assert(bad == 0)
@@ -49,7 +50,7 @@ class TextFeaturesSpec extends SparkSpec {
         fp.getField("min_shingle_hash").as("a1"),
         fp.getField("n_winnow").as("a2"),
         array_min(hashes).as("b1"),
-        size(Text.winnow(hashes, 4)).cast("long").as("b2"))
+        size(TextRef.winnow(hashes, 4)).cast("long").as("b2"))
       .filter(not(col("a1") <=> col("b1")) || not(col("a2") <=> col("b2")))
       .count()
     assert(bad === 0)
@@ -64,7 +65,7 @@ class TextFeaturesSpec extends SparkSpec {
         efp.getField("min_shingle_hash").as("a1"),
         efp.getField("n_winnow").as("a2"),
         array_min(eh).as("b1"),
-        size(Text.winnow(eh, 4)).cast("long").as("b2"))
+        size(TextRef.winnow(eh, 4)).cast("long").as("b2"))
       .filter(not(col("a1") <=> col("b1")) || not(col("a2") <=> col("b2")))
       .count()
     assert(ebad === 0)
@@ -78,7 +79,7 @@ class TextFeaturesSpec extends SparkSpec {
         nfp.getField("min_shingle_hash").as("a1"),
         nfp.getField("n_winnow").as("a2"),
         array_min(nh).as("b1"),
-        size(Text.winnow(nh, 4)).cast("long").as("b2"))
+        size(TextRef.winnow(nh, 4)).cast("long").as("b2"))
       .filter(not(col("a1") <=> col("b1")) || not(col("a2") <=> col("b2")))
       .count()
     assert(nbad === 0)
@@ -89,7 +90,7 @@ class TextFeaturesSpec extends SparkSpec {
     val toks = Text.tokens(col("text"))
     val bad = Tables.documents(spark, sf).select(
         SimHash.simhash32(toks).as("a"),
-        SimHash.simhash32Hof(toks).as("b"))
+        SimHashRef.simhash32Hof(toks).as("b"))
       .filter(not(col("a") <=> col("b"))).count()
     assert(bad === 0)
     // edges: empty token list (all-zero votes -> all '0'), single token
@@ -98,7 +99,7 @@ class TextFeaturesSpec extends SparkSpec {
       .toDF("toks")
     val ebad = edge.select(
         SimHash.simhash32(col("toks")).as("a"),
-        SimHash.simhash32Hof(col("toks")).as("b"))
+        SimHashRef.simhash32Hof(col("toks")).as("b"))
       .filter(not(col("a") <=> col("b"))).count()
     assert(ebad === 0)
   }
@@ -111,7 +112,7 @@ class TextFeaturesSpec extends SparkSpec {
     // under '' with either implementation
     val nulls = Seq((1L, None: Option[Seq[String]])).toDF("id", "toks")
     val got = nulls.select(SimHash.simhash32(col("toks")).as("a"),
-      SimHash.simhash32Hof(col("toks")).as("b")).head()
+      SimHashRef.simhash32Hof(col("toks")).as("b")).head()
     assert(got.getString(0) === "" && got.getString(1) === "")
     // a non-positive winnow window fails readably, not with an
     // ArrayIndexOutOfBounds from the executor loop
@@ -136,7 +137,7 @@ class TextFeaturesSpec extends SparkSpec {
         size(toks).cast("long").as("b1"),
         size(array_distinct(toks)).cast("long").as("b2"),
         Text.countIn(toks, stop).cast("long").as("b3"),
-        (size(toks) - size(Text.collapseRepeatsHof(toks))).cast("long").as("b4"))
+        (size(toks) - size(TextRef.collapseRepeatsHof(toks))).cast("long").as("b4"))
       .filter(col("a1") =!= col("b1") || col("a2") =!= col("b2") ||
         col("a3") =!= col("b3") || col("a4") =!= col("b4")).count()
     assert(d == 0)
@@ -175,7 +176,7 @@ class TextFeaturesSpec extends SparkSpec {
 
   test("graft_gram_stats repetition equals the composed explode form on the corpus") {
     val nat = graft.queries.TextQueries.textRepetition(spark, sf)
-    val comp = graft.queries.TextQueries.textRepetitionComposed(spark, sf)
+    val comp = graft.ref.TextQueriesRef.textRepetitionComposed(spark, sf)
     assert(nat.columns.toSeq == comp.columns.toSeq)
     // full-row null-safe equality, both directions
     assert(nat.exceptAll(comp).count() == 0)

@@ -110,7 +110,7 @@ class TextScoringSpec extends SparkSpec {
   test("text_bm25 native equals the composed window form on the corpus") {
     val docs = Tables.documents(spark, sf)
     val nat = graft.ext.TfIdf.bm25TopTerms(docs, "doc_id", "text", k = 3)
-    val comp = graft.ext.TfIdf.bm25TopTermsComposed(docs, "doc_id", "text",
+    val comp = graft.ref.TfIdfRef.bm25TopTermsComposed(docs, "doc_id", "text",
       k = 3)
     assert(nat.exceptAll(comp).isEmpty && comp.exceptAll(nat).isEmpty)
     // the rewrite's point: scoring and per-doc top-k selection happen
@@ -137,13 +137,13 @@ class TextScoringSpec extends SparkSpec {
   test("text_tfidf native equals the composed window form on the corpus") {
     val docs = Tables.documents(spark, sf)
     val nat = graft.ext.TfIdf.topTerms(docs, "doc_id", "text", k = 3)
-    val comp = graft.ext.TfIdf.topTermsComposed(docs, "doc_id", "text", k = 3)
+    val comp = graft.ref.TfIdfRef.topTermsComposed(docs, "doc_id", "text", k = 3)
     assert(nat.exceptAll(comp).isEmpty && comp.exceptAll(nat).isEmpty)
   }
 
   test("text_perplexity native equals the composed model-join form") {
     val nat = graft.queries.TextQueries.textPerplexity(spark, sf)
-    val comp = graft.queries.TextQueries.textPerplexityComposed(spark, sf)
+    val comp = graft.ref.TextQueriesRef.textPerplexityComposed(spark, sf)
     assert(nat.exceptAll(comp).isEmpty && comp.exceptAll(nat).isEmpty)
   }
 

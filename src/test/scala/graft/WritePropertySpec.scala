@@ -4,12 +4,11 @@ import org.scalacheck.{Gen, Prop, Properties, Test}
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Incremental, MergeWriter}
+import graft.operators.MergeWriter
 
-/** ScalaCheck properties over the write lifecycle (MergeWriter +
-  * Incremental) — the carriers of the reference's K2-K7 upsert and
-  * F2/F3 watermark semantics, which until now were pinned on example
-  * frames only. Randomized batch splits, replays and boundary ties
+/** ScalaCheck properties over the write lifecycle (MergeWriter) —
+  * the carrier of the reference's K2-K7 upsert semantics, which until
+  * now were pinned on example frames only. Randomized batch splits, replays and boundary ties
   * sweep the input space the fixed specs can't.
   *
   * Version values are generated GLOBALLY UNIQUE so the per-key winner
@@ -105,68 +104,5 @@ object WritePropertySpec extends Properties("graft.writes") {
       val p = spark.read.parquet(part)
         .select("id", "ver", "payload", "day")
       f.exceptAll(p).isEmpty && p.exceptAll(f).isEmpty
-    }
-
-  /** (id, ts) frames with a fat tie domain: ts in [0, 5] guarantees
-    * boundary collisions.
-    */
-  private val srcGen: Gen[List[(Int, Long)]] = for {
-    n <- Gen.choose(0, 25)
-    rows <- Gen.listOfN(n,
-      Gen.zip(Gen.choose(0, 99), Gen.choose(0L, 5L)))
-  } yield rows.zipWithIndex.map { case ((id, ts), i) => (id * 100 + i, ts) }
-
-  property("aboveWatermark: > and >= are exactly the boundary rows apart; empty target admits all") =
-    Prop.forAll(srcGen, Gen.choose(0L, 6L), Gen.choose(0L, Long.MaxValue)) {
-      (src, cut, seed) =>
-      import spark.implicits._
-      val sdf = src.toDF("id", "ts")
-      // target = every row below the cut plus a pseudo-random subset
-      // of the rows AT the cut — the partially-ingested boundary that
-      // makes > vs >= a real choice
-      val below = src.filter(_._2 < cut)
-      val atCut = src.filter(_._2 == cut).zipWithIndex
-        .filter { case (_, i) => ((seed >>> (i % 60)) & 1L) == 1L }
-        .map(_._1)
-      val tgt = below ++ atCut
-      val tdf = tgt.toDF("id", "ts")
-      val wm = tgt.map(_._2).maxOption
-      val strict = Incremental.aboveWatermark(sdf, tdf, "ts")
-        .collect().map(r => (r.getInt(0), r.getLong(1))).toSet
-      val incl = Incremental.aboveWatermark(sdf, tdf, "ts",
-          inclusive = true)
-        .collect().map(r => (r.getInt(0), r.getLong(1))).toSet
-      val wantStrict = wm match {
-        case None => src.toSet // empty target: NULL watermark admits all
-        case Some(w) => src.filter(_._2 > w).toSet
-      }
-      val wantIncl = wm match {
-        case None => src.toSet
-        case Some(w) => src.filter(_._2 >= w).toSet
-      }
-      strict == wantStrict && incl == wantIncl &&
-        (incl -- strict) == wm.map(w => src.filter(_._2 == w).toSet)
-          .getOrElse(Set.empty)
-    }
-
-  property("boundary replay equivalence: merged > and >= deltas agree iff the boundary was fully ingested") =
-    Prop.forAll(srcGen, Gen.choose(0L, 6L)) { (src, cut) =>
-      import spark.implicits._
-      // ids are globally unique in srcGen, so the keyed merge of
-      // target ∪ delta is just the set union — compute both sides'
-      // final tables and compare against all-source
-      val sdf = src.toDF("id", "ts")
-      val tgt = src.filter(_._2 <= cut) // FULL prefix incl. the boundary
-      val tdf = tgt.toDF("id", "ts")
-      def mergedWith(inclusive: Boolean): Set[(Int, Long)] = {
-        val delta = Incremental.aboveWatermark(sdf, tdf, "ts", inclusive)
-          .collect().map(r => (r.getInt(0), r.getLong(1))).toSet
-        tgt.toSet ++ delta // keyed merge on unique ids == union
-      }
-      // the F2/F3 pipeline invariant: with the boundary fully in the
-      // target, strict and inclusive deltas merge to the SAME table
-      // (>= re-merges boundary rows, which collapse onto their keys)
-      mergedWith(inclusive = false) == src.toSet &&
-        mergedWith(inclusive = true) == src.toSet
     }
 }

@@ -10,7 +10,8 @@ object EnsureScale {
     val root = sys.env.getOrElse("GRAFT_SCALE_ROOT", "/tmp/graft-scale")
     val factors = sys.env.getOrElse("GRAFT_SCALE_FACTORS", "30")
       .split(",").map(_.trim.toInt).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS")
+      .fold(graft.GraftSession.DefaultCores)(_.toInt)
     val spark = graft.GraftSession.prepare(graft.GraftSession.local(cpus))
     factors.foreach { m =>
       val dir = ScaleCurve.ensureScaled(spark, sfDir, root, m)

@@ -26,7 +26,8 @@ import org.apache.spark.sql.functions._
   *   GRAFT_SCALE_FACTORS  comma list (default 1,3,10)
   *   GRAFT_SCALE_QUERIES  comma list of SparkEntry.queries names
   *   GRAFT_SCALE_WARM     warm repeats per query (default 3)
-  *   SPARK_GRAFT_CPUS     local cores, as for `graft.Bench` (default 32)
+  *   SPARK_GRAFT_CPUS     local cores, as for `graft.Bench`
+  *                        (default `GraftSession.DefaultCores`)
   */
 object ScaleCurve {
 
@@ -147,7 +148,8 @@ object ScaleCurve {
     val warmRuns = sys.env.getOrElse("GRAFT_SCALE_WARM", "3").toInt
     require(queries.nonEmpty, "set GRAFT_SCALE_QUERIES")
 
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS")
+      .fold(graft.GraftSession.DefaultCores)(_.toInt)
     val spark = graft.GraftSession.prepare(graft.GraftSession.local(cpus))
     def time(f: => Unit): Double = {
       val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9

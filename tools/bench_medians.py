@@ -32,7 +32,8 @@ TABLES = "region nation customer supplier part orders lineitem events documents 
 # ---------------------------------------------------------------------------
 # Per-query cost-class adjudication (VERDICT r12 #4): one machine-readable
 # table of WHY a row exceeds the 2x per-query line, transcribed from the
-# family-by-family prose adjudications in COVERAGE.md so the bench gate and
+# family-by-family prose adjudications in COVERAGE.md at commit ff8d9ba (the
+# round logs; later COVERAGE.md keeps current-state tables only) so the bench gate and
 # future judges stop re-litigating. Classes:
 #   streaming-machinery  real checkpointed stream per run (micro-batch loop,
 #                        WAL/offset commits ~165 ms/batch measured floor)
@@ -73,11 +74,11 @@ DATA_DOMINATED = {
     # r16 salted-kernel / sharded-rank rewrites: quadratic pair verify
     # (2.0x twin at 30x, was 16x) and the value-sharded grouped rank
     # (3.3x twin at 30x, was 8x) — both carry fresh 30x curves in
-    # COVERAGE r16
+    # r16 (COVERAGE.md at ff8d9ba)
     "dedup_embedding_cosine", "binning_equidepth",
 }
 # >1.3 s rows adjudicated as floor-dominated despite their size: many small
-# per-column/per-probe jobs over ms-scale data (COVERAGE r6: similarity_ivf
+# per-column/per-probe jobs over ms-scale data (COVERAGE.md at ff8d9ba, r6: similarity_ivf
 # "dominated by fixed machinery", cold-JVM isolation 4.6 s vs 1.3 s mid-run).
 JOB_FLOOR_EXPLICIT = {
     "profile_columns", "profile_inclusion", "metar_ods_guarded_cast",
@@ -99,7 +100,7 @@ JOB_FLOOR_EXPLICIT = {
     # beyond the single-job canary (x1.27 that run): window family =
     # shuffle+sort+window over 60 k rows (twins 0.09-0.42 s),
     # assign_dense_ids = two-pass zipWithIndex, corpus_pipeline curve
-    # 3.2x -> 1.5x by 10x (COVERAGE r10), dedup_embedding_lsh =
+    # 3.2x -> 1.5x by 10x (r10, COVERAGE.md at ff8d9ba), dedup_embedding_lsh =
     # persisted-index probe machinery (twin 64 ms).
     "window_running", "window_rolling_7d", "window_first_occurrence",
     "assign_dense_ids", "corpus_pipeline", "dedup_embedding_lsh",
@@ -163,13 +164,13 @@ def host_factor(canary: dict) -> tuple:
         return 1.0, "fallback: malformed or missing canary payload"
 CLASS_EVIDENCE = {
     "streaming-machinery":
-        "COVERAGE.md 'Streaming micro-batch fixed cost (verdict #3)': "
+        "COVERAGE.md at ff8d9ba 'Streaming micro-batch fixed cost (verdict #3)': "
         "~165 ms/micro-batch MicroBatchExecution floor, identical on tmpfs "
         "vs ext4; twin computes only the final table. Cross-round moves "
         "in this class adjudicate against fs_factor (r21): the rows are "
         "fsync/tiny-file-commit bound, invisible to the CPU canary",
     "write-lifecycle":
-        "COVERAGE.md 'Scale curves' (r11) + 'Write-lifecycle scale curves' "
+        "COVERAGE.md at ff8d9ba 'Scale curves' (r11) + 'Write-lifecycle scale curves' "
         "(r13): per-run persist+read-back vs a pure-query twin; write-path "
         "scaling measured 1x/3x/10x. r14: pipeline_medallion_incr persists "
         "its pre-arrival base under a corpus-signature key (join_bucketed "
@@ -179,11 +180,11 @@ CLASS_EVIDENCE = {
         "Cross-round moves in this class adjudicate against fs_factor "
         "(r21): parquet sink commits are disk-latency bound",
     "job-floor":
-        "COVERAGE.md r10 honest-benchmarking re-base + corpus_pipeline "
+        "COVERAGE.md at ff8d9ba r10 honest-benchmarking re-base + corpus_pipeline "
         "curve 3.2x -> 1.5x across 10x: fixed per-job machinery, twin in "
         "single-digit ms",
     "data-dominated":
-        "COVERAGE.md family scale curves: spans 0.63-0.76x, ppjoin 0.22x, "
+        "COVERAGE.md at ff8d9ba family scale curves: spans 0.63-0.76x, ppjoin 0.22x, "
         "minhash 0.63x/0.30x (r14 refresh, Spark wins at every scale), "
         "keep-first 0.63-0.76x at 10x corpus",
 }

@@ -5,8 +5,8 @@ nothing is parallelism-bound (0.2-7 s rows, per-query System.gc(),
 micro-batch cadence floors). This tool measures the SAME contract
 (graft.Bench, $SPARK_GRAFT_CPUS, noop sink, canary stamps) at a data
 size where the data-dominated rows are compute-bound: the 30x
-replicated corpus (tools/ScaleCurve - the protocol COVERAGE's scale
-curves already use), low vs high core count.
+replicated corpus (tools/ScaleCurve - the protocol of the scale curves
+in COVERAGE.md at ff8d9ba), low vs high core count.
 
 Writes bench_scaling.json at the repo root:
 
