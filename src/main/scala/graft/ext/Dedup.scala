@@ -198,10 +198,6 @@ object Dedup {
       .select(col("id_a"), col("id_b"), col("jaccard"))
   }
 
-  /** Embedding-cosine near-duplicates within a blocking column (label /
-    * cluster id). Cosine on the rounded-to-4 scale so the threshold
-    * comparison is reproducible across engines.
-    */
   /** Benchmark decontamination: count, per training document, the
     * distinct word n-gram shingles it shares with any document of the
     * held-out/benchmark set — the contamination check every training
@@ -468,12 +464,16 @@ object Dedup {
         col("e.edit_dist").as("edit_dist"))
   }
 
-  /** Blocked embedding near-duplicate pairs. CONTRACT: `idCol` must be
-    * an integral column (byte/short/int/long) — ids ride the native
-    * pair kernel as longs, and a string/UUID id would silently cast to
-    * null and emit garbage (0, 0) pairs. Map non-numeric ids to a
-    * surrogate long (`xxhash64`, `monotonically_increasing_id` + a
-    * lookup table) before calling; the entry check fails loud.
+  /** Embedding-cosine near-duplicate pairs within a blocking column
+    * (label / cluster id). Cosine on the rounded-to-4 scale so the
+    * threshold comparison is reproducible across engines.
+    *
+    * CONTRACT: `idCol` must be an integral column (byte/short/int/
+    * long) — ids ride the native pair kernel as longs, and a
+    * string/UUID id would silently cast to null and emit garbage
+    * (0, 0) pairs. Map non-numeric ids to a surrogate long
+    * (`xxhash64`, `monotonically_increasing_id` + a lookup table)
+    * before calling; the entry check fails loud.
     */
   def embeddingNearDups(df: DataFrame, idCol: String, vecCol: String,
       blockCol: String, minCosine: Double): DataFrame = {

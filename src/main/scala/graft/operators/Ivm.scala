@@ -55,7 +55,7 @@ object Ivm {
     * Unlike the keyed merge sinks (idempotent by construction), a
     * signed-delta fold is NOT naturally idempotent — an at-least-once
     * replayed batch would double-apply. `batchId` closes that: the
-    * applied id commits in a `_ivm_batch` marker INSIDE the same
+    * applied id commits in a [[BatchMarker]] INSIDE the same
     * atomic swap as the data, and a batch at or below the recorded id
     * is skipped on replay.
     */
@@ -63,10 +63,12 @@ object Ivm {
       countCol: String, sumCols: Seq[(String, String)],
       signCol: String = "_sign", batchId: Option[Long] = None): Unit = {
     val spark = delta.sparkSession
+    MergeWriter.restore(spark, viewDir)
     spark.catalog.refreshByPath(viewDir)
     val exists = MergeWriter.exists(spark, viewDir)
     if (exists && batchId.isDefined &&
-        appliedBatch(spark, viewDir).exists(_ >= batchId.get)) return
+        MergeWriter.marker(spark, viewDir, BatchMarker)
+          .exists(_ >= batchId.get)) return
     val base =
       if (exists) spark.read.parquet(viewDir)
       else {
@@ -78,20 +80,9 @@ object Ivm {
       }
     MergeWriter.replace(spark, viewDir,
       applyDelta(base, delta, keys, countCol, sumCols, signCol),
-      marker = batchId.map(id => ("_ivm_batch", id.toString)))
+      marker = batchId.map(BatchMarker -> _))
   }
 
-  /** The batch id recorded by the last marker-carrying swap, if any. */
-  def appliedBatch(spark: org.apache.spark.sql.SparkSession,
-      viewDir: String): Option[Long] = {
-    val p = new org.apache.hadoop.fs.Path(viewDir, "_ivm_batch")
-    val f = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!f.exists(p)) None
-    else {
-      val in = f.open(p)
-      try Some(new String(in.readAllBytes(),
-        java.nio.charset.StandardCharsets.UTF_8).trim.toLong)
-      finally in.close()
-    }
-  }
+  /** The [[MergeWriter.marker]] holding the last applied batch id. */
+  val BatchMarker = "_ivm_batch"
 }

@@ -91,6 +91,20 @@ object JdbcUpsert {
       s" VALUES (${names.map(n => s"s.$n").mkString(", ")})"
   }
 
+  /** Duplicate-key test by SQLState, NOT exception class —
+    * SQLIntegrityConstraintViolationException covers NOT NULL/CHECK/FK
+    * too in most drivers. 23505 is the standard unique-violation state
+    * (Postgres/Derby/H2); the 23000 family is generic integrity, so it
+    * only counts with a known duplicate-key vendor code (MySQL 1062,
+    * SQL Server 2601/2627, Oracle 1).
+    */
+  private def isDuplicateKey(e: java.sql.SQLException): Boolean = {
+    val state = Option(e.getSQLState).getOrElse("")
+    state == "23505" ||
+      (state == "23000" &&
+        Set(1, 1062, 2601, 2627).contains(e.getErrorCode))
+  }
+
   /** Dialect-free upsert: per row, UPDATE by key; if no row matched,
     * INSERT — the universal two-statement JDBC protocol (safe under
     * the per-key co-partitioning [[write]] and this method share, and
@@ -110,20 +124,6 @@ object JdbcUpsert {
     * semantics where available; the handling keeps replays idempotent
     * either way.
     */
-  /** Duplicate-key test by SQLState, NOT exception class —
-    * SQLIntegrityConstraintViolationException covers NOT NULL/CHECK/FK
-    * too in most drivers. 23505 is the standard unique-violation state
-    * (Postgres/Derby/H2); the 23000 family is generic integrity, so it
-    * only counts with a known duplicate-key vendor code (MySQL 1062,
-    * SQL Server 2601/2627, Oracle 1).
-    */
-  private def isDuplicateKey(e: java.sql.SQLException): Boolean = {
-    val state = Option(e.getSQLState).getOrElse("")
-    state == "23505" ||
-      (state == "23000" &&
-        Set(1, 1062, 2601, 2627).contains(e.getErrorCode))
-  }
-
   def writeGeneric(df: DataFrame, url: String, table: String,
       keys: Seq[String]): Unit = {
     identTable(table)

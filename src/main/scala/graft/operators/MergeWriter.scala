@@ -1,5 +1,7 @@
 package graft.operators
 
+import java.nio.charset.StandardCharsets.UTF_8
+
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -99,10 +101,12 @@ object MergeWriter {
 
   /** Merge `updates` into the parquet table at `dir`, keyed by `keys`,
     * newest row per key winning by `versionCols` (updates beat existing
-    * rows on ties).
+    * rows on ties). `marker` commits with the data, as in [[replace]].
     */
   def upsert(spark: SparkSession, dir: String, updates: DataFrame,
-      keys: Seq[String], versionCols: Seq[String]): Unit = {
+      keys: Seq[String], versionCols: Seq[String],
+      marker: Option[(String, Long)] = None): Unit = {
+    restore(spark, dir)
     spark.catalog.refreshByPath(dir) // manual swaps bypass listing-cache invalidation
     // updates are reduced to latest-per-key even on first write: a batch
     // may itself carry several versions of a key (property-tested)
@@ -112,7 +116,7 @@ object MergeWriter {
       else graft.Tables.parquet(spark, dir).withColumn("_src", lit(0))
         .unionByName(incoming, allowMissingColumns = true)
     val merged = LatestPerKey(unioned, keys, versionCols :+ "_src").drop("_src")
-    replace(spark, dir, merged)
+    replace(spark, dir, merged, marker)
   }
 
   /** K5: append-only with schema widening (new columns null-filled on
@@ -148,6 +152,11 @@ object MergeWriter {
   def upsertPartitioned(spark: SparkSession, dir: String, updates: DataFrame,
       keys: Seq[String], versionCols: Seq[String], partCol: String,
       touched: Option[Seq[Any]] = None): Option[Seq[Any]] = {
+    val root = new Path(dir)
+    if (exists(spark, dir)) fs(spark, root).listStatus(root)
+      .map(_.getPath.getName)
+      .filter(n => n.startsWith(s".$partCol=") && n.endsWith(".old"))
+      .foreach(n => restore(spark, s"$dir/${n.drop(1).dropRight(4)}"))
     spark.catalog.refreshByPath(dir)
     val fresh = !exists(spark, dir)
     // without `touched`, the non-fresh path reads `updates` twice
@@ -240,40 +249,75 @@ object MergeWriter {
   /** Atomically replace the table at `dir` with `df` (crash-recoverable
     * swap; see [[swapDir]]) — the persistence primitive behind upsert
     * and the view-maintenance sinks ([[Ivm]]). An optional
-    * `(fileName, content)` marker is written INTO the staged dir
-    * before the swap, so marker and data commit in the same rename —
-    * the hook replay-idempotent sinks use to record the batch they
-    * applied (name it `_`/`.`-prefixed so scans ignore it).
+    * `(fileName, value)` marker is written INTO the staged dir before
+    * the swap, so marker and data commit in the same rename — the hook
+    * a sink uses to record the progress its data holds (a batch id, a
+    * watermark), read back by [[marker]] (name it `_`/`.`-prefixed so
+    * scans ignore it).
     */
   def replace(spark: SparkSession, dir: String, df: DataFrame,
-      marker: Option[(String, String)] = None): Unit = {
+      marker: Option[(String, Long)] = None): Unit = {
     val tmp = new Path(dir + ".tmp-" + java.util.UUID.randomUUID().toString.take(8))
     val dst = new Path(dir)
     val f = fs(spark, dst)
     df.write.mode("overwrite").parquet(tmp.toString)
-    marker.foreach { case (name, content) =>
+    marker.foreach { case (name, value) =>
       val out = f.create(new Path(tmp, name), true)
-      try out.write(content.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      try out.write(value.toString.getBytes(UTF_8))
       finally out.close()
     }
     swapDir(f, tmp, dst)
     spark.catalog.refreshByPath(dir)
   }
 
+  /** The value the last [[replace]] of `dir` committed in its `name`
+    * marker; None when `dir` or the marker is missing. A marker is
+    * complete before the rename that commits it, so a crash cannot
+    * tear it: one that does not parse fails loudly, naming its path.
+    */
+  def marker(spark: SparkSession, dir: String, name: String): Option[Long] = {
+    val p = new Path(dir, name)
+    val f = fs(spark, p)
+    if (!f.exists(p)) None
+    else {
+      val in = f.open(p)
+      val body = try new String(in.readAllBytes(), UTF_8).trim finally in.close()
+      Some(body.toLongOption.getOrElse(throw new IllegalStateException(
+        s"marker $p holds '$body', not a number")))
+    }
+  }
+
+  /** Finish a [[swapDir]] that crashed between its two renames: when
+    * `dir` is missing and its `.<name>.old` copy is not, the copy is
+    * renamed back. Every entry point runs this before it reads its
+    * target; a merge that saw no table would write its batch alone,
+    * and its own swap would then delete the copy.
+    */
+  private[graft] def restore(spark: SparkSession, dir: String): Unit = {
+    val dst = new Path(dir)
+    val f = fs(spark, dst)
+    val old = oldCopy(dst)
+    if (!f.exists(dst) && f.exists(old) && !f.rename(old, dst))
+      throw new java.io.IOException(s"merge swap recovery failed: $old -> $dst")
+  }
+
+  private def oldCopy(dst: Path): Path =
+    new Path(dst.getParent, "." + dst.getName + ".old")
+
   /** Crash-recoverable directory replace: the previous content is
     * renamed to `.<dst>.old` before the new content renames in, so a
-    * crash between the two renames leaves a recoverable copy at a
-    * well-known name (never a silently lost table); the old copy is
-    * dropped only after the new content is in place. The dot prefix
-    * keeps a crash leftover INVISIBLE to partition discovery when the
-    * swapped dir is a `col=value` partition inside a table root — a
-    * visible `<name>.old` sibling would read as a bogus extra
-    * partition and duplicate that partition's rows on every scan.
+    * crash between the two renames leaves a copy at a well-known name,
+    * which [[restore]] renames back; the old copy is dropped only
+    * after the new content is in place. The dot prefix keeps a crash
+    * leftover INVISIBLE to partition discovery when the swapped dir is
+    * a `col=value` partition inside a table root — a visible
+    * `<name>.old` sibling would read as a bogus extra partition and
+    * duplicate that partition's rows on every scan.
     */
   private[operators] def swapDir(f: org.apache.hadoop.fs.FileSystem,
       src: Path, dst: Path): Unit = {
-    val old = new Path(dst.getParent, "." + dst.getName + ".old")
-    f.delete(old, true) // leftover from a previous crashed swap
+    val old = oldCopy(dst)
+    f.delete(old, true) // stale: a crash after the second rename
     if (f.exists(dst) && !f.rename(dst, old))
       throw new java.io.IOException(s"merge swap failed: $dst -> $old")
     if (!f.rename(src, dst))

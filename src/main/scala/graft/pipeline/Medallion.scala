@@ -12,7 +12,9 @@ import graft.quality.Checks
   * graph (SURVEY §2.12 O1/O2): bronze → stg → {int, dwh}, each layer a
   * pure transform + a keyed merge materialization, with the stg layer
   * incrementally filtered by the high-watermark of its own target
-  * (SURVEY F2) and quality checks after the build (O1's test stage).
+  * (SURVEY F2), dwh and then int by the one downstream watermark that
+  * int's merge commits, and quality checks after the build (O1's test
+  * stage).
   *
   * Layer writes are parquet merges ([[MergeWriter]]); re-running the
   * pipeline over the same input is a no-op (replay idempotence — the
@@ -55,8 +57,7 @@ object Medallion {
     // High watermark = max ts of the LAST day partition (the dir
     // listing names the max day; one partition is scanned, not the
     // table) — max(ts) over day=to_date(ts) partitions always lives in
-    // the max-day dir. The 1-row head() is metadata-bounded, same
-    // class as the layer-watermark sidecars below.
+    // the max-day dir. The 1-row head() is metadata-bounded.
     val stgWm: Option[Long] =
       if (!MergeWriter.exists(spark, stgDir)) None
       else MergeWriter.maxDayPartition(spark, stgDir, "day").flatMap { d =>
@@ -101,63 +102,27 @@ object Medallion {
       if (MergeWriter.exists(spark, stgDir)) Tables.parquet(spark, stgDir)
       else stgRows.limit(0)
 
-    // Downstream layers scope incrementally from stg rows above their
-    // OWN durable watermark (a 1-row sidecar recording the max stg ts
-    // the layer has incorporated) — NEVER from this run's pre-merge
-    // increment: stg's watermark advances when its merge commits, so a
-    // crash between the stg merge and a downstream merge would hide
-    // the missed rows from every later run's increment and leave the
-    // layer stale FOREVER. With per-layer watermarks the next run sees
-    // exactly the unincorporated rows (watermark written AFTER the
-    // layer commits; a crash in between only re-processes, and the
-    // keyed merges are idempotent). A missing sidecar (first build, or
-    // crash before the first write) scopes to the full stg table —
-    // self-healing by construction.
-    // A layer's stats need no scan of its own: its pending rows are the
-    // stg rows above its watermark, so it has some iff stgMax is above
-    // the watermark, and their max — its new watermark — is stgMax.
-    // A sidecar that exists but holds no usable watermark (torn or
-    // unparseable — a partial/corrupt write) degrades to the same
-    // self-healing full rebuild as a missing sidecar, never an NPE.
-    // The sidecar is ONE value of layer metadata, so it is read and
-    // written by the DRIVER through the Hadoop FS (temp + atomic
-    // rename), the way Spark's own streaming commit logs are — the
-    // earlier 1-row-parquet form paid a whole Spark job per sidecar
-    // write and another per read, pure per-run fixed cost (the same
-    // shape r21 removed from the shard-append manifest).
-    def layerWm(wmDir: String): Option[Long] = {
-      val p = new org.apache.hadoop.fs.Path(wmDir)
-      val f = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (!f.exists(p)) None
-      // a DIRECTORY at the sidecar path is the pre-r21 1-row-parquet
-      // form (a root built by an older engine version): degrade to the
-      // self-healing full rebuild, which rewrites the sidecar as a file
-      else if (f.getFileStatus(p).isDirectory) None
-      else {
-        val in = f.open(p)
-        val body =
-          try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-          finally in.close()
-        body.trim match {
-          case s if s.matches("""\{"wm":-?\d+\}""") =>
-            Some(s.stripPrefix("""{"wm":""").stripSuffix("}").toLong)
-          case _ => None // torn/corrupt → self-healing full rebuild
-        }
-      }
-    }
-    def writeLayerWm(wmDir: String, v: Long): Unit = {
-      val p = new org.apache.hadoop.fs.Path(wmDir)
-      val f = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val tmp = new org.apache.hadoop.fs.Path(
-        p.getParent, s".${p.getName}.tmp")
-      val out = f.create(tmp, true)
-      try out.write(s"""{"wm":$v}"""
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
-      f.delete(p, true) // recursive: may be a pre-r21 parquet-dir sidecar
-      if (!f.rename(tmp, p))
-        throw new java.io.IOException(s"watermark sidecar swap failed: $p")
-    }
+    // Downstream layers scope incrementally from the stg rows above
+    // ONE durable watermark W, the max stg ts both have incorporated —
+    // NEVER from this run's pre-merge increment: stg's watermark
+    // advances when its merge commits, so a crash between the stg merge
+    // and a downstream merge would hide the missed rows from every
+    // later run's increment and leave the layers stale FOREVER.
+    // W is a `_wm` marker inside int_latest, committed by the same
+    // rename as int's data (MergeWriter.replace's marker), and dwh
+    // merges BEFORE int: W cannot advance until both layers have
+    // committed. A crash anywhere before int's rename leaves W where it
+    // was, and the next run redoes dwh's touched days (idempotent: they
+    // re-aggregate whole days from stg) and int's pending rows (a keyed
+    // merge). No W — a first build, an empty-source build, a mart that
+    // is gone, a root written before the marker — scopes both layers
+    // to all of stg: a full rebuild.
+    val intDir = s"$root/int_latest"
+    val dwhDir = s"$root/${cfg.schema}_daily"
+    MergeWriter.restore(spark, intDir) // a crash mid-swap keeps its W
+    val wm: Option[Long] =
+      if (!MergeWriter.exists(spark, dwhDir)) None
+      else MergeWriter.marker(spark, intDir, "_wm")
     // the watermark compare is phrased on the raw ts column (against a
     // foldable timestamp_micros literal), NOT as unix_micros(ts) > v:
     // a predicate on the bare column reaches the parquet scan and
@@ -166,53 +131,18 @@ object Medallion {
     // cost ∝ corpus" once the stg table is years deep. The companion
     // day >= date(wm) predicate hits the PARTITION layer: incorporated
     // day directories are never even listed into the plan.
-    def pendingFor(wm: Option[Long]): DataFrame = wm match {
+    val pending = wm match {
       case None => stgOut
       case Some(v) => stgOut
         .filter(col("day") >= to_date(timestamp_micros(lit(v))))
         .filter(col("ts") > timestamp_micros(lit(v)))
     }
+    // The layers' stats need no scan of their own: their pending rows
+    // are the stg rows above W, so there are some iff stgMax is above
+    // W (no W: rebuild unconditionally), and their max — the new W —
+    // is stgMax.
+    val stale = wm.forall(w => stgMax.exists(_ > w))
 
-    // a layer with no watermark (first build, lost or torn sidecar)
-    // rebuilds unconditionally; one with a watermark merges only when
-    // stg holds rows above it
-    def stale(wm: Option[Long]): Boolean =
-      wm.forall(w => stgMax.exists(_ > w))
-
-    // int: latest state per key, merged on the key (20-row dimension
-    // in the reference; |users| here). Incremental scope: latest-per-
-    // key is DECOMPOSABLE — latest(history ∪ batch) = latest(latest
-    // (history), latest(batch)) under the same total order — and the
-    // keyed upsert's own LatestPerKey merge on (ts, event_id) computes
-    // exactly that against the target's existing rows, reducing the
-    // pending rows in the same aggregation. So an incremental run
-    // reduces ONLY the pending rows and never rejoins or rescans stg
-    // history: per-batch cost ∝ batch. (An earlier shape semi-joined
-    // stg back to the pending users — O(|stg|) scan + shuffle per
-    // batch, superlinear in corpus on the steady state.)
-    val intDir = s"$root/int_latest"
-    val intWmDir = s"$root/int_latest_wm"
-    val intWm = if (!MergeWriter.exists(spark, intDir)) None
-      else layerWm(intWmDir)
-    if (stale(intWm)) {
-      MergeWriter.upsert(spark, intDir, pendingFor(intWm),
-        keys = Seq("user_id"), versionCols = Seq("ts", "event_id"))
-      stgMax.foreach(writeLayerWm(intWmDir, _))
-    }
-
-    // dwh: daily mart merged on the surrogate key, PARTITIONED by day —
-    // merges rewrite only touched date partitions and date-range reads
-    // prune (the 100 TB layout; mirrors the reference's observed_date
-    // incremental filter, SURVEY §4 partition-pruning row).
-    // INCREMENTAL rebuild scope: only the days carrying unincorporated
-    // rows are re-aggregated (a day's aggregate needs ALL of that
-    // day's stg rows, so the filter is by touched DAY, not by new
-    // row); days are non-null by construction (stg rows passed the ts
-    // watermark). An empty pending set skips the merge entirely.
-    val dwhDir = s"$root/${cfg.schema}_daily"
-    val dwhWmDir = s"$root/${cfg.schema}_daily_wm"
-    val dwhWm = if (!MergeWriter.exists(spark, dwhDir)) None
-      else layerWm(dwhWmDir)
     def rollup(src: DataFrame): DataFrame =
       DailyRollup(src, key = "user_id", tsCol = "ts",
         metrics = Seq(
@@ -220,30 +150,53 @@ object Medallion {
           max(col("value")).as("max_value"),
           min(col("value")).as("min_value"),
           count(lit(1)).as("n_events")))
-    if (stale(dwhWm)) {
-      // the days carrying unincorporated rows. When dwh is level with
-      // stg's pre-merge watermark, its pending rows are exactly this
-      // run's stg batch, whose days the stg merge already returned.
-      // Otherwise (a lagging dwh after a crash) they are collected:
-      // driver-side day values, bounded by the CALENDAR (one value per
-      // day carrying unincorporated rows), never by data volume. The
+    if (stale) {
+      // dwh: daily mart merged on the surrogate key, PARTITIONED by day
+      // — merges rewrite only touched date partitions and date-range
+      // reads prune (the 100 TB layout; mirrors the reference's
+      // observed_date incremental filter, SURVEY §4 partition-pruning
+      // row). INCREMENTAL rebuild scope: only the days carrying pending
+      // rows are re-aggregated (a day's aggregate needs ALL of that
+      // day's stg rows, so the filter is by touched DAY, not by new
+      // row); days are non-null by construction (stg rows passed the ts
+      // watermark).
+      // When W is level with stg's pre-merge watermark, the pending
+      // rows are exactly this run's stg batch, whose days the stg merge
+      // already returned. Otherwise (W lagging after a crash) they are
+      // collected: driver-side day values, bounded by the CALENDAR (one
+      // value per day carrying pending rows), never by data volume. The
       // cap turns a mis-keyed source (e.g. a per-row value leaking into
       // the day column) into a loud failure instead of a driver OOM.
       // `day` is stg's PARTITION column, so the distinct is
       // metadata-cheap and the isin filter prunes at the
       // directory-listing layer — untouched days never enter the plan.
-      // A FIRST build (no watermark) rolls up all of stg.
-      val touchedDays: Option[Seq[Any]] = dwhWm.flatMap { _ =>
-        if (dwhWm == stgWm) stgTouched
+      // A full rebuild (no W) rolls up all of stg.
+      val touchedDays: Option[Seq[Any]] = wm.flatMap { _ =>
+        if (wm == stgWm) stgTouched
         else Some(MergeWriter.boundedPartitionValues(
-          pendingFor(dwhWm).select(col("day")), "day"))
+          pending.select(col("day")), "day"))
       }
       val dailySrc = touchedDays.fold(stgOut)(days =>
         stgOut.filter(col("day").isInCollection(days)))
       MergeWriter.upsertPartitioned(spark, dwhDir, rollup(dailySrc),
         keys = Seq("user_id_date"), versionCols = Seq("n_events"),
         partCol = "day", touched = touchedDays)
-      stgMax.foreach(writeLayerWm(dwhWmDir, _))
+
+      // int: latest state per key, merged on the key (20-row dimension
+      // in the reference; |users| here), committing W. Incremental
+      // scope: latest-per-key is DECOMPOSABLE — latest(history ∪ batch)
+      // = latest(latest(history), latest(batch)) under the same total
+      // order — and the keyed upsert's own LatestPerKey merge on
+      // (ts, event_id) computes exactly that against the target's
+      // existing rows, reducing the pending rows in the same
+      // aggregation. So an incremental run reduces ONLY the pending
+      // rows and never rejoins or rescans stg history: per-batch
+      // cost ∝ batch. (An earlier shape semi-joined stg back to the
+      // pending users — O(|stg|) scan + shuffle per batch, superlinear
+      // in corpus on the steady state.)
+      MergeWriter.upsert(spark, intDir, pending,
+        keys = Seq("user_id"), versionCols = Seq("ts", "event_id"),
+        marker = stgMax.map("_wm" -> _))
     }
     // schema-bearing empty when the empty-source first build wrote
     // nothing (mirrors the stgOut guard)
@@ -271,7 +224,7 @@ object Medallion {
       case Some(v) =>
         stgOut.filter(col("day") >= to_date(timestamp_micros(lit(v))))
     }
-    val dwhChecked = dwhWm match {
+    val dwhChecked = wm match {
       case None => dwhOut
       case Some(v) =>
         dwhOut.filter(col("day") >= to_date(timestamp_micros(lit(v))))

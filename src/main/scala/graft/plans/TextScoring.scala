@@ -192,15 +192,6 @@ private[plans] object ModelSearch {
   }
 }
 
-/** Okapi BM25 top-k terms for one document against the broadcast
-  * corpus model `struct(dfarr: array<struct<term, df>>, n_docs,
-  * avgdl)`. Empty-string pseudo-terms are dropped (the composed
-  * `length >= 1` filter); scoring replicates the composed Column
-  * arithmetic exactly (`ln((N - df + 0.5) / (df + 0.5) + 1)` ×
-  * saturating length-normalized tf, rounded HALF_UP to 6); selection
-  * replicates the rank window's `(round(bm25, 9) DESC, term ASC)`
-  * ordering. Returns `array<struct<rank, term, bm25>>` of size ≤ k.
-  */
 /** Context-count table derived from the GLOBAL bigram-count table:
   * input `array<struct<bg: string, c2: long>>` sorted by bg, output
   * `array<struct<w1: string, c1: long>>` sorted by w1, where
@@ -408,6 +399,15 @@ object PerplexityModel {
   }
 }
 
+/** Okapi BM25 top-k terms for one document against the broadcast
+  * corpus model `struct(dfarr: array<struct<term, df>>, n_docs,
+  * avgdl)`. Empty-string pseudo-terms are dropped (the composed
+  * `length >= 1` filter); scoring replicates the composed Column
+  * arithmetic exactly (`ln((N - df + 0.5) / (df + 0.5) + 1)` ×
+  * saturating length-normalized tf, rounded HALF_UP to 6); selection
+  * replicates the rank window's `(round(bm25, 9) DESC, term ASC)`
+  * ordering. Returns `array<struct<rank, term, bm25>>` of size ≤ k.
+  */
 case class Bm25TopK(first: Expression, second: Expression,
     third: Expression, k: Int, k1: Double, b: Double)
   extends TernaryExpression {

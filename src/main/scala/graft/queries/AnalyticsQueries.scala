@@ -184,13 +184,10 @@ object AnalyticsQueries {
       .orderBy(col("o_totalprice").desc, col("o_orderkey").asc)
       .limit(10)
 
-  /** Approximate distinct counts via HyperLogLog++ — at 100 TB the
-    * exact two-phase distinct agg shuffles every distinct value; the
-    * sketch shuffles a fixed-size buffer per group. No SQL oracle
-    * (approximate); the error bound vs exact is spec-tested.
-    */
   /** Approximate distinct counts via the portable deterministic HLL
-    * ([[graft.ext.Hll]]) rather than Spark's engine-private
+    * ([[graft.ext.Hll]]) — at 100 TB the exact two-phase distinct agg
+    * shuffles every distinct value; the sketch shuffles a fixed-size
+    * buffer per group. Portable rather than Spark's engine-private
     * `approx_count_distinct`, so the estimate itself is oracle-checkable.
     * Both sketches share ONE scan: the two key columns are exploded to
     * (column-id, value) rows, sketched together, then pivoted back.
@@ -430,13 +427,6 @@ object AnalyticsQueries {
       .orderBy("l_returnflag")
   }
 
-  /** SCD Type-2 dimension history: collapse each user's event stream
-    * to state-change rows and emit validity intervals
-    * (valid_from/valid_to, open-ended current row) — the
-    * slowly-changing-dimension build every warehouse pipeline runs.
-    * Two window passes over ONE (key, ts) sort/shuffle (lag to detect
-    * changes, lead for the interval end).
-    */
   /** The ONE SCD2 interval build (lag change-detect + lead interval
     * end over one (key, ts) sort) — shared by [[scd2History]] and
     * [[temporalJoin]] so the change-detection semantics cannot drift
@@ -456,6 +446,13 @@ object AnalyticsQueries {
         col("valid_to"))
   }
 
+  /** SCD Type-2 dimension history: collapse each user's event stream
+    * to state-change rows and emit validity intervals
+    * (valid_from/valid_to, open-ended current row) — the
+    * slowly-changing-dimension build every warehouse pipeline runs.
+    * Two window passes over ONE (key, ts) sort/shuffle (lag to detect
+    * changes, lead for the interval end).
+    */
   def scd2History(spark: SparkSession, dir: String): DataFrame =
     scd2Intervals(Tables.events(spark, dir))
       .withColumn("is_current",

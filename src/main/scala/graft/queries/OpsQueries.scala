@@ -34,8 +34,9 @@ object OpsQueries {
   /** The INCREMENTAL arrival path of the same DAG, oracle-gated: the
     * events feed lands in two day-split batches on one landing dir,
     * `Medallion.run` re-runs against the same materialization root
-    * (watermark scoping, partitioned merges, per-layer sidecars — the
-    * steady-state machinery perfbench's `medallion_arrivals` measures),
+    * (watermark scoping, partitioned merges, the downstream watermark
+    * int_latest commits — the steady-state machinery perfbench's
+    * `medallion_arrivals` measures),
     * and the final mart must equal DuckDB's one-shot aggregation of the
     * full feed. `avg_value` is deliberately excluded from the gate:
     * float summation ORDER differs between the two-merge layout and a
@@ -82,12 +83,12 @@ object OpsQueries {
   private def ensureMedallionBase(spark: SparkSession, dir: String,
       cut: String): String =
     graft.operators.Persisted.ensure(spark, "graft-medallion-base",
-      // "wm-file-v2": the r21 sidecar-format change (layer watermarks
-      // as driver-written JSON files, not 1-row parquet dirs) re-keys
-      // the persisted base so a pre-change base is never attached —
-      // layerWm would see its directory-form sidecars as missing and
-      // silently full-rebuild every incremental run.
-      graft.operators.Persisted.signature(spark, Seq(cut, "wm-file-v2"),
+      // "wm-marker-v3": the downstream watermark lives in a `_wm`
+      // marker inside int_latest (no longer in per-layer sidecar
+      // files), so the key moves with it: a base built before has no
+      // marker, and attaching it would silently full-rebuild every
+      // incremental run.
+      graft.operators.Persisted.signature(spark, Seq(cut, "wm-marker-v3"),
         Seq(s"$dir/events.parquet"))) { staging =>
       Tables.events(spark, dir).filter(to_date(col("ts")) < lit(cut))
         .write.mode("append").parquet(s"$staging/corpus/events.parquet")

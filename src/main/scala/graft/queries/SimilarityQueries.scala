@@ -520,12 +520,6 @@ object SimilarityQueries {
        |SELECT q_id, rank, c_id AS neighbor_id, round(adc, 6) AS adc_cosine
        |FROM pranked WHERE rank <= 3 ORDER BY q_id, rank""".stripMargin
 
-  /** Replays all three approximate rankings AND the exact baselines,
-    * then counts set intersections — recall is exact integer math, so
-    * an approximate operator is gated on answer QUALITY, not just
-    * determinism. bf mirrors bruteForceTopK exactly (unit vectors +
-    * list_dot_product, the bit-identical formulation).
-    */
   /** The per-plane sign CASEs of one LSH table, as DuckDB SQL. */
   private def lshCases(seed: Long, bits: Int = slshBits): String =
     SignLsh.planesSql(SignLsh.hyperplanes(bits, 64, seed)).map(p =>
@@ -542,6 +536,12 @@ object SimilarityQueries {
          |    ${lshCases(42L + t, slshMultiBits)}) AS bucket FROM u""".stripMargin)
       .mkString("sgm AS (\n", "\n  UNION ALL ", ")")
 
+  /** Replays all three approximate rankings AND the exact baselines,
+    * then counts set intersections — recall is exact integer math, so
+    * an approximate operator is gated on answer QUALITY, not just
+    * determinism. bf mirrors bruteForceTopK exactly (unit vectors +
+    * list_dot_product, the bit-identical formulation).
+    */
   private def recallOracle: String = {
     val cases = lshCases(42L)
     s"""WITH $euCtes,

@@ -549,33 +549,6 @@ object Streams {
   private val stagedModDirs =
     new java.util.concurrent.ConcurrentHashMap[(String, Int), String]()
 
-  /** Incremental training-shard building on streaming arrival — the
-    * production path for a corpus that keeps growing: you do NOT
-    * re-shuffle 100 TB when a new crawl lands; each arriving batch is
-    * shuffled internally ([[graft.ext.Sampling.shuffleShards]], same
-    * reproducible md5 permutation) and sealed into NEW shards whose
-    * ids continue where the previous batch stopped, so the on-disk
-    * layout is loader-consumable at every point in time and existing
-    * shards are never rewritten.
-    *
-    * Mechanics: shard offsets come from a tiny per-batch MANIFEST
-    * (`counts/b=<id>`: shards sealed by that batch) — Σ over committed
-    * earlier batches, recomputed per batch, nothing driver-resident
-    * between batches. Exactly-once without a transactional store:
-    * both the data write and the manifest write use DYNAMIC partition
-    * overwrite keyed by ids unique to the batch (its shard range, its
-    * manifest partition), so a batch replayed after a crash between
-    * sink write and checkpoint commit overwrites exactly ITSELF.
-    * Within a batch the write discipline is [[graft.ext.Sampling
-    * .writeShards]]'s: repartition on the shard id, sort by
-    * (shard, pos), one file per shard dir, in-file order = sample
-    * order.
-    *
-    * Returns the read-back layout with the physical facts as values
-    * (`file_pos` = parquet `_metadata.row_index`, `n_files` per shard
-    * dir, `arrival_batch` as stamped by the sink) — the same
-    * observe-the-bytes gate as the batch `shard_layout` query.
-    */
   /** The shard-append sink's per-batch apply — exposed so the replay
     * spec can drive it directly. Deterministic in (batch content, id,
     * committed earlier manifests): the shard offset is Σ shards sealed
@@ -741,6 +714,33 @@ object Streams {
       }
     }
 
+  /** Incremental training-shard building on streaming arrival — the
+    * production path for a corpus that keeps growing: you do NOT
+    * re-shuffle 100 TB when a new crawl lands; each arriving batch is
+    * shuffled internally ([[graft.ext.Sampling.shuffleShards]], same
+    * reproducible md5 permutation) and sealed into NEW shards whose
+    * ids continue where the previous batch stopped, so the on-disk
+    * layout is loader-consumable at every point in time and existing
+    * shards are never rewritten.
+    *
+    * Mechanics: shard offsets come from a tiny per-batch MANIFEST
+    * (`counts/b=<id>`: shards sealed by that batch) — Σ over committed
+    * earlier batches, recomputed per batch, nothing driver-resident
+    * between batches. Exactly-once without a transactional store:
+    * both the data write and the manifest write use DYNAMIC partition
+    * overwrite keyed by ids unique to the batch (its shard range, its
+    * manifest partition), so a batch replayed after a crash between
+    * sink write and checkpoint commit overwrites exactly ITSELF.
+    * Within a batch the write discipline is [[graft.ext.Sampling
+    * .writeShards]]'s: repartition on the shard id, sort by
+    * (shard, pos), one file per shard dir, in-file order = sample
+    * order.
+    *
+    * Returns the read-back layout with the physical facts as values
+    * (`file_pos` = parquet `_metadata.row_index`, `n_files` per shard
+    * dir, `arrival_batch` as stamped by the sink) — the same
+    * observe-the-bytes gate as the batch `shard_layout` query.
+    */
   def shardAppendStream(spark: SparkSession, dir: String,
       batches: Int = 3, docsPerShard: Int = 100,
       seed: String = "e0"): DataFrame = {
@@ -987,14 +987,6 @@ object Streams {
       .orderBy("event_id")
   }
 
-  /** T5: latest event per user via explicit keyed state
-    * (`mapGroupsWithState`) — the streaming twin of the batch
-    * latest-per-key. Each micro-batch emits the current best row for
-    * keys it touched; `foreachBatch` upserts them into the keyed merge
-    * sink, so the sink always holds exactly one (latest) row per key.
-    * State is one row per key — proportional to the result, the minimum
-    * any latest-snapshot needs — and nothing accumulates on the driver.
-    */
   /** Tie-break shared by both stateful latest-per-key runners — its
     * own Serializable holder so executor closures capture IT, not the
     * (non-serializable) enclosing module.
@@ -1006,6 +998,14 @@ object Streams {
     }
   }
 
+  /** T5: latest event per user via explicit keyed state
+    * (`mapGroupsWithState`) — the streaming twin of the batch
+    * latest-per-key. Each micro-batch emits the current best row for
+    * keys it touched; `foreachBatch` upserts them into the keyed merge
+    * sink, so the sink always holds exactly one (latest) row per key.
+    * State is one row per key — proportional to the result, the minimum
+    * any latest-snapshot needs — and nothing accumulates on the driver.
+    */
   def latestPerKey(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val evs: Dataset[Ev] = eventsStream(spark, dir, batches = 3)

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
-
 /** Env-var configuration surface: reference defaults, readable
   * failures on malformed values, and the knobs actually steering the
   * components they claim to steer.

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
-
 import graft.ext.Graph
 
 /** Fixed-point PageRank: mass conservation, ranking, dangling

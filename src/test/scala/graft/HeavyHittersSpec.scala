@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
-
 import graft.ext.HeavyHitters
 
 /** Misra–Gries + exact-verify heavy hitters: exactness vs a naive

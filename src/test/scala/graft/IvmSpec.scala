@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.Ivm
+import graft.operators.{Ivm, MergeWriter}
 
 /** IVM contract: retraction exactness, group cancellation, and
   * order/batching independence of the signed-delta merge.
@@ -62,12 +62,12 @@ class IvmSpec extends SparkSpec {
     Ivm.applyDeltaToTable(dir, d1, Seq("k"), "n", Seq("x" -> "sx"),
       batchId = Some(0L))
     assert(spark.read.parquet(dir).orderBy("k").collect().toSeq === after1)
-    assert(Ivm.appliedBatch(spark, dir) === Some(0L))
+    assert(MergeWriter.marker(spark, dir, Ivm.BatchMarker) === Some(0L))
     // the next batch applies and advances the marker
     Ivm.applyDeltaToTable(dir,
       Seq(("a", 10L, -1L)).toDF("k", "x", "_sign"),
       Seq("k"), "n", Seq("x" -> "sx"), batchId = Some(1L))
-    assert(Ivm.appliedBatch(spark, dir) === Some(1L))
+    assert(MergeWriter.marker(spark, dir, Ivm.BatchMarker) === Some(1L))
     val rows = spark.read.parquet(dir).orderBy("k")
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq
     assert(rows === Seq(("b", 1L, 5L)))

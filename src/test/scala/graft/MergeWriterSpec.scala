@@ -259,4 +259,47 @@ class MergeWriterSpec extends SparkSpec {
       .filter(n => n.contains(".tmp") || n.contains(".old"))
     assert(inside.isEmpty, inside.mkString(","))
   }
+
+  /** Rename `dir` to its `.<name>.old` copy: the state a swap leaves
+    * when it dies between its two renames.
+    */
+  private def crashMidSwap(dir: String): Unit = {
+    val p = new org.apache.hadoop.fs.Path(dir)
+    val f = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(f.rename(p, new org.apache.hadoop.fs.Path(p.getParent,
+      s".${p.getName}.old")))
+  }
+
+  test("a table left at its .old name by a crashed swap survives the next upsert") {
+    import spark.implicits._
+    val dir = tmp()
+    MergeWriter.upsert(spark, dir,
+      Seq((1L, 10L, "a"), (2L, 10L, "b")).toDF("id", "v", "payload"),
+      Seq("id"), Seq("v"))
+    crashMidSwap(dir)
+    MergeWriter.upsert(spark, dir,
+      Seq((2L, 11L, "b2"), (3L, 10L, "c")).toDF("id", "v", "payload"),
+      Seq("id"), Seq("v"))
+    val got = spark.read.parquet(dir).orderBy("id")
+      .select("payload").as[String].collect().toSeq
+    assert(got === Seq("a", "b2", "c"))
+    assert(!new java.io.File(new java.io.File(dir).getParentFile, ".t.old").exists())
+  }
+
+  test("a day left at its .old name by a crashed partition swap survives the next merge") {
+    import spark.implicits._
+    val dir = tmp()
+    MergeWriter.upsertPartitioned(spark, dir,
+      Seq((1L, "2024-01-01", 10L), (2L, "2024-01-02", 10L),
+        (3L, "2024-01-02", 10L)).toDF("id", "day", "v"),
+      Seq("id"), Seq("v"), "day")
+    crashMidSwap(s"$dir/day=2024-01-02")
+    MergeWriter.upsertPartitioned(spark, dir,
+      Seq((3L, "2024-01-02", 11L), (4L, "2024-01-02", 10L)).toDF("id", "day", "v"),
+      Seq("id"), Seq("v"), "day")
+    val got = spark.read.parquet(dir).orderBy("id")
+      .select("id", "v").as[(Long, Long)].collect().toSeq
+    assert(got === Seq((1L, 10L), (2L, 10L), (3L, 11L), (4L, 10L)))
+    assert(!new java.io.File(dir, ".day=2024-01-02.old").exists())
+  }
 }

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.ext.Multimodal
 import graft.metar.{MetarFixture, Normalize}
+import graft.operators.MergeWriter
 import graft.pipeline.Medallion
 import graft.quality.Anomaly
 import graft.sources.CheckWxSource
@@ -61,27 +62,25 @@ class PipelineSpec extends SparkSpec {
       "recovered stg row never reached the daily mart")
   }
 
-  test("medallion converges after a crash between a layer's swap and its watermark write") {
-    val landing = Files.createTempDirectory("graft-medallion-sidecar")
-    val events = s"$landing/events.parquet"
+  /** A medallion root over a landing dir that slices of the events
+    * arrive in, and the check that its int and dwh layers equal a
+    * one-shot build over everything landed.
+    */
+  private class Arrivals(name: String) {
+    val landing = Files.createTempDirectory(name)
     val root = landing.resolve("mat").toString
-    val all = Tables.events(spark, sf)
-    def land(from: String, until: String): Unit =
-      all.filter(col("ts") >= lit(from).cast("timestamp") &&
-          col("ts") < lit(until).cast("timestamp"))
-        .write.mode("append").parquet(events)
+    val dwh = s"${graft.Config().schema}_daily"
     val hfs = new org.apache.hadoop.fs.Path(root)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     def path(rel: String) = new org.apache.hadoop.fs.Path(s"$root/$rel")
-    def sidecar(layer: String) = s"${layer}_wm"
-    // through Hadoop's FS, which keeps the checksum files current
-    def rewind(layer: String, body: Array[Byte]): Unit = {
-      val out = hfs.create(path(sidecar(layer)), true)
-      try out.write(body) finally out.close()
-    }
-    val dwh = s"${graft.Config().schema}_daily"
+    private val all = Tables.events(spark, sf)
+    def land(from: String, until: String): Unit =
+      all.filter(col("ts") >= lit(from).cast("timestamp") &&
+          col("ts") < lit(until).cast("timestamp"))
+        .write.mode("append").parquet(s"$landing/events.parquet")
+    def run(): Unit = Medallion.run(spark, landing.toString, root)
     def assertOneShot(what: String): Unit = {
-      val oneShot = landing.resolve(s"oneshot-$what").toString
+      val oneShot = landing.resolve(s"oneshot-${what.replace(' ', '-')}").toString
       Medallion.run(spark, landing.toString, oneShot)
       for (layer <- Seq(dwh, "int_latest")) {
         val got = spark.read.parquet(s"$root/$layer").collect().toSeq
@@ -92,34 +91,83 @@ class PipelineSpec extends SparkSpec {
             s"${want.diff(got).size} rows only one-shot, e.g. ${want.diff(got).take(3)}")
       }
     }
+  }
 
-    land("2000-01-01", "2024-01-20 12:00:00")
-    Medallion.run(spark, landing.toString, root)
-    val older = Seq("int_latest", dwh).map(l =>
-      l -> Files.readAllBytes(java.nio.file.Paths.get(root, sidecar(l)))).toMap
-    org.apache.hadoop.fs.FileUtil.copy(hfs, path("int_latest"), hfs,
-      path("int_latest.before"), false, spark.sparkContext.hadoopConfiguration)
-    land("2024-01-20 12:00:00", "2024-01-25 12:00:00")
-    Medallion.run(spark, landing.toString, root)
+  test("medallion converges after a failure in dwh's merge") {
+    val a = new Arrivals("graft-medallion-dwh-fail")
+    a.land("2000-01-01", "2024-01-20 12:00:00")
+    a.run()
+    a.land("2024-01-20 12:00:00", "2024-01-25 12:00:00")
+    // an unreadable file in the day the arrival re-opens fails dwh's
+    // merge after stg's has committed
+    val bad = java.nio.file.Paths.get(a.root, a.dwh, "day=2024-01-20",
+      "part-unreadable.parquet")
+    Files.write(bad, "not parquet".getBytes("UTF-8"))
+    intercept[Exception](a.run())
+    Files.delete(bad)
+    a.run()
+    a.assertOneShot("dwh merge failure")
+  }
 
-    // dwh's swap loop died after the boundary day and before the last
-    // full day, so its sidecar still holds the older watermark; the
-    // recovering run also lands a new slice, so dwh's pending days
-    // span two slices
-    assert(hfs.delete(path(s"$dwh/day=2024-01-24"), true))
-    rewind(dwh, older(dwh))
-    land("2024-01-25 12:00:00", "2100-01-01")
-    Medallion.run(spark, landing.toString, root)
-    assertOneShot("dwh")
+  test("medallion resumes from int_latest's watermark after a crash inside int's swap") {
+    val a = new Arrivals("graft-medallion-int-swap")
+    a.land("2000-01-01", "2024-01-20 12:00:00")
+    a.run()
+    val before = new org.apache.hadoop.fs.Path(s"${a.landing}/int-before")
+    org.apache.hadoop.fs.FileUtil.copy(a.hfs, a.path("int_latest"), a.hfs,
+      before, false, spark.sparkContext.hadoopConfiguration)
+    a.land("2024-01-20 12:00:00", "2024-01-25 12:00:00")
+    a.run()
+    // the run died between the two renames of int's swap: stg and dwh
+    // hold the arrival, int_latest sits at its old name with the
+    // watermark from before the arrival
+    assert(a.hfs.delete(a.path("int_latest"), true))
+    assert(a.hfs.rename(before, a.path(".int_latest.old")))
+    val dwhDir = new java.io.File(a.root, a.dwh)
+    val untouched = dwhDir.listFiles().map(_.getName)
+      .filter(_.startsWith("day=")).min
+    def files(day: String) = new java.io.File(dwhDir, day).listFiles()
+      .map(f => f.getName -> f.lastModified).toSet
+    val untouchedFiles = files(untouched)
+    a.run()
+    assert(a.hfs.exists(a.path("int_latest")) &&
+      !a.hfs.exists(a.path(".int_latest.old")))
+    // the recovered watermark scopes dwh to the arrival's days: a lost
+    // one would rebuild every day
+    assert(files(untouched) === untouchedFiles, s"dwh $untouched was rewritten")
+    a.assertOneShot("int swap crash")
+  }
 
-    // int swaps in one rename: the crash left it as it was before both
-    // slices, with the older sidecar. The next run brings nothing new,
-    // so stg's own increment is empty.
-    assert(hfs.delete(path("int_latest"), true))
-    assert(hfs.rename(path("int_latest.before"), path("int_latest")))
-    rewind("int_latest", older("int_latest"))
-    Medallion.run(spark, landing.toString, root)
-    assertOneShot("int")
+  test("medallion rebuilds a root whose watermarks are legacy sidecar files") {
+    val a = new Arrivals("graft-medallion-legacy")
+    a.land("2000-01-01", "2024-01-20 12:00:00")
+    a.run()
+    // the layout before the marker: a {"wm":N} file per layer next to
+    // the layer, none inside int_latest
+    val wm = MergeWriter.marker(spark, a.path("int_latest").toString, "_wm")
+    assert(wm.isDefined)
+    for (layer <- Seq("int_latest", a.dwh)) {
+      val out = a.hfs.create(a.path(s"${layer}_wm"), true)
+      try out.write(s"""{"wm":${wm.get}}""".getBytes("UTF-8")) finally out.close()
+    }
+    assert(a.hfs.delete(a.path("int_latest/_wm"), false))
+    a.land("2024-01-20 12:00:00", "2024-01-25 12:00:00")
+    a.run()
+    val stgMax = spark.read.parquet(s"${a.root}/stg_events")
+      .agg(max(unix_micros(col("ts")))).head().getLong(0)
+    assert(MergeWriter.marker(spark, a.path("int_latest").toString, "_wm") ===
+      Some(stgMax))
+    a.assertOneShot("legacy root")
+  }
+
+  test("a fresh medallion root holds the three layers, the watermark inside int_latest") {
+    val root = Files.createTempDirectory("graft-medallion-layout").toString
+    Medallion.run(spark, sf, root)
+    val layers = new java.io.File(root).listFiles().map(_.getName)
+      .filterNot(_.startsWith(".")).toSet
+    assert(layers === Set("stg_events", "int_latest",
+      s"${graft.Config().schema}_daily"))
+    assert(MergeWriter.marker(spark, s"$root/int_latest", "_wm").isDefined)
   }
 
   test("medallion stg watermark: a first build stages every row, a boundary-ts arrival is not restaged (F2)") {

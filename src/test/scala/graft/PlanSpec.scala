@@ -263,7 +263,6 @@ class PlanSpec extends SparkSpec {
   }
 
   test("IVM aggregates the delta before the merge join (delta-sized shuffle)") {
-    import org.apache.spark.sql.functions._
     import spark.implicits._
     val base = Seq(("a", 1L, 1L)).toDF("k", "n", "sx")
     val delta = Seq(("a", 5L, 1L)).toDF("k", "x", "_sign")

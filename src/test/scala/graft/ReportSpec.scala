@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.functions._
-
 import graft.quality.{Checks, Report}
 
 /** Rendered DQ report (the `edr report` equivalent): structure,

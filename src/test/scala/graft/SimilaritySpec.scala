@@ -370,7 +370,6 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("fast-hash minhash LSH also catches the planted duplicate") {
-    import spark.implicits._
     val docs = Tables.documents(spark, sf)
       .union(Tables.documents(spark, sf).filter(col("doc_id") === 3)
         .withColumn("doc_id", lit(8888L)))
@@ -518,7 +517,6 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("minhash LSH candidates include the exact-duplicate pair") {
-    import spark.implicits._
     val docs = Tables.documents(spark, sf)
       .union(Tables.documents(spark, sf).filter(col("doc_id") === 0)
         .withColumn("doc_id", lit(9999L)))

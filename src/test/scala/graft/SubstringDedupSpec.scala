@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
-
 import graft.ext.Dedup
 
 /** Substring-level exact dedup: planted repeated spans come out, the
@@ -117,7 +115,6 @@ class SubstringDedupSpec extends SparkSpec {
   }
 
   test("matches the O(n*m) reference formulation on a random-ish corpus") {
-    import spark.implicits._
     // deterministic pseudo-random docs over a tiny vocab so repeats occur
     val vocab = Vector("a", "b", "c", "d", "e")
     val docs = (0L until 40L).map { d =>
