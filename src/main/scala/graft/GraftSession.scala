@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
+import graft.plans.{AsofJoinStrategy, PrefixPairsStrategy}
+
 /** Session factory with the engine's standard configuration.
   *
   * Tuned for `local[32]` testing but designed for a multi-executor
@@ -79,7 +81,7 @@ object GraftSession {
       defaultCores = cores
     ).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    graft.plans.GraftExtensions.registerOn(spark)
+    installStrategies(spark)
     spark
   }
 
@@ -99,7 +101,20 @@ object GraftSession {
     // var is the contract — same style as SPARK_GRAFT_SF_DIR/CPUS)
     sys.env.get("SPARK_GRAFT_PERSISTED_ROOT").foreach(r =>
       spark.conf.set("spark.graft.persisted.root", r))
-    graft.plans.GraftExtensions.registerOn(spark)
+    installStrategies(spark)
     spark
   }
+
+  /** Idempotently add the planner strategies for the engine's custom
+    * logical nodes ([[graft.plans.AsofJoinNode]],
+    * [[graft.plans.PrefixPairsNode]]), which no builtin strategy plans.
+    * Native expressions need no registration: they are built as
+    * Catalyst nodes through `PlanDsl.column`.
+    */
+  private def installStrategies(spark: SparkSession): Unit =
+    Seq(AsofJoinStrategy, PrefixPairsStrategy).foreach { s =>
+      if (!spark.experimental.extraStrategies.contains(s))
+        spark.experimental.extraStrategies =
+          spark.experimental.extraStrategies :+ s
+    }
 }

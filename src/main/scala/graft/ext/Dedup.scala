@@ -2,8 +2,10 @@ package graft.ext
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.PlanDsl.{column, expression}
 
 import graft.functions.{MinHash, SimHash, Text, Vectors}
+import graft.plans.{CosinePairs, EditPairs, RemoveSpans, SortedPairs, SortedPairsPacked}
 
 /** Deduplication operators for the training-data pipeline: exact,
   * MinHash+LSH, SimHash, n-gram Jaccard and embedding-cosine near-dup.
@@ -81,7 +83,7 @@ object Dedup {
       .filter(size(col("ids")) > 1)
       .localCheckpoint()
     val small = buckets.filter(size(col("ids")) <= groupCap)
-      .select(explode(call_function("graft_sorted_pairs", col("ids"))).as("p"))
+      .select(explode(column(SortedPairs(expression(col("ids"))))).as("p"))
       .select(col("p.part_a").as("id_a"), col("p.part_b").as("id_b"))
     val bigIds = buckets.filter(size(col("ids")) > groupCap)
       .select(col("band_idx"), col("band_key"), explode(col("ids")).as("id"))
@@ -120,7 +122,7 @@ object Dedup {
       .localCheckpoint()
     val small = buckets.filter(size(col("ids")) <= groupCap)
       .select(explode(
-        call_function("graft_sorted_pairs_packed", col("ids"))).as("_pk"))
+        column(SortedPairsPacked(expression(col("ids"))))).as("_pk"))
     val bigIds = buckets.filter(size(col("ids")) > groupCap)
       .select(keys :+ explode(col("ids")).as("_id"): _*)
     val big = bigIds.select(keys :+ col("_id").as("id_a"): _*)
@@ -458,8 +460,8 @@ object Dedup {
           struct(col(idCol).cast("long").as("id"), col("_p").as("p"))))
           .as("_b"))
     grouped.select(
-        explode(call_function("graft_edit_pairs", col("_a"), col("_b"),
-          col("_i") === col("_j"), lit(maxDist))).as("e"))
+        explode(column(EditPairs(expression(col("_a")), expression(col("_b")),
+          expression(col("_i") === col("_j")), maxDist))).as("e"))
       .select(col("e.id_a").as("id_a"), col("e.id_b").as("id_b"),
         col("e.edit_dist").as("edit_dist"))
   }
@@ -554,8 +556,8 @@ object Dedup {
           struct(col(idCol).cast("long").as("id"), col(vecCol).as("v"))))
           .as("_b"))
     grouped.select(col(blockCol),
-        explode(call_function("graft_cosine_pairs", col("_a"), col("_b"),
-          col("_i") === col("_j"), lit(minCosine))).as("p"))
+        explode(column(CosinePairs(expression(col("_a")), expression(col("_b")),
+          expression(col("_i") === col("_j")), minCosine))).as("p"))
       .select(col(blockCol), col("p.id_a").as("id_a"),
         col("p.id_b").as("id_b"), col("p.cosine").as("cosine"))
   }
@@ -676,8 +678,9 @@ object Dedup {
       .groupBy(col("doc_id")).agg(sort_array(collect_set(col("pos"))).as("marks"))
     toks.join(marked, Seq("doc_id"), "left")
       .select(col("doc_id"), col("toks"),
-        call_function("graft_remove_spans", col("toks"),
-          coalesce(col("marks"), array().cast("array<int>")), lit(k)).as("kept"))
+        column(RemoveSpans(expression(col("toks")),
+          expression(coalesce(col("marks"), array().cast("array<int>"))), k))
+          .as("kept"))
       .select(col("doc_id"),
         size(col("toks")).cast("bigint").as("n_tokens"),
         (size(col("toks")) - size(col("kept"))).cast("bigint").as("n_removed"),

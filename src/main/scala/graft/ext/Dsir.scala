@@ -2,8 +2,10 @@ package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.PlanDsl.{column, expression}
 
 import graft.functions.Text
+import graft.plans.{DsirBuckets, DsirScore}
 
 /** Data Selection via Importance Resampling — hashed n-gram importance
   * weights (Xie et al., NeurIPS 2023; public literature): score every
@@ -57,8 +59,8 @@ object Dsir {
     // materializing doc-grain arrays (TfIdf.bm25TopTerms records the
     // 30× A/B; the dsir pair was 1.57 vs 1.38 s)
     val pc = df.select(col(idCol).as("_id"), isTarget.as("_tgt"),
-        call_function("graft_dsir_buckets",
-          Text.tokens(coalesce(col(textCol), lit("")))).as("_bc"))
+        column(DsirBuckets(expression(
+          Text.tokens(coalesce(col(textCol), lit("")))))).as("_bc"))
     // The model is ≤ 256 rows BY CONSTRUCTION (the bucket space), so
     // it folds on the driver: collect the bucket counts (one map-side
     // partial-aggregated job — the only corpus-sized pass besides
@@ -96,7 +98,7 @@ object Dsir {
     // model-then-score plan.
     val scored = pc
       .select(col("_id"),
-        call_function("graft_dsir_score", col("_bc"), typedlit(lrArr))
+        column(DsirScore(expression(col("_bc")), expression(typedlit(lrArr))))
           .as("_score_micro"))
       .localCheckpoint()
     val thr = scored.agg(

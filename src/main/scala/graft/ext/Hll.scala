@@ -2,6 +2,9 @@ package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.PlanDsl.{column, expression}
+
+import graft.plans.HllReg
 
 /** Portable deterministic HyperLogLog as plain DataFrame aggregation.
   *
@@ -61,7 +64,7 @@ object Hll {
     // `graft.ref.HllRef.hexRegister`): the declarative hex form references the md5 in five
     // sub-expressions the aggregate's projection does not reliably
     // share — measured ~4 s of approx_distinct's 5 s at bench sf0.1
-    val reg = call_function("graft_hll_reg", col(valueCol).cast("string"))
+    val reg = column(HllReg(expression(col(valueCol).cast("string"))))
     df.filter(col(valueCol).isNotNull)
       .select(g :+ reg.getField("bucket").as("_b")
         :+ reg.getField("rho").as("_r"): _*)

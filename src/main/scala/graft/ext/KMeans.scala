@@ -2,8 +2,10 @@ package graft.ext
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.PlanDsl.{column, expression}
 
 import graft.functions.Vectors
+import graft.plans.AssignNearest
 
 /** Distributed k-means (Lloyd's algorithm) over an embedding column —
   * the clustering step of corpus curation (topic balancing, dedup
@@ -60,7 +62,7 @@ object KMeans {
         .as("cents"))
     vecs.crossJoin(broadcast(model))
       .select(col(idCol), col("_uv"),
-        call_function("graft_assign_nearest", col("_uv"), col("cents"))
+        column(AssignNearest(expression(col("_uv")), expression(col("cents"))))
           .as("_a"))
       .filter(col("_a").isNotNull) // empty model = the join's empty side
       .select(col(idCol), col("_a.cluster").as("cluster"), col("_uv"),

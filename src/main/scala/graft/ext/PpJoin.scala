@@ -2,8 +2,10 @@ package graft.ext
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.PlanDsl.{column, expression}
 
 import graft.functions.Text
+import graft.plans.SortedOverlap
 
 /** Prefix-filtered set-similarity self-join — the PPJoin candidate
   * discipline (Xiao et al., WWW 2008; public literature), the scale
@@ -258,7 +260,8 @@ object PpJoin {
     candidates(sets, minJaccard)
       .join(xa, "id_a").join(xb, "id_b")
       .withColumn("_inter",
-        call_function("graft_sorted_overlap", col("_ta"), col("_tb"), req))
+        column(SortedOverlap(expression(col("_ta")), expression(col("_tb")),
+          expression(req))))
       .withColumn("jaccard", round(col("_inter").cast("double") /
         (col("_verify_sza") + col("_verify_szb") - col("_inter"))
           .cast("double"), 4))

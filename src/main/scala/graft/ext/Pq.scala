@@ -3,9 +3,11 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.PlanDsl.{column, expression}
 
 import graft.functions.Vectors
 import graft.operators.Joins
+import graft.plans.PqAdc
 
 /** Product-quantization ANN (ADC flavor): vectors are split into `m`
   * subspaces, each subspace gets a small codebook, and every corpus
@@ -219,7 +221,7 @@ object Pq {
     // whole scoring stage out of whole-stage codegen into interpreted
     // eval (~6 µs/pair measured — the 2×-gate miss this replaces;
     // PqSpec pins the compiled form).
-    val adc: Column = call_function("graft_pq_adc", col("_codes"), col("_lut"))
+    val adc: Column = column(PqAdc(expression(col("_codes")), expression(col("_lut"))))
     val rankW = Window.partitionBy(col("q_id"))
       .orderBy(round(col("_adc"), 9).desc, col("c_id").asc)
     codes.join(broadcast(qlut), col("q_id") =!= col("c_id"))

@@ -4,6 +4,9 @@ import scala.collection.mutable
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.PlanDsl.{column, expression}
+
+import graft.plans.SortableBits
 
 /** Exact grouped order statistics by distributed SELECTION — the
   * scale-safe replacement for the `percentile` aggregate, whose
@@ -107,7 +110,7 @@ object Quantiles {
     import spark.implicits._
     val v = col(valueCol).cast("double")
     val g = col(groupCol).cast("string")
-    val bits = call_function("graft_sortable_bits", v)
+    val bits = column(SortableBits(expression(v)))
     def sliceAt(shift: Int) = shiftright(bits, shift)
     val shift0 = 52 - binadeBits
 

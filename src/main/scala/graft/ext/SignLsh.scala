@@ -2,8 +2,10 @@ package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.PlanDsl.{column, expression}
 
 import graft.functions.Vectors
+import graft.plans.FirstCollision
 
 /** Sign-random-projection LSH over embeddings — the UNBLOCKED
   * near-duplicate scale path (no label/cluster column needed): each
@@ -239,8 +241,8 @@ object SignLsh {
         // map-side, nothing pair-grain ever shuffles again
         a.join(b, Seq("_t", "_code"))
           .filter(col("id_a") < col("id_b"))
-          .filter(call_function("graft_first_collision",
-            col("_ca"), col("_cb")) === col("_t"))
+          .filter(column(FirstCollision(expression(col("_ca")),
+            expression(col("_cb")))) === col("_t"))
           .select("id_a", "id_b")
           .join(va, "id_a")
           .join(vb, "id_b")
@@ -255,8 +257,8 @@ object SignLsh {
           col(idCol).as("id_b"), col("_codes").as("_cb"), col("_u").as("_ub"))
         aV.join(bV, Seq("_t", "_code"))
           .filter(col("id_a") < col("id_b"))
-          .filter(call_function("graft_first_collision",
-            col("_ca"), col("_cb")) === col("_t"))
+          .filter(column(FirstCollision(expression(col("_ca")),
+            expression(col("_cb")))) === col("_t"))
           .withColumn("cosine", round(Vectors.dot(col("_ua"), col("_ub")), 4))
           .filter(col("cosine") >= minCosine)
           .select(col("id_a"), col("id_b"), col("cosine"))

@@ -2,8 +2,10 @@ package graft.ext
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.PlanDsl.{column, expression}
 
 import graft.functions.Text
+import graft.plans.{Bm25TopK, TermCounts, TfIdfTopK}
 
 /** TF-IDF term scoring over a document corpus — the standard
   * quality/topicality signal for training-data curation.
@@ -90,7 +92,7 @@ object TfIdf {
     // 30× corpus, alternating A/B. Nothing touches the session
     // CacheManager (CacheHygieneSpec pins the contract).
     val pc = docs.select(col(idCol),
-        call_function("graft_term_counts", toks).as("tc"),
+        column(TermCounts(expression(toks))).as("tc"),
         size(toks).cast("long").as("dl"))
     // the (n_docs, Σdl) scalars ride the SAME exchange as the df rows
     // via the per-doc sentinel (withSentinel) — the r15 separate
@@ -117,8 +119,8 @@ object TfIdf {
     val model = withUniqueIdCheck(fold, pc, idCol)
       .select(struct(col("dfarr"), col("n_docs"), col("avgdl")).as("model"))
     pc.crossJoin(broadcast(model))
-      .select(col(idCol), explode(call_function("graft_bm25_topk",
-        col("tc"), col("dl"), col("model"), lit(k), lit(k1), lit(b)))
+      .select(col(idCol), explode(column(Bm25TopK(expression(col("tc")),
+        expression(col("dl")), expression(col("model")), k, k1, b)))
         .as("r"))
       .select(col(idCol), col("r.rank").as("rank"),
         col("r.term").as("term"), col("r.bm25").as("bm25"))
@@ -133,7 +135,7 @@ object TfIdf {
   def topTerms(docs: DataFrame, idCol: String, textCol: String, k: Int): DataFrame = {
     // deliberately lazy count pass — see bm25TopTerms (measured A/B)
     val pc = docs.select(col(idCol),
-        call_function("graft_term_counts", Text.tokens(col(textCol))).as("tc"))
+        column(TermCounts(expression(Text.tokens(col(textCol))))).as("tc"))
     // n_docs rides the df exchange as the per-doc sentinel row — see
     // bm25TopTerms (count-not-distinct contract assertable via
     // spark.graft.checkUniqueIds; 30× A/B in ProfileScoringFuse)
@@ -148,8 +150,8 @@ object TfIdf {
     val model = withUniqueIdCheck(fold, pc, idCol)
       .select(struct(col("dfarr"), col("n_docs")).as("model"))
     pc.crossJoin(broadcast(model))
-      .select(col(idCol), explode(call_function("graft_tfidf_topk",
-        col("tc"), col("model"), lit(k))).as("r"))
+      .select(col(idCol), explode(column(TfIdfTopK(expression(col("tc")),
+        expression(col("model")), k))).as("r"))
       .select(col(idCol), col("r.rank").as("rank"),
         col("r.term").as("term"), col("r.tfidf").as("tfidf"))
   }

@@ -2,6 +2,9 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.PlanDsl.{column, expression}
+
+import graft.plans.MinHashSignature
 
 /** MinHash + banded LSH over shingle sets — the scalable near-duplicate
   * candidate generator (shingle → minhash → band → bucket join).
@@ -31,7 +34,7 @@ object MinHash {
     * strings (md5 family, codegen'd native expression).
     */
   def signature(shingleSet: Column, numHashes: Int): Column =
-    call_function("graft_minhash", shingleSet, lit(numHashes), lit("md5"))
+    column(MinHashSignature(expression(shingleSet), numHashes, "md5"))
 
   /** Production-fast signature: seeded polynomial hash family
     * (array<long>), roughly an order of magnitude cheaper than md5 and
@@ -40,7 +43,7 @@ object MinHash {
     * 1000000007)`.
     */
   def signatureFast(shingleSet: Column, numHashes: Int): Column =
-    call_function("graft_minhash", shingleSet, lit(numHashes), lit("poly"))
+    column(MinHashSignature(expression(shingleSet), numHashes, "poly"))
 
   /** Band keys for a long-valued fast signature: same md5-of-joined
     * band as [[bands]] after casting the longs to strings, so band keys

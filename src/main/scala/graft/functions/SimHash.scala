@@ -1,7 +1,9 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.PlanDsl.{column, expression}
+
+import graft.plans.SimHashExpr
 
 /** SimHash near-duplicate fingerprinting: each token votes +1/-1 on
   * every signature bit according to its hash; the signature bit is 1
@@ -27,5 +29,5 @@ object SimHash {
     * bench sf0.1).
     */
   def simhash32(toks: Column): Column =
-    call_function("graft_simhash", toks)
+    column(SimHashExpr(expression(toks)))
 }

@@ -1,7 +1,11 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.PlanDsl.{column, expression}
+
+import graft.plans.{CollapseRepeats, Fingerprint, Shingles, TextStats}
 
 /** Text-analysis column functions for the training-data pipeline
   * extensions (BASELINE.json north star): tokenization, shingling,
@@ -45,7 +49,7 @@ object Text {
     * byte-identical builtin formulation it is spec-checked against.
     */
   def shingles(toks: Column, n: Int): Column =
-    call_function("graft_shingles", toks, lit(n))
+    column(Shingles(expression(toks), n))
 
   /** BPE-ish subword count heuristic: word tokens plus an extra token
     * per 6 characters of word length beyond the first 6 (long words
@@ -94,15 +98,14 @@ object Text {
     * zero shuffle.
     */
   def collapseRepeats(toks: Column): Column =
-    call_function("graft_collapse", toks)
+    column(CollapseRepeats(expression(toks)))
 
   /** One-pass native token statistics
     * ([[graft.plans.TextStats]]): struct(n_tokens, n_distinct,
     * n_stop, n_repeat).
     */
   def tokenStats(toks: Column, stopwords: Seq[String]): Column =
-    call_function("graft_textstats",
-      (toks +: stopwords.map(lit(_))): _*)
+    column(TextStats(expression(toks), stopwords))
 
   /** PII/noise scrub patterns (RE2-safe so the same pattern runs in
     * any engine): URLs, emails and long digit runs replaced by typed
@@ -130,5 +133,5 @@ object Text {
     * row).
     */
   def fingerprint(shingles: Column, window: Int): Column =
-    call_function("graft_fingerprint", shingles, lit(window))
+    column(Fingerprint(expression(shingles), Literal(window)))
 }

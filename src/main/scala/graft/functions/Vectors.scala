@@ -2,6 +2,9 @@ package graft.functions
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.PlanDsl.{column, expression}
+
+import graft.plans.DotProduct
 
 /** Dense-vector column math over `array<float>` embedding columns,
   * computed in double precision via higher-order functions (`zip_with`
@@ -17,10 +20,9 @@ object Vectors {
   /** Codegen'd native dot product (graft.plans.DotProduct); bit-equal
     * to the HOF formulation `graft.ref.VectorsRef.dotHof` (same
     * ascending-index fold).
-    * Requires the function registered via GraftExtensions (done by
-    * GraftSession.prepare/local).
     */
-  def dot(a: Column, b: Column): Column = call_function("graft_dot", a, b)
+  def dot(a: Column, b: Column): Column =
+    column(DotProduct(expression(a), expression(b)))
 
   def norm(a: Column): Column = sqrt(dot(a, a))
 

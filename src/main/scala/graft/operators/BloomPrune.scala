@@ -2,6 +2,9 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.PlanDsl.{column, expression}
+
+import graft.plans.{BloomMightContain, BloomPositions}
 
 /** Bloom-filter semi-join pruning — the runtime-filter pattern for
   * joins whose dimension side is too large to broadcast AS ROWS but
@@ -36,8 +39,8 @@ object BloomPrune {
     */
   def build(dim: DataFrame, key: String, mBits: Int, numHashes: Int = 5): Array[Byte] = {
     val words = dim.filter(col(key).isNotNull)
-      .select(explode(call_function("graft_bloom_pos",
-        col(key).cast("long"), lit(mBits), lit(numHashes))).as("p"))
+      .select(explode(column(BloomPositions(
+        expression(col(key).cast("long")), mBits, numHashes))).as("p"))
       .select(shiftright(col("p"), 6).as("w"),
         expr("shiftleft(CAST(1 AS BIGINT), p % 64)").as("m"))
       .groupBy(col("w")).agg(bit_or(col("m")).as("bits"))
@@ -63,6 +66,5 @@ object BloomPrune {
     * ~fpp of the rest.
     */
   def mightContain(key: Column, bits: Array[Byte], numHashes: Int = 5): Column =
-    call_function("graft_bloom_might", key.cast("long"),
-      lit(bits), lit(numHashes))
+    column(BloomMightContain(expression(key.cast("long")), bits, numHashes))
 }

@@ -17,8 +17,7 @@ import org.apache.spark.sql.functions._
   *    but never orders the full data.) This is the plan you want at
   *    scale.
   *  - the literal window-function translation shuffles *every* row
-  *    and sorts each partition; [[graft.plans.LatestWindowToMaxBy]]
-  *    rewrites that shape into [[apply]]'s (its test-scope copy is
+  *    and sorts each partition (its test-scope copy is
   *    `graft.ref.LatestPerKeyRef.viaWindow`).
   *
   * Determinism: callers must make `orderCols` a total order (append a

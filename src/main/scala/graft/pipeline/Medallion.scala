@@ -123,14 +123,12 @@ object Medallion {
     val wm: Option[Long] =
       if (!MergeWriter.exists(spark, dwhDir)) None
       else MergeWriter.marker(spark, intDir, "_wm")
-    // the watermark compare is phrased on the raw ts column (against a
-    // foldable timestamp_micros literal), NOT as unix_micros(ts) > v:
-    // a predicate on the bare column reaches the parquet scan and
-    // row-group min/max stats skip every already-incorporated file —
-    // the difference between "per-batch cost ∝ batch" and "per-batch
-    // cost ∝ corpus" once the stg table is years deep. The companion
-    // day >= date(wm) predicate hits the PARTITION layer: incorporated
-    // day directories are never even listed into the plan.
+    // the day >= date(wm) predicate hits the PARTITION layer:
+    // incorporated day directories are never even listed into the
+    // plan, so this read costs ∝ the pending days, not the corpus. The
+    // ts > wm predicate reaches the parquet scan as a pushed filter
+    // but skips no row group here: stg writes ts as INT96 (Spark's
+    // default output type), which carries no min/max statistics.
     val pending = wm match {
       case None => stgOut
       case Some(v) => stgOut

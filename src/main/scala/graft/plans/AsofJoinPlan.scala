@@ -80,8 +80,7 @@ case class AsofJoinNode(
 }
 
 /** Plans [[AsofJoinNode]] as [[AsofJoinExec]]; registered as an
-  * `experimental.extraStrategies` entry by
-  * [[GraftExtensions.registerOn]].
+  * `experimental.extraStrategies` entry by `GraftSession.local`/`prepare`.
   */
 object AsofJoinStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {

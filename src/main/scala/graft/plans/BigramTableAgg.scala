@@ -24,11 +24,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * re-gather+sort; the buffer is vocab-bounded BY CONSTRUCTION (the
   * model must broadcast back anyway, so vocab-sized state per task is
   * already this operator family's admission ticket) — and ENFORCED:
-  * `vocabCap` (set via `spark.graft.bigram.vocabCap` at call-plan
-  * time, default 2²⁴ distinct bigrams ≈ 1-2 GB of per-task map) fails
-  * loud with the knob's name in `update`/`merge` instead of letting a
-  * caller who feeds an unbounded-vocab corpus grow the map until the
-  * task OOMs undiagnosed.
+  * the `vocabCap` constructor parameter (default 2²⁴ distinct bigrams
+  * ≈ 1-2 GB of per-task map) fails loud with the parameter's name in
+  * `update`/`merge` instead of letting a caller who feeds an
+  * unbounded-vocab corpus grow the map until the task OOMs
+  * undiagnosed.
   */
 case class BigramTableAgg(
     child: Expression,
@@ -63,9 +63,9 @@ case class BigramTableAgg(
     require(buf.size <= vocabCap,
       s"graft_bigram_table buffer exceeds vocabCap ($vocabCap distinct " +
         "bigrams): this corpus's bigram vocabulary is not bounded " +
-        "enough for a per-task model buffer — raise " +
-        "spark.graft.bigram.vocabCap if the driver/executors can hold " +
-        "it, or prune the vocabulary upstream")
+        "enough for a per-task model buffer — pass a larger vocabCap " +
+        "if the driver/executors can hold it, or prune the vocabulary " +
+        "upstream")
 
   override def update(buf: java.util.HashMap[UTF8String, Long],
       input: InternalRow): java.util.HashMap[UTF8String, Long] = {
@@ -75,8 +75,7 @@ case class BigramTableAgg(
       val n = arr.numElements()
       var i = 0
       while (i < n) {
-        // graft_bigram_table is registered as a general SQL function,
-        // so a user-supplied array may carry null struct elements
+        // a caller-built input array may carry null struct elements
         // (graft_bigram_counts itself never emits them) — skip, don't
         // NPE in an executor
         if (!arr.isNullAt(i)) {
@@ -175,11 +174,8 @@ case class BigramTableAgg(
 object BigramTableAgg {
   /** 2²⁴ distinct bigrams — far above any bounded-vocab model (BPE
     * vocabs are ≤10⁶; their bigram tables a few ×10⁶) yet small
-    * enough that a buffer at the cap still fits a task. The knob
+    * enough that a buffer at the cap still fits a task. The cap
     * exists so a past-cap corpus fails with a NAME, not a task OOM.
     */
   val DefaultVocabCap: Long = 1L << 24
-
-  /** Conf knob read at call-plan time (driver side). */
-  val VocabCapKey = "spark.graft.bigram.vocabCap"
 }

@@ -43,11 +43,12 @@ case class EditPairs(first: Expression, second: Expression,
 
   override def checkInputDataTypes(): TypeCheckResult =
     if (okList(first.dataType) && okList(second.dataType) &&
-        third.dataType == BooleanType) TypeCheckResult.TypeCheckSuccess
+        third.dataType == BooleanType && maxDist >= 0)
+      TypeCheckResult.TypeCheckSuccess
     else TypeCheckResult.TypeCheckFailure(
       "graft_edit_pairs expects (array<struct<id, p>>, " +
-        "array<struct<id, p>>, boolean, int-literal), got " +
-        s"(${first.dataType}, ${second.dataType}, ${third.dataType})")
+        "array<struct<id, p>>, boolean, maxDist >= 0), got " +
+        s"(${first.dataType}, ${second.dataType}, ${third.dataType}, $maxDist)")
 
   override def dataType: DataType = ArrayType(StructType(Seq(
     StructField("id_a", LongType, nullable = false),

@@ -94,7 +94,7 @@ object PrefixPairsNode {
 }
 
 /** Plans [[PrefixPairsNode]] as [[PrefixPairsExec]]; registered by
-  * [[GraftExtensions.registerOn]] alongside [[AsofJoinStrategy]].
+  * `GraftSession.local`/`prepare` alongside [[AsofJoinStrategy]].
   */
 object PrefixPairsStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {

@@ -3,9 +3,11 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.PlanDsl.{column, expression}
 
 import graft.Tables
 import graft.operators.{AsofJoin, Sessionize}
+import graft.plans.{HllAgg, SortedPairs, SortedPairsPacked}
 
 /** Window functions, ordered analytics and multi-dimensional
   * aggregation — the generalization of the reference's single window
@@ -216,10 +218,10 @@ object AnalyticsQueries {
     Tables.lineitem(spark, dir)
       .groupBy(col("l_returnflag"))
       .agg(
-        call_function("graft_hll", col("l_partkey").cast("string"))
-          .as("approx_parts"),
-        call_function("graft_hll", col("l_orderkey").cast("string"))
-          .as("approx_orders"))
+        column(HllAgg(expression(col("l_partkey").cast("string")))
+          .toAggregateExpression()).as("approx_parts"),
+        column(HllAgg(expression(col("l_orderkey").cast("string")))
+          .toAggregateExpression()).as("approx_orders"))
       .orderBy("l_returnflag")
 
   /** Per-user event frequency estimated from a Count-Min sketch
@@ -825,7 +827,7 @@ object AnalyticsQueries {
     // and the top-20 tie-break happens on that key inside
     // TakeOrderedAndProject, so only 20 rows are ever decoded.
     baskets.select(explode(
-        call_function("graft_sorted_pairs_packed", col("parts"))).as("p"))
+        column(SortedPairsPacked(expression(col("parts"))))).as("p"))
       .groupBy(col("p"))
       .agg(count(lit(1)).as("n_orders"))
       .orderBy(col("n_orders").desc, col("p").bitwiseXOR(lit(Long.MinValue)))
@@ -850,7 +852,7 @@ object AnalyticsQueries {
       .groupBy(col("l_orderkey"))
       .agg(sort_array(collect_set(col("l_partkey"))).as("parts"))
     baskets.select(explode(
-        call_function("graft_sorted_pairs", col("parts"))).as("p"))
+        column(SortedPairs(expression(col("parts"))))).as("p"))
       .groupBy(col("p.part_a").as("part_a"), col("p.part_b").as("part_b"))
       .agg(count(lit(1)).as("n_orders"))
       .orderBy(col("n_orders").desc, col("part_a"), col("part_b"))
@@ -947,7 +949,7 @@ object AnalyticsQueries {
       .groupBy(col("l_orderkey"))
       .agg(sort_array(collect_set(col("l_partkey"))).as("parts"))
       .select(explode(
-        call_function("graft_sorted_pairs_packed", col("parts"))).as("uv"))
+        column(SortedPairsPacked(expression(col("parts"))))).as("uv"))
       .distinct()
       .select(shiftrightunsigned(col("uv"), 32).as("u"),
         col("uv").bitwiseAND(lit(0xFFFFFFFFL)).as("v"))
@@ -1083,6 +1085,15 @@ object AnalyticsQueries {
       .orderBy("event_type")
   }
 
+  /** Pruned interval-column bytes above which [[concurrencySweep]]
+    * sub-slices each day by hour. The day window wins while the days
+    * the data touches fill the task slots; the hour path wins once
+    * slots outnumber days. On a 32-slot host over ~60-day corpora that
+    * crossover fell between the 10× and 30× corpora, whose pruned
+    * bytes straddle 8 MB.
+    */
+  private val SweepSliceBytes = 8L << 20
+
   /** Shared ts → [t, t + value minutes) interval mapping for the
     * interval operators — ONE definition on each side of the oracle
     * parity contract (see [[intervalOracleCte]] for the DuckDB twin).
@@ -1177,10 +1188,8 @@ object AnalyticsQueries {
     //  - small boundary volume: ONE day-partitioned running-sum window
     //    (a single pass; at bench scale |days| ≈ local parallelism and
     //    the window is the whole cost).
-    //  - past `spark.graft.sweep.sliceBytesThreshold` (default 8 MB of
-    //    PRUNED interval-column bytes — calibrated to engage between
-    //    the 10× and 30× bench corpora, where the day window's up-tick
-    //    was measured): two-level prefix sum (the
+    //  - past [[SweepSliceBytes]] of PRUNED interval-column bytes:
+    //    two-level prefix sum (the
     //    [[graft.ext.Sampling.selectTokenBudget]] idea). A calendar
     //    day is a FIXED key set, so per-day delta volume grows
     //    linearly with corpus and the day window concentrates each day
@@ -1202,27 +1211,9 @@ object AnalyticsQueries {
     // ProfileConcSweep pins shape equality and the 30× A/B; the hour
     // shape costs one extra bounded-output aggregation job, which is
     // why it doesn't run unconditionally.
-    //
-    // SIZING RULE for spark.graft.sweep.sliceBytesThreshold: the day
-    // window is better while |days touched by the data| ≥ the
-    // cluster's usable task slots (every slot busy, no extra job); the
-    // hour path is better as soon as slots > |days|, because the day
-    // window strands (slots − |days|) of them. The 8 MB default
-    // encodes where that crossover landed on THIS bench host (32
-    // slots, ~60-day corpora, crossover measured between the 10× and
-    // 30× corpora whose pruned interval-column bytes straddle 8 MB).
-    // A deployment sets it to roughly
-    //   (pruned bytes per day-of-data) × (its own executor slots),
-    // i.e. LOWER it when the cluster is wide relative to the calendar
-    // span, RAISE it for a thin cluster over a long history. Set it
-    // to 0 to force the hour path, Long.MaxValue to force the day
-    // window.
-    val threshold = spark.conf
-      .get("spark.graft.sweep.sliceBytesThreshold", (8L << 20).toString)
-      .toLong
     val scanBytes = ev.queryExecution.optimizedPlan.stats.sizeInBytes
     val w =
-      if (scanBytes <= threshold)
+      if (scanBytes <= SweepSliceBytes)
         Window.partitionBy(col("day")).orderBy(col("t"), col("d"))
           .rowsBetween(Window.unboundedPreceding, Window.currentRow)
       else
@@ -1230,7 +1221,7 @@ object AnalyticsQueries {
           .orderBy(col("t"), col("d"))
           .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val opened =
-      if (scanBytes <= threshold)
+      if (scanBytes <= SweepSliceBytes)
         deltas.withColumn("open", sum(col("d")).over(w))
       else {
         val sliceUs = 3600000000L

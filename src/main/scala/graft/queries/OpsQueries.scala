@@ -1,9 +1,8 @@
 package graft.queries
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.PlanDsl.tempDir
 
 import graft.Tables
 import graft.ext.{Multimodal, Wav}
@@ -24,7 +23,7 @@ object OpsQueries {
     * must converge to the direct answer).
     */
   def pipelineMedallion(spark: SparkSession, dir: String): DataFrame = {
-    val root = Files.createTempDirectory("graft-medallion").toString
+    val root = tempDir("graft-medallion").toString
     Medallion.run(spark, dir, root)
       .select("user_id", "day", "avg_value", "max_value", "min_value",
         "n_events", "user_id_date")
@@ -61,7 +60,7 @@ object OpsQueries {
     val cut = "2024-01-15"
     val ev = Tables.events(spark, dir)
     val base = ensureMedallionBase(spark, dir, cut)
-    val root = Files.createTempDirectory("graft-medallion-incr").toString
+    val root = tempDir("graft-medallion-incr").toString
     copyTree(spark, base, root)
     ev.filter(to_date(col("ts")) >= lit(cut))
       .write.mode("append").parquet(s"$root/corpus/events.parquet")
@@ -137,7 +136,7 @@ object OpsQueries {
     */
   def dqHistoryAnomalies(spark: SparkSession, dir: String): DataFrame = {
     val monitor =
-      Files.createTempDirectory("graft-monitor").resolve("metrics").toString
+      tempDir("graft-monitor").resolve("metrics").toString
     val ev = Tables.events(spark, dir)
       .withColumn("event_date", to_date(col("ts")))
     val cuts = Seq("2024-01-08", "2024-01-15", "2024-01-22")
@@ -310,7 +309,7 @@ object OpsQueries {
     * asserts the skip actually happens (~85% of files untouched).
     */
   def indexFileskip(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = Files.createTempDirectory("graft-skip").toString + "/t"
+    val tmp = tempDir("graft-skip").toString + "/t"
     val ev = Tables.events(spark, dir)
       .select(col("event_id"), col("value"),
         (col("user_id") % 256).as("zx"),
@@ -472,7 +471,7 @@ object OpsQueries {
     * aggregate.
     */
   def backfillChunked(spark: SparkSession, dir: String): DataFrame = {
-    val tgt = Files.createTempDirectory("graft-backfill").toString + "/mart"
+    val tgt = tempDir("graft-backfill").toString + "/mart"
     val ev = Tables.events(spark, dir)
       .select(date_format(col("ts"), "yyyy-MM-dd").as("day"),
         date_format(col("ts"), "yyyy-MM").as("month"), col("event_type"),
@@ -667,7 +666,7 @@ object OpsQueries {
     * shortest-round-trip doubles; ORC stores the doubles natively).
     */
   def sourceFormats(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = Files.createTempDirectory("graft-fmt").toString
+    val tmp = tempDir("graft-fmt").toString
     val ev = Tables.events(spark, dir)
       .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
     ev.write.mode("overwrite").json(s"$tmp/jsonl")
@@ -750,7 +749,7 @@ object OpsQueries {
     * end-to-end: the pinned read is unaffected by the later commit.
     */
   def versionTravel(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = Files.createTempDirectory("graft-versioned").resolve("t").toString
+    val tmp = tempDir("graft-versioned").resolve("t").toString
     val daily = Tables.orders(spark, dir)
       .select(date_format(col("o_orderdate"), "yyyy-MM-dd").as("day"),
         col("o_totalprice"))

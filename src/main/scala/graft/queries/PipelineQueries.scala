@@ -1,9 +1,8 @@
 package graft.queries
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.PlanDsl.tempDir
 
 import graft.Tables
 import graft.operators.MergeWriter
@@ -32,7 +31,7 @@ object PipelineQueries {
     * 100 TB where updates land on the recent tail of years of history.
     */
   def mergeUpsertDaily(spark: SparkSession, dir: String): DataFrame = {
-    val target = Files.createTempDirectory("graft-merge").resolve("t").toString
+    val target = tempDir("graft-merge").resolve("t").toString
     val ev = Tables.events(spark, dir)
       .withColumn("event_date", to_date(date_trunc("day", col("ts"))))
       .select("user_id", "event_date", "ts", "event_id", "event_type", "value")
@@ -82,7 +81,7 @@ object PipelineQueries {
     * leaves no trace.
     */
   def streamingDedup(spark: SparkSession, dir: String): DataFrame = {
-    val target = Files.createTempDirectory("graft-sdedup").resolve("t").toString
+    val target = tempDir("graft-sdedup").resolve("t").toString
     Streams.dedupToMergeSink(spark, dir, target, duplicated = true)
       .select("event_id", "user_id", "event_type", "value")
       .orderBy("event_id")

@@ -231,7 +231,7 @@ object RelationalQueries {
     * `min(struct(dist, p_partkey))` + `count` pass per `d_id` — a
     * single map-side-combining shuffle, no sort window (the unordered
     * `count` window the previous shape used forced a second full
-    * window pass AND blocked the `LatestWindowToMaxBy` rewrite). The
+    * window pass). The
     * scorer runs the banded 3-arg `levenshtein`: far pairs bail at the
     * cap in O(len·cap) instead of O(len²). Exactness is preserved
     * because the corruption only drops 'a's, so the self-pair (always

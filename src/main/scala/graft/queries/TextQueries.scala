@@ -1,13 +1,14 @@
 package graft.queries
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.PlanDsl.{column, expression, tempDir}
 
 import graft.Tables
 import graft.ext.{Clusters, Dedup, Dsir, HeavyHitters, Pack, PpJoin, Sampling, TfIdf}
 import graft.functions.Text
+import graft.plans.{BigramCounts, BigramTableAgg, GramRepetitionStats,
+  PerplexityModel, PerplexityScore, ShingleExplode}
 
 /** Text-analysis and deduplication surface over the `documents` corpus
   * (north-star extensions: token statistics, quality signals, language
@@ -529,7 +530,7 @@ object TextQueries {
     // one of its bigrams, and 1-token documents contribute exactly
     // their solo token (a tiny collect_set supplement, no exchange).
     val pc = docs.select(col("doc_id"),
-        call_function("graft_bigram_counts", toks).as("bc"),
+        column(BigramCounts(expression(toks))).as("bc"),
         when(size(toks) === 1, element_at(toks, 1)).as("solo"))
       .localCheckpoint()
     // ONE imperative-aggregate exchange (graft_bigram_table, a
@@ -546,10 +547,11 @@ object TextQueries {
     // (derived-c1 table chain 2× slower, transform+concat fusion
     // slower) were measured in ProfilePerplexVariants/Fuse.
     val model = pc
-      .agg(call_function("graft_bigram_table", col("bc")).as("c2arr"),
+      .agg(column(BigramTableAgg(expression(col("bc"))).toAggregateExpression())
+          .as("c2arr"),
         collect_set(col("solo")).as("sup"))
-      .select(call_function("graft_perplexity_model",
-        col("c2arr"), col("sup")).as("model"))
+      .select(column(PerplexityModel(expression(col("c2arr")),
+        expression(col("sup")))).as("model"))
     // the 20-byte/doc scored rows are materialized BEFORE the
     // contract's global sort: range partitioning runs a SAMPLING job
     // over its child, which would otherwise re-execute the whole
@@ -558,7 +560,8 @@ object TextQueries {
     // at 30×, ProfilePerplexSplit)
     pc.crossJoin(broadcast(model))
       .select(col("doc_id"),
-        call_function("graft_perplexity", col("bc"), col("model")).as("s"))
+        column(PerplexityScore(expression(col("bc")), expression(col("model"))))
+          .as("s"))
       .select(col("doc_id"),
         coalesce(col("s.n_bigrams"), lit(0L)).as("n_bigrams"),
         col("s.avg_nll").as("avg_nll"))
@@ -610,7 +613,7 @@ object TextQueries {
       // rows there, so the document was absent from the grouped result
       .filter(col("w").isNotNull && size(col("w")) >= 1)
       .select(col("doc_id"),
-        call_function("graft_gram_stats", col("w")).as("s"))
+        column(GramRepetitionStats(expression(col("w")))).as("s"))
       .select(col("doc_id"),
         col("s.n_words").as("n_words"),
         (col("s.m1").cast("double") / col("s.n_words")).as("top_word_frac"),
@@ -633,8 +636,8 @@ object TextQueries {
   def shingleExplode(spark: SparkSession, dir: String): DataFrame =
     Tables.documents(spark, dir)
       .select(col("source"),
-        call_function("graft_shingle_explode",
-          graft.functions.Text.tokens(col("text")), lit(3)).as("shingle"))
+        column(ShingleExplode(expression(Text.tokens(col("text"))), 3))
+          .as("shingle"))
       .groupBy(col("source"))
       .agg(count(lit(1)).as("total_shingles"),
         count_distinct(col("shingle")).as("distinct_shingles"))
@@ -849,7 +852,7 @@ object TextQueries {
     * order (sequential read, no re-sort).
     */
   def shardLayout(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = Files.createTempDirectory("graft-shardlayout")
+    val tmp = tempDir("graft-shardlayout")
       .resolve("shards").toString
     Sampling.writeShards(
       Tables.documents(spark, dir).select("doc_id", "source", "n_chars"),

@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.PlanDsl.tempDir
 import org.apache.spark.sql.streaming.Trigger
 
 /** The live collector loop — the engine's analogue of the reference's
@@ -39,7 +40,7 @@ object Collector {
       targetDir: String, ticks: Int, intervalMillis: Long,
       retries: Int = 2, retryDelayMillis: Long = 100): Stats = {
     require(ticks > 0, "ticks must be > 0")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-collector").toString
+    val ckpt = tempDir("graft-collector").toString
     val ok = new java.util.concurrent.atomic.AtomicLong
     val skipped = new java.util.concurrent.atomic.AtomicLong
     val attempts = new java.util.concurrent.atomic.AtomicLong

@@ -4,6 +4,7 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.PlanDsl
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, Trigger}
 import org.apache.spark.sql.types._
 
@@ -49,7 +50,8 @@ object Streams {
 
   /** Scratch root for the EPHEMERAL dirs these finite-replay streams
     * create per run (landing zones, checkpoints, changelog sinks):
-    * created fresh, never reused across runs, deleted with the machine.
+    * created fresh, never reused across runs, deleted when the JVM
+    * exits.
     * Their WAL/fsync durability buys nothing — a durable checkpoint is
     * the caller's job (production passes its own path on durable
     * storage) — so the default prefers a ram-backed dir (/dev/shm)
@@ -71,7 +73,7 @@ object Streams {
     root
   }
   private def scratch(prefix: String): java.nio.file.Path =
-    Files.createTempDirectory(scratchRoot, prefix)
+    PlanDsl.tempDir(prefix, scratchRoot.toString)
 
   private val baseEventFiles =
     new java.util.concurrent.ConcurrentHashMap[String, String]()

@@ -1,6 +1,9 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.PlanDsl.{column, expression}
+
+import graft.plans.HllReg
 
 /** HLL sketch accuracy: approx distinct within the configured rsd of
   * the exact answer on real data.
@@ -77,7 +80,7 @@ class ApproxSpec extends SparkSpec {
     val keys = Tables.lineitem(spark, sf)
       .select(col("l_partkey").cast("string").as("v"))
       .union((0 until 5000).map(i => s"synthetic-$i").toDF("v"))
-    val native = call_function("graft_hll_reg", col("v"))
+    val native = column(HllReg(expression(col("v"))))
     val hexF = graft.ref.HllRef.hexRegister(col("v"))
     val bad = keys.select(
         native.getField("bucket").as("a1"), native.getField("rho").as("a2"),

@@ -1,12 +1,14 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.PlanDsl.{column, expression}
 
 import graft.functions.Vectors
+import graft.plans.HllAgg
 import graft.ref.VectorsRef
 
 /** Native DotProduct expression: bit-equality with the HOF fold, null
-  * semantics, SQL callability, codegen plan shape.
+  * semantics, codegen plan shape, and natives needing no session setup.
   */
 class DotProductSpec extends SparkSpec {
 
@@ -42,9 +44,23 @@ class DotProductSpec extends SparkSpec {
     assert(nul.isNullAt(0))
   }
 
-  test("callable from SQL and participates in codegen") {
-    val r = spark.sql("SELECT graft_dot(array(1.0D, 2.0D), array(2.0D, 0.5D))").head()
-    assert(r.getDouble(0) === 3.0)
+  test("natives evaluate on a session that was never prepared") {
+    // a native is a Catalyst node built in Scala, not a session-scoped
+    // function name: a fresh session resolves it with no registration
+    val fresh = spark.newSession()
+    val df = fresh.createDataFrame(Seq(
+      (Seq(1.0, 2.0), Seq(2.0, 0.5), "x"),
+      (Seq(0.5, 4.0), Seq(2.0, 1.0), "y"),
+      (Seq(1.0, 1.0), Seq(1.0, 1.0), "x"))).toDF("a", "b", "v")
+    val dots = df.select(Vectors.dot(col("a"), col("b")))
+    assert(dots.columns.toSeq === Seq("dotproduct(a, b)"))
+    assert(dots.collect().map(_.getDouble(0)).toSeq === Seq(3.0, 5.0, 2.0))
+    val est = df.agg(column(HllAgg(expression(col("v"))).toAggregateExpression()))
+    assert(est.columns.toSeq === Seq("graft_hll(v)"))
+    assert(est.head().getLong(0) === 2L)
+  }
+
+  test("participates in codegen") {
     val e = Tables.embeddings(spark, sf)
       .select(Vectors.dot(Vectors.asDouble(col("embedding")),
         Vectors.asDouble(col("embedding"))).as("d"))

@@ -1,7 +1,11 @@
 package graft
 
-import org.apache.spark.sql.AnalysisException
+import org.apache.spark.sql.{AnalysisException, Column}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.PlanDsl.{column, expression}
+
+import graft.plans.{FirstCollision, SortedPairs, SortedPairsPacked}
 
 /** Unit contracts of the pair-generation / collision expressions
   * (plans/SortedPairs.scala, plans/FirstCollision.scala) — the
@@ -13,14 +17,17 @@ class PairExprSpec extends SparkSpec {
 
   import spark.implicits._
 
+  private def firstCollision(a: Column, b: Column): Column =
+    column(FirstCollision(expression(a), expression(b)))
+
   test("sorted_pairs == HOF formulation; packed unpacks to the same pairs") {
     val df = Seq(Seq(2L, 5L, 9L, 11L)).toDF("a")
-    val viaStruct = df.select(explode(call_function("graft_sorted_pairs",
-        col("a"))).as("p"))
+    val viaStruct = df.select(explode(column(SortedPairs(
+        expression(col("a"))))).as("p"))
       .select(col("p.part_a"), col("p.part_b")).collect()
       .map(r => (r.getLong(0), r.getLong(1)))
-    val viaPacked = df.select(explode(call_function("graft_sorted_pairs_packed",
-        col("a"))).as("p"))
+    val viaPacked = df.select(explode(column(SortedPairsPacked(
+        expression(col("a"))))).as("p"))
       .select(shiftright(col("p"), 32), col("p").bitwiseAND(lit(0xFFFFFFFFL)))
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     val expected = for {
@@ -34,8 +41,8 @@ class PairExprSpec extends SparkSpec {
   test("packed pairs reject elements beyond unsigned 32 bits, loudly") {
     val df = Seq(Seq(1L, 1L << 33)).toDF("a")
     val e = intercept[Exception] {
-      df.select(explode(call_function("graft_sorted_pairs_packed",
-        col("a")))).collect()
+      df.select(explode(column(SortedPairsPacked(
+        expression(col("a")))))).collect()
     }
     def causes(t: Throwable): Seq[Throwable] =
       Option(t).toSeq.flatMap(x => x +: causes(x.getCause))
@@ -46,9 +53,11 @@ class PairExprSpec extends SparkSpec {
 
   test("both pair generators reject nullable-element arrays at analysis") {
     val df = Seq(Seq(Some(1L), None)).toDF("a")
-    Seq("graft_sorted_pairs", "graft_sorted_pairs_packed").foreach { fn =>
+    Seq[(String, Expression => Expression)](
+        ("graft_sorted_pairs", SortedPairs(_)),
+        ("graft_sorted_pairs_packed", SortedPairsPacked(_))).foreach { case (fn, node) =>
       val e = intercept[AnalysisException] {
-        df.select(call_function(fn, col("a"))).collect()
+        df.select(column(node(expression(col("a"))))).collect()
       }
       assert(e.getMessage.contains("non-null"), s"$fn: ${e.getMessage}")
     }
@@ -60,16 +69,15 @@ class PairExprSpec extends SparkSpec {
       (Seq[Integer](7, 8, 9), Seq[Integer](1, 2, 3)),   // none
       (Seq[Integer](null, 2), Seq[Integer](null, 9))    // null != null
     ).toDF("a", "b")
-    val out = df.select(call_function("graft_first_collision",
-      col("a"), col("b"))).collect().map(_.getInt(0))
+    val out = df.select(firstCollision(col("a"), col("b")))
+      .collect().map(_.getInt(0))
     assert(out.toSeq === Seq(1, -1, -1))
   }
 
   test("first_collision rejects non-int-array inputs at analysis") {
     val df = Seq((Seq(1L), Seq(1L))).toDF("a", "b")
     val e = intercept[AnalysisException] {
-      df.select(call_function("graft_first_collision",
-        col("a"), col("b"))).collect()
+      df.select(firstCollision(col("a"), col("b"))).collect()
     }
     assert(e.getMessage.contains("array<int>"), e.getMessage)
   }

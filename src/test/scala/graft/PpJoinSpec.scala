@@ -1,9 +1,12 @@
 package graft
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.PlanDsl.{column, expression}
 
 import graft.ext.{Dsir, PpJoin}
 import graft.functions.Text
+import graft.plans.SortedOverlap
 import graft.ref.PpJoinRef
 
 /** PPJoin prefix-filtered similarity join: lossless pruning (result ==
@@ -50,19 +53,20 @@ class PpJoinSpec extends SparkSpec {
     }
     val df = rows.toDF("a", "b")
       .withColumn("want", size(array_intersect(col("a"), col("b"))))
+    def overlap(a: Column, b: Column, req: Column): Column =
+      column(SortedOverlap(expression(a), expression(b), expression(req)))
     // req = 0 disables the exit → always the exact count
-    val exact = df.withColumn("got",
-      call_function("graft_sorted_overlap", col("a"), col("b"), lit(0L)))
+    val exact = df.withColumn("got", overlap(col("a"), col("b"), lit(0L)))
     assert(exact.filter(col("got") =!= col("want")).isEmpty)
     // req = true count: the bound (an upper bound on the final count)
     // can never dip below it → still the exact count, never −1
-    val atReq = df.withColumn("got", call_function("graft_sorted_overlap",
-      col("a"), col("b"), col("want").cast("long")))
+    val atReq = df.withColumn("got",
+      overlap(col("a"), col("b"), col("want").cast("long")))
     assert(atReq.filter(col("got") =!= col("want")).isEmpty)
     // req = true count + 1: −1 (provably below req) or the exact count
     // — never a wrong non-sentinel value
-    val overReq = df.withColumn("got", call_function("graft_sorted_overlap",
-      col("a"), col("b"), (col("want") + 1).cast("long")))
+    val overReq = df.withColumn("got",
+      overlap(col("a"), col("b"), (col("want") + 1).cast("long")))
     assert(overReq
       .filter(col("got") =!= lit(-1) && col("got") =!= col("want"))
       .isEmpty)
@@ -71,10 +75,13 @@ class PpJoinSpec extends SparkSpec {
     // and the element check runs BEFORE the early-exit bound, so a
     // high req cannot turn the poison into a −1 (result must be
     // deterministic in the inputs, independent of req)
-    val nulls = spark.sql(
-      """SELECT graft_sorted_overlap(array('a', 'b'), CAST(NULL AS ARRAY<STRING>), 0L) AS x,
-        |       graft_sorted_overlap(array('a', CAST(NULL AS STRING)), array('a', 'b'), 0L) AS y,
-        |       graft_sorted_overlap(array(CAST(NULL AS STRING), 'b'), array('a', 'b'), 10L) AS z""".stripMargin)
+    val nulls = spark.range(1).select(
+        overlap(expr("array('a', 'b')"), expr("CAST(NULL AS ARRAY<STRING>)"),
+          lit(0L)).as("x"),
+        overlap(expr("array('a', CAST(NULL AS STRING))"), expr("array('a', 'b')"),
+          lit(0L)).as("y"),
+        overlap(expr("array(CAST(NULL AS STRING), 'b')"), expr("array('a', 'b')"),
+          lit(10L)).as("z"))
       .head()
     assert(nulls.isNullAt(0) && nulls.isNullAt(1) && nulls.isNullAt(2))
   }

@@ -3,6 +3,9 @@ package graft
 import org.scalacheck.{Gen, Prop, Properties, Test}
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.PlanDsl.{column, expression}
+
+import graft.plans.SortableBits
 
 /** ScalaCheck properties over the bit-sliced selection core
   * (ext/Quantiles + plans/SortableBits): the order isomorphism on
@@ -30,7 +33,7 @@ object QuantilePropertySpec extends Properties("graft.quantiles") {
     Prop.forAll(Gen.listOfN(24, anyDouble)) { xs =>
       import spark.implicits._
       val f = xs.toDF("v")
-        .select(col("v"), expr("graft_sortable_bits(v)").as("f"))
+        .select(col("v"), column(SortableBits(expression(col("v")))).as("f"))
         .collect().map(r => (r.getDouble(0), r.getLong(1)))
       f.forall { case (a, fa) => f.forall { case (b, fb) =>
         Integer.signum(java.lang.Double.compare(a, b)) ==

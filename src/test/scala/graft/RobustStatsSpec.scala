@@ -1,7 +1,9 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.PlanDsl.{column, expression}
 
+import graft.plans.SortableBits
 import graft.queries.{AnalyticsQueries, TextQueries}
 
 /** Invariant tests for the robust-stats / repetition operators (their
@@ -240,7 +242,7 @@ class RobustStatsSpec extends SparkSpec {
       Math.nextUp(1.0), Math.nextDown(1.0), -Math.nextUp(1.0),
       1e-300, -1e-300, 1e300, -1e300, 3.141592653589793)
     val f = edge.toDF("v")
-      .select(col("v"), expr("graft_sortable_bits(v)").as("f"))
+      .select(col("v"), column(SortableBits(expression(col("v")))).as("f"))
       .collect().map(r => (r.getDouble(0), r.getLong(1)))
     for ((a, fa) <- f; (b, fb) <- f) {
       val cmp = java.lang.Double.compare(a, b)
@@ -249,7 +251,7 @@ class RobustStatsSpec extends SparkSpec {
     }
     // null in, null out
     val n = Seq(Some(1.0), None).toDF("v")
-      .select(expr("graft_sortable_bits(v)")).collect()
+      .select(column(SortableBits(expression(col("v"))))).collect()
     assert(!n(0).isNullAt(0) && n(1).isNullAt(0))
   }
 

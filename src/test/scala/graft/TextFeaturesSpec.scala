@@ -1,8 +1,10 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.PlanDsl.{column, expression}
 
 import graft.functions.Text
+import graft.plans.GramRepetitionStats
 import graft.ref.{SimHashRef, TextRef}
 
 /** Native codegen'd text expressions vs their builtin-HOF
@@ -191,7 +193,7 @@ class TextFeaturesSpec extends SparkSpec {
       Tuple1(Seq("a", "b", "a", "b", "a")),   // "a b a" twice, "b a b" once
       Tuple1(Seq("x", null, "x"))             // concat_ws skips the null
     ).toDF("w")
-    val got = df.select(call_function("graft_gram_stats", col("w")).as("s"))
+    val got = df.select(column(GramRepetitionStats(expression(col("w")))).as("s"))
       .select("s.*").collect()
     def row(i: Int) = got(i).toSeq
     // (n_words, m1, m2, t2, m3, t3, d3)

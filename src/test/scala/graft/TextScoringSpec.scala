@@ -1,9 +1,13 @@
 package graft
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.PlanDsl.{column, expression}
 
 import graft.functions.Text
+import graft.plans.{BigramCounts, BigramTableAgg, DsirBuckets, PerplexityModel,
+  PrefixContextCounts, TermCounts}
 
 /** Round-14 native scoring rewrites (`graft_term_counts` /
   * `graft_bigram_counts` / `graft_bm25_topk` / `graft_perplexity`) vs
@@ -14,21 +18,35 @@ import graft.functions.Text
 class TextScoringSpec extends SparkSpec {
   import spark.implicits._
 
+  private def termCounts(toks: Column): Column =
+    column(TermCounts(expression(toks)))
+
+  /** `BigramTableAgg` over the one-row frame whose `bc` column is the
+    * SQL array literal `bcSql`.
+    */
+  private def bigramTable(bcSql: String,
+      vocabCap: Long = BigramTableAgg.DefaultVocabCap) =
+    spark.range(1).select(expr(bcSql).as("bc"))
+      .agg(column(BigramTableAgg(expression(col("bc")), vocabCap)
+        .toAggregateExpression()).as("t"))
+
+  private def prefixC1(c2Sql: String) =
+    spark.range(1).select(column(PrefixContextCounts(expression(expr(c2Sql))))
+      .as("c1arr"))
+
   test("graft_term_counts equals the explode-groupBy counts and sorts by term") {
     val docs = Tables.documents(spark, sf)
     // re-derive (doc, term, tf) from the native array and from the
     // composed explode; the two postings sets must match exactly
     val nat = docs.select(col("doc_id"),
-        explode(call_function("graft_term_counts",
-          Text.tokens(col("text")))).as("e"))
+        explode(termCounts(Text.tokens(col("text")))).as("e"))
       .select(col("doc_id"), col("e.term").as("term"), col("e.tf").as("tf"))
     val comp = docs.select(col("doc_id"),
         explode(Text.tokens(col("text"))).as("term"))
       .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
     assert(nat.exceptAll(comp).isEmpty && comp.exceptAll(nat).isEmpty)
     // sortedness (binary UTF8 order, the model-side sort_array order)
-    val unsorted = docs.select(call_function("graft_term_counts",
-        Text.tokens(col("text"))).as("tc"))
+    val unsorted = docs.select(termCounts(Text.tokens(col("text"))).as("tc"))
       .filter(not(col("tc") <=> sort_array(col("tc")))).count()
     assert(unsorted == 0)
   }
@@ -40,8 +58,7 @@ class TextScoringSpec extends SparkSpec {
       // null skipped, "" kept: distinct entries {a: 2, "": 1}
       (Seq("a", null, "a", ""), 2))
       .toDF("in", "n")
-    val rows = df.select(call_function("graft_term_counts", col("in"))
-        .as("tc"), col("n"))
+    val rows = df.select(termCounts(col("in")).as("tc"), col("n"))
       .select(size(col("tc")).as("sz"), col("n"),
         aggregate(col("tc"), lit(0L), (acc, e) => acc + e.getField("tf"))
           .as("total"))
@@ -55,7 +72,7 @@ class TextScoringSpec extends SparkSpec {
     val docs = Tables.documents(spark, sf)
     val t = Text.tokens(col("text"))
     val nat = docs.select(col("doc_id"),
-        explode(call_function("graft_bigram_counts", t)).as("e"))
+        explode(column(BigramCounts(expression(t)))).as("e"))
       .select(col("doc_id"), col("e.w1").as("w1"), col("e.bg").as("bg"),
         col("e.c").as("c"))
     val comp = docs.select(col("doc_id"), t.as("_t"))
@@ -70,39 +87,30 @@ class TextScoringSpec extends SparkSpec {
   }
 
   test("graft_bigram_table: null elements skipped, vocab cap fails loud with the knob's name") {
-    // graft_bigram_table is registered as a general SQL function, so a
-    // user-supplied array may carry null struct elements / null fields
-    // (graft_bigram_counts never emits them) — skip, never NPE in an
-    // executor task
-    val withNulls = spark.sql(
-      "select graft_bigram_table(bc) t from (select array(" +
+    // a caller-built array may carry null struct elements / null
+    // fields (graft_bigram_counts never emits them) — skip, never NPE
+    // in an executor task
+    val withNulls = bigramTable("array(" +
         "named_struct('w1','a','bg','a b','c',2L), " +
         "cast(null as struct<w1:string,bg:string,c:bigint>), " +
         "named_struct('w1','x','bg',cast(null as string),'c',5L), " +
-        "named_struct('w1','b','bg','b c','c',1L)) bc)")
+        "named_struct('w1','b','bg','b c','c',1L))")
       .collect().head.getSeq[org.apache.spark.sql.Row](0)
     assert(withNulls.map(r => (r.getString(0), r.getLong(1))) ==
       Seq(("a b", 2L), ("b c", 1L)))
-    // the vocab-bounded buffer is an ENFORCED contract: past
-    // spark.graft.bigram.vocabCap the task fails with the knob's name,
-    // not an undiagnosed OOM
-    spark.conf.set(graft.plans.BigramTableAgg.VocabCapKey, "1")
-    try {
-      val e = intercept[Throwable] {
-        spark.sql(
-          "select graft_bigram_table(bc) from (select array(" +
-            "named_struct('w1','a','bg','a b','c',1L), " +
-            "named_struct('w1','b','bg','b c','c',1L)) bc)").collect()
-      }
-      val msgs = Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
-        .map(t => Option(t.getMessage).getOrElse("")).mkString("\n")
-      assert(msgs.contains("vocabCap"), msgs)
-    } finally spark.conf.unset(graft.plans.BigramTableAgg.VocabCapKey)
-    // default cap restored: the same frame answers
-    val ok = spark.sql(
-      "select graft_bigram_table(bc) t from (select array(" +
-        "named_struct('w1','a','bg','a b','c',1L), " +
-        "named_struct('w1','b','bg','b c','c',1L)) bc)")
+    // the vocab-bounded buffer is an ENFORCED contract: past vocabCap
+    // the task fails with the parameter's name, not an undiagnosed OOM
+    val twoBigrams = "array(" +
+      "named_struct('w1','a','bg','a b','c',1L), " +
+      "named_struct('w1','b','bg','b c','c',1L))"
+    val e = intercept[Throwable] {
+      bigramTable(twoBigrams, vocabCap = 1).collect()
+    }
+    val msgs = Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+      .map(t => Option(t.getMessage).getOrElse("")).mkString("\n")
+    assert(msgs.contains("vocabCap"), msgs)
+    // default cap: the same frame answers
+    val ok = bigramTable(twoBigrams)
       .collect().head.getSeq[org.apache.spark.sql.Row](0)
     assert(ok.length == 2)
   }
@@ -124,8 +132,7 @@ class TextScoringSpec extends SparkSpec {
   test("graft_dsir_buckets equals the composed md5-substring bucketing") {
     val docs = Tables.documents(spark, sf)
     val nat = docs.select(col("doc_id"),
-        explode(call_function("graft_dsir_buckets",
-          Text.tokens(col("text")))).as("e"))
+        explode(column(DsirBuckets(expression(Text.tokens(col("text")))))).as("e"))
       .select(col("doc_id"), col("e.bucket").as("b"), col("e.c").as("c"))
     val comp = docs.select(col("doc_id"),
         explode(Text.tokens(col("text"))).as("t"))
@@ -150,21 +157,20 @@ class TextScoringSpec extends SparkSpec {
   test("graft_prefix_c1 derives sorted context counts from the c2 table") {
     // contiguous prefix groups sum; output is w1-sorted; a no-space bg
     // (null-member bigram, never scored) is excluded
-    val rows = spark.sql(
-      """select graft_prefix_c1(array(
+    val rows = prefixC1(
+      """array(
         |  struct('a b' as bg, 2L as c2), struct('a c' as bg, 3L as c2),
         |  struct('ab x' as bg, 5L as c2),
-        |  struct('nospace' as bg, 9L as c2))) as c1arr""".stripMargin)
+        |  struct('nospace' as bg, 9L as c2))""".stripMargin)
       .selectExpr("explode(c1arr) as e").selectExpr("e.w1", "e.c1")
       .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
     assert(rows == Seq(("a", 5L), ("ab", 5L)))
     // pathological sub-space control byte in a token: "a x" sorts
     // BEFORE "a b" as a bigram string while "a" > "a" as w1 —
     // the expression must re-sort so the model stays binary-searchable
-    val ctl = spark.sql(
-      "select graft_prefix_c1(array(" +
-        "struct('a x' as bg, 1L as c2), struct('a b' as bg, 2L as c2))) as c")
-      .selectExpr("explode(c) as e").selectExpr("e.w1")
+    val ctl = prefixC1("array(" +
+        "struct('a x' as bg, 1L as c2), struct('a b' as bg, 2L as c2))")
+      .selectExpr("explode(c1arr) as e").selectExpr("e.w1")
       .collect().map(_.getString(0)).toSeq
     assert(ctl == ctl.sorted, s"w1 keys must come out sorted: $ctl")
   }
@@ -173,10 +179,10 @@ class TextScoringSpec extends SparkSpec {
     // c2 table {a b: 2, b a: 1}: c1 = [(a,2),(b,1)]; vocab =
     // {a,b} from the bigrams ∪ {z,a} solo supplement = 3 ("a" not
     // double-counted, solo-only "z" counted)
-    val r = spark.range(1).select(call_function("graft_perplexity_model",
-        array(struct(lit("a b").as("bg"), lit(2L).as("c2")),
-          struct(lit("b a").as("bg"), lit(1L).as("c2"))),
-        array(lit("z"), lit("a"))).as("m"))
+    val r = spark.range(1).select(column(PerplexityModel(
+        expression(array(struct(lit("a b").as("bg"), lit(2L).as("c2")),
+          struct(lit("b a").as("bg"), lit(1L).as("c2")))),
+        expression(array(lit("z"), lit("a"))))).as("m"))
       .selectExpr("m.vs", "m.c1arr", "m.c2arr").collect().head
     assert(r.getLong(0) == 3L)
     val c1 = r.getSeq[org.apache.spark.sql.Row](1)
