@@ -20,6 +20,15 @@ import graft.plans.{AsofJoinStrategy, PrefixPairsStrategy}
   * built through [[configure]] ([[local]], `Bench`, `Verify`) get it.
   * An externally created session that is only [[prepare]]d keeps
   * Spark's default of 100 entries and recompiles its working set.
+  *
+  * Spark also keys that cache by the task thread's class loader, and
+  * with artifact isolation on (Spark's default) every session gets its
+  * own executor class loader. A session clone — the one each
+  * `PlanDsl.withConf` plan and each stream runs on — would then
+  * compile its whole plan again on every call. The engine adds no
+  * per-session artifacts, so both [[configure]] and [[prepare]] turn
+  * isolation off: clones made after that share one loader and one
+  * set of compiled classes.
   */
 object GraftSession {
 
@@ -74,6 +83,7 @@ object GraftSession {
     .config("spark.ui.enabled", "false")
     .config("spark.sql.codegen.cache.maxEntries",
       CodegenCacheEntries.toString)
+    .config("spark.sql.artifact.isolation.enabled", "false")
 
   def local(cores: Int = DefaultCores): SparkSession = {
     val spark = configure(
@@ -95,6 +105,9 @@ object GraftSession {
     spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.adaptive.enabled", "true")
+    // read by each session when it is created: clones made from here
+    // on share one class loader (see the object doc)
+    spark.conf.set("spark.sql.artifact.isolation.enabled", "false")
     // env override for the persisted-artifact root (the cold-series
     // harness points each rep at a fresh dir; `run / fork := true`
     // means a -D on the sbt JVM never reaches the session, so the env

@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.PlanDsl
 
 /** Connected components over a near-duplicate pair graph — the step
   * that turns pairwise dedup output into actionable clusters (keep one
@@ -50,49 +51,52 @@ object Clusters {
     // is taken BEFORE the checkpoint (a checkpointed plan has no file
     // stats) and both clamps bound a bad estimate.
     val edgeCount = graft.operators.Joins.estimatedRows(edgesPlan)
-    graft.operators.ShuffleWidth.withWidth(spark,
-        s => math.max(4L, math.min(s, edgeCount / 50000L))) {
-      val edges = edgesPlan.localCheckpoint()
-      // fused round 1: with every node initially labeled by itself,
-      // the first propagation round is exactly least(self, min
-      // neighbor) — computable straight from the edge list, saving a
-      // full join+checkpoint round
-      var labels = edges.groupBy(col("src").as("node"))
-        .agg(min(col("dst")).as("_nmin"))
-        .select(col("node"), least(col("node"), col("_nmin")).as("cluster"))
-        .localCheckpoint()
+    // the rounds run on a clone at that width; the labels go back to
+    // the caller's session
+    val sized = PlanDsl.withConf(spark, "spark.sql.shuffle.partitions" ->
+      math.max(4L, math.min(spark.conf.get("spark.sql.shuffle.partitions").toLong,
+        edgeCount / 50000L)).toString)
+    val edges = PlanDsl.ofRows(sized, edgesPlan.queryExecution.analyzed)
+      .localCheckpoint()
+    // fused round 1: with every node initially labeled by itself,
+    // the first propagation round is exactly least(self, min
+    // neighbor) — computable straight from the edge list, saving a
+    // full join+checkpoint round
+    var labels = edges.groupBy(col("src").as("node"))
+      .agg(min(col("dst")).as("_nmin"))
+      .select(col("node"), least(col("node"), col("_nmin")).as("cluster"))
+      .localCheckpoint()
 
-      var converged = false
-      var i = 1
-      while (!converged && i < maxIter) {
-        // min label among each node's neighbors this round
-        val neighborMin = edges
-          .join(labels.withColumnRenamed("node", "dst"), "dst")
-          .groupBy(col("src").as("node"))
-          .agg(min(col("cluster")).as("_nmin"))
-        // carry the previous label through the checkpoint so the
-        // convergence check reads materialized data (no extra join job)
-        val updated = labels.join(neighborMin, Seq("node"), "left")
-          .select(col("node"), col("cluster").as("_prev"),
-            least(col("cluster"), coalesce(col("_nmin"), col("cluster")))
-              .as("cluster"))
-          .localCheckpoint()
-        converged =
-          updated.filter(col("cluster") =!= col("_prev")).isEmpty
-        labels = updated.drop("_prev")
-        i += 1
-      }
-      // fail LOUDLY on an unconverged exit (graph diameter > maxIter):
-      // labels mid-propagation split one true component across several
-      // cluster ids, and downstream keep-one-canonical-per-cluster
-      // dedup would silently keep several copies of the same duplicate
-      // family. Near-dup graphs are clique-ish (diameter ~2-3), so a
-      // trip here means the input is not the expected pair graph —
-      // raise maxIter deliberately, don't mask it.
-      if (!converged) throw new IllegalStateException(
-        s"connectedComponents did not converge in $maxIter rounds — " +
-          "graph diameter exceeds maxIter; labels would be partial")
-      labels
+    var converged = false
+    var i = 1
+    while (!converged && i < maxIter) {
+      // min label among each node's neighbors this round
+      val neighborMin = edges
+        .join(labels.withColumnRenamed("node", "dst"), "dst")
+        .groupBy(col("src").as("node"))
+        .agg(min(col("cluster")).as("_nmin"))
+      // carry the previous label through the checkpoint so the
+      // convergence check reads materialized data (no extra join job)
+      val updated = labels.join(neighborMin, Seq("node"), "left")
+        .select(col("node"), col("cluster").as("_prev"),
+          least(col("cluster"), coalesce(col("_nmin"), col("cluster")))
+            .as("cluster"))
+        .localCheckpoint()
+      converged =
+        updated.filter(col("cluster") =!= col("_prev")).isEmpty
+      labels = updated.drop("_prev")
+      i += 1
     }
+    // fail LOUDLY on an unconverged exit (graph diameter > maxIter):
+    // labels mid-propagation split one true component across several
+    // cluster ids, and downstream keep-one-canonical-per-cluster
+    // dedup would silently keep several copies of the same duplicate
+    // family. Near-dup graphs are clique-ish (diameter ~2-3), so a
+    // trip here means the input is not the expected pair graph —
+    // raise maxIter deliberately, don't mask it.
+    if (!converged) throw new IllegalStateException(
+      s"connectedComponents did not converge in $maxIter rounds — " +
+        "graph diameter exceeds maxIter; labels would be partial")
+    PlanDsl.ofRows(spark, labels.queryExecution.analyzed)
   }
 }

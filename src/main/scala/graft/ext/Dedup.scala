@@ -494,8 +494,8 @@ object Dedup {
     // parallelism is |blocks|·S(S+1)/2 and group state stays
     // ~|block|/S vectors. graft_cosine_pairs unpacks each group's
     // vectors ONCE into primitive arrays and runs the n² dots as
-    // tight scalar math. Measured at 30× (ProfileCosinePairs,
-    // equality-pinned): 46.8 s → see tool log; the DuckDB twin runs
+    // tight scalar math. Measured at 30× (graft.Bench `dedup_embedding_cosine`):
+    // the join shape took 46.8 s; the DuckDB twin runs
     // the same quadratic in 2.9 s, which the join shape missed 16×.
     // S is a knob (spark.graft.pairs.salts); the replication factor
     // is exactly S copies of each row through one exchange.
@@ -583,7 +583,7 @@ object Dedup {
     // within-cluster pairs through the same salted grouped kernel as
     // [[embeddingNearDups]] — the cluster-key self-join capped
     // parallelism at |clusters| and paid per-pair join machinery
-    // (46.8 → 5.6 s at 30× on the cosine operator, ProfileCosinePairs);
+    // (46.8 → 5.6 s at 30× on the cosine operator, graft.Bench `dedup_embedding_cosine`);
     // dup_of is then min(lower id) over the generated (id_a < id_b)
     // pairs. The kernel receives the already-unit vectors directly.
     val dup = embeddingNearDupsUnit(m, idCol, "_u", "_blk", minCosine)

@@ -93,7 +93,7 @@ object Dsir {
     // percentile pass and the final select). Unlike the doc-grain
     // _bc ARRAYS (lazy won that A/B — see the note above), storing
     // the scores wins: 30× A/B 1.06 → 1.01 s median
-    // (ProfileScoringFuse), and the kernel now runs exactly twice
+    // (graft.Bench `select_dsir`), and the kernel now runs exactly twice
     // (model pass + scoring pass), the floor for a two-phase
     // model-then-score plan.
     val scored = pc

@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.PlanDsl
 
 /** Iterative graph analytics over edge lists — PageRank as the
   * representative fixed-iteration algorithm (the training-corpus use:
@@ -81,10 +82,18 @@ object Graph {
     // of the outdeg join, nodes in the dangling set, the initial ranks
     // AND every round's merge; an expensive upstream plan must not run
     // iters+3 times
-    val nd = nodes.localCheckpoint()
-    val n = nd.count()
+    val nodesDone = nodes.localCheckpoint()
+    val n = nodesDone.count()
+    // everything below runs on a clone whose shuffle width is sized to
+    // the graph, not the session-wide batch width: each round pays
+    // per-partition fixed costs. The ranks go back to the caller's
+    // session, so downstream plans keep the session width.
+    val sized = PlanDsl.withConf(spark, "spark.sql.shuffle.partitions" ->
+      math.max(4L, math.min(spark.conf.get("spark.sql.shuffle.partitions").toLong,
+        n / 50000L)).toString)
+    val nd = PlanDsl.ofRows(sized, nodesDone.queryExecution.analyzed)
     val base = 15L * scale / (100L * n)
-    val ed = edges.localCheckpoint()
+    val ed = PlanDsl.ofRows(sized, edges.queryExecution.analyzed).localCheckpoint()
     // out-degree is static: join it onto the edge list ONCE, so each
     // round's only edge-side work is the broadcast rank lookup
     val e = ed
@@ -103,28 +112,25 @@ object Graph {
     // shuffle-hash join instead of OOMing the executors (same enforced
     // regime switch as triangleCounts' closing side)
     val fits = n * BytesPerRow <= broadcastCapBytes
-    graft.operators.ShuffleWidth.withWidth(spark,
-        s => math.max(4L, math.min(s, n / 50000L))) {
-      for (_ <- 1 to iters) {
-        val inflow = nodeJoin(e, pr.withColumnRenamed("node", "src"),
-            Seq("src"), "inner", fits)
-          .select(col("dst").as("node"), expr("pr div outdeg").as("contrib"))
-          .groupBy("node")
-          .agg(sum(col("contrib")).as("infl"))
-        // dangling mass spreads evenly: 1-row aggregate, broadcast
-        // back — never collected on the driver
-        val dang = nodeJoin(pr, dangNodes, Seq("node"), "left_semi", fits)
-          .agg(coalesce(sum(col("pr")), lit(0L)).as("_dm"))
-        pr = nodeJoin(nd.select("node"), inflow, Seq("node"), "left", fits)
-          .crossJoin(broadcast(dang))
-          .select(col("node"),
-            (lit(base) + expr(
-              s"(85 * (coalesce(infl, CAST(0 AS BIGINT)) + _dm div $n)) div 100"))
-              .as("pr"))
-          .localCheckpoint()
-      }
-      pr
+    for (_ <- 1 to iters) {
+      val inflow = nodeJoin(e, pr.withColumnRenamed("node", "src"),
+          Seq("src"), "inner", fits)
+        .select(col("dst").as("node"), expr("pr div outdeg").as("contrib"))
+        .groupBy("node")
+        .agg(sum(col("contrib")).as("infl"))
+      // dangling mass spreads evenly: 1-row aggregate, broadcast
+      // back — never collected on the driver
+      val dang = nodeJoin(pr, dangNodes, Seq("node"), "left_semi", fits)
+        .agg(coalesce(sum(col("pr")), lit(0L)).as("_dm"))
+      pr = nodeJoin(nd.select("node"), inflow, Seq("node"), "left", fits)
+        .crossJoin(broadcast(dang))
+        .select(col("node"),
+          (lit(base) + expr(
+            s"(85 * (coalesce(infl, CAST(0 AS BIGINT)) + _dm div $n)) div 100"))
+            .as("pr"))
+        .localCheckpoint()
     }
+    PlanDsl.ofRows(spark, pr.queryExecution.analyzed)
   }
 
   /** Exact per-vertex triangle counts by degree orientation — the
@@ -156,8 +162,8 @@ object Graph {
     // materialize the caller's edge plan ONCE (the pageRank input
     // discipline): it feeds the degree aggregation (twice, via the
     // endpoint-mention union) and the orientation join, and AQE does
-    // not reuse duplicated aggregate subtrees (measured,
-    // ProfileCollocReuse r21) — an unmaterialized edge build re-runs
+    // not reuse duplicated aggregate subtrees (r21; graft.Explain
+    // `text_collocations` shows the repeated subtrees) — an unmaterialized edge build re-runs
     // per consumer.
     val e0 = edges.localCheckpoint()
     // degrees are vertex-sized with three consumers (u-lookup,

@@ -241,8 +241,8 @@ object PpJoin {
     // localCheckpoint with no honest stats, so Spark BROADCASTS this
     // side at any corpus size — 450 MB per side at a 30× corpus
     // (driver collect + every-worker ship; on a real cluster, an OOM
-    // waiting for a bigger corpus). The measured trade (r19
-    // ProfilePpJoinShj): a wash at sf0.1 (1.07 vs 1.12 s), and at 30×
+    // waiting for a bigger corpus). The measured trade (r19,
+    // graft.Bench `dedup_ppjoin`): a wash at sf0.1 (1.07 vs 1.12 s), and at 30×
     // the shuffle is STABLE (14.5/15.1 s) where the broadcast is
     // bimodal (10.6 s in a clean JVM, 76.8 s under the driver GC
     // churn the 2×450 MB relations themselves cause). The exchange

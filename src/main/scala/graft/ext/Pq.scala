@@ -3,6 +3,7 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.PlanDsl
 import org.apache.spark.sql.graft.PlanDsl.{column, expression}
 
 import graft.functions.Vectors
@@ -277,43 +278,42 @@ object Pq {
     // comes from plan statistics (Joins.estimatedRows): ZERO jobs, and
     // both clamps keep a bad estimate harmless (floor 4, cap = session
     // setting).
-    val sessionWidth = graft.operators.ShuffleWidth.session(spark)
+    val sessionWidth = spark.conf.get("spark.sql.shuffle.partitions").toLong
     // BigInt for the same overflow reason as [[sliceParts]]
-    graft.operators.ShuffleWidth.withWidth(spark, s =>
-        ((BigInt(Joins.estimatedRows(corpus)) * m / 100000)
-          .min(BigInt(s)).max(BigInt(4))).toLong) {
-      // ONE explode serves both train and encode: (c_id, _cell, sub,
-      // _sv) slices, materialized — this barrier is also the index
-      // build's working set, so it is corpus × m rows by construction.
-      // Repartitioned to the candidate-balanced width ([[sliceParts]])
-      // BEFORE the barrier, so the nearest-codeword map stage never
-      // inherits a narrow corpus scan's split count.
-      val sl = Vectors.unitized(corpus, vecCol, cId -> "c_id",
-          blockCol -> "_cell")
-        .select(col("c_id"), col("_cell"),
-          posexplode(array((0 until m).map(s =>
-            slice(col("_uv"), s * w + 1, w)): _*)).as(Seq("sub", "_sv")))
-        .repartition(sliceParts(corpus, m, sessionWidth))
-        .localCheckpoint()
-      val trainSl = if (trainHex.isEmpty) sl
-        else sl.filter(Sampling.hashBucket(col("c_id")) <= lit(trainHex))
-      // SCOPE of the sized conf: shuffle.partitions is read at
-      // EXECUTION time, so the sizing covers exactly the two barriers
-      // that run inside this window — the slice checkpoint above
-      // (whose width [[sliceParts]] sets explicitly anyway) and the
-      // codebook build. The lazy encode + probe stages execute after
-      // the finally restores the session width — deliberately: the
-      // sizing only ever SHRINKS below the session setting, so
-      // session width is never under-parallel for them, AQE coalesces
-      // the over-split tails, and a codes barrier here would cost a
-      // full extra job for a result the one-shot probe consumes
-      // exactly once (measured +0.5–1 s on the pq family at sf0.1).
-      // Callers that probe repeatedly persist the separable
-      // [[trainCodebook]]/[[encode]] outputs instead.
-      val codebook = trainFromSubs(trainSl).localCheckpoint()
-      val codes = encodeFromSubs(sl.select(col("c_id"), col("sub"),
-        col("_sv")), codebook)
-      adcProbe(queries, qId, vecCol, codebook, codes, m, d, k)
-    }
+    val sized = PlanDsl.withConf(spark, "spark.sql.shuffle.partitions" ->
+      (BigInt(Joins.estimatedRows(corpus)) * m / 100000)
+        .min(BigInt(sessionWidth)).max(BigInt(4)).toString)
+    // ONE explode serves both train and encode: (c_id, _cell, sub,
+    // _sv) slices, materialized — this barrier is also the index
+    // build's working set, so it is corpus × m rows by construction.
+    // Repartitioned to the candidate-balanced width ([[sliceParts]])
+    // BEFORE the barrier, so the nearest-codeword map stage never
+    // inherits a narrow corpus scan's split count.
+    val slices = Vectors.unitized(corpus, vecCol, cId -> "c_id",
+        blockCol -> "_cell")
+      .select(col("c_id"), col("_cell"),
+        posexplode(array((0 until m).map(s =>
+          slice(col("_uv"), s * w + 1, w)): _*)).as(Seq("sub", "_sv")))
+      .repartition(sliceParts(corpus, m, sessionWidth))
+    val sl = PlanDsl.ofRows(sized, slices.queryExecution.analyzed)
+      .localCheckpoint()
+    val trainSl = if (trainHex.isEmpty) sl
+      else sl.filter(Sampling.hashBucket(col("c_id")) <= lit(trainHex))
+    // SCOPE of the sized width: the two barriers that run on the
+    // clone — the slice checkpoint above (whose width [[sliceParts]]
+    // sets explicitly anyway) and the codebook build. The lazy encode
+    // + probe stages run on the caller's session at its width —
+    // deliberately: the sizing only ever SHRINKS below the session
+    // setting, so session width is never under-parallel for them, AQE
+    // coalesces the over-split tails, and a codes barrier here would
+    // cost a full extra job for a result the one-shot probe consumes
+    // exactly once (measured +0.5–1 s on the pq family at sf0.1).
+    // Callers that probe repeatedly persist the separable
+    // [[trainCodebook]]/[[encode]] outputs instead.
+    val codebook = PlanDsl.ofRows(spark,
+      trainFromSubs(trainSl).localCheckpoint().queryExecution.analyzed)
+    val codes = encodeFromSubs(PlanDsl.ofRows(spark, sl.queryExecution.analyzed)
+      .select(col("c_id"), col("sub"), col("_sv")), codebook)
+    adcProbe(queries, qId, vecCol, codebook, codes, m, d, k)
   }
 }

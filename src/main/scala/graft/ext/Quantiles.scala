@@ -2,8 +2,9 @@ package graft.ext
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.PlanDsl
 import org.apache.spark.sql.graft.PlanDsl.{column, expression}
 
 import graft.plans.SortableBits
@@ -50,16 +51,6 @@ object Quantiles {
     * levels reach shift 0 (exact doubles) from the widest slicing.
     */
   private val RefineStepBits = 13
-
-  /** Serializes fetchHist's scoped conf set/restore window (see the
-    * comment at the call site) per session: the conf it raises is
-    * session state, so fetches on different sessions never wait on
-    * each other. Weak keys: a dropped session's lock goes with it.
-    */
-  private val fetchConfLocks = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[SparkSession, AnyRef]())
-  private[graft] def fetchConfLock(spark: SparkSession): AnyRef =
-    fetchConfLocks.computeIfAbsent(spark, _ => new Object)
 
   /** Per-group exact order-statistic VALUES at caller-chosen 0-based
     * positions into the group's ascending NON-NULL values.
@@ -114,6 +105,8 @@ object Quantiles {
     def sliceAt(shift: Int) = shiftright(bits, shift)
     val shift0 = 52 - binadeBits
 
+    val fetchSession = PlanDsl.withConf(spark,
+      "spark.sql.limit.initialNumPartitions" -> Int.MaxValue.toString)
     def fetchHist(grouped: DataFrame): Array[org.apache.spark.sql.Row] = {
       // ONE fetch round (r21): executeTake's default incremental
       // scale-up starts at 1 partition and grows 4× per round, so a
@@ -123,30 +116,16 @@ object Quantiles {
       // log₄(partitions) times before concluding the rows are all
       // there. That was 3 extra driver-blocking jobs per histogram
       // pass, the dominant slice of the percentiles row at a 30×
-      // corpus (ProfilePercentiles: prod 2.08 s vs 0.24 s of raw
-      // scans). Raising the initial partition count makes the fetch a
-      // single round while take() keeps enforcing the cap BEFORE the
-      // driver materializes an over-budget histogram — the reason
-      // this is not a bare collect().
-      // The set/restore mutates SESSION-scoped state around the take
-      // (r22, VERDICT r21 #8): two concurrent fetchHist calls on the
-      // same session could interleave save/restore and strand the
-      // raised value, so the window is serialized per session. A
-      // concurrent UNRELATED query on the same session can still
-      // observe the raised value during the window — that only
-      // changes executeTake's scale-up batching (a performance knob),
-      // never a result, so serializing fetchHist against itself is
-      // the whole correctness story.
-      val rows = Quantiles.fetchConfLock(spark).synchronized {
-        val key = "spark.sql.limit.initialNumPartitions"
-        val saved = spark.conf.getOption(key)
-        spark.conf.set(key, Int.MaxValue.toString)
-        try grouped.take(histCap + 1)
-        finally saved match {
-          case Some(v) => spark.conf.set(key, v)
-          case None => spark.conf.unset(key)
-        }
-      }
+      // corpus (graft.Bench `percentiles`: 2.08 s vs 0.24 s of raw
+      // scans, r21). Raising the initial partition count makes the
+      // fetch a single round while take() keeps enforcing the cap
+      // BEFORE the driver materializes an over-budget histogram — the
+      // reason this is not a bare collect().
+      // The raised value lives on a clone that only these takes run
+      // on, so the caller's session, and any query running on it,
+      // keeps its own setting.
+      val rows = PlanDsl.ofRows(fetchSession, grouped.queryExecution.analyzed)
+        .take(histCap + 1)
       require(rows.length <= histCap,
         s"grouped-quantile histogram exceeds histCap ($histCap rows): " +
           s"|groups| × present slices (binadeBits=$binadeBits) is past " +

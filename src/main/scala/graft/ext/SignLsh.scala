@@ -77,8 +77,8 @@ object SignLsh {
     // kernel ([[graft.ext.Dedup.embeddingNearDupsUnit]]): the bucket
     // self-join capped parallelism at 2^bits (16 at the 4-bit
     // default) and paid per-pair join machinery for ~n²/2^bits
-    // verified dots — the r16 cosine-dedup finding, 6.9× → see
-    // ProfileCosinePairs/COVERAGE.md at ff8d9ba. Each vector has one
+    // verified dots — the r16 cosine-dedup finding, 6.9× on
+    // graft.Bench `dedup_embedding_lsh`. Each vector has one
     // bucket, so the pair set is unchanged.
     graft.ext.Dedup.embeddingNearDupsUnit(e, idCol, "_u", "_bucket",
         minCosine)
@@ -112,7 +112,7 @@ object SignLsh {
     * construction, dedup runs map-side inside the join stage, and the
     * pair-grain exchange disappears from the plan. `firstCollision =
     * false` keeps the joined+distinct form as the equality twin
-    * (SimilaritySpec) and the A/B baseline (ProfileSlshCands).
+    * (SimilaritySpec).
     */
   def nearDupPairsMulti(df: DataFrame, idCol: String, vecCol: String,
       bits: Int, tables: Int, minCosine: Double, dim: Int = -1,
@@ -127,7 +127,7 @@ object SignLsh {
     // plane)), not as per-plane literal expression trees: tables ×
     // bits inlined [[signature]] columns blow the signature stage out
     // of whole-stage codegen — measured 4.5× slower than this
-    // data-driven form at 12 × 6 (ProfileSlshM, round 9). The
+    // data-driven form at 12 × 6 (round 9, graft.Bench `dedup_embedding_lsh_multi`). The
     // groupBy collapses map-side (each vector's plane rows are
     // partition-local under the cross join, so partial aggregation
     // finishes before the exchange) — the shuffle moves exactly the
@@ -172,7 +172,7 @@ object SignLsh {
       // friendly steps into the hottest aggregation in the operator
       // and shipped bit-strings through the (id, t) exchange where an
       // 8-byte sum rides it now (the PPJoin hash-key discipline,
-      // VERDICT r20 #6). Measured (ProfileSlshCodes, alternating reps,
+      // VERDICT r20 #6). Measured (graft.Bench `dedup_embedding_lsh`, alternating reps,
       // exceptAll-equality cross-checked both ways before timing):
       // codes stage 0.58 → 0.43 s at sf0.1, 1.11 → 0.63 s at a 30×
       // corpus; the downstream stages are untouched.

@@ -29,7 +29,7 @@ object TfIdf {
     * exchange as ONE per-doc sentinel entry (NULL term) appended to
     * the per-doc count array — no separate corpus-count job, no
     * crossJoin barrier (30× A/B: tfidf 0.81 → 0.68 s, bm25 0.83 →
-    * 0.69 s medians, ProfileScoringFuse, equality-pinned). The
+    * 0.69 s medians, graft.Bench `text_tfidf`/`text_bm25`). The
     * coalesce keeps a null-text document's sentinel (its tc is NULL):
     * n_docs counts every document, exactly like the count it replaced.
     */
@@ -138,7 +138,7 @@ object TfIdf {
         column(TermCounts(expression(Text.tokens(col(textCol))))).as("tc"))
     // n_docs rides the df exchange as the per-doc sentinel row — see
     // bm25TopTerms (count-not-distinct contract assertable via
-    // spark.graft.checkUniqueIds; 30× A/B in ProfileScoringFuse)
+    // spark.graft.checkUniqueIds; 30× A/B: graft.Bench `text_tfidf`)
     val ex = pc.select(explode(withSentinel(col("tc"), lit(0L))).as("e"))
       .filter(col("e.term").isNull || length(col("e.term")) >= 1)
       .select(col("e.term").as("term"))

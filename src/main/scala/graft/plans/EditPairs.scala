@@ -115,7 +115,7 @@ object EditPairs {
     * when ≤ k, −1 past it. Ukkonen band (|i−j| ≤ k) with common
     * prefix/suffix trimming and row-min early abandon — ~6× cheaper
     * per rejected pair than the general code-point path (measured
-    * 3.8–4.4 µs → see ProfileEditPairs), because the hot loop reads
+    * 3.8–4.4 µs per pair, graft.Bench `dedup_fuzzy`), because the hot loop reads
     * bytes straight from the UTF8String with no code-point decode.
     * `dp` is caller-provided scratch (reused across the group's n²/2
     * pairs). Non-ASCII strings never reach this path.

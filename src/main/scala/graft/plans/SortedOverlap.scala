@@ -15,7 +15,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, S
   * This is the PPJoin verify kernel (ext/PpJoin.scala): the r18 shape
   * ran `size(array_intersect(ta, tb))` per candidate pair — a
   * per-row hash-set build over every element of both arrays — and the
-  * r19 phase split (ProfilePpJoinPhases) measured that at ~95% of the
+  * r19 phase split of graft.Bench `dedup_ppjoin` measured that at ~95% of the
   * verify stage's cost. The merge does zero allocation, compares
   * binary UTF8 order (exactly `array_sort`'s), and for dissimilar
   * pairs the bound trips long before the arrays are exhausted.

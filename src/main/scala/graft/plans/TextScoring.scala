@@ -192,110 +192,13 @@ private[plans] object ModelSearch {
   }
 }
 
-/** Context-count table derived from the GLOBAL bigram-count table:
-  * input `array<struct<bg: string, c2: long>>` sorted by bg, output
-  * `array<struct<w1: string, c1: long>>` sorted by w1, where
-  * `c1(w1) = Σ c2(bg)` over bigrams whose first token is `w1`.
-  *
-  * Exact because tokens contain no spaces (bg is
-  * `concat_ws(" ", w1, w2)`), so the prefix before the FIRST space
-  * recovers w1 byte-identically, and binary sort keeps each w1's
-  * bigrams contiguous (the prefix-range property — any string between
-  * two `"w1 "`-prefixed strings shares the prefix). The emitted w1
-  * sequence is already sorted unless some token carries a sub-space
-  * control byte (then `"ax …"` sorts before `"a …"` while
-  * `"a" < "ax"`), so sortedness is verified in one pass and a
-  * sort runs only in that pathological case. Entries whose bg has no
-  * space can only come from a null-member bigram (`concat_ws` skips
-  * nulls) — those never score (PerplexityScore skips null-w1 doc
-  * entries) and are excluded here, matching the composed form's inner
-  * join on the context key.
-  *
-  * Runs ONCE, on the one-row model fold — O(|bigram vocab|), zero
-  * exchange — replacing the grouping-sets leg that shipped a
-  * w1-grain set through the model exchange and doubled the expand.
-  */
-case class PrefixContextCounts(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    child.dataType match {
-      case ArrayType(StructType(Array(StructField(_, StringType, _, _),
-          StructField(_, LongType, _, _))), _) =>
-        TypeCheckResult.TypeCheckSuccess
-      case t => TypeCheckResult.TypeCheckFailure(
-        s"graft_prefix_c1 expects array<struct<bg, c2>>, got $t")
-    }
-
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("w1", StringType, nullable = false),
-    StructField("c1", LongType, nullable = false))), containsNull = false)
-
-  override def nullable: Boolean = child.nullable
-
-  override def nullSafeEval(v: Any): Any =
-    PrefixContextCounts.compute(v.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.plans.PrefixContextCounts.compute($c);")
-
-  override protected def withNewChildInternal(
-      newChild: Expression): PrefixContextCounts =
-    copy(child = newChild)
-}
-
-object PrefixContextCounts {
-  private val Space = UTF8String.fromString(" ")
-
-  def compute(c2arr: ArrayData): GenericArrayData = {
-    val n = c2arr.numElements()
-    val keys = new java.util.ArrayList[UTF8String](Math.min(n, 1024))
-    val sums = new java.util.ArrayList[Array[Long]](Math.min(n, 1024))
-    var i = 0
-    while (i < n) {
-      val e = c2arr.getStruct(i, 2)
-      val bg = e.getUTF8String(0)
-      val sp = bg.indexOf(Space, 0)
-      if (sp >= 0) { // no-space bg = null-member bigram: never scored
-        val w1 = bg.substring(0, sp)
-        val last = keys.size() - 1
-        if (last >= 0 && keys.get(last).equals(w1)) sums.get(last)(0) += e.getLong(1)
-        else { keys.add(w1); sums.add(Array(e.getLong(1))) }
-      }
-      i += 1
-    }
-    val m = keys.size()
-    val order = Array.tabulate(m)(identity)
-    var sorted = true
-    i = 1
-    while (i < m && sorted) {
-      if (keys.get(i - 1).compareTo(keys.get(i)) > 0) sorted = false
-      i += 1
-    }
-    if (!sorted) { // control-byte tokens only; ModelSearch needs sorted keys
-      val boxed = order.map(Integer.valueOf)
-      java.util.Arrays.sort(boxed,
-        java.util.Comparator.comparing[Integer, UTF8String](
-          (j: Integer) => keys.get(j)))
-      var b = 0
-      while (b < m) { order(b) = boxed(b); b += 1 }
-    }
-    val out = new Array[Any](m)
-    var k = 0
-    while (k < m) {
-      val j = order(k)
-      out(k) = new GenericInternalRow(Array[Any](keys.get(j), sums.get(j)(0)))
-      k += 1
-    }
-    new GenericArrayData(out)
-  }
-}
-
 /** The COMPLETE perplexity model from the global bigram table plus the
   * solo-token supplement: `graft_perplexity_model(c2arr, sup)` →
   * `struct(c2arr, c1arr, vs)` (the [[PerplexityScore]] input contract).
   * One walk over the bg-sorted c2 array derives the context table
-  * (prefix-contiguous sums, as [[PrefixContextCounts]]) AND the
+  * (prefix-contiguous sums: tokens hold no space, so a bg's prefix
+  * before its first space is its w1, and binary sort keeps each w1's
+  * bigrams contiguous) AND the
   * vocabulary size: every token of a ≥2-token document appears as the
   * w1 or w2 of one of its bigrams, so `vs = |{w1} ∪ {w2} ∪ sup|`
   * where `sup` is the `collect_set` of single-token documents' solo

@@ -517,7 +517,7 @@ object AnalyticsQueries {
     // count_distincts (which Expand-replicate every event row 3× + 1
     // before partial aggregation) — distinct-ness over the SAME column
     // folds from the flags (30× A/B 1.67 → 1.25 s,
-    // ProfileDistinctShapes, equality-pinned)
+    // graft.Bench `sketch_hll_setops`)
     val perUser = ev.groupBy(col("user_id"))
       .agg(max(when(col("s") === "click", 1).otherwise(0)).as("_c"),
         max(when(col("s") === "view", 1).otherwise(0)).as("_v"))
@@ -555,8 +555,7 @@ object AnalyticsQueries {
     // Bin assignment is then a map-side comparison against the
     // broadcast thresholds and the only exchange left carries
     // (group, bin)-grain partial aggregates — 20 rows. Measured 30×
-    // alternating A/B (ProfileBinningShapes, equality-pinned):
-    // see round 18 in COVERAGE.md at ff8d9ba. The oracle SQL keeps the
+    // alternating A/B (graft.Bench `binning_equidepth`, round 18). The oracle SQL keeps the
     // window form.
     equidepthBins(Tables.events(spark, dir)
       .select(col("event_type"), col("value"),
@@ -1208,7 +1207,7 @@ object AnalyticsQueries {
     //    max of the shifted sums IS the true peak. Window parallelism
     //    becomes |days|·24; denser corpora drop `sliceUs` to minutes.
     //
-    // ProfileConcSweep pins shape equality and the 30× A/B; the hour
+    // the oracle pins equality, graft.Bench `concurrency_sweep` the 30× A/B; the hour
     // shape costs one extra bounded-output aggregation job, which is
     // why it doesn't run unconditionally.
     val scanBytes = ev.queryExecution.optimizedPlan.stats.sizeInBytes

@@ -163,7 +163,7 @@ object OpsQueries {
       .withColumn("value_rt", get_json_object(col("payload"), "$.value").cast("double"))
       // materialized before the contract sort — range partitioning's
       // sampling job re-ran the to_json/get_json_object kernel
-      // (30× A/B 4.66 → 1.82 s, ProfileSortFamily, equality-pinned)
+      // (30× A/B 4.66 → 1.82 s, graft.Bench `json_roundtrip`)
       .localCheckpoint()
       .orderBy("event_id")
 
@@ -217,7 +217,7 @@ object OpsQueries {
           .as[Multimodal.MediaRow])
       .toDF()
       // sort-sampling rule: the frame-sampling kernel would run twice
-      // under the global sort (30× A/B 1.78 → 1.29 s, ProfileSortFamily)
+      // under the global sort (30× A/B 1.78 → 1.29 s, graft.Bench `multimodal_frames`)
       .localCheckpoint()
       .orderBy("id", "frame_idx")
   }
@@ -245,7 +245,7 @@ object OpsQueries {
     // no Expand, standard partial-distinct map side) plus one plain
     // agg for null/min/max, all legs concurrent, crossJoined into the
     // same 1-row frame. Measured 3.5 → 1.73 s at 30× (twin 0.10;
-    // ProfileColumnsShapes, equality-pinned). The scan-per-leg is the
+    // graft.Bench `profile_columns`). The scan-per-leg is the
     // right 100 TB trade too: each leg reads one column of a columnar
     // table instead of shipping 6× the full row width.
     val plainAggs: Seq[Column] =
@@ -357,8 +357,8 @@ object OpsQueries {
     * key) and a key verdict. One concurrent single-distinct leg per
     * candidate (no Expand — a multi-distinct agg replicates every row
     * once per distinct column before partial aggregation; the legs
-    * shape measured 1.92 → 1.35 s at 30×, ProfileKeysShapes,
-    * equality-pinned, same finding as [[profileColumns]]).
+    * shape measured 1.92 → 1.35 s at 30×, graft.Bench `profile_keys`,
+    * same finding as [[profileColumns]]).
     */
   def profileKeys(spark: SparkSession, dir: String): DataFrame = {
     val o = Tables.orders(spark, dir)
@@ -422,8 +422,7 @@ object OpsQueries {
     // Null semantics unchanged from the join this family replaced:
     // right-side nulls are filtered (null never matches), null probe
     // keys count as orphan rows, never as keys. Measured 30× A/B
-    // (ProfileInclusionShapes, equality-pinned — r18 in COVERAGE.md at
-    // ff8d9ba): a
+    // (graft.Bench `profile_inclusion`, r18): a
     // WASH vs the per-pair form (3.88 vs 3.66 s medians, overlapping
     // reps — the saved cadence is offset by lost fold concurrency);
     // kept for the structural shape: one exchange instead of four.

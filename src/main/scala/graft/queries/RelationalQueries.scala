@@ -108,7 +108,7 @@ object RelationalQueries {
 
   /** Bucketed co-located join behind the correctness gate: both sides
     * written bucketed on the join key (datasource tables, no Hive),
-    * then joined with broadcast disabled — the sort-merge join reads
+    * then joined under a `shuffle_merge` hint — the sort-merge join reads
     * pre-partitioned buckets with NO exchange on either side
     * (plan-guarded in `BucketingSpec`). This is how a 100 TB fact
     * table joins repeatedly without re-shuffling: pay the partition
@@ -168,20 +168,18 @@ object RelationalQueries {
 
   def joinBucketed(spark: SparkSession, dir: String): DataFrame = {
     val (liTab, ordTab) = ensureBucketedTables(spark, dir)
-    val saved = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      spark.table(liTab)
-        .join(spark.table(ordTab),
-          col("l_orderkey") === col("o_orderkey"))
-        .groupBy(year(col("o_orderdate")).cast("long").as("order_year"))
-        .agg(
-          round(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))), 2)
-            .as("revenue"),
-          round(sum(col("l_quantity")), 2).as("total_qty"),
-          count(lit(1)).as("n_items"))
-        .orderBy("order_year")
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", saved)
+    // the hint keeps the co-located sort-merge join that the bucketing
+    // exists for; without it the small orders side would broadcast
+    spark.table(liTab)
+      .join(spark.table(ordTab).hint("shuffle_merge"),
+        col("l_orderkey") === col("o_orderkey"))
+      .groupBy(year(col("o_orderdate")).cast("long").as("order_year"))
+      .agg(
+        round(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))), 2)
+          .as("revenue"),
+        round(sum(col("l_quantity")), 2).as("total_qty"),
+        count(lit(1)).as("n_items"))
+      .orderBy("order_year")
   }
 
   /** Bloom-pruned fact-dim join: the filtered dim's keys become a

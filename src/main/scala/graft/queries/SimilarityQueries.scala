@@ -84,7 +84,7 @@ object SimilarityQueries {
     Dedup.embeddingNearDups(Tables.embeddings(spark, dir), "vec_id", "embedding",
         blockCol = "label", minCosine = 0.3)
       // sort-sampling rule: the contract sort must not re-run the
-      // quadratic pair kernel (ProfileCosinePairs A/B)
+      // quadratic pair kernel (graft.Bench `dedup_embedding_cosine` A/B)
       .localCheckpoint()
       .orderBy("label", "id_a", "id_b")
 
@@ -132,7 +132,7 @@ object SimilarityQueries {
         round(scale, 6).as("scale"),
         concat_ws(",", Vectors.quantize(col("embedding"), scale)).as("qvec"))
       // sort-sampling rule: the quantize kernel would run twice under
-      // the global sort (30× A/B 2.43 → 1.47 s, ProfileSortFamily)
+      // the global sort (30× A/B 2.43 → 1.47 s, graft.Bench `embed_quantize`)
       .localCheckpoint()
       .orderBy("vec_id")
   }

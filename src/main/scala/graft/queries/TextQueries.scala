@@ -42,7 +42,7 @@ object TextQueries {
         Text.countIn(toks, stopwords).cast("long").as("n_stopwords"),
         Text.approxBpeTokenCount(toks).as("bpe_tokens"))
       // sort-sampling rule (see textRedact): kernel would run twice
-      // under the sort (30× A/B 1.10 → 0.88 s, ProfileSortFamily)
+      // under the sort (30× A/B 1.10 → 0.88 s, graft.Bench `text_stats`)
       .localCheckpoint()
       .orderBy("doc_id")
   }
@@ -61,7 +61,7 @@ object TextQueries {
         scores("fr").cast("long").as("s_fr"),
         scores("es").cast("long").as("s_es"),
         Text.argmaxLang(scores).as("lang_pred"))
-      // sort-sampling rule (30× A/B 0.85 → 0.76 s, ProfileSortFamily)
+      // sort-sampling rule (30× A/B 0.85 → 0.76 s, graft.Bench `text_langid`)
       .localCheckpoint()
       .orderBy("doc_id")
   }
@@ -77,7 +77,7 @@ object TextQueries {
         md5(col("text")).as("content_hash"),
         fp.getField("min_shingle_hash").as("min_shingle_hash"),
         fp.getField("n_winnow").as("n_winnow"))
-      // sort-sampling rule (30× A/B 0.75 → 0.66 s, ProfileSortFamily)
+      // sort-sampling rule (30× A/B 0.75 → 0.66 s, graft.Bench `text_fingerprint`)
       .localCheckpoint()
       .orderBy("doc_id")
   }
@@ -175,7 +175,7 @@ object TextQueries {
   def textTfidf(spark: SparkSession, dir: String): DataFrame =
     TfIdf.topTerms(Tables.documents(spark, dir), "doc_id", "text", k = 3)
       // sort-sampling rule: the sort would re-run the scoring stage
-      // (30× A/B 1.46 → 1.27 s, ProfileSortFamily; bm25's same shape
+      // (30× A/B 1.46 → 1.27 s, graft.Bench `text_tfidf`; bm25's same shape
       // measured a tie and stays lazy)
       .localCheckpoint()
       .orderBy("doc_id", "rank")
@@ -199,7 +199,7 @@ object TextQueries {
         (size(toks) - size(kept)).cast("long").as("n_removed"))
       // sort-sampling rule: the collapse+scrub kernel outweighs even
       // this row's large output bytes (30× A/B 1.36 → 1.11 s,
-      // ProfileSortFamily)
+      // graft.Bench `text_clean`)
       .localCheckpoint()
       .orderBy("doc_id")
   }
@@ -243,7 +243,7 @@ object TextQueries {
         "source", budget = 256)
       .select("doc_id", "source", "n_tokens", "start_offset",
         "chunk_idx", "chunk_id")
-      // sort-sampling rule (30× A/B 0.90 → 0.82 s, ProfileSortFamily)
+      // sort-sampling rule (30× A/B 0.90 → 0.82 s, graft.Bench `pack_sequences`)
       .localCheckpoint()
       .orderBy("doc_id")
   }
@@ -465,7 +465,7 @@ object TextQueries {
     // stream, both marginal tables, the total) and the static plan
     // embeds the scan→tokenize→explode→count subtree under each —
     // AQE stage reuse does NOT collapse them at runtime (A/B:
-    // ProfileCollocReuse, 0.89 → 0.67 s median, pairwise-consistent).
+    // graft.Bench `text_collocations`, 0.89 → 0.67 s median, pairwise-consistent).
     // c12 is bigram-TYPE-grained — vocab-bounded, far smaller than the
     // corpus — so the checkpoint is the cheap side, and the corpus is
     // tokenized once instead of four times (the 100 TB lever).
@@ -522,7 +522,7 @@ object TextQueries {
     // pass under TWO consumers and measured faster lazy, but this pass
     // is the family's most expensive kernel (bigram hashmap + concat
     // per token); even at TWO consumers the 30× A/B kept the
-    // checkpoint ahead (1.43 s ckpt vs 1.74 lazy, ProfilePerplexFuse).
+    // checkpoint ahead (1.43 s ckpt vs 1.74 lazy, graft.Bench `text_perplexity`).
     // The checkpoint carries ONLY doc_id + the bigram arrays + the
     // solo-token column — the r15 term_counts kernel and its tc array
     // bytes are gone entirely, because the vocabulary is DERIVABLE:
@@ -542,10 +542,10 @@ object TextQueries {
     // walks the bg-sorted c2 array once, emitting the context table
     // (c1(w1) = prefix-contiguous sum of the global bigram table) and
     // the vocab size (|{w1}∪{w2}∪solo|). Measured at 30× alternating
-    // A/B (ProfilePerplexPhases, equality-pinned): model fold 0.55 s
+    // A/B (graft.Bench `text_perplexity`): model fold 0.55 s
     // (two-exchange) → 0.48 s steady (TIA); the r15/r16 negatives
     // (derived-c1 table chain 2× slower, transform+concat fusion
-    // slower) were measured in ProfilePerplexVariants/Fuse.
+    // slower) were measured the same way.
     val model = pc
       .agg(column(BigramTableAgg(expression(col("bc"))).toAggregateExpression())
           .as("c2arr"),
@@ -557,7 +557,7 @@ object TextQueries {
     // over its child, which would otherwise re-execute the whole
     // broadcast+scoring stage a second time (measured: sort over the
     // lazy scored child 1.08 s vs 0.84 s over the checkpointed rows
-    // at 30×, ProfilePerplexSplit)
+    // at 30×, graft.Bench `text_perplexity`)
     pc.crossJoin(broadcast(model))
       .select(col("doc_id"),
         column(PerplexityScore(expression(col("bc")), expression(col("model"))))
@@ -582,7 +582,7 @@ object TextQueries {
       lit(" ip 10.0."), pmod(col("doc_id"), lit(256)), lit(".7"))
     // materialized before the contract sort: range partitioning's
     // sampling job would re-run the triple-regex kernel a second time
-    // (30× A/B: 2.58 → 1.72 s median, ProfileSortCkpt, equality-pinned)
+    // (30× A/B: 2.58 → 1.72 s median, graft.Bench `text_redact`)
     Tables.documents(spark, dir)
       .select(col("doc_id"),
         regexp_count(injected, lit(Text.EmailRe)).cast("long").as("n_emails"),
@@ -620,7 +620,7 @@ object TextQueries {
         (col("s.m2").cast("double") / col("s.t2")).as("top_bigram_frac"),
         (col("s.m3").cast("double") / col("s.t3")).as("top_trigram_frac"),
         (col("s.d3").cast("double") / col("s.t3")).as("dup_trigram_frac"))
-      // sort-sampling rule (30× A/B 0.78 → 0.67 s, ProfileSortFamily)
+      // sort-sampling rule (30× A/B 0.78 → 0.67 s, graft.Bench `text_repetition`)
       .localCheckpoint()
       .orderBy("doc_id")
   }
@@ -805,7 +805,7 @@ object TextQueries {
     // countDistinct shuffle PLUS a second full tokenize+explode pass
     // for the normalizer — AQE stage reuse does not collapse the
     // duplicated subtrees (measured on the sibling shape,
-    // ProfileCollocReuse). Exact integer counts either way. Cluster
+    // graft.Bench `text_collocations`). Exact integer counts either way. Cluster
     // deployment: lineage-truncating barrier — "Materialization
     // barriers" in COVERAGE.md at ff8d9ba.
     val types = bg.distinct().localCheckpoint()

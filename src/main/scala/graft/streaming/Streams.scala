@@ -99,31 +99,32 @@ object Streams {
       parts.head.toString
     })
 
-  /** Run `f` (a complete start→awaitTermination stream window) with
-    * AvailableNow's trailing NO-DATA micro-batch disabled: it exists
-    * to advance the watermark once more after the last data batch, but
-    * the engine's append-mode flows advance watermarks with explicit
-    * sentinel batches (eventsStream flushSentinel), so for THESE
-    * runners it is one extra round of planning/WAL/state-commit
-    * machinery per stream for zero rows. Scoped save→set→restore, NOT
-    * session-global: an external caller's own append-mode stream on
-    * the same session keeps Spark's default trailing batch (the conf
-    * is read at stream START, which `f` encloses).
-    */
-  private def withoutTrailingNoDataBatch[A](spark: SparkSession)(f: => A): A = {
-    val key = "spark.sql.streaming.noDataMicroBatches.enabled"
-    val saved = spark.conf.get(key)
-    spark.conf.set(key, "false")
-    try f finally spark.conf.set(key, saved)
-  }
+  private val ShufflePartitions = "spark.sql.shuffle.partitions"
 
-  /** Start the finite-replay stream produced by `start` (inside the
-    * no-trailing-no-data-batch window — the conf is captured into the
-    * query's cloned session during start()) and block until it drains.
+  /** Start the finite-replay stream produced by `start` and block
+    * until it drains. A stream reads its settings once, from the clone
+    * of `spark` that `start()` takes, so `confs` are set on `spark`
+    * only around `start()`, under the session's monitor (two streams
+    * starting on one session cannot interleave their set and restore),
+    * and restored before the wait. Always set: AvailableNow's trailing
+    * NO-DATA micro-batch is off. It exists to advance the watermark
+    * once more after the last data batch, but the engine's append-mode
+    * flows advance watermarks with explicit sentinel batches
+    * (eventsStream flushSentinel), so for THESE runners it is one extra
+    * round of planning/WAL/state-commit machinery per stream for zero
+    * rows.
     */
-  private def runDrained(spark: SparkSession)(
+  private def runDrained(spark: SparkSession, confs: (String, String)*)(
       start: => org.apache.spark.sql.streaming.StreamingQuery): Unit = {
-    val q = withoutTrailingNoDataBatch(spark)(start)
+    val set = ("spark.sql.streaming.noDataMicroBatches.enabled" -> "false") +: confs
+    val q = spark.synchronized {
+      val saved = set.map { case (k, _) => k -> spark.conf.getOption(k) }
+      set.foreach { case (k, v) => spark.conf.set(k, v) }
+      try start finally saved.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
+    }
     q.awaitTermination()
   }
 
@@ -304,7 +305,7 @@ object Streams {
     // arrival files verbatim driver-side (names + mtimes preserved, no
     // Spark job) and appends its two sentinel batches. Was: a fully
     // redundant second range split for the one sentinel config
-    // (ProfileSessionize: 1.13 s of the streaming_sessionize row).
+    // (1.13 s of the graft.Bench `streaming_sessionize` row).
     val staged = memoStage(stagedDirs,
         (dir, batches, filesPerBatch, flushSentinel, duplicated)) {
       if (!flushSentinel) stagePlain(spark, dir, batches, filesPerBatch,
@@ -351,9 +352,8 @@ object Streams {
     // micro-batch pays a per-partition state commit, so 32 partitions
     // for a few thousand keys is pure overhead (measured 2.7x on the
     // declared queries). At 100 TB key cardinality, raise it.
-    graft.operators.ShuffleWidth.withWidth(spark,
-        _ => statePartitions.toLong) {
-      runDrained(spark) { df.writeStream
+    runDrained(spark, ShufflePartitions -> statePartitions.toString) {
+      df.writeStream
         .outputMode(mode)
         .option("checkpointLocation", ckpt)
         .foreachBatch { (batch: DataFrame, _: Long) =>
@@ -362,7 +362,6 @@ object Streams {
         }
         .trigger(Trigger.AvailableNow())
         .start()
-      }
     }
   }
 
@@ -378,15 +377,15 @@ object Streams {
     */
   private def runToCompactedChangelog(df: DataFrame, mode: String,
       keys: Seq[String], versionCols: Seq[String],
-      statePartitions: Int = 4): DataFrame = {
+      statePartitions: Int = 4,
+      confs: Seq[(String, String)] = Nil): DataFrame = {
     val spark = df.sparkSession
     val log =
       scratch("graft-stream-sink").resolve("log").toString
     val ckpt = scratch("graft-ckpt").toString
     // see runToMergeSink for why state partitions are sized per stream
-    graft.operators.ShuffleWidth.withWidth(spark,
-        _ => statePartitions.toLong) {
-      runDrained(spark) { df.writeStream
+    runDrained(spark, (ShufflePartitions -> statePartitions.toString) +: confs: _*) {
+      df.writeStream
         .outputMode(mode)
         .option("checkpointLocation", ckpt)
         .foreachBatch { (batch: DataFrame, id: Long) =>
@@ -395,7 +394,6 @@ object Streams {
         }
         .trigger(Trigger.AvailableNow())
         .start()
-      }
     }
     // compaction: the latest emission per key wins (_batch_id breaks
     // ties between re-emissions that share version values). The
@@ -765,8 +763,8 @@ object Streams {
       .option("maxFilesPerTrigger", "1")
       .parquet(staged)
     // batch-sized shuffles (see lshDedupIncremental's sizing note)
-    graft.operators.ShuffleWidth.withWidth(spark, _ => 8L) {
-      runDrained(spark) { arriving.writeStream
+    runDrained(spark, ShufflePartitions -> "8") {
+      arriving.writeStream
         .outputMode("append")
         .option("checkpointLocation", s"$root/ckpt")
         .foreachBatch { (b: DataFrame, id: Long) =>
@@ -774,7 +772,6 @@ object Streams {
         }
         .trigger(Trigger.AvailableNow())
         .start()
-      }
     }
     val back = spark.read.parquet(data).select(
       col("shard").cast("long").as("shard"),
@@ -827,9 +824,14 @@ object Streams {
     // inherit-the-session-width (32+) partitions would pay ~10 task
     // launches per row batch across the probe's join/agg stages (same
     // sizing rationale as runToMergeSink's state partitions). At real
-    // batch volumes, raise with the batch size.
-    graft.operators.ShuffleWidth.withWidth(spark, _ => 8L) {
-      runDrained(spark) { arriving.writeStream
+    // batch volumes, raise with the batch size. The stream starts at
+    // width 8, and the probe's index and corpus sides live on a width-8
+    // clone (the clone reads the pinned index from the shared cache).
+    val sized = PlanDsl.withConf(spark, ShufflePartitions -> "8")
+    val idxSized = PlanDsl.ofRows(sized, idx.queryExecution.analyzed)
+    val corpusSized = PlanDsl.ofRows(sized, corpus.queryExecution.analyzed)
+    runDrained(spark, ShufflePartitions -> "8") {
+      arriving.writeStream
         .outputMode("append")
         .option("checkpointLocation", s"$root/ckpt")
         .foreachBatch { (b: DataFrame, batchId: Long) =>
@@ -839,12 +841,11 @@ object Streams {
           // holds each batch's verdicts exactly once — the same
           // replay-collapse guarantee the keyed merge-sink paths get
           // from their upsert.
-          graft.ext.Dedup.lshIndexProbe(idx, corpus, b, "doc_id", "text")
+          graft.ext.Dedup.lshIndexProbe(idxSized, corpusSized, b, "doc_id", "text")
             .write.mode("overwrite").parquet(s"$out/b$batchId")
         }
         .trigger(Trigger.AvailableNow())
         .start()
-      }
     }
     spark.read.option("recursiveFileLookup", "true").parquet(out)
     // the cache is scoped to the stream's lifetime (the comment at the
@@ -942,8 +943,8 @@ object Streams {
         .groupBy(col("day"), col("event_type"))
         .agg(count(lit(1)).as("n_events"), sum(col("cents")).as("value_cents")))
     val ckpt = scratch("graft-ckpt").toString
-    graft.operators.ShuffleWidth.withWidth(spark, _ => 4L) {
-      runDrained(spark) { eventsStream(spark, dir, batches = 3).writeStream
+    runDrained(spark, ShufflePartitions -> "4") {
+      eventsStream(spark, dir, batches = 3).writeStream
         .outputMode("append")
         .option("checkpointLocation", ckpt)
         .foreachBatch { (batch: DataFrame, id: Long) =>
@@ -960,7 +961,6 @@ object Streams {
         }
         .trigger(Trigger.AvailableNow())
         .start()
-      }
     }
     spark.read.parquet(view).orderBy("day", "event_type")
   }
@@ -1042,24 +1042,17 @@ object Streams {
     import spark.implicits._
     val evs: Dataset[Ev] = eventsStream(spark, dir, batches = 3)
       .select("event_id", "ts", "user_id", "event_type", "value").as[Ev]
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val savedProvider = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val updates = evs
-        .groupByKey(_.user_id)
-        .transformWithState(new LatestEvProcessor,
-          org.apache.spark.sql.streaming.TimeMode.None(),
-          org.apache.spark.sql.streaming.OutputMode.Update())
-      runToCompactedChangelog(updates.toDF(), "update",
-          keys = Seq("user_id"), versionCols = Seq("ts", "event_id"))
-        .select("user_id", "event_id", "event_type", "value")
-        .orderBy("user_id")
-    } finally savedProvider match {
-      case Some(v) => spark.conf.set(providerKey, v)
-      case None => spark.conf.unset(providerKey)
-    }
+    val updates = evs
+      .groupByKey(_.user_id)
+      .transformWithState(new LatestEvProcessor,
+        org.apache.spark.sql.streaming.TimeMode.None(),
+        org.apache.spark.sql.streaming.OutputMode.Update())
+    runToCompactedChangelog(updates.toDF(), "update",
+        keys = Seq("user_id"), versionCols = Seq("ts", "event_id"),
+        confs = Seq("spark.sql.streaming.stateStore.providerClass" ->
+          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"))
+      .select("user_id", "event_id", "event_type", "value")
+      .orderBy("user_id")
   }
 }
 

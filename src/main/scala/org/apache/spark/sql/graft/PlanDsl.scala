@@ -20,6 +20,20 @@ object PlanDsl {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     ClassicDataset.ofRows(spark.asInstanceOf[ClassicSparkSession], plan)
 
+  /** A clone of `spark` with `confs` set: the session a plan that needs
+    * its own settings (a sized shuffle width, a fetch batching knob)
+    * runs on. Move a DataFrame onto it with
+    * `ofRows(clone, df.queryExecution.analyzed)`, and its result back
+    * the same way. The clone shares the parent's SparkContext, cache
+    * and catalog, and the parent's conf never changes, so concurrent
+    * work on the parent is unaffected and nothing needs a lock.
+    */
+  def withConf(spark: SparkSession, confs: (String, String)*): SparkSession = {
+    val clone = spark.asInstanceOf[ClassicSparkSession].cloneSession()
+    confs.foreach { case (k, v) => clone.conf.set(k, v) }
+    clone
+  }
+
   /** A Catalyst expression as a Column: how the engine calls its native
     * expressions, on any session. An aggregate function goes in as its
     * `toAggregateExpression()`.

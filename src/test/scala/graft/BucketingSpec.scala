@@ -1,5 +1,8 @@
 package graft
 
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.Exchange
+import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, SortMergeJoinExec}
 import org.apache.spark.sql.functions._
 
 /** Bucketed-table co-located join: writing both join sides bucketed by
@@ -7,7 +10,7 @@ import org.apache.spark.sql.functions._
   * NO exchange on either side — the bucketing story for repeated big
   * joins at 100 TB (pay the shuffle once at write time).
   */
-class BucketingSpec extends SparkSpec {
+class BucketingSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   test("bucketed join plans without exchanges and matches unbucketed result") {
     // default warehouse dir (./spark-warehouse, gitignored) — the
@@ -67,5 +70,15 @@ class BucketingSpec extends SparkSpec {
       assert(joined.count() === raw.count())
     } finally
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
+  }
+
+  test("join_bucketed runs a co-located sort-merge join: no broadcast, no exchange below it") {
+    val df = SparkEntry.queries("join_bucketed")(spark, sf)
+    df.collect()
+    val plan = df.queryExecution.executedPlan
+    val joins = collect(plan) { case j: SortMergeJoinExec => j }
+    assert(joins.size == 1, plan)
+    assert(collect(plan) { case j: BroadcastHashJoinExec => j }.isEmpty, plan)
+    assert(collect(joins.head) { case e: Exchange => e }.isEmpty, joins.head)
   }
 }

@@ -1,8 +1,7 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.graft.PlanDsl
 
 import graft.pipeline.Medallion
 
@@ -33,7 +32,7 @@ class CodegenCacheSpec extends SparkSpec {
   }
 
   test("a warm re-run compiles nothing") {
-    val root = Files.createTempDirectory("graft-codegen-cache").toString
+    val root = PlanDsl.tempDir("graft-codegen-cache").toString
     // build, then two no-op runs: the high-watermark literals baked
     // into the generated code change until the second one
     (1 to 3).foreach(_ => Medallion.run(spark, sf, root))

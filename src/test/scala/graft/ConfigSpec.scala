@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.graft.PlanDsl
+
 /** Env-var configuration surface: reference defaults, readable
   * failures on malformed values, and the knobs actually steering the
   * components they claim to steer.
@@ -27,7 +29,7 @@ class ConfigSpec extends SparkSpec {
   }
 
   test("DBT_SCHEMA names the medallion warehouse layer, like the reference") {
-    val root = java.nio.file.Files.createTempDirectory("cfg-medallion").toString
+    val root = PlanDsl.tempDir("cfg-medallion").toString
     graft.pipeline.Medallion.run(spark, sf, root,
       Config(Map("DBT_SCHEMA" -> "analytics")))
     assert(new java.io.File(s"$root/analytics_daily").exists(),

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.PlanDsl
 
 import graft.ext.{Pack, Sampling}
 import graft.functions.Text
@@ -262,7 +263,7 @@ class CorpusOpsSpec extends SparkSpec {
 
   test("shard write: one file per shard dir, rows in sample order") {
     val docs = (1L to 250L).map(i => (i, s"doc-$i")).toDF("id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("graft-shards")
+    val dir = PlanDsl.tempDir("graft-shards")
       .resolve("s").toString
     Sampling.writeShards(docs, "id", dir, docsPerShard = 50, seed = "t0")
     val shardDirs = new java.io.File(dir).listFiles()
@@ -288,7 +289,7 @@ class CorpusOpsSpec extends SparkSpec {
 
   test("shard write rejects reserved coordinate column names") {
     val docs = (1L to 10L).map(i => (i, i % 3)).toDF("id", "shard")
-    val dir = java.nio.file.Files.createTempDirectory("graft-shards-r")
+    val dir = PlanDsl.tempDir("graft-shards-r")
       .resolve("s").toString
     val ex = intercept[IllegalArgumentException] {
       Sampling.writeShards(docs, "id", dir, docsPerShard = 5, seed = "t0")

@@ -5,6 +5,8 @@ import java.nio.charset.StandardCharsets
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 
+import org.apache.spark.sql.graft.PlanDsl
+
 import graft.sources.CheckWxSource
 
 /** The production `java.net.http` transport, proven against an
@@ -100,8 +102,7 @@ class HttpSourceSpec extends SparkSpec {
       else respond(ex, 200, body(extra = i >= 6))
     } { base =>
       val src = graft.sources.CheckWxSource.http("k", base = base, timeoutSeconds = 1)
-      val target = java.nio.file.Files
-        .createTempDirectory("graft-collector-soak").resolve("bronze").toString
+      val target = PlanDsl.tempDir("graft-collector-soak").resolve("bronze").toString
       val stats = graft.sources.Collector.run(spark, src, Seq("UUEE"), target,
         ticks = 5, intervalMillis = 300, retries = 3, retryDelayMillis = 50)
       // every tick landed despite the injected failures, via retries

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.PlanDsl
 
 import graft.ext.Similarity
 
@@ -16,7 +17,7 @@ class IvfIndexSpec extends SparkSpec {
   test("probe over a persisted centroid index: zero jobs, no retrain, same results") {
     import graft.operators.Versioned
     val q = emb.filter(col("vec_id") < 20)
-    val root = java.nio.file.Files.createTempDirectory("ivf-idx").toString
+    val root = PlanDsl.tempDir("ivf-idx").toString
     Versioned.write(spark, s"$root/centroids",
       Similarity.trainCentroids(emb, "embedding", "label"))
     val cents = Versioned.read(spark, s"$root/centroids")

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.PlanDsl
 
 import graft.operators.{Ivm, MergeWriter}
 
@@ -52,7 +53,7 @@ class IvmSpec extends SparkSpec {
 
   test("persisted view skips a replayed batch id (at-least-once safety)") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivm-spec")
+    val dir = PlanDsl.tempDir("graft-ivm-spec")
       .resolve("v").toString
     val d1 = Seq(("a", 10L, 1L), ("b", 5L, 1L)).toDF("k", "x", "_sign")
     Ivm.applyDeltaToTable(dir, d1, Seq("k"), "n", Seq("x" -> "sx"),

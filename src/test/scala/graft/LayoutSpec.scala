@@ -1,8 +1,7 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.PlanDsl
 
 import graft.functions.ZOrder
 import graft.operators.Layout
@@ -36,7 +35,7 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("zorderWrite tiles files into disjoint z-ranges with tight dim envelopes") {
-    val dirOut = Files.createTempDirectory("graft-zorder").toString
+    val dirOut = PlanDsl.tempDir("graft-zorder").toString
     val ev = Tables.events(spark, sf)
       .select(col("event_id"),
         (col("user_id") % 256).as("zx"),
@@ -76,7 +75,7 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("stats index prunes most files on a z-ordered table, losing no rows") {
-    val dirOut = Files.createTempDirectory("graft-skipidx").toString + "/t"
+    val dirOut = PlanDsl.tempDir("graft-skipidx").toString + "/t"
     val ev = Tables.events(spark, sf)
       .select(col("event_id"), col("value"),
         (col("user_id") % 256).as("zx"),
@@ -114,7 +113,7 @@ class LayoutSpec extends SparkSpec {
 
   test("writeStatsIndex covers appended files and a hive-partitioned layout") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-stats").toString + "/t"
+    val dir = PlanDsl.tempDir("graft-stats").toString + "/t"
     (0L until 100L).map(i => (i, i % 10)).toDF("id", "zx")
       .repartition(2).write.parquet(dir)
     Layout.writeStatsIndex(spark, dir, Seq("zx"))
@@ -129,7 +128,7 @@ class LayoutSpec extends SparkSpec {
       .count() === (100L until 160L).count(i => (10 + i % 5) >= 12 && (10 + i % 5) <= 14))
     // data files two levels down (day=X/part-*.parquet), the partition
     // column itself indexed
-    val part = Files.createTempDirectory("graft-stats-part").toString + "/t"
+    val part = PlanDsl.tempDir("graft-stats-part").toString + "/t"
     (0L until 100L).map(i => (i, i % 10, s"2024-01-0${i % 3 + 1}"))
       .toDF("id", "zx", "day")
       .write.partitionBy("day").parquet(part)

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.PlanDsl
 
 import graft.ext.Dedup
 import graft.operators.Versioned
@@ -16,7 +17,7 @@ class LshIndexSpec extends SparkSpec {
     val docs = Tables.documents(spark, sf)
     val corpus = docs.filter(col("doc_id") % 5 =!= 0)
     val batch = docs.filter(col("doc_id") % 5 === 0)
-    val root = java.nio.file.Files.createTempDirectory("lsh-idx").toString
+    val root = PlanDsl.tempDir("lsh-idx").toString
     Versioned.write(spark, s"$root/bands",
       Dedup.minhashBands(corpus, "doc_id", "text")
         .select(col("doc_id").as("c_id"),
@@ -70,7 +71,7 @@ class LshIndexSpec extends SparkSpec {
     val docs = Tables.documents(spark, sf)
     val corpus = docs.filter(col("doc_id") % 5 =!= 0)
     val batch = docs.filter(col("doc_id") % 5 === 0)
-    val root = java.nio.file.Files.createTempDirectory("lsh-semi").toString
+    val root = PlanDsl.tempDir("lsh-semi").toString
     Versioned.write(spark, s"$root/bands",
       Dedup.minhashBands(corpus, "doc_id", "text")
         .select(col("doc_id").as("c_id"),

@@ -1,8 +1,7 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.PlanDsl
 
 import graft.pipeline.Medallion
 
@@ -28,7 +27,7 @@ class MedallionJobsSpec extends SparkSpec {
   }.mkString("\n  ", "\n  ", "")
 
   test("a medallion tick pays its job budget, every job a SQL execution") {
-    val landing = Files.createTempDirectory("graft-medallion-jobs")
+    val landing = PlanDsl.tempDir("graft-medallion-jobs")
     val events = s"$landing/events.parquet"
     val root = landing.resolve("mat").toString
     // the base ends mid-day, so the later slice re-opens one existing

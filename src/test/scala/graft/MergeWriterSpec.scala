@@ -1,8 +1,7 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.PlanDsl
 
 import graft.operators.MergeWriter
 
@@ -13,7 +12,7 @@ import graft.operators.MergeWriter
 class MergeWriterSpec extends SparkSpec {
 
   private def tmp(): String =
-    Files.createTempDirectory("graft-test-merge").resolve("t").toString
+    PlanDsl.tempDir("graft-test-merge").resolve("t").toString
 
   test("upsert is idempotent under replay (K2)") {
     import spark.implicits._

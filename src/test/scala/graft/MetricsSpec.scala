@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.PlanDsl
 
 import graft.pipeline.Metrics
 
@@ -18,7 +19,7 @@ class MetricsSpec extends SparkSpec {
         .filter(col("event_type") === "purchase")
         .observe("filtered", count(lit(1)).as("rows_out"))
         .write.mode("overwrite")
-        .parquet(java.nio.file.Files.createTempDirectory("graft-obs").toString + "/out")
+        .parquet(PlanDsl.tempDir("graft-obs").toString + "/out")
 
       // listener delivery is async (ExecutionListenerBus): wait for it
       var waited = 0
@@ -32,7 +33,7 @@ class MetricsSpec extends SparkSpec {
       assert(byName("ingest")("rows_in") == total)
       assert(byName("filtered")("rows_out") == kept)
 
-      val dir = java.nio.file.Files.createTempDirectory("graft-mon").toString + "/m"
+      val dir = PlanDsl.tempDir("graft-mon").toString + "/m"
       Metrics.record(spark, dir, "run1", collector.snapshot)
       val hist = Metrics.history(spark, dir)
       assert(hist.filter(col("observation") === "ingest" &&

@@ -4,6 +4,8 @@ import java.nio.file.{Files, Path, Paths}
 
 import org.scalacheck.{Gen, Prop, Properties, Test}
 
+import org.apache.spark.sql.graft.PlanDsl
+
 import graft.operators.Persisted
 
 /** ScalaCheck properties over the persisted-artifact publish protocol
@@ -72,7 +74,7 @@ object PersistedPropertySpec extends Properties("graft.persisted") {
 
   property("racing builders + TTL reclaim/janitor: loud failures, one artifact, no husk, convergence") =
     Prop.forAll(trialGen) { t =>
-      val artRoot = Files.createTempDirectory("graft-pprop").toString
+      val artRoot = PlanDsl.tempDir("graft-pprop").toString
       spark.conf.set("spark.graft.persisted.root", s"file:$artRoot")
       spark.conf.set("spark.graft.persisted.staleMs", t.staleMs.toString)
       spark.conf.set("spark.graft.persisted.publishWaitMs", "2500")

@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import org.apache.spark.sql.graft.PlanDsl
+
 import graft.operators.Persisted
 
 /** Lifecycle contract of the persisted-artifact helper: recursive
@@ -20,7 +22,7 @@ class PersistedSpec extends SparkSpec {
   }
 
   test("signature walks partitioned directories recursively") {
-    val dir = Files.createTempDirectory("graft-psig").toString
+    val dir = PlanDsl.tempDir("graft-psig").toString
     write(s"$dir/day=2024-01-01/part-0.parquet", 10)
     write(s"$dir/day=2024-01-02/part-0.parquet", 10)
     val s1 = Persisted.signature(spark, Seq("x"), Seq(dir))
@@ -42,7 +44,7 @@ class PersistedSpec extends SparkSpec {
   }
 
   test("ensure builds once and re-attaches under a configured root") {
-    val artRoot = Files.createTempDirectory("graft-proot").toString
+    val artRoot = PlanDsl.tempDir("graft-proot").toString
     spark.conf.set("spark.graft.persisted.root", s"file:$artRoot")
     try {
       var builds = 0
@@ -65,7 +67,7 @@ class PersistedSpec extends SparkSpec {
   }
 
   test("a partial artifact (no _DONE) is never attachable") {
-    val artRoot = Files.createTempDirectory("graft-proot2").toString
+    val artRoot = PlanDsl.tempDir("graft-proot2").toString
     spark.conf.set("spark.graft.persisted.root", s"file:$artRoot")
     spark.conf.set("spark.graft.persisted.publishWaitMs", "200")
     try {
@@ -97,7 +99,7 @@ class PersistedSpec extends SparkSpec {
     // with the data can appear before the data finishes copying. The
     // marker must therefore never exist inside the staging dir the
     // build sees — it is created in base, post-rename.
-    val artRoot = Files.createTempDirectory("graft-proot3").toString
+    val artRoot = PlanDsl.tempDir("graft-proot3").toString
     spark.conf.set("spark.graft.persisted.root", s"file:$artRoot")
     try {
       var stagingSeen: String = null
@@ -113,7 +115,7 @@ class PersistedSpec extends SparkSpec {
   }
 
   test("a crashed publish (stale base, no _DONE) is reclaimed past TTL") {
-    val artRoot = Files.createTempDirectory("graft-proot4").toString
+    val artRoot = PlanDsl.tempDir("graft-proot4").toString
     spark.conf.set("spark.graft.persisted.root", s"file:$artRoot")
     spark.conf.set("spark.graft.persisted.staleMs", "0")
     try {
@@ -136,7 +138,7 @@ class PersistedSpec extends SparkSpec {
   }
 
   test("a concurrent race publishes once; the loser attaches the winner's build") {
-    val artRoot = Files.createTempDirectory("graft-proot6").toString
+    val artRoot = PlanDsl.tempDir("graft-proot6").toString
     spark.conf.set("spark.graft.persisted.root", s"file:$artRoot")
     try {
       val builds = new java.util.concurrent.atomic.AtomicInteger(0)
@@ -175,7 +177,7 @@ class PersistedSpec extends SparkSpec {
     // f.create(done) would re-create base as a directory holding only
     // _DONE — a corrupt artifact every reader attaches. The token
     // check must fail loud instead.
-    val artRoot = Files.createTempDirectory("graft-proot7").toString
+    val artRoot = PlanDsl.tempDir("graft-proot7").toString
     spark.conf.set("spark.graft.persisted.root", s"file:$artRoot")
     spark.conf.set("spark.graft.persisted.publishWaitMs", "200")
     val base = Paths.get(s"$artRoot/spec-toctou-s1")
@@ -213,7 +215,7 @@ class PersistedSpec extends SparkSpec {
     // refuse, and the loud timeout error must name the NESTED path
     // (the old message claimed the original staging path, which no
     // longer exists).
-    val artRoot = Files.createTempDirectory("graft-proot8").toString
+    val artRoot = PlanDsl.tempDir("graft-proot8").toString
     spark.conf.set("spark.graft.persisted.root", s"file:$artRoot")
     spark.conf.set("spark.graft.persisted.staleMs", "0")
     spark.conf.set("spark.graft.persisted.publishWaitMs", "200")
@@ -248,7 +250,7 @@ class PersistedSpec extends SparkSpec {
     // create(done) — the create then re-creates base as a _DONE-only
     // husk. The post-write verification must re-check the token,
     // retract the marker and fail loud; no husk may stay attachable.
-    val artRoot = Files.createTempDirectory("graft-proot9").toString
+    val artRoot = PlanDsl.tempDir("graft-proot9").toString
     spark.conf.set("spark.graft.persisted.root", s"file:$artRoot")
     spark.conf.set("spark.graft.persisted.publishWaitMs", "200")
     val base = Paths.get(s"$artRoot/spec-midmark-s1")
@@ -281,7 +283,7 @@ class PersistedSpec extends SparkSpec {
     // marker write runs, the EXCLUSIVE create must fail loud and the
     // successor's marker must survive — overwrite-then-retract would
     // destroy a legitimate artifact whose builder already returned
-    val artRoot = Files.createTempDirectory("graft-proot11").toString
+    val artRoot = PlanDsl.tempDir("graft-proot11").toString
     spark.conf.set("spark.graft.persisted.root", s"file:$artRoot")
     spark.conf.set("spark.graft.persisted.publishWaitMs", "200")
     val base = Paths.get(s"$artRoot/spec-super-s1")
@@ -326,7 +328,7 @@ class PersistedSpec extends SparkSpec {
     // the one base path; the end state never shows _DONE without data
     // (the husk); and an uncontended call afterwards converges to a
     // valid marked artifact.
-    val artRoot = Files.createTempDirectory("graft-proot10").toString
+    val artRoot = PlanDsl.tempDir("graft-proot10").toString
     spark.conf.set("spark.graft.persisted.root", s"file:$artRoot")
     spark.conf.set("spark.graft.persisted.staleMs", "40")
     spark.conf.set("spark.graft.persisted.publishWaitMs", "2000")
@@ -379,7 +381,7 @@ class PersistedSpec extends SparkSpec {
   }
 
   test("janitor sweeps stale orphaned stagings, keeps live ones") {
-    val artRoot = Files.createTempDirectory("graft-proot5").toString
+    val artRoot = PlanDsl.tempDir("graft-proot5").toString
     spark.conf.set("spark.graft.persisted.root", s"file:$artRoot")
     spark.conf.set("spark.graft.persisted.staleMs", "60000")
     try {

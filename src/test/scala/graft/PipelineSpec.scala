@@ -3,6 +3,7 @@ package graft
 import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.PlanDsl
 
 import graft.ext.Multimodal
 import graft.metar.{MetarFixture, Normalize}
@@ -30,7 +31,7 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("medallion re-run is a no-op (replay idempotence)") {
-    val root = Files.createTempDirectory("graft-medallion-test").toString
+    val root = PlanDsl.tempDir("graft-medallion-test").toString
     val first = Medallion.run(spark, sf, root).orderBy("user_id", "day").collect()
     val second = Medallion.run(spark, sf, root).orderBy("user_id", "day").collect()
     assert(first.sameElements(second))
@@ -38,7 +39,7 @@ class PipelineSpec extends SparkSpec {
 
   test("medallion self-heals a crash between the stg merge and downstream merges") {
     import spark.implicits._
-    val root = Files.createTempDirectory("graft-medallion-crash").toString
+    val root = PlanDsl.tempDir("graft-medallion-crash").toString
     Medallion.run(spark, sf, root)
     // simulate the crash window: a batch lands in stg (as a dying run
     // would leave it) but int/dwh never saw it — the NEXT run must
@@ -67,7 +68,7 @@ class PipelineSpec extends SparkSpec {
     * one-shot build over everything landed.
     */
   private class Arrivals(name: String) {
-    val landing = Files.createTempDirectory(name)
+    val landing = PlanDsl.tempDir(name)
     val root = landing.resolve("mat").toString
     val dwh = s"${graft.Config().schema}_daily"
     val hfs = new org.apache.hadoop.fs.Path(root)
@@ -161,7 +162,7 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("a fresh medallion root holds the three layers, the watermark inside int_latest") {
-    val root = Files.createTempDirectory("graft-medallion-layout").toString
+    val root = PlanDsl.tempDir("graft-medallion-layout").toString
     Medallion.run(spark, sf, root)
     val layers = new java.io.File(root).listFiles().map(_.getName)
       .filterNot(_.startsWith(".")).toSet
@@ -171,7 +172,7 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("medallion stg watermark: a first build stages every row, a boundary-ts arrival is not restaged (F2)") {
-    val landing = Files.createTempDirectory("graft-medallion-f2")
+    val landing = PlanDsl.tempDir("graft-medallion-f2")
     val events = s"$landing/events.parquet"
     val root = landing.resolve("mat").toString
     val slice = Tables.events(spark, sf)
@@ -203,10 +204,10 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("medallion: empty-source first build materializes nothing, then self-heals") {
-    val emptyDir = Files.createTempDirectory("graft-empty-src").toString
+    val emptyDir = PlanDsl.tempDir("graft-empty-src").toString
     Tables.events(spark, sf).limit(0)
       .write.parquet(s"$emptyDir/events.parquet")
-    val root = Files.createTempDirectory("graft-medallion-empty").toString
+    val root = PlanDsl.tempDir("graft-medallion-empty").toString
     // zero rows: no layer dir may appear (a schema-less partitioned dir
     // would wedge every later run), and the returned mart is a typed
     // empty
@@ -311,7 +312,7 @@ class PipelineSpec extends SparkSpec {
 
   test("run-history anomalies flag a drifted run, first run has no score (Q7)") {
     import spark.implicits._
-    val monitor = Files.createTempDirectory("graft-monitor-test")
+    val monitor = PlanDsl.tempDir("graft-monitor-test")
       .resolve("m").toString
     for (r <- 1 to 5) {
       val v = if (r == 5) 500.0 else 10.0 + r * 0.01 // run 5 drifts hard
@@ -326,7 +327,7 @@ class PipelineSpec extends SparkSpec {
 
   test("run history orders by ingestion stamp and separates metric columns") {
     import spark.implicits._
-    val monitor = Files.createTempDirectory("graft-monitor-lex")
+    val monitor = PlanDsl.tempDir("graft-monitor-lex")
       .resolve("m").toString
     // 11 runs: lexicographic run_id order (r1, r10, r11, r2, ...) is
     // WRONG — r10/r11 would see only r1 as history and r2..r9 would
@@ -382,7 +383,7 @@ class PipelineSpec extends SparkSpec {
 
   test("persisted schema snapshots diff across runs (Q6)") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-schema-test").resolve("s").toString
+    val dir = PlanDsl.tempDir("graft-schema-test").resolve("s").toString
     Anomaly.recordSchema(spark, dir, Seq((1L, "a")).toDF("id", "x"), "r1")
     Anomaly.recordSchema(spark, dir, Seq((1L, "a")).toDF("id", "x"), "r2")
     Anomaly.recordSchema(spark, dir, Seq((1, "a", 0.5)).toDF("id", "x", "y"), "r3")
@@ -398,7 +399,7 @@ class PipelineSpec extends SparkSpec {
 
   test("schema drift orders by ingestion, not lexicographic run_id") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-schema-lex").resolve("s").toString
+    val dir = PlanDsl.tempDir("graft-schema-lex").resolve("s").toString
     // 'r10' > 'r9' chronologically but 'r10' < 'r9' lexicographically —
     // a string-ordered prune would diff these backwards
     Anomaly.recordSchema(spark, dir, Seq((1L, "a")).toDF("id", "x"), "r9")
@@ -410,7 +411,7 @@ class PipelineSpec extends SparkSpec {
 
   test("schema drift reads mixed legacy/stamped history files") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-schema-legacy").resolve("s").toString
+    val dir = PlanDsl.tempDir("graft-schema-legacy").resolve("s").toString
     // a pre-stamp deployment appended 3-column snapshots (no
     // recorded_at); later stamped 4-column files land in the same dir.
     // Schema resolution must MERGE the footers — if the legacy file's

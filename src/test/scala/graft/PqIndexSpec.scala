@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.PlanDsl
 
 import graft.ext.Pq
 
@@ -69,7 +70,7 @@ class PqIndexSpec extends SparkSpec {
   test("probe over a PERSISTED index matches and rebuilds nothing") {
     import graft.operators.Versioned
     val q = emb.filter(col("vec_id") < 10)
-    val root = java.nio.file.Files.createTempDirectory("pq-idx").toString
+    val root = PlanDsl.tempDir("pq-idx").toString
     Versioned.write(spark, s"$root/codebook",
       Pq.trainCodebook(emb, "embedding", "label", 16, 64))
     val cb = Versioned.read(spark, s"$root/codebook")

@@ -3,6 +3,7 @@ package graft
 import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.PlanDsl
 import org.apache.spark.sql.streaming.Trigger
 
 /** The production trigger path: the reference's 30-min cron cadence
@@ -27,12 +28,12 @@ class ProcessingTimeSpec extends SparkSpec {
 
   test("ProcessingTime trigger commits multiple micro-batches into the merge sink") {
     import spark.implicits._
-    val in = Files.createTempDirectory("pt-in").toString
-    val target = Files.createTempDirectory("pt-out").resolve("t").toString
-    val ckpt = Files.createTempDirectory("pt-ckpt").toString
+    val in = PlanDsl.tempDir("pt-in").toString
+    val target = PlanDsl.tempDir("pt-out").resolve("t").toString
+    val ckpt = PlanDsl.tempDir("pt-ckpt").toString
 
     def writeFile(rows: Seq[(Long, Long)], name: String): Unit = {
-      val tmp = Files.createTempDirectory("pt-stage").toString
+      val tmp = PlanDsl.tempDir("pt-stage").toString
       rows.toDF("id", "v").coalesce(1).write.mode("overwrite").parquet(tmp)
       val part = new java.io.File(tmp).listFiles()
         .filter(_.getName.startsWith("part-")).head

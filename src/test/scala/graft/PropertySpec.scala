@@ -1,8 +1,8 @@
 package graft
 
-import java.nio.file.Files
-
 import org.scalacheck.{Gen, Prop, Properties, Test}
+
+import org.apache.spark.sql.graft.PlanDsl
 
 import graft.operators.{LatestPerKey, MergeWriter}
 import graft.ref.LatestPerKeyRef
@@ -35,7 +35,7 @@ object PropertySpec extends Properties("graft") {
   }
 
   property("upsert replay is idempotent") = Prop.forAll(batchGen) { rows =>
-    val dir = Files.createTempDirectory("graft-prop").resolve("t").toString
+    val dir = PlanDsl.tempDir("graft-prop").resolve("t").toString
     val b = df(rows)
     MergeWriter.upsert(spark, dir, b, Seq("id"), Seq("v"))
     val once = spark.read.parquet(dir).collect().toSet
@@ -46,7 +46,7 @@ object PropertySpec extends Properties("graft") {
 
   property("upsert of split batches == latest-per-key of the union") =
     Prop.forAll(batchGen) { rows =>
-      val dir = Files.createTempDirectory("graft-prop").resolve("t").toString
+      val dir = PlanDsl.tempDir("graft-prop").resolve("t").toString
       val (b1, b2) = rows.splitAt(rows.length / 2)
       // global version uniqueness so batch order cannot matter
       val u1 = b1.zipWithIndex.map { case ((i, v, p), n) => (i, v * 2, p) }

@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.graft.PlanDsl
+
 import graft.quality.{Checks, Report}
 
 /** Rendered DQ report (the `edr report` equivalent): structure,
@@ -45,7 +47,7 @@ class ReportSpec extends SparkSpec {
   }
 
   test("write lands a self-contained page on the filesystem") {
-    val path = Files.createTempDirectory("graft-report")
+    val path = PlanDsl.tempDir("graft-report")
       .resolve("dq.html").toString
     Report.write(spark, path, "nightly dq",
       Seq(("checks", demoChecks())))

@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.PlanDsl.{column, expression}
 
@@ -195,37 +197,30 @@ class RobustStatsSpec extends SparkSpec {
     assert(inverted.getMessage.contains("aggCap"), inverted.getMessage)
   }
 
-  test("grouped quantiles: the fetch window is per session, so two sessions do not serialize") {
-    // fetchHist raises a SESSION conf around its blocking take; the
-    // window is serialized per session, so holding one session's lock
-    // (as a long fetch would) must not stall a fetch on another
-    import java.util.concurrent.{CountDownLatch, TimeUnit}
-    val other = GraftSession.prepare(spark.newSession())
-    val lock = graft.ext.Quantiles.fetchConfLock(spark)
-    assert(lock eq graft.ext.Quantiles.fetchConfLock(spark))
-    assert(lock ne graft.ext.Quantiles.fetchConfLock(other))
-    val held, release = new CountDownLatch(1)
-    val holder = new Thread(() => lock.synchronized {
-      held.countDown(); release.await()
-    })
-    holder.start()
-    try {
-      assert(held.await(30, TimeUnit.SECONDS))
-      val df = other.range(1, 41).selectExpr("cast(id % 2 as string) as g",
+  test("grouped quantiles: the histogram fetch leaves the session's limit conf unchanged") {
+    // the one-round fetch raises spark.sql.limit.initialNumPartitions
+    // on a clone of the session, never on the session itself, so a
+    // query running beside it keeps executeTake's default scale-up
+    val key = "spark.sql.limit.initialNumPartitions"
+    val before = spark.conf.get(key)
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    @volatile var done = false
+    val poller = new Thread(() =>
+      while (!done) {
+        seen.add(spark.conf.get(key))
+        Thread.sleep(1)
+      })
+    poller.start()
+    val got = try {
+      val df = spark.range(1, 41).selectExpr("cast(id % 2 as string) as g",
         "cast(id as double) as v")
-      val got = new java.util.concurrent.atomic.AtomicReference[
-        Map[String, Double]]()
-      val fetch = new Thread(() => got.set(graft.ext.Quantiles
-        .groupedExact(df, "g", "v", Seq(0.5))
-        .map { case (g, _, vs) => (g, vs.head.get) }.toMap))
-      fetch.start()
-      fetch.join(TimeUnit.MINUTES.toMillis(2))
-      assert(!fetch.isAlive, "a fetch on another session waited on this session's lock")
-      assert(got.get == Map("0" -> 21.0, "1" -> 20.0), got.get)
-    } finally {
-      release.countDown()
-      holder.join()
-    }
+      graft.ext.Quantiles.groupedExact(df, "g", "v", Seq(0.5))
+        .map { case (g, _, vs) => (g, vs.head.get) }.toMap
+    } finally { done = true; poller.join() }
+    assert(got == Map("0" -> 21.0, "1" -> 20.0), got)
+    assert(!seen.isEmpty)
+    assert(seen.asScala.toSet == Set(before), seen)
+    assert(spark.conf.get(key) == before)
   }
 
   test("graft_sortable_bits is order-isomorphic to Double.compare on the edge doubles") {

@@ -1,8 +1,7 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.PlanDsl
 
 import graft.streaming.Streams
 
@@ -16,7 +15,7 @@ class ShardAppendSpec extends SparkSpec {
       .orderBy("doc_id").collect().toSeq
 
   test("shard append: ids continue across batches, none rewritten") {
-    val root = Files.createTempDirectory("graft-sa").toString
+    val root = PlanDsl.tempDir("graft-sa").toString
     val (data, counts) = (s"$root/data", s"$root/counts")
     val b0 = (1L to 130L).map(i => (i, s"d$i")).toDF("doc_id", "text")
     val b1 = (201L to 280L).map(i => (i, s"d$i")).toDF("doc_id", "text")
@@ -39,7 +38,7 @@ class ShardAppendSpec extends SparkSpec {
     // zero-row frame; it must commit a 0-shard manifest, write no
     // data, and leave the NEXT batch's shard offset where the previous
     // non-empty batch put it
-    val root = Files.createTempDirectory("graft-sa-e").toString
+    val root = PlanDsl.tempDir("graft-sa-e").toString
     val (data, counts) = (s"$root/data", s"$root/counts")
     val b0 = (1L to 60L).map(i => (i, s"d$i")).toDF("doc_id", "text")
     val empty = b0.filter(lit(false))
@@ -62,7 +61,7 @@ class ShardAppendSpec extends SparkSpec {
   }
 
   test("shard append: a replayed batch overwrites exactly itself") {
-    val root = Files.createTempDirectory("graft-sa-r").toString
+    val root = PlanDsl.tempDir("graft-sa-r").toString
     val (data, counts) = (s"$root/data", s"$root/counts")
     val b0 = (1L to 60L).map(i => (i, s"d$i")).toDF("doc_id", "text")
     val b1 = (101L to 170L).map(i => (i, s"d$i")).toDF("doc_id", "text")

@@ -4,6 +4,8 @@ import java.nio.file.{Files, Path, Paths}
 
 import org.scalacheck.{Gen, Prop, Properties, Test}
 
+import org.apache.spark.sql.graft.PlanDsl
+
 import graft.streaming.Streams
 
 /** ScalaCheck properties over the persisted shard-append staging
@@ -76,7 +78,7 @@ object ShardStagingPropertySpec extends Properties("graft.shardstaging") {
 
   property("staged arrivals replay identically and partition the corpus") =
     Prop.forAll(genTrial) { t =>
-      val work = Files.createTempDirectory("graft-shardstage-prop")
+      val work = PlanDsl.tempDir("graft-shardstage-prop")
       val artRoot = work.resolve("artifacts")
       Files.createDirectories(artRoot)
       spark.conf.set("spark.graft.persisted.root", s"file:$artRoot")

@@ -72,4 +72,41 @@ class SourceHygieneSpec extends AnyFunSuite {
         "move a spec-only member to src/test/scala/graft/ref or delete it; " +
         s"allow-listed but now reached: ${(UnreachedByDesign -- unreached).mkString(", ")}")
   }
+
+  test("session confs are set only where a plan takes its settings") {
+    // a plan that needs its own settings runs on a clone
+    // (PlanDsl.withConf) or, for a stream, gets them around start()
+    // (Streams.runDrained); only session preparation and the events
+    // loader set the caller's session for good
+    val Allowed = Set("GraftSession.scala" -> "prepare", "Tables.scala" -> "events",
+      "PlanDsl.scala" -> "withConf", "Streams.scala" -> "runDrained")
+    val Def = """\bdef ([A-Za-z0-9_]+)""".r
+    val setters = mainSources.flatMap { p =>
+      var enclosing = ""
+      Files.readAllLines(p).asScala.toSeq.zipWithIndex.flatMap { case (line, i) =>
+        Def.findFirstMatchIn(line).foreach(m => enclosing = m.group(1))
+        if (line.contains("conf.set(") || line.contains("conf.unset("))
+          Some((p.getFileName.toString -> enclosing, s"$p:${i + 1}"))
+        else None
+      }
+    }
+    assert(setters.nonEmpty, "no conf setter found: the scan is broken")
+    val stray = setters.filterNot { case (site, _) => Allowed(site) }.map(_._2)
+    assert(stray.isEmpty,
+      s"session conf set outside ${Allowed.mkString(", ")}: ${stray.mkString(", ")} " +
+        "(run the plan on PlanDsl.withConf's clone instead)")
+  }
+
+  test("specs make scratch dirs only through PlanDsl.tempDir, which deletes them at exit") {
+    val self = "SourceHygieneSpec.scala"
+    val direct = filesUnder("src/test/scala")
+      .filter(p => p.toString.endsWith(".scala") && p.getFileName.toString != self)
+      .flatMap { p =>
+        Files.readAllLines(p).asScala.toSeq.zipWithIndex.collect {
+          case (line, i) if line.contains("createTempDirectory") => s"$p:${i + 1}"
+        }
+      }
+    assert(direct.isEmpty,
+      s"scratch dirs nothing deletes (use PlanDsl.tempDir): ${direct.mkString(", ")}")
+  }
 }

@@ -1,8 +1,7 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.PlanDsl
 
 import graft.operators.Sessionize
 import graft.streaming.Streams
@@ -39,7 +38,7 @@ class StreamingSinkSpec extends SparkSpec {
   }
 
   test("stream foreachBatch -> merge sink lands exactly the source rows") {
-    val target = Files.createTempDirectory("graft-sink").resolve("t").toString
+    val target = PlanDsl.tempDir("graft-sink").resolve("t").toString
     val result = Streams.dedupToMergeSink(spark, sf, target)
     val source = Tables.events(spark, sf)
     assert(result.count() === source.count())
@@ -67,7 +66,7 @@ class StreamingSinkSpec extends SparkSpec {
     // event-time column), so its state is every id ever seen — measured
     // here side by side via the state-store operator metrics.
     def finalStateRows(dedup: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame): Long = {
-      val ckpt = Files.createTempDirectory("graft-dedup-state").toString
+      val ckpt = PlanDsl.tempDir("graft-dedup-state").toString
       val src = Streams.eventsStream(spark, sf, batches = 3)
         .withWatermark("ts", "1 day")
       val q = dedup(src).writeStream
@@ -98,8 +97,8 @@ class StreamingSinkSpec extends SparkSpec {
     // the injected failure lands AFTER MergeWriter.upsert applied batch 1
     // but BEFORE the checkpoint committed it, so the restart MUST replay
     // an already-applied batch and the keyed merge MUST collapse it.
-    val ckpt = Files.createTempDirectory("graft-crash-ckpt").toString
-    val target = Files.createTempDirectory("graft-crash").resolve("t").toString
+    val ckpt = PlanDsl.tempDir("graft-crash-ckpt").toString
+    val target = PlanDsl.tempDir("graft-crash").resolve("t").toString
     def run(crashAtBatch: Option[Long]) = {
       val ev = Streams.eventsStream(spark, sf, batches = 3)
         .select("user_id", "ts", "event_id", "event_type", "value")

@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.graft.PlanDsl
+
 import graft.queries.ParityQueries
 import graft.streaming.Streams
 
@@ -46,8 +48,7 @@ class StreamingSpec extends SparkSpec {
     import org.apache.spark.sql.functions._
     val real = Tables.events(spark, sf)
     def fixture(flavor: String): String = {
-      val tmp = java.nio.file.Files
-        .createTempDirectory(s"graft-tsflavor-$flavor").toString
+      val tmp = PlanDsl.tempDir(s"graft-tsflavor-$flavor").toString
       flavor match {
         case "nanos" =>
           // raw int64 nanoseconds — what TIMESTAMP(NANOS) parquet

@@ -1,11 +1,10 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.schema.MessageTypeParser
+import org.apache.spark.sql.graft.PlanDsl
 import org.apache.spark.sql.types.{DateType, LongType, TimestampType}
 
 import graft.pipeline.Medallion
@@ -31,7 +30,7 @@ class TablesSpec extends SparkSpec {
   }
 
   test("TIMESTAMP(NANOS) reads as a long under nanosAsLong") {
-    val dir = Files.createTempDirectory("graft-nanos").resolve("events.parquet")
+    val dir = PlanDsl.tempDir("graft-nanos").resolve("events.parquet")
     val schema = MessageTypeParser.parseMessageType(
       "message events { required int64 event_id; optional int64 ts (TIMESTAMP(NANOS,false)); }")
     val writer = ExampleParquetWriter.builder(new Path(dir.resolve("part-0.parquet").toString))
@@ -51,7 +50,7 @@ class TablesSpec extends SparkSpec {
   }
 
   test("medallion layers read with the inferred schema, day as a date") {
-    val root = Files.createTempDirectory("graft-tables-layers").toString
+    val root = PlanDsl.tempDir("graft-tables-layers").toString
     Medallion.run(spark, sf, root)
     for (layer <- Seq("stg_events", "int_latest", s"${Config().schema}_daily")) {
       val p = s"$root/$layer"
@@ -64,7 +63,7 @@ class TablesSpec extends SparkSpec {
 
   test("footer choice follows Spark's, and mergeSchema falls back to Spark's merge") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-tables-merge").resolve("t").toString
+    val dir = PlanDsl.tempDir("graft-tables-merge").resolve("t").toString
     Seq((1L, "a")).toDF("id", "x").write.parquet(dir)
     Seq((2L, 0.5)).toDF("id", "y").write.mode("append").parquet(dir)
     // mergeSchema off: one footer, the first data file by path

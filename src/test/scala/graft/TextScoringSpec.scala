@@ -7,7 +7,7 @@ import org.apache.spark.sql.graft.PlanDsl.{column, expression}
 
 import graft.functions.Text
 import graft.plans.{BigramCounts, BigramTableAgg, DsirBuckets, PerplexityModel,
-  PrefixContextCounts, TermCounts}
+  TermCounts}
 
 /** Round-14 native scoring rewrites (`graft_term_counts` /
   * `graft_bigram_counts` / `graft_bm25_topk` / `graft_perplexity`) vs
@@ -29,10 +29,6 @@ class TextScoringSpec extends SparkSpec {
     spark.range(1).select(expr(bcSql).as("bc"))
       .agg(column(BigramTableAgg(expression(col("bc")), vocabCap)
         .toAggregateExpression()).as("t"))
-
-  private def prefixC1(c2Sql: String) =
-    spark.range(1).select(column(PrefixContextCounts(expression(expr(c2Sql))))
-      .as("c1arr"))
 
   test("graft_term_counts equals the explode-groupBy counts and sorts by term") {
     val docs = Tables.documents(spark, sf)
@@ -152,27 +148,6 @@ class TextScoringSpec extends SparkSpec {
     val nat = graft.queries.TextQueries.textPerplexity(spark, sf)
     val comp = graft.ref.TextQueriesRef.textPerplexityComposed(spark, sf)
     assert(nat.exceptAll(comp).isEmpty && comp.exceptAll(nat).isEmpty)
-  }
-
-  test("graft_prefix_c1 derives sorted context counts from the c2 table") {
-    // contiguous prefix groups sum; output is w1-sorted; a no-space bg
-    // (null-member bigram, never scored) is excluded
-    val rows = prefixC1(
-      """array(
-        |  struct('a b' as bg, 2L as c2), struct('a c' as bg, 3L as c2),
-        |  struct('ab x' as bg, 5L as c2),
-        |  struct('nospace' as bg, 9L as c2))""".stripMargin)
-      .selectExpr("explode(c1arr) as e").selectExpr("e.w1", "e.c1")
-      .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
-    assert(rows == Seq(("a", 5L), ("ab", 5L)))
-    // pathological sub-space control byte in a token: "a x" sorts
-    // BEFORE "a b" as a bigram string while "a" > "a" as w1 —
-    // the expression must re-sort so the model stays binary-searchable
-    val ctl = prefixC1("array(" +
-        "struct('a x' as bg, 1L as c2), struct('a b' as bg, 2L as c2))")
-      .selectExpr("explode(c1arr) as e").selectExpr("e.w1")
-      .collect().map(_.getString(0)).toSeq
-    assert(ctl == ctl.sorted, s"w1 keys must come out sorted: $ctl")
   }
 
   test("graft_perplexity_model derives context table and vocab in one walk") {

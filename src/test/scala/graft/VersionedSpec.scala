@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.Files
+import org.apache.spark.sql.graft.PlanDsl
 
 import graft.operators.Versioned
 
@@ -8,7 +8,7 @@ import graft.operators.Versioned
 class VersionedSpec extends SparkSpec {
 
   private def tmp(): String =
-    Files.createTempDirectory("graft-test-versioned").resolve("t").toString
+    PlanDsl.tempDir("graft-test-versioned").resolve("t").toString
 
   test("write assigns increasing versions; read pins or follows latest") {
     import spark.implicits._

@@ -3,6 +3,7 @@ package graft
 import org.scalacheck.{Gen, Prop, Properties, Test}
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.PlanDsl
 
 import graft.operators.MergeWriter
 
@@ -40,7 +41,7 @@ object WritePropertySpec extends Properties("graft.writes") {
         _.distinct.sorted))
 
   private def freshDir(): String = {
-    val d = java.nio.file.Files.createTempDirectory("graft-prop-")
+    val d = PlanDsl.tempDir("graft-prop-")
     d.toFile.deleteOnExit()
     d.resolve("t").toString
   }
