@@ -4,6 +4,7 @@ import java.nio.charset.StandardCharsets.UTF_8
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
 
 /** Keyed merge (upsert) and append materializations on Parquet — the
@@ -128,36 +129,26 @@ object MergeWriter {
   /** Partition-pruned merge: only partitions (by `partCol`, e.g. a date
     * column) present in `updates` are read, merged and rewritten;
     * untouched history is never read or written — their files stay
-    * byte-identical (spec-asserted).
+    * byte-identical (spec-asserted). The merged rows are written and
+    * swapped in as in [[replacePartitions]].
     *
-    * The merged rows are written ONCE to a temp layout partitioned by
-    * `partCol`, then each touched `partCol=x` directory is swapped into
-    * the target with the crash-recoverable rename dance of
-    * [[swapDir]]. No dynamic-partition-overwrite second write, no
-    * session-wide conf mutation. Each touched `partCol` value is
-    * written by ONE task, as one file.
-    *
-    * @param touched the `partCol` values of `updates`, when the caller
-    *        already knows them: the merge then reads `updates` once and
-    *        skips its own checkpoint and distinct collect. It MUST hold
-    *        every value `updates` carries — a partition missing from it
-    *        would be swapped in without its existing rows. Extra values
-    *        only rewrite those partitions unchanged. Ignored when the
-    *        target does not exist yet.
-    * @return the partition values the merge touched: `Some(values)`
-    *         for a merge into an existing table (empty when `updates`
-    *         is, and nothing was written), `None` for the first build
-    *         of a table, which writes every partition `updates` has.
+    * @param touched the `partCol` values of the EXISTING partitions
+    *        `updates` carries, when the caller already knows them: the
+    *        merge then reads `updates` once and skips its own
+    *        checkpoint and distinct collect. An existing partition
+    *        missing from it would be swapped in without its existing
+    *        rows; a partition the table does not have yet needs no
+    *        entry, and an extra value only rewrites that partition
+    *        unchanged. Ignored when the target does not exist yet.
+    * @return the `partCol` values of the partitions the merge wrote, as
+    *         their directory names spell them (null for the null
+    *         partition): every partition `updates` carries, plus the
+    *         `touched` ones. Empty when nothing was written.
     */
   def upsertPartitioned(spark: SparkSession, dir: String, updates: DataFrame,
       keys: Seq[String], versionCols: Seq[String], partCol: String,
-      touched: Option[Seq[Any]] = None): Option[Seq[Any]] = {
-    val root = new Path(dir)
-    if (exists(spark, dir)) fs(spark, root).listStatus(root)
-      .map(_.getPath.getName)
-      .filter(n => n.startsWith(s".$partCol=") && n.endsWith(".old"))
-      .foreach(n => restore(spark, s"$dir/${n.drop(1).dropRight(4)}"))
-    spark.catalog.refreshByPath(dir)
+      touched: Option[Seq[Any]] = None): Seq[String] = {
+    restorePartitions(spark, dir, partCol)
     val fresh = !exists(spark, dir)
     // without `touched`, the non-fresh path reads `updates` twice
     // (touched-partition values, then the merge itself) — materialize
@@ -173,24 +164,28 @@ object MergeWriter {
     // no exchange (vs a broadcast semi join, which still scans the
     // full partition listing through the probe side)
     val parts =
-      if (fresh) None
-      else touched.orElse(Some(boundedPartitionValues(inc0, partCol)))
-    // an empty update set touches no partitions: the merge is a true
-    // no-op (no empty temp write, no swap loop, no listing refresh) —
-    // the cheap idle path an incremental pipeline replays constantly
-    if (parts.exists(_.isEmpty)) return parts
-    val unioned = parts match {
-      case None => incoming
-      case Some(vals) =>
+      if (fresh) Nil
+      else touched.getOrElse {
+        // an empty update set touches no partitions: the merge is a
+        // true no-op (no empty temp write, no swap loop, no listing
+        // refresh) — the cheap idle path an incremental pipeline
+        // replays constantly
+        val vals = boundedPartitionValues(inc0, partCol)
+        if (vals.isEmpty) return Nil
+        vals
+      }
+    val unioned =
+      if (parts.isEmpty) incoming
+      else {
         // a NULL partition value needs its own predicate: isInCollection
         // evaluates to NULL (never true) against null rows, so a batch
         // touching the null partition would stage a fresh
         // __HIVE_DEFAULT_PARTITION__ dir WITHOUT the target's existing
         // null-partition rows — and the swap below would then silently
         // drop them
-        val nonNull = vals.filter(_ != null)
+        val nonNull = parts.filter(_ != null)
         val pred =
-          if (nonNull.size == vals.size) col(partCol).isInCollection(nonNull)
+          if (nonNull.size == parts.size) col(partCol).isInCollection(nonNull)
           else if (nonNull.isEmpty) col(partCol).isNull
           else col(partCol).isInCollection(nonNull) || col(partCol).isNull
         val target = graft.Tables.parquet(spark, dir)
@@ -206,44 +201,80 @@ object MergeWriter {
           .filter(pred)
           .withColumn("_src", lit(0))
           .unionByName(incoming, allowMissingColumns = true)
-    }
+      }
+    writePartitions(spark, dir,
+      LatestPerKey(unioned, keys, versionCols :+ "_src").drop("_src"), partCol)
+  }
+
+  /** Replace every `partCol` partition `df` holds with `df`'s rows of
+    * it, reading nothing of the table at `dir`: the materialization of
+    * a layer that recomputes whole partitions (a daily mart's touched
+    * days). Partitions `df` does not hold stay byte-identical.
+    *
+    * `df` is written ONCE to a staging dir partitioned by `partCol`,
+    * each partition by one task as one file. A table that does not
+    * exist yet is that dir renamed in; otherwise each staged
+    * `partCol=x` directory is swapped into the table with the
+    * crash-recoverable rename dance of [[swapDir]], in ascending order
+    * of the values' strings (null first), which is date order for the
+    * fixed-width ISO days [[maxDayPartition]] requires: a reader that
+    * takes a table's progress from its max day then never sees that
+    * day's new rows while a lower day still holds its old ones,
+    * whatever order the file system lists. No dynamic-partition-
+    * overwrite second write, no session-wide conf mutation. Zero rows
+    * write nothing: a table that did not exist still does not
+    * (partitionBy with zero rows would leave a schema-less dir every
+    * later read fails on).
+    *
+    * @return the `partCol` values written, as in [[upsertPartitioned]]
+    */
+  def replacePartitions(spark: SparkSession, dir: String, df: DataFrame,
+      partCol: String): Seq[String] = {
+    restorePartitions(spark, dir, partCol)
+    writePartitions(spark, dir, df, partCol)
+  }
+
+  /** [[restore]] every partition of `dir` a crashed swap left at its
+    * `.<partCol>=<v>.old` name, then drop the stale listing cache.
+    */
+  private def restorePartitions(spark: SparkSession, dir: String,
+      partCol: String): Unit = {
+    val root = new Path(dir)
+    if (exists(spark, dir)) fs(spark, root).listStatus(root)
+      .map(_.getPath.getName)
+      .filter(n => n.startsWith(s".$partCol=") && n.endsWith(".old"))
+      .foreach(n => restore(spark, s"$dir/${n.drop(1).dropRight(4)}"))
+    spark.catalog.refreshByPath(dir) // manual swaps bypass listing-cache invalidation
+  }
+
+  /** The staged write and swap of [[replacePartitions]]. */
+  private def writePartitions(spark: SparkSession, dir: String, df: DataFrame,
+      partCol: String): Seq[String] = {
+    val dst = new Path(dir)
+    val tmp = new Path(dir + ".merge.tmp-" +
+      java.util.UUID.randomUUID().toString.take(8))
+    val f = fs(spark, tmp)
     // co-locate each partition's rows before the partitionBy write (32
     // shuffle partitions x |days| would otherwise write a small-file
     // storm)
-    val merged = LatestPerKey(unioned, keys, versionCols :+ "_src").drop("_src")
-      .repartition(col(partCol))
-    if (fresh) {
-      // a fresh EMPTY write would leave a schema-less dir (partitionBy
-      // with zero rows emits only _SUCCESS, no data files, unlike the
-      // unpartitioned empty write) — every later read/merge would then
-      // fail on an unreadable "existing" table. The emptiness check is
-      // AFTER the write (was a pre-write `merged.isEmpty`, which
-      // re-computed the entire merge subtree — full scan + shuffle +
-      // aggregation — once for the probe and once for the write, a
-      // whole duplicated job on every fresh partitioned bulk load):
-      // partitionBy writes a `partCol=` dir per value, so zero
-      // partition dirs ⇔ zero rows, and the schema-less husk is
-      // deleted, leaving the same missing-dir state the no-write gave.
-      merged.write.mode("overwrite").partitionBy(partCol).parquet(dir)
-      val dst = new Path(dir)
-      val f = fs(spark, dst)
-      val wroteData = f.listStatus(dst)
-        .exists(s => s.isDirectory && s.getPath.getName.startsWith(partCol + "="))
-      if (!wroteData) { f.delete(dst, true); return None }
+    df.repartition(col(partCol))
+      .write.mode("overwrite").partitionBy(partCol).parquet(tmp.toString)
+    val staged = f.listStatus(tmp).toSeq
+      .filter(s => s.isDirectory && s.getPath.getName.startsWith(partCol + "="))
+      .map(s => s.getPath -> Option(ExternalCatalogUtils.unescapePathName(
+        s.getPath.getName.drop(partCol.length + 1)))
+        .filter(_ != ExternalCatalogUtils.DEFAULT_PARTITION_NAME))
+      .sortBy(_._2)
+    if (staged.isEmpty) f.delete(tmp, true)
+    else if (!f.exists(dst)) {
+      if (!f.rename(tmp, dst))
+        throw new java.io.IOException(s"merge swap failed: $tmp -> $dst")
     } else {
-      val tmp = new Path(dir + ".merge.tmp-" +
-        java.util.UUID.randomUUID().toString.take(8))
-      val f = fs(spark, tmp)
-      merged.write.mode("overwrite").partitionBy(partCol).parquet(tmp.toString)
-      val parts = f.listStatus(tmp)
-        .filter(s => s.isDirectory && s.getPath.getName.startsWith(partCol + "="))
-      parts.foreach { s =>
-        swapDir(f, s.getPath, new Path(dir, s.getPath.getName))
-      }
+      staged.foreach { case (p, _) => swapDir(f, p, new Path(dst, p.getName)) }
       f.delete(tmp, true)
     }
     spark.catalog.refreshByPath(dir)
-    parts
+    staged.map(_._2.orNull)
   }
 
   /** Atomically replace the table at `dir` with `df` (crash-recoverable

@@ -39,12 +39,29 @@ object Checks {
   /** Q1/Q2: zero nulls in `c`. */
   def notNull(df: DataFrame, c: String, name: String,
       severity: String = Error): DataFrame =
-    result(name, count(when(col(c).isNull, 1)), df, severity)
+    result(name, nulls(c), df, severity)
 
   /** Q3: no duplicate keys — violations = rows minus distinct keys. */
   def unique(df: DataFrame, c: String, name: String,
       severity: String = Error): DataFrame =
-    result(name, count(col(c)) - countDistinct(col(c)), df, severity)
+    result(name, duplicates(c), df, severity)
+
+  /** The violations [[notNull]] counts. */
+  def nulls(c: String): Column = count(when(col(c).isNull, 1))
+
+  /** The violations [[unique]] counts. */
+  def duplicates(c: String): Column = count(col(c)) - countDistinct(col(c))
+
+  /** `error` checks over one table in ONE aggregate pass, one report
+    * row per `(name, violations)` pair: what separate checks over the
+    * same table would report, for one scan instead of one each.
+    */
+  def fused(df: DataFrame, checks: (String, Column)*): DataFrame =
+    df.agg(array(checks.map { case (name, v) =>
+        struct(lit(name).as("check_name"), v.cast("long").as("violations"))
+      }: _*).as("checks"))
+      .select(explode(col("checks")).as("c"))
+      .select(col("c.check_name"), col("c.violations"), lit(Error).as("severity"))
 
   /** Q4: column values restricted to a whitelist (nulls not counted,
     * matching dbt `accepted_values`).

@@ -33,7 +33,11 @@ class MedallionJobsSpec extends SparkSpec {
     // the base ends mid-day, so the later slice re-opens one existing
     // day partition and adds two new ones
     val cut = lit("2024-01-28 12:00:00").cast("timestamp")
-    val all = Tables.events(spark, sf)
+    // landed like the fixtures: ts as TIMESTAMP(MICROS), whose footer
+    // statistics bound each file's rows (Spark's default INT96 has none)
+    val landed = PlanDsl.withConf(spark,
+      "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS")
+    val all = Tables.events(landed, sf)
     all.filter(col("ts") < cut).write.parquet(events)
     Medallion.run(spark, landing.toString, root)
     Medallion.run(spark, landing.toString, root) // warm: no new data
@@ -41,12 +45,18 @@ class MedallionJobsSpec extends SparkSpec {
 
     val arrival = jobs(Medallion.run(spark, landing.toString, root))
     val empty = jobs(Medallion.run(spark, landing.toString, root))
-    // arrival: stg watermark 2, stg batch checkpoint 1, its touched
-    // days 2, stg write 3, int write 2, dwh write 4, quality gate 6;
-    // no new data: the watermark, the checkpoint, an empty collect and
-    // the gate
-    assert(arrival.size === 20, show(arrival))
-    assert(empty.size === 10, show(empty))
+    // arrival, one SQL execution per layer write and one for the gate:
+    // stg write 3: the new file's scan and the merge's aggregate,
+    //   the repartition by day, the write
+    // dwh write 3: stg's touched days and the rollup's aggregate, the
+    //   repartition by day, the write
+    // int write 2: the pending rows and int's aggregate, the write
+    // quality gate 5: stg's fused checks 2, dwh's unique check 2, the
+    //   collect
+    assert(arrival.size === 13, show(arrival))
+    assert(arrival.flatten.distinct.size === 4, show(arrival))
+    // no new data: the footers skip every layer write; the gate alone
+    assert(empty.size === 5, show(empty))
     // a job outside any SQL execution is Spark's own work (e.g. parquet
     // schema inference), invisible to per-query metrics
     assert((arrival ++ empty).forall(_.isDefined), show(arrival ++ empty))

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.PlanDsl
 
@@ -65,11 +63,12 @@ class PipelineSpec extends SparkSpec {
 
   /** A medallion root over a landing dir that slices of the events
     * arrive in, and the check that its int and dwh layers equal a
-    * one-shot build over everything landed.
+    * one-shot build over everything landed. `scheme` prefixes the
+    * root's path (e.g. `revfs:`) to put it on another file system.
     */
-  private class Arrivals(name: String) {
+  private class Arrivals(name: String, scheme: String = "") {
     val landing = PlanDsl.tempDir(name)
-    val root = landing.resolve("mat").toString
+    val root = scheme + landing.resolve("mat").toString
     val dwh = s"${graft.Config().schema}_daily"
     val hfs = new org.apache.hadoop.fs.Path(root)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -95,17 +94,15 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("medallion converges after a failure in dwh's merge") {
-    val a = new Arrivals("graft-medallion-dwh-fail")
+    ReversedLocalFs.register(spark.sparkContext.hadoopConfiguration)
+    val a = new Arrivals("graft-medallion-dwh-fail", s"${ReversedLocalFs.Scheme}:")
     a.land("2000-01-01", "2024-01-20 12:00:00")
     a.run()
     a.land("2024-01-20 12:00:00", "2024-01-25 12:00:00")
-    // an unreadable file in the day the arrival re-opens fails dwh's
-    // merge after stg's has committed
-    val bad = java.nio.file.Paths.get(a.root, a.dwh, "day=2024-01-20",
-      "part-unreadable.parquet")
-    Files.write(bad, "not parquet".getBytes("UTF-8"))
+    // dwh's partition swap dies after the first of the arrival's days,
+    // after stg's merge has committed
+    ReversedLocalFs.failStagedRename(a.dwh, 2)
     intercept[Exception](a.run())
-    Files.delete(bad)
     a.run()
     a.assertOneShot("dwh merge failure")
   }
@@ -159,6 +156,64 @@ class PipelineSpec extends SparkSpec {
     assert(MergeWriter.marker(spark, a.path("int_latest").toString, "_wm") ===
       Some(stgMax))
     a.assertOneShot("legacy root")
+  }
+
+  test("medallion's daily mart loses the day row of a user a same-day correction moved away") {
+    val a = new Arrivals("graft-medallion-reassign")
+    a.land("2000-01-01", "2024-01-20 12:00:00")
+    a.run()
+    // an event of the watermark's day that is not its user's latest,
+    // so int_latest keeps that user's row either way
+    val landed = spark.read.parquet(s"${a.landing}/events.parquet")
+    val moved = landed
+      .filter(to_date(col("ts")) === lit("2024-01-20").cast("date"))
+      .join(landed.groupBy("user_id").agg(max(col("ts")).as("latest")), "user_id")
+      .filter(col("ts") < col("latest"))
+      .orderBy("ts").limit(1).select(landed.columns.map(col): _*)
+    assert(moved.count() === 1)
+    // re-emitted later that day under a user no other event has: stg's
+    // (day, event_id) key keeps only the correction
+    val newUser = landed.agg(max(col("user_id"))).head().getLong(0) + 1
+    moved.withColumn("user_id", lit(newUser))
+      .withColumn("ts", lit("2024-01-20 18:00:00").cast("timestamp"))
+      .write.mode("append").parquet(s"${a.landing}/events.parquet")
+    a.run()
+    a.assertOneShot("same-day reassignment")
+  }
+
+  test("a crash inside stg's partition swap hides no row, whatever the listing order") {
+    ReversedLocalFs.register(spark.sparkContext.hadoopConfiguration)
+    val a = new Arrivals("graft-medallion-swap-order", s"${ReversedLocalFs.Scheme}:")
+    a.land("2000-01-01", "2024-01-20 12:00:00")
+    a.run()
+    // the arrival re-opens 2024-01-20 and adds five days; the file
+    // system lists the staged days newest first and fails the second
+    // day's rename into stg
+    a.land("2024-01-20 12:00:00", "2024-01-25 12:00:00")
+    ReversedLocalFs.failStagedRename("stg_events", 2)
+    intercept[java.io.IOException](a.run())
+    a.run()
+    a.assertOneShot("stg swap crash")
+  }
+
+  test("a root whose stg files are INT96 reads its watermark by a job and converges") {
+    val a = new Arrivals("graft-medallion-int96")
+    a.land("2000-01-01", "2024-01-20 12:00:00")
+    a.run()
+    // stg as a run wrote it before the layers wrote TIMESTAMP_MICROS:
+    // INT96 ts, so no footer holds its min and max
+    val stg = s"${a.root}/stg_events"
+    val int96 = new org.apache.hadoop.fs.Path(s"${a.landing}/stg-int96")
+    spark.read.parquet(stg).write.partitionBy("day").parquet(int96.toString)
+    assert(a.hfs.delete(a.path("stg_events"), true) &&
+      a.hfs.rename(int96, a.path("stg_events")))
+    assert(Tables.dataFiles(spark, stg).forall(Tables.tsRange(spark, _, "ts").isEmpty))
+    a.land("2024-01-20 12:00:00", "2024-01-25 12:00:00")
+    val (_, jobs) = jobPropertiesDuring(a.run())
+    // the watermark's aggregate, then the three layer writes and the gate
+    val executions = jobs.flatMap(j => Option(j.getProperty("spark.sql.execution.id"))).distinct
+    assert(executions.size === 5, executions)
+    a.assertOneShot("INT96 stg")
   }
 
   test("a fresh medallion root holds the three layers, the watermark inside int_latest") {

@@ -61,6 +61,45 @@ class TablesSpec extends SparkSpec {
       .dataType === DateType)
   }
 
+  test("stg ts carries min/max footer statistics; the caller's writes stay INT96") {
+    import org.apache.spark.sql.functions._
+    val root = PlanDsl.tempDir("graft-tables-stats").toString
+    Medallion.run(spark, sf, root)
+    val stg = s"$root/stg_events"
+    // each file's footer range is its rows' range
+    val want = spark.read.parquet(stg)
+      .groupBy(input_file_name().as("f"))
+      .agg(min(unix_micros(col("ts"))), max(unix_micros(col("ts"))))
+      .collect().map(r => new Path(r.getString(0)).toUri.getPath ->
+        Some((r.getLong(1), r.getLong(2)))).toMap
+    val got = Tables.dataFiles(spark, stg)
+      .map(f => f.getPath.toUri.getPath -> Tables.tsRange(spark, f, "ts")).toMap
+    assert(got.size > 1 && got === want)
+    // the medallion set TIMESTAMP_MICROS on its own clone only: a write
+    // on the caller's session is INT96, which has no statistics
+    assert(spark.conf.get("spark.sql.parquet.outputTimestampType") === "INT96")
+    val int96 = PlanDsl.tempDir("graft-tables-int96").resolve("t").toString
+    spark.read.parquet(stg).write.parquet(int96)
+    assert(Tables.dataFiles(spark, int96).map(Tables.tsRange(spark, _, "ts"))
+      .forall(_.isEmpty))
+  }
+
+  test("TIMESTAMP(NANOS) footer statistics truncate to micros as the events loader does") {
+    val dir = PlanDsl.tempDir("graft-nanos-stats").resolve("events.parquet")
+    val schema = MessageTypeParser.parseMessageType(
+      "message events { required int64 event_id; optional int64 ts (TIMESTAMP(NANOS,false)); }")
+    val writer = ExampleParquetWriter.builder(new Path(dir.resolve("part-0.parquet").toString))
+      .withType(schema).build()
+    val rows = new SimpleGroupFactory(schema)
+    try Seq(1L -> 1704067200123456789L, 2L -> 1704153600000001999L).foreach {
+      case (id, ns) => writer.write(rows.newGroup().append("event_id", id).append("ts", ns))
+    } finally writer.close()
+    val Seq(file) = Tables.dataFiles(spark, dir.toString)
+    assert(Tables.tsRange(spark, file, "ts") === Some((1704067200123456L, 1704153600000001L)))
+    // a column that is not a timestamp has no range
+    assert(Tables.tsRange(spark, file, "event_id") === None)
+  }
+
   test("footer choice follows Spark's, and mergeSchema falls back to Spark's merge") {
     import spark.implicits._
     val dir = PlanDsl.tempDir("graft-tables-merge").resolve("t").toString
