@@ -29,6 +29,18 @@ import graft.plans.{AsofJoinStrategy, PrefixPairsStrategy}
   * per-session artifacts, so both [[configure]] and [[prepare]] turn
   * isolation off: clones made after that share one loader and one
   * set of compiled classes.
+  *
+  * Even so, each generated source compiles twice per JVM, 10-40 ms
+  * apart: once in the thread that submits a query stage (adaptive
+  * execution's `shuffle-exchange-N` and `ResultQueryStageExecution-N`,
+  * under the application class loader), and once in the first task
+  * that runs it (`Executor task launch worker` threads, under the
+  * executor's `MutableURLClassLoader`). A cache miss therefore counts
+  * as two compiles in `CodegenMetrics.METRIC_COMPILATION_TIME`, and a
+  * stage whose source changes on every run (a literal baked into it,
+  * see [[graft.plans.ParamLiteral]]) costs two compiles per run. To
+  * count a run's compiles, read that counter's `getCount` before and
+  * after it.
   */
 object GraftSession {
 

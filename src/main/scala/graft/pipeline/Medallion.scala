@@ -9,6 +9,7 @@ import org.apache.spark.sql.graft.PlanDsl
 
 import graft.Tables
 import graft.operators.{DailyRollup, MergeWriter, StageExtract}
+import graft.plans.ParamScanStrategy
 import graft.quality.Checks
 
 /** The full medallion pipeline as an ordered layer DAG — the engine's
@@ -43,6 +44,12 @@ object Medallion {
     // read back as a naive timestamp, not a UTC-adjusted one.
     val layers = PlanDsl.withConf(spark,
       "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS")
+    // The watermarks below change on every arrival. Planned as
+    // references, they leave the generated code of the layer scans the
+    // same from one arrival to the next, so an arrival reuses the
+    // classes the earlier ticks compiled.
+    layers.experimental.extraStrategies =
+      layers.experimental.extraStrategies :+ ParamScanStrategy
     PlanDsl.ofRows(spark, build(layers, dir, root, cfg).queryExecution.analyzed)
   }
 

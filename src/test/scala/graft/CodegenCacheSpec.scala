@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.graft.PlanDsl
 
 import graft.pipeline.Medallion
@@ -33,8 +34,9 @@ class CodegenCacheSpec extends SparkSpec {
 
   test("a warm re-run compiles nothing") {
     val root = PlanDsl.tempDir("graft-codegen-cache").toString
-    // build, then two no-op runs: the high-watermark literals baked
-    // into the generated code change until the second one
+    // a build, whose quality gate checks whole layers, then two no-op
+    // runs: the first plans the gate's day-scoped checks for the first
+    // time and compiles their two aggregate stages, the second is warm
     (1 to 3).foreach(_ => Medallion.run(spark, sf, root))
     runWarm()
     val c0 = compiles
@@ -44,5 +46,25 @@ class CodegenCacheSpec extends SparkSpec {
     val c1 = compiles
     Medallion.run(spark, sf, root)
     assert(compiles - c1 === 0, "no-new-data medallion re-run")
+  }
+
+  test("a medallion arrival with a new watermark compiles nothing") {
+    val landing = PlanDsl.tempDir("graft-codegen-arrival")
+    val events = s"$landing/events.parquet"
+    val root = landing.resolve("mat").toString
+    // bronze with ts statistics, as the fixtures land it; each slice
+    // ends mid-day, so each arrival re-opens stg's max day
+    val all = Tables.events(PlanDsl.withConf(spark,
+      "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS"), sf)
+    def ts(s: String) = lit(s).cast("timestamp")
+    all.filter(col("ts") < ts("2024-01-26 12:00:00")).write.parquet(events)
+    Medallion.run(spark, landing.toString, root)
+    all.filter(col("ts") >= ts("2024-01-26 12:00:00") && col("ts") < ts("2024-01-28 12:00:00"))
+      .write.mode("append").parquet(events)
+    Medallion.run(spark, landing.toString, root) // compiles the arrival path
+    all.filter(col("ts") >= ts("2024-01-28 12:00:00")).write.mode("append").parquet(events)
+    val c0 = compiles
+    Medallion.run(spark, landing.toString, root)
+    assert(compiles - c0 === 0, "arrival above a new watermark")
   }
 }

@@ -73,6 +73,21 @@ class SourceHygieneSpec extends AnyFunSuite {
         s"allow-listed but now reached: ${(UnreachedByDesign -- unreached).mkString(", ")}")
   }
 
+  /** Each `src/main` line that `hit` matches: its (file name, name of
+    * the last `def` above it) and its `path:line`.
+    */
+  private def sites(hit: String => Boolean): Seq[((String, String), String)] = {
+    val Def = """\bdef ([A-Za-z0-9_]+)""".r
+    mainSources.flatMap { p =>
+      var enclosing = ""
+      Files.readAllLines(p).asScala.toSeq.zipWithIndex.flatMap { case (line, i) =>
+        Def.findFirstMatchIn(line).foreach(m => enclosing = m.group(1))
+        if (hit(line)) Some((p.getFileName.toString -> enclosing, s"$p:${i + 1}"))
+        else None
+      }
+    }
+  }
+
   test("session confs are set only where a plan takes its settings") {
     // a plan that needs its own settings runs on a clone
     // (PlanDsl.withConf) or, for a stream, gets them around start()
@@ -80,21 +95,26 @@ class SourceHygieneSpec extends AnyFunSuite {
     // loader set the caller's session for good
     val Allowed = Set("GraftSession.scala" -> "prepare", "Tables.scala" -> "events",
       "PlanDsl.scala" -> "withConf", "Streams.scala" -> "runDrained")
-    val Def = """\bdef ([A-Za-z0-9_]+)""".r
-    val setters = mainSources.flatMap { p =>
-      var enclosing = ""
-      Files.readAllLines(p).asScala.toSeq.zipWithIndex.flatMap { case (line, i) =>
-        Def.findFirstMatchIn(line).foreach(m => enclosing = m.group(1))
-        if (line.contains("conf.set(") || line.contains("conf.unset("))
-          Some((p.getFileName.toString -> enclosing, s"$p:${i + 1}"))
-        else None
-      }
-    }
+    val setters = sites(line => line.contains("conf.set(") || line.contains("conf.unset("))
     assert(setters.nonEmpty, "no conf setter found: the scan is broken")
     val stray = setters.filterNot { case (site, _) => Allowed(site) }.map(_._2)
     assert(stray.isEmpty,
       s"session conf set outside ${Allowed.mkString(", ")}: ${stray.mkString(", ")} " +
         "(run the plan on PlanDsl.withConf's clone instead)")
+  }
+
+  test("planner strategies are added only by session preparation and the medallion's clone") {
+    // the engine's node strategies go on every prepared session; the
+    // medallion adds its watermark scan to its own per-run clone only
+    val Allowed = Set("GraftSession.scala" -> "installStrategies", "Medallion.scala" -> "run")
+    val Assign = """extraStrategies(?:_=|\s*(?:\+\+|:\+)?=(?!=))""".r
+    val assigned = sites(line => Assign.findFirstIn(line).isDefined)
+    assert(assigned.nonEmpty, "no strategy assignment found: the scan is broken")
+    val stray = assigned.filterNot { case (site, _) => Allowed(site) }.map(_._2)
+    assert(stray.isEmpty,
+      s"experimental.extraStrategies assigned outside ${Allowed.mkString(", ")}: " +
+        s"${stray.mkString(", ")} (a strategy every query needs belongs in " +
+        "GraftSession.installStrategies; one plan's, on that plan's PlanDsl.withConf clone)")
   }
 
   test("specs make scratch dirs only through PlanDsl.tempDir, which deletes them at exit") {
