@@ -47,8 +47,8 @@ object Bench {
     elapsed
   }
 
-  /** Published persisted-index dirs (`graft-<label>-<sig>` with a
-    * complete `_DONE` marker) currently on the artifact root. Snapshot
+  /** Published persisted-index dirs (`graft-<label>-<sig>-<uuid>`
+    * holding a `_DONE` marker) currently on the artifact root. Snapshot
     * before/after each query so the artifact itself says whether a
     * row ran against a warm pre-built index or paid a cold build —
     * the r19 BENCH tail was unreadable without cross-referencing
@@ -60,11 +60,8 @@ object Bench {
     import org.apache.hadoop.fs.Path
     val rootDir = graft.operators.Persisted.root(spark)
     val f = rootDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!f.exists(rootDir)) Set.empty
-    else f.listStatus(rootDir).iterator
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("graft-"))
-      .filter(s => f.exists(new Path(s.getPath, "_DONE")))
-      .map(_.getPath.getName).toSet
+    Option(f.globStatus(new Path(rootDir, "graft-*/_DONE"))).toSet.flatten
+      .map(_.getPath.getParent.getName)
   }
   def canary(spark: SparkSession, threads: Int): Double = {
     import org.apache.spark.sql.functions._

@@ -365,8 +365,9 @@ object Dedup {
     // never silently re-attach a stale index). A fresh process
     // re-ATTACHES (Versioned.read over the persisted postings)
     // instead of re-signing the corpus; only the first process after
-    // a corpus change pays the build. Staged + atomically renamed so
-    // a concurrent first-builder loses the race cleanly.
+    // a corpus change pays the build. Each build writes its own dir
+    // and marks it `_DONE` when complete; a concurrent first-builder
+    // attaches whichever marked dir `Persisted.ensure` returns.
     // the corpus-definition discriminator is the CANONICALIZED plan's
     // string, not semanticHash(): the hash is unstable across JVMs
     // (measured: two processes, two values on the same query), which

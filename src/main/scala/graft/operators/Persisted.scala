@@ -1,69 +1,46 @@
 package graft.operators
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{ChecksumFileSystem, FileStatus, FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 
 /** Build-once, attach-everywhere staging for immutable derived
-  * artifacts (bucketed layouts, medallion bases, LSH/IVF/PQ indexes):
-  * the artifact lives under a SIGNATURE-KEYED directory, the first
-  * process after a corpus change builds it into a private staging dir
-  * and atomically publishes, and every later call — in this process
-  * or any other — re-attaches to the finished artifact. A concurrent
-  * first-builder loses the rename race cleanly and discards its
-  * staging; a partial build (no `_DONE`) is never attachable.
+  * artifacts (bucketed layouts, medallion bases, LSH/IVF/PQ indexes,
+  * shard landing zones). Each build writes into its own fresh dir
+  * `<label>-<sig>-<uuid>` under [[root]]; a `_DONE` file created after
+  * the data marks it complete, and every later call, in this process
+  * or any other, attaches the smallest-named marked dir. No dir is
+  * ever renamed into place or reused, so a marked dir always holds its
+  * data, and the protocol never deletes a marked dir. This is the
+  * commit of [[Versioned]] and of Structured Streaming's file sink:
+  * immutable files first, then a small commit record. All paths go
+  * through the Hadoop FS API, so the root may be HDFS/S3/local, and
+  * since publishing renames nothing a copy-rename store (s3a) is safe.
   *
-  * This is the `join_bucketed` lifecycle contract extracted once: the
-  * recurring cost of a derived artifact is USING it, and only the
-  * first process after its inputs change pays the build.
-  *
-  * All paths go through the Hadoop FS API (like [[Versioned]] and
-  * [[MergeWriter]]), so the artifact root can be HDFS/S3/local alike —
-  * set `spark.graft.persisted.root` to the shared location; it
-  * defaults to the local tmpdir for single-machine runs. Staging dirs
-  * are created UNDER the root so the publish rename is a same-FS
-  * metadata operation, never a copy.
+  * Contract: a build must finish within `spark.graft.persisted.staleMs`
+  * (default 6 h). Past that its unmarked dir is garbage to the
+  * [[janitor]], and the build fails loud with an IOException; it never
+  * publishes a dir without its data.
   */
 object Persisted {
 
   /** Artifact root: `spark.graft.persisted.root` when set (any Hadoop
     * FS URI — `hdfs://…`, `s3a://…`, `file:/…`), else the local
-    * tmpdir. At 100 TB this is the derived-table area of the lake and
-    * the publish rename is a metastore-grade pointer swap.
+    * tmpdir.
     */
   def root(spark: SparkSession): Path = new Path(
     spark.conf.getOption("spark.graft.persisted.root")
       .getOrElse("file:" + sys.props("java.io.tmpdir")))
 
-  /** Age past which an unpublished sibling — a `…-stage-…` staging dir
-    * or a base dir without `_DONE` — is treated as a crashed build and
-    * reclaimed. Live concurrent builds are protected by keeping this
-    * comfortably above any real build time; a deployment whose index
-    * builds run longer than the default must raise it.
-    */
+  /** Age past which an unmarked dir is a crashed or overrun build. */
   private def staleMs(spark: SparkSession): Long =
     spark.conf.getOption("spark.graft.persisted.staleMs")
       .map(_.toLong).getOrElse(6L * 3600 * 1000)
 
-  /** How long a race loser waits for the winner's `_DONE` before
-    * failing loud. On a copy-rename filesystem (s3a) the winner's
-    * publish of a large artifact can take minutes — raise this there.
-    */
-  private def publishWaitMs(spark: SparkSession): Long =
-    spark.conf.getOption("spark.graft.persisted.publishWaitMs")
-      .map(_.toLong).getOrElse(10000L)
-
   private def fs(spark: SparkSession, p: Path): FileSystem =
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** Test-only fault-injection points (no-ops in production): the
-    * TOCTOU windows they open — a concurrent reclaimer acting between
-    * our reclaim-delete and our rename, or between our winning rename
-    * and our `_DONE` marker — are a few syscalls wide and cannot be
-    * hit deterministically from a spec without them.
-    */
-  private[graft] var testAfterReclaimDelete: () => Unit = () => ()
-  private[graft] var testBetweenRenameAndMark: () => Unit = () => ()
-  private[graft] var testBetweenTokenCheckAndMark: () => Unit = () => ()
+  private def glob(f: FileSystem, pattern: Path): Seq[FileStatus] =
+    Option(f.globStatus(pattern)).toSeq.flatten
 
   /** CRC signature of arbitrary identity parts plus the RECURSIVE
     * data-file listings (root-relative path + size + mtime, sorted) of
@@ -100,215 +77,76 @@ object Persisted {
     java.lang.Long.toHexString(crc.getValue)
   }
 
-  /** Janitor: a builder that crashes between `mkdirs` and publish
-    * leaves `label-…-stage-…` dirs (and, rarely, a nested staging copy
-    * inside a published base) on the now-shared artifact root forever.
-    * Sweep siblings of this label older than the stale TTL; a live
-    * concurrent build is younger than the TTL and untouched.
+  /** The marked dirs of (`label`, `sig`), smallest name first. */
+  private def complete(f: FileSystem, rootDir: Path, label: String,
+      sig: String): Seq[Path] =
+    glob(f, new Path(rootDir, s"$label-$sig-*/_DONE"))
+      .map(_.getPath.getParent).sortBy(_.getName)
+
+  /** Janitor, for garbage only: each unmarked dir of `label` with an
+    * mtime older than `ttl` ms is renamed to a private dot-prefixed reap
+    * name, where a build still running in it can no longer mark it. If
+    * it holds `_DONE` after all (marked between check and rename), it
+    * is renamed back, else deleted. A dead janitor's reap dir is
+    * handled the same way.
     */
-  private def vacuum(f: FileSystem, rootDir: Path, label: String,
+  private[graft] def janitor(spark: SparkSession, label: String,
       ttl: Long): Unit = {
+    val rootDir = root(spark)
+    val f = fs(spark, rootDir)
     val cutoff = System.currentTimeMillis() - ttl
-    Seq(new Path(rootDir, s"$label-*-stage-*"),
-        new Path(rootDir, s"$label-*/$label-*-stage-*")).foreach { pat =>
-      Option(f.globStatus(pat)).getOrElse(Array.empty).foreach { st =>
-        if (st.isDirectory && st.getModificationTime < cutoff)
-          try f.delete(st.getPath, true) catch { case _: java.io.IOException => }
-      }
+    def marked(d: Path) = f.exists(new Path(d, "_DONE"))
+    (glob(f, new Path(rootDir, s"$label-*")) ++
+        glob(f, new Path(rootDir, s".$label-*"))).foreach { st =>
+      val name = st.getPath.getName
+      val live = new Path(rootDir, name.stripPrefix(".").split("\\.reap-")(0))
+      val reap = new Path(rootDir,
+        s".${live.getName}.reap-${java.util.UUID.randomUUID()}")
+      try {
+        if (st.isDirectory && st.getModificationTime < cutoff &&
+            (name.startsWith(".") || !marked(st.getPath)) &&
+            f.rename(st.getPath, reap)) {
+          if (marked(reap)) f.rename(reap, live) else f.delete(reap, true)
+        }
+      } catch { case _: java.io.IOException => } // a racing janitor
     }
   }
 
-  private def awaitDone(f: FileSystem, done: Path, waitMs: Long): Boolean = {
-    val deadline = System.currentTimeMillis() + waitMs
-    var ok = f.exists(done)
-    while (!ok && System.currentTimeMillis() < deadline) {
-      Thread.sleep(50)
-      ok = f.exists(done)
-    }
-    ok
-  }
-
-  /** Return the persisted dir for (`label`, `sig`), running `build`
-    * against a private staging dir (a path string on the artifact
-    * root's filesystem) and atomically publishing it if no complete
-    * artifact exists yet.
-    *
-    * Publish protocol: rename staging→base, then create `_DONE` in
-    * base. The marker is created strictly AFTER the rename because on
-    * a copy+delete "rename" filesystem (s3a) a marker renamed along
-    * with the data can become visible before the data files finish
-    * copying — a reader would attach a partial artifact. No `_DONE`
-    * in base = unpublished, always; a race loser polls briefly for
-    * the winner's marker before failing loud.
+  /** Return a marked dir for (`label`, `sig`) (a path string on the
+    * root's filesystem), first running `build` against a fresh dir of
+    * its own if none exists. Racing builders may each publish a dir;
+    * every call after the race attaches the smallest-named one.
     */
   def ensure(spark: SparkSession, label: String, sig: String)
       (build: String => Unit): String = {
-    val base = new Path(root(spark), s"$label-$sig")
-    val f = fs(spark, base)
-    val done = new Path(base, "_DONE")
-    if (!f.exists(done)) {
+    val rootDir = root(spark)
+    val f = fs(spark, rootDir)
+    complete(f, rootDir, label, sig).headOption.getOrElse {
       val ttl = staleMs(spark)
-      vacuum(f, root(spark), label, ttl)
-      val staging = new Path(root(spark),
-        s"$label-$sig-stage-${java.util.UUID.randomUUID()}")
-      f.mkdirs(staging)
-      // preserve-on-unexpected-failure: a failed build keeps its
-      // staging for post-mortem (named here; the janitor TTL reaps it)
-      try build(staging.toString) catch {
-        case e: Throwable => throw new java.io.IOException(
-          s"persisted build '$label' failed; staging preserved at " +
-          s"$staging (reaped by the ${ttl}ms janitor TTL)", e)
+      def fail(dir: Path, why: String, cause: Throwable = null) =
+        new java.io.IOException(s"persisted build '$label' in $dir $why " +
+          s"(an unmarked dir is reaped past staleMs = $ttl ms)", cause)
+      janitor(spark, label, ttl)
+      val dir = f.makeQualified(
+        new Path(rootDir, s"$label-$sig-${java.util.UUID.randomUUID()}"))
+      val token = new Path(dir, "_BUILD")
+      f.mkdirs(dir)
+      f.create(token, false).close()
+      try build(dir.toString) catch { case e: Throwable => throw fail(dir, "failed", e) }
+      complete(f, rootDir, label, sig).headOption match {
+        case Some(sibling) =>
+          f.delete(dir, true) // never marked, so nobody attached it
+          sibling
+        case None =>
+          if (!f.exists(token)) throw fail(dir, "was reaped before it was marked")
+          // non-recursive, so a reaped dir is never re-created as a
+          // `_DONE`-only husk; the checksummed local FS checks for the
+          // parent and then mkdirs it, so mark through its raw FS
+          val raw = f match { case c: ChecksumFileSystem => c.getRawFileSystem case o => o }
+          try raw.createFile(new Path(dir, "_DONE")).overwrite(false).build().close()
+          catch { case e: java.io.IOException => throw fail(dir, "could not be marked", e) }
+          dir
       }
-      // per-build token: after winning the publish rename, the token's
-      // presence in base proves base still holds THIS build when the
-      // marker is written (a TTL reclaimer may delete base between our
-      // rename and our mark — the TOCTOU below). Underscore-prefixed,
-      // so readers' data listings never see it.
-      val token = new Path(base, s"_BUILD-${staging.getName}")
-      f.create(new Path(staging, token.getName), true).close()
-      // HDFS/local-fallback rename semantics NEST src under an
-      // existing dst directory: if a concurrent winner published (or a
-      // racing reclaimer re-created base) between our exists/delete
-      // and our rename, the staging landed INSIDE base — undo the
-      // nesting only once the winner's publish is confirmed complete
-      // (its `_DONE` lags its rename), and fall through to attach. On
-      // timeout the nested copy stays for the janitor's next sweep
-      // rather than risking a delete inside a half-published base.
-      var nestedAt: Option[Path] = None
-      def renameDetectingNest(): Boolean = {
-        var ok = f.rename(staging, base)
-        val nested = new Path(base, staging.getName)
-        if (ok && f.exists(nested)) {
-          ok = false
-          nestedAt = Some(nested)
-          if (awaitDone(f, done, publishWaitMs(spark))) {
-            f.delete(nested, true)
-            nestedAt = None
-          }
-        }
-        ok
-      }
-      var won = false
-      if (!f.exists(base)) {
-        won = renameDetectingNest()
-      } else if (!f.exists(done) && f.getFileStatus(base)
-          .getModificationTime < System.currentTimeMillis() - ttl) {
-        // a base without _DONE older than the TTL is a crashed publish
-        // (renamed but never marked, or a partial copy on a non-atomic
-        // rename FS): reclaim it and publish this build. The reclaim
-        // rename needs the SAME nested detection as the fresh path —
-        // a second reclaimer can re-create base between our delete and
-        // our rename.
-        f.delete(base, true)
-        testAfterReclaimDelete()
-        won = renameDetectingNest()
-      }
-      if (won) {
-        testBetweenRenameAndMark()
-        // TOCTOU guard: a second reclaimer whose staleness check read
-        // the OLD base mtime may delete base after our rename. An
-        // unconditional create(done) would then re-create base as a
-        // directory holding only _DONE — a corrupt artifact every
-        // reader attaches. Mark only while base still carries this
-        // build's token; otherwise wait for whichever build owns base
-        // now, failing loud rather than marking.
-        if (f.exists(token)) {
-          testBetweenTokenCheckAndMark()
-          // The marker carries this build's token name as CONTENT and
-          // is created EXCLUSIVELY (no overwrite): a pre-existing
-          // `_DONE` means another build marked base after a reclaim
-          // took it from us — overwriting (and later retracting) would
-          // destroy the legitimate owner's marker while that owner has
-          // already returned success. Exclusive-create + ownership
-          // content make both the create and the retraction below
-          // touch only a marker this build wrote.
-          try {
-            val out = f.create(done, false)
-            out.write(token.getName.getBytes(
-              java.nio.charset.StandardCharsets.UTF_8))
-            out.close()
-          } catch {
-            case e: java.io.IOException if f.exists(done) =>
-              throw new java.io.IOException(
-                s"persisted base $base was reclaimed and re-published " +
-                "by a concurrent build between this build's token check " +
-                "and its _DONE write — the concurrent marker is left " +
-                "intact and this attach fails loud rather than serving " +
-                "data this build did not produce", e)
-          }
-          // Post-write verification: the token check above narrows but
-          // does not close the window — a reclaimer can delete base
-          // between exists(token) and create(done), and the create then
-          // re-creates base as a `_DONE`-only husk. Re-checking the
-          // token AFTER the marker write converts that residual window
-          // into a detected failure: if the token vanished, this
-          // build's data is gone, so retract the marker (the husk goes
-          // back to unpublished and the janitor reaps it) — but ONLY
-          // if its content still names this build's token; a successor
-          // may have reclaimed the husk and validly re-published, and
-          // its marker must survive our failure.
-          if (!f.exists(token)) {
-            // Read the marker FULLY before comparing: a single read()
-            // may return short (it is allowed to return any positive
-            // count), and a token name longer than an arbitrary buffer
-            // would compare unequal — either way ownMarker would be
-            // false for a marker this build DID write, skipping the
-            // retraction and leaving a _DONE-only husk attachable (the
-            // exact hazard this branch closes). Read expected+1 bytes
-            // to EOF: exact length AND exact bytes, or not ours.
-            val ownMarker = try {
-              val expected = token.getName.getBytes(
-                java.nio.charset.StandardCharsets.UTF_8)
-              val in = f.open(done)
-              try {
-                val buf = new Array[Byte](expected.length + 1)
-                var n = 0
-                var r = 0
-                while (n < buf.length &&
-                    { r = in.read(buf, n, buf.length - n); r >= 0 }) {
-                  n += r
-                }
-                n == expected.length &&
-                  java.util.Arrays.equals(
-                    java.util.Arrays.copyOf(buf, n), expected)
-              } finally in.close()
-            } catch { case _: java.io.IOException => false }
-            if (ownMarker) {
-              try f.delete(done, false)
-              catch { case _: java.io.IOException => }
-            }
-            throw new java.io.IOException(
-              s"persisted base $base was reclaimed while this build " +
-              "wrote its _DONE marker — " +
-              (if (ownMarker)
-                "the marker has been retracted and the husk left " +
-                "unpublished; "
-              else
-                "the marker was NOT retracted (a concurrent publish " +
-                "superseded it and owns it now); ") +
-              "this build's data was deleted by a concurrent TTL " +
-              "reclaim, so this attach fails loud rather than serving " +
-              "an artifact this build did not verify")
-          }
-        } else if (!awaitDone(f, done, publishWaitMs(spark))) {
-          throw new java.io.IOException(
-            s"persisted base $base was reclaimed out from under this " +
-            "build between its publish rename and its _DONE marker, " +
-            "and no concurrent publish completed within " +
-            s"${publishWaitMs(spark)}ms — failing loud instead of " +
-            "marking a base this build no longer owns")
-        }
-      } else {
-        if (awaitDone(f, done, publishWaitMs(spark))) {
-          if (f.exists(staging)) f.delete(staging, true)
-        } else throw new java.io.IOException(
-          s"cannot publish persisted artifact '$label' to $base (no " +
-          s"_DONE after ${publishWaitMs(spark)}ms); completed staging " +
-          s"preserved at ${nestedAt.getOrElse(staging)}" +
-          nestedAt.map(_ => " (nested into base by the losing rename)")
-            .getOrElse(""))
-      }
-    }
-    base.toString
+    }.toString
   }
 }

@@ -75,9 +75,9 @@ object OpsQueries {
     * before `cut`, plus `<base>/mat` with the first full Medallion
     * build over it. Keyed by a signature of the source events table's
     * data-file listing (name + size + mtime — the same
-    * regenerated-corpus-safe key `join_bucketed` uses), staged into a
-    * private dir and atomically renamed so a concurrent first-builder
-    * loses the race cleanly and reuses the winner's complete state.
+    * regenerated-corpus-safe key `join_bucketed` uses), built into a
+    * dir of its own and marked `_DONE` when complete, so no caller ever
+    * attaches a partial base ([[graft.operators.Persisted]]).
     */
   private def ensureMedallionBase(spark: SparkSession, dir: String,
       cut: String): String =

@@ -39,14 +39,14 @@ object Streams {
       event_type: String, value: Double)
 
   /** Staged landing zones, keyed by the full landing config
-    * (source dir, batches, filesPerBatch, flushSentinel, duplicated).
+    * (source dir, batches, flushSentinel, duplicated).
     * The landing zone is test scaffolding standing in for the
     * directory micro-batches arrive into — in production it exists
     * once, shared by every stream reading it, so it is memoized per
     * process.
     */
   private val stagedDirs =
-    new java.util.concurrent.ConcurrentHashMap[(String, Int, Int, Boolean, Boolean), String]()
+    new java.util.concurrent.ConcurrentHashMap[(String, Int, Boolean, Boolean), String]()
 
   /** Scratch root for the EPHEMERAL dirs these finite-replay streams
     * create per run (landing zones, checkpoints, changelog sinks):
@@ -101,6 +101,16 @@ object Streams {
 
   private val ShufflePartitions = "spark.sql.shuffle.partitions"
 
+  /** State-store partitions of the merge and changelog sinks' streams.
+    * The count is baked in at stream start from
+    * spark.sql.shuffle.partitions. It is sized to the streams' key
+    * cardinality instead of inheriting the batch-wide setting: every
+    * micro-batch pays a per-partition state commit, so 32 partitions
+    * for a few thousand keys is pure overhead (measured 2.7x on the
+    * declared queries). At 100 TB key cardinality, raise it.
+    */
+  private val StatePartitions = 4
+
   /** Start the finite-replay stream produced by `start` and block
     * until it drains. A stream reads its settings once, from the clone
     * of `spark` that `start()` takes, so `confs` are set on `spark`
@@ -151,7 +161,7 @@ object Streams {
     * copies this zone's files and appends its sentinels).
     */
   private def stagePlain(spark: SparkSession, dir: String, batches: Int,
-      filesPerBatch: Int, duplicated: Boolean): String = {
+      duplicated: Boolean): String = {
     val out = scratch("graft-stream-src")
     // The normalized base file is written ONCE per source dir and
     // shared by every landing-zone config: single-file and
@@ -189,20 +199,11 @@ object Streams {
     } else if (batches <= 1) {
       stage(Seq((base, "events.parquet", 0)))
     } else {
-      // one ARRIVAL per range batch, each landing as up to
-      // `filesPerBatch` ts-consecutive part files that share one
-      // modification time — parallel part files per batch, never
-      // serialized through one writer. A range split with an empty
-      // partition yields fewer files, never replayed content (each
-      // part is copied exactly once); a short chunk just means a
-      // smaller arrival.
-      val p = writeParts(
-        ev.repartitionByRange(batches * filesPerBatch, col("ts")))
-      stage(p.grouped(filesPerBatch).zipWithIndex.flatMap {
-        case (chunk, a) => chunk.zipWithIndex.map {
-          case (f, j) => (f, f"b$a%03d-f$j%02d.parquet", a)
-        }
-      }.toSeq)
+      // one ARRIVAL per range batch, each one ts-range part file. A
+      // range split with an empty partition yields fewer files, never
+      // replayed content (each part is copied exactly once).
+      stage(writeParts(ev.repartitionByRange(batches, col("ts")))
+        .zipWithIndex.map { case (f, a) => (f, f"b$a%03d.parquet", a) })
     }
     out.toString
   }
@@ -277,29 +278,14 @@ object Streams {
     * shape whose duplicates a streaming `dropDuplicates` must absorb
     * through its keyed state.
     *
-    * With `filesPerBatch > 1` each arrival is N part files sharing one
-    * modification time (the production landing shape: a batch lands as
-    * many parallel part files, never serialized through one writer) and
-    * the reader takes N files per trigger, so trigger boundaries still
-    * align with arrivals. Combined with the sentinel protocol only at
-    * N = 1: the two 1-file sentinels must occupy separate triggers to
-    * advance-then-flush, and an N-file trigger would swallow both.
+    * The reader takes one file per trigger, so trigger boundaries
+    * align with arrivals (and the two sentinels land in separate
+    * triggers: advance, then flush).
     */
   def eventsStream(spark: SparkSession, dir: String, batches: Int = 1,
-      flushSentinel: Boolean = false, duplicated: Boolean = false,
-      filesPerBatch: Int = 1): DataFrame = {
-    require(filesPerBatch >= 1, "filesPerBatch must be >= 1")
-    require(!(flushSentinel && filesPerBatch > 1),
-      "flushSentinel requires filesPerBatch = 1: the two single-file " +
-        "sentinels must land in separate triggers (advance, then flush); " +
-        "a multi-file trigger would consume both at once")
-    require(!(duplicated && filesPerBatch > 1),
-      "duplicated requires filesPerBatch = 1: the two replicas must " +
-        "arrive as separate micro-batches to exercise cross-batch keyed " +
-        "dedup state; a multi-file trigger would collapse them into one " +
-        "batch and the redelivery shape would silently vanish")
+      flushSentinel: Boolean = false, duplicated: Boolean = false): DataFrame = {
     // The sentinel config DERIVES from the sentinel-free landing zone
-    // (r22, VERDICT r21 #3): the plain (dir, batches, filesPerBatch)
+    // (r22, VERDICT r21 #3): the plain (dir, batches)
     // zone is what every update-mode stream shares, so its range-split
     // job runs once per process; the sentinel consumer copies those
     // arrival files verbatim driver-side (names + mtimes preserved, no
@@ -307,13 +293,12 @@ object Streams {
     // redundant second range split for the one sentinel config
     // (1.13 s of the graft.Bench `streaming_sessionize` row).
     val staged = memoStage(stagedDirs,
-        (dir, batches, filesPerBatch, flushSentinel, duplicated)) {
-      if (!flushSentinel) stagePlain(spark, dir, batches, filesPerBatch,
-        duplicated)
+        (dir, batches, flushSentinel, duplicated)) {
+      if (!flushSentinel) stagePlain(spark, dir, batches, duplicated)
       else {
         val plain = java.nio.file.Paths.get(memoStage(stagedDirs,
-          (dir, batches, filesPerBatch, false, duplicated)) {
-          stagePlain(spark, dir, batches, filesPerBatch, duplicated)
+          (dir, batches, false, duplicated)) {
+          stagePlain(spark, dir, batches, duplicated)
         })
         val out = scratch("graft-stream-src")
         new java.io.File(plain.toString).listFiles()
@@ -329,7 +314,7 @@ object Streams {
     }
     spark.readStream
       .schema(eventsRawSchema)
-      .option("maxFilesPerTrigger", filesPerBatch.toString)
+      .option("maxFilesPerTrigger", "1")
       .parquet(staged.toString)
       .withColumn("ts", expr("timestamp_micros(ts)"))
   }
@@ -342,17 +327,10 @@ object Streams {
     * exactly-once, T7).
     */
   private def runToMergeSink(df: DataFrame, mode: String, targetDir: String,
-      keys: Seq[String], versionCols: Seq[String],
-      statePartitions: Int = 4): Unit = {
+      keys: Seq[String], versionCols: Seq[String]): Unit = {
     val spark = df.sparkSession
     val ckpt = scratch("graft-ckpt").toString
-    // State-store partition count is baked in at stream start from
-    // spark.sql.shuffle.partitions. Size it to the stream's key
-    // cardinality instead of inheriting the batch-wide setting: every
-    // micro-batch pays a per-partition state commit, so 32 partitions
-    // for a few thousand keys is pure overhead (measured 2.7x on the
-    // declared queries). At 100 TB key cardinality, raise it.
-    runDrained(spark, ShufflePartitions -> statePartitions.toString) {
+    runDrained(spark, ShufflePartitions -> StatePartitions.toString) {
       df.writeStream
         .outputMode(mode)
         .option("checkpointLocation", ckpt)
@@ -377,14 +355,12 @@ object Streams {
     */
   private def runToCompactedChangelog(df: DataFrame, mode: String,
       keys: Seq[String], versionCols: Seq[String],
-      statePartitions: Int = 4,
       confs: Seq[(String, String)] = Nil): DataFrame = {
     val spark = df.sparkSession
     val log =
       scratch("graft-stream-sink").resolve("log").toString
     val ckpt = scratch("graft-ckpt").toString
-    // see runToMergeSink for why state partitions are sized per stream
-    runDrained(spark, (ShufflePartitions -> statePartitions.toString) +: confs: _*) {
+    runDrained(spark, (ShufflePartitions -> StatePartitions.toString) +: confs: _*) {
       df.writeStream
         .outputMode(mode)
         .option("checkpointLocation", ckpt)
@@ -427,10 +403,8 @@ object Streams {
     * Each batch emits only the windows it changed; the merge keeps the
     * newest version per (user_id, day).
     */
-  def dailyMetrics(spark: SparkSession, dir: String,
-      filesPerBatch: Int = 1): DataFrame = {
-    val agg = eventsStream(spark, dir, batches = 3,
-        filesPerBatch = filesPerBatch)
+  def dailyMetrics(spark: SparkSession, dir: String): DataFrame = {
+    val agg = eventsStream(spark, dir, batches = 3)
       .withWatermark("ts", "1 day")
       .groupBy(col("user_id"), window(col("ts"), "1 day"))
       .agg(

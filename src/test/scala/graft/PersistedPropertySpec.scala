@@ -9,27 +9,21 @@ import org.apache.spark.sql.graft.PlanDsl
 import graft.operators.Persisted
 
 /** ScalaCheck properties over the persisted-artifact publish protocol
-  * (VERDICT r19 #7): [[PersistedSpec]] pins named interleavings (the
-  * TOCTOU, the nested reclaim rename, the mid-mark husk, the 8-builder
-  * stress example); this spec pins the SPACE — random builder counts,
-  * build delays, TTLs, pre-existing crash debris, and a live chaos
-  * reclaimer/janitor running the protocol's own legitimate deletes at
-  * random times. Whatever interleaving falls out, the invariants are:
+  * (VERDICT r19 #7): [[PersistedSpec]] pins named interleavings; this
+  * spec pins the SPACE — random builder counts, build delays, TTLs,
+  * pre-existing crash debris, and a chaos actor running the
+  * production janitor ([[Persisted.janitor]]) at random times.
+  * Whatever interleaving falls out, the invariants are:
   *
-  *  1. every builder either returns THE one base path or fails with
-  *     the loud IOException kind — never silently, never anything else;
-  *  2. end state: a `_DONE` marker implies the data is present AND the
-  *     marker's content names a `_BUILD-` token that exists in base
-  *     (ownership consistency — no husk, no cross-marked artifact);
-  *  3. at most one artifact dir exists for the (label, sig) and no
-  *     unexpected siblings survive beyond unreaped stagings;
-  *  4. once contention ends, one uncontended call converges to a
-  *     valid, attachable artifact.
+  *  1. every builder either returns a dir or fails with the loud
+  *     IOException kind — never silently, never anything else;
+  *  2. every dir a builder returned holds `_DONE` plus its data;
+  *  3. no dir anywhere under the root holds `_DONE` without its data;
+  *  4. once contention ends, the calls made after it all return the
+  *     same dir, and it holds `_DONE` plus its data.
   *
-  * The chaos actor only performs deletes the protocol itself allows —
-  * reclaiming an UNMARKED base past the TTL and reaping `-stage-` dirs
-  * past the TTL. Marker or data loss outside the protocol (a human rm)
-  * is out of the threat model, same as for the example specs.
+  * Marker or data loss outside the protocol (a human rm) is out of the
+  * threat model, same as for the example specs.
   */
 object PersistedPropertySpec extends Properties("graft.persisted") {
 
@@ -46,18 +40,13 @@ object PersistedPropertySpec extends Properties("graft.persisted") {
     Files.write(path, Array.fill[Byte](bytes)(7))
   }
 
-  private def rm(p: Path): Unit = {
-    if (Files.isDirectory(p)) Files.list(p).forEach(c => rm(c))
-    Files.deleteIfExists(p)
-  }
-
   private case class Trial(
       nBuilders: Int,
       delays: List[Int], // per-builder build sleep, ms
       staleMs: Int,
-      preHusk: Boolean, // TTL-expired crashed base pre-exists
-      preStaging: Boolean, // orphaned staging pre-exists
-      chaos: Boolean, // run the concurrent reclaimer/janitor
+      preHusk: Boolean, // TTL-expired crashed build dir pre-exists
+      preStaging: Boolean, // orphaned build dir pre-exists
+      chaos: Boolean, // run a concurrent janitor
       chaosPeriodMs: Int,
       seed: Long)
 
@@ -77,16 +66,17 @@ object PersistedPropertySpec extends Properties("graft.persisted") {
       val artRoot = PlanDsl.tempDir("graft-pprop").toString
       spark.conf.set("spark.graft.persisted.root", s"file:$artRoot")
       spark.conf.set("spark.graft.persisted.staleMs", t.staleMs.toString)
-      spark.conf.set("spark.graft.persisted.publishWaitMs", "2500")
       val label = "prop-art"
-      val base = Paths.get(s"$artRoot/$label-s1")
+      def hasData(d: Path) =
+        Files.exists(d.resolve("part1.bin")) && Files.exists(d.resolve("data.bin"))
+      def marked(d: Path) = Files.exists(d.resolve("_DONE"))
       try {
         if (t.preHusk) {
-          write(s"$base/crash.bin", 4)
+          write(s"$artRoot/$label-s1-crashed/crash.bin", 4)
           Thread.sleep(t.staleMs + 20L) // strictly past the TTL
         }
         if (t.preStaging) {
-          val orphan = Paths.get(s"$artRoot/$label-s1-stage-orphan")
+          val orphan = Paths.get(s"$artRoot/$label-s1-orphan")
           write(s"$orphan/part.bin", 4)
           Files.setLastModifiedTime(orphan,
             java.nio.file.attribute.FileTime.fromMillis(
@@ -101,35 +91,21 @@ object PersistedPropertySpec extends Properties("graft.persisted") {
         val builders = t.delays.zipWithIndex.map { case (d, i) =>
           new Thread(() => {
             start.await()
-            try successes.add(Persisted.ensure(spark, label, "s1") {
-              staging =>
-                Thread.sleep(d.toLong)
-                write(s"$staging/data.bin", 8)
+            try successes.add(Persisted.ensure(spark, label, "s1") { dir =>
+              // data in two parts around the build's delay: a dir reaped
+              // mid-build and re-created by the second write lacks part 1
+              write(s"$dir/part1.bin", 8)
+              Thread.sleep(d.toLong)
+              write(s"$dir/data.bin", 8)
             }) catch { case e: Throwable => failures.add(e) }
           }, s"prop-builder-$i")
         }
-        // the chaos actor: ONLY protocol-legal deletes, at random ticks
-        // (a concurrent process running the same reclaim/janitor code)
+        // the chaos actor: a concurrent process's janitor, at random ticks
         val rnd = new scala.util.Random(t.seed)
         val chaosThread = new Thread(() => {
           start.await()
           while (!done.get()) {
-            try {
-              if (rnd.nextBoolean() && Files.exists(base) &&
-                  !Files.exists(base.resolve("_DONE")) &&
-                  Files.getLastModifiedTime(base).toMillis <
-                    System.currentTimeMillis() - t.staleMs) {
-                rm(base)
-              }
-              if (rnd.nextBoolean()) {
-                Files.list(Paths.get(artRoot)).forEach { p =>
-                  if (p.getFileName.toString.contains("-stage-") &&
-                      Files.getLastModifiedTime(p).toMillis <
-                        System.currentTimeMillis() - t.staleMs)
-                    rm(p)
-                }
-              }
-            } catch { case _: java.io.IOException => () } // racing deletes
+            if (rnd.nextBoolean()) Persisted.janitor(spark, label, t.staleMs.toLong)
             Thread.sleep(t.chaosPeriodMs.toLong)
           }
         }, "prop-chaos")
@@ -144,49 +120,36 @@ object PersistedPropertySpec extends Properties("graft.persisted") {
         // 1. loud failures only
         val loudOnly = failures.toArray(Array.empty[Throwable])
           .forall(_.isInstanceOf[java.io.IOException])
-        // every success names the one base
-        val oneBase = successes.toArray(Array.empty[String])
-          .forall(_ == s"file:$base")
-        // 2. no husk / no foreign marker in the end state
-        val markerOk =
-          if (!Files.exists(base.resolve("_DONE"))) true
-          else {
-            val content = new String(
-              Files.readAllBytes(base.resolve("_DONE")),
-              java.nio.charset.StandardCharsets.UTF_8)
-            Files.exists(base.resolve("data.bin")) &&
-              content.startsWith("_BUILD-") &&
-              Files.exists(base.resolve(content))
-          }
-        // 3. no unexpected siblings: only the base and (possibly)
-        // unreaped stagings may exist under the root
-        val siblingsOk = Files.list(Paths.get(artRoot)).toArray
-          .map(_.toString.split('/').last)
-          .forall(n => n == s"$label-s1" || n.contains("-stage-"))
-        // 4. convergence once contention ends (any unmarked leftover
-        // must age past the TTL first)
-        Thread.sleep(t.staleMs + 30L)
-        val fin = Persisted.ensure(spark, label, "s1") { staging =>
-          write(s"$staging/data.bin", 8)
+        // 2. every success holds _DONE plus its data
+        val successOk = successes.toArray(Array.empty[String])
+          .map(d => Paths.get(d.stripPrefix("file:")))
+          .forall(d => marked(d) && hasData(d))
+        // 3. no husk anywhere under the root, reap dirs included
+        val noHusk = {
+          val it = Files.list(Paths.get(artRoot))
+          try it.toArray.map(_.asInstanceOf[Path])
+            .forall(d => !marked(d) || hasData(d))
+          finally it.close()
         }
-        val fp = Paths.get(fin.stripPrefix("file:"))
-        val converged = Files.exists(fp.resolve("_DONE")) &&
-          Files.exists(fp.resolve("data.bin"))
+        // 4. the calls made after contention all return the same valid dir
+        val after = (1 to 3).map(_ => Persisted.ensure(spark, label, "s1") {
+          dir => write(s"$dir/part1.bin", 8); write(s"$dir/data.bin", 8)
+        })
+        val fp = Paths.get(after.head.stripPrefix("file:"))
+        val converged = after.distinct.size == 1 && marked(fp) && hasData(fp)
 
-        val ok = allTerminated && loudOnly && oneBase && markerOk &&
-          siblingsOk && converged
+        val ok = allTerminated && loudOnly && successOk && noHusk && converged
         if (!ok) {
           // scalacheck shrinks poorly on threads — print the verdict
           println(s"FAIL trial=$t terminated=$allTerminated loud=$loudOnly" +
-            s" oneBase=$oneBase marker=$markerOk siblings=$siblingsOk" +
-            s" converged=$converged failures=" +
+            s" success=$successOk noHusk=$noHusk converged=$converged" +
+            s" after=$after failures=" +
             failures.toArray(Array.empty[Throwable]).mkString("; "))
         }
         ok
       } finally {
         spark.conf.unset("spark.graft.persisted.root")
         spark.conf.unset("spark.graft.persisted.staleMs")
-        spark.conf.unset("spark.graft.persisted.publishWaitMs")
       }
     }
 }

@@ -66,275 +66,191 @@ class PersistedSpec extends SparkSpec {
     } finally spark.conf.unset("spark.graft.persisted.root")
   }
 
+  /** Names of the dirs directly under `artRoot`, dot dirs included. */
+  private def dirs(artRoot: String): Seq[String] = {
+    val it = Files.list(Paths.get(artRoot))
+    try it.toArray.toSeq.map(_.asInstanceOf[java.nio.file.Path])
+      .filter(Files.isDirectory(_)).map(_.getFileName.toString).sorted
+    finally it.close()
+  }
+
+  private def marked(dir: String): Boolean =
+    Files.exists(Paths.get(dir.stripPrefix("file:"), "_DONE"))
+
+  /** Run `f` with the persisted root at a fresh dir and `confs` set. */
+  private def withRoot(name: String, confs: (String, String)*)(
+      f: String => Unit): Unit = {
+    val artRoot = PlanDsl.tempDir(name).toString
+    val all = ("spark.graft.persisted.root" -> s"file:$artRoot") +: confs
+    all.foreach { case (k, v) => spark.conf.set(k, v) }
+    try f(artRoot) finally all.foreach { case (k, _) => spark.conf.unset(k) }
+  }
+
   test("a partial artifact (no _DONE) is never attachable") {
-    val artRoot = PlanDsl.tempDir("graft-proot2").toString
-    spark.conf.set("spark.graft.persisted.root", s"file:$artRoot")
-    spark.conf.set("spark.graft.persisted.publishWaitMs", "200")
-    try {
-      // simulate a crashed build: base exists, no _DONE — and is
-      // YOUNGER than the stale TTL, so it may belong to a live
-      // concurrent publisher and must not be reclaimed
-      write(s"$artRoot/spec-partial-s1/data.bin", 4)
+    withRoot("graft-proot2") { artRoot =>
+      // a crashed build's dir, younger than the stale TTL: it may
+      // belong to a live concurrent builder, so it is neither attached
+      // nor reaped
+      write(s"$artRoot/spec-partial-s1-crashed/data.bin", 4)
       var builds = 0
-      val e = intercept[java.io.IOException] {
-        // the fresh build completes but cannot publish over the
-        // unfinished dir — fail loud, never silently attach or destroy
-        Persisted.ensure(spark, "spec-partial", "s1") { staging =>
-          builds += 1
-          write(s"$staging/data.bin", 8)
-        }
+      val dir = Persisted.ensure(spark, "spec-partial", "s1") { d =>
+        builds += 1
+        write(s"$d/data.bin", 8)
       }
       assert(builds == 1)
-      // the completed staging is preserved and NAMED for the operator
-      assert(e.getMessage.contains("-stage-"),
-        s"exception must name the preserved staging: ${e.getMessage}")
-    } finally {
-      spark.conf.unset("spark.graft.persisted.root")
-      spark.conf.unset("spark.graft.persisted.publishWaitMs")
+      assert(!dir.endsWith("-crashed") && marked(dir))
+      assert(Files.size(Paths.get(dir.stripPrefix("file:"), "data.bin")) == 8)
+      assert(dirs(artRoot).contains("spec-partial-s1-crashed"))
     }
   }
 
-  test("_DONE is created in base only after the publish rename") {
-    // s3a contract: rename is copy+delete, so a _DONE renamed along
-    // with the data can appear before the data finishes copying. The
-    // marker must therefore never exist inside the staging dir the
-    // build sees — it is created in base, post-rename.
-    val artRoot = PlanDsl.tempDir("graft-proot3").toString
-    spark.conf.set("spark.graft.persisted.root", s"file:$artRoot")
-    try {
-      var stagingSeen: String = null
-      val dir = Persisted.ensure(spark, "spec-marker", "s1") { staging =>
-        stagingSeen = staging
-        write(s"$staging/data.bin", 8)
-      }
-      assert(!Files.exists(
-        Paths.get(stagingSeen.stripPrefix("file:"), "_DONE")),
-        "_DONE must not be written into staging pre-rename")
-      assert(Files.exists(Paths.get(dir.stripPrefix("file:"), "_DONE")))
-    } finally spark.conf.unset("spark.graft.persisted.root")
-  }
-
   test("a crashed publish (stale base, no _DONE) is reclaimed past TTL") {
-    val artRoot = PlanDsl.tempDir("graft-proot4").toString
-    spark.conf.set("spark.graft.persisted.root", s"file:$artRoot")
-    spark.conf.set("spark.graft.persisted.staleMs", "0")
-    try {
-      write(s"$artRoot/spec-reclaim-s1/data.bin", 4)
-      Thread.sleep(20) // base mtime strictly older than the 0-TTL cutoff
+    withRoot("graft-proot4", "spark.graft.persisted.staleMs" -> "0") { artRoot =>
+      write(s"$artRoot/spec-reclaim-s1-crashed/data.bin", 4)
+      Thread.sleep(20) // mtime strictly older than the 0-TTL cutoff
       var builds = 0
-      val dir = Persisted.ensure(spark, "spec-reclaim", "s1") { staging =>
+      val dir = Persisted.ensure(spark, "spec-reclaim", "s1") { d =>
         builds += 1
-        write(s"$staging/data.bin", 8)
+        write(s"$d/data.bin", 8)
       }
       assert(builds == 1)
-      assert(Files.exists(Paths.get(dir.stripPrefix("file:"), "_DONE")))
-      assert(Files.size(
-        Paths.get(dir.stripPrefix("file:"), "data.bin")) == 8,
-        "the reclaimed base must carry the fresh build, not the crash debris")
-    } finally {
-      spark.conf.unset("spark.graft.persisted.root")
-      spark.conf.unset("spark.graft.persisted.staleMs")
+      assert(marked(dir))
+      assert(Files.size(Paths.get(dir.stripPrefix("file:"), "data.bin")) == 8,
+        "the published dir must carry the fresh build, not the crash debris")
+      assert(dirs(artRoot) == Seq(dir.split('/').last),
+        s"the crashed dir must be reaped: ${dirs(artRoot)}")
     }
   }
 
   test("a concurrent race publishes once; the loser attaches the winner's build") {
-    val artRoot = PlanDsl.tempDir("graft-proot6").toString
-    spark.conf.set("spark.graft.persisted.root", s"file:$artRoot")
-    try {
+    withRoot("graft-proot6") { artRoot =>
+      // four builders run concurrently; the first finishes well before
+      // the others, marks its dir, and each later one finds that marked
+      // sibling, discards its own unmarked dir and returns the sibling
       val builds = new java.util.concurrent.atomic.AtomicInteger(0)
       val results = new java.util.concurrent.ConcurrentLinkedQueue[String]()
       val errors = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
       val start = new java.util.concurrent.CountDownLatch(1)
-      val threads = (1 to 4).map { i =>
+      val threads = (0 until 4).map { i =>
         new Thread(() => {
           start.await()
-          try results.add(Persisted.ensure(spark, "spec-race", "s1") {
-            staging =>
-              builds.incrementAndGet()
-              Thread.sleep(50) // widen the race window
-              write(s"$staging/data.bin", 8)
+          try results.add(Persisted.ensure(spark, "spec-race", "s1") { d =>
+            builds.incrementAndGet()
+            Thread.sleep(50L + i * 150L)
+            write(s"$d/data.bin", 8)
           }) catch { case t: Throwable => errors.add(t) }
         }, s"race-$i")
       }
       threads.foreach(_.start()); start.countDown()
       threads.foreach(_.join(30000))
       assert(errors.isEmpty, s"no racer may fail: ${errors.peek()}")
+      assert(builds.get == 4, "all four must have started a build")
+      val got = results.toArray(Array.empty[String]).toSet
+      assert(got.size == 1, s"all racers must attach one artifact: $got")
+      assert(marked(got.head))
+      assert(dirs(artRoot) == Seq(got.head.split('/').last),
+        s"the losers' dirs must be discarded: ${dirs(artRoot)}")
+    }
+  }
+
+  test("racing builders: a later call builds nothing and attaches the smallest complete dir") {
+    withRoot("graft-prace") { artRoot =>
+      val results = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+      val start = new java.util.concurrent.CountDownLatch(1)
+      val threads = (1 to 4).map { i =>
+        new Thread(() => {
+          start.await()
+          results.add(Persisted.ensure(spark, "spec-race2", "s1") { d =>
+            Thread.sleep(50)
+            write(s"$d/data.bin", 8)
+          })
+        }, s"race2-$i")
+      }
+      threads.foreach(_.start()); start.countDown()
+      threads.foreach(_.join(30000))
       assert(results.size == 4)
-      val dirs = results.toArray(Array.empty[String]).toSet
-      assert(dirs.size == 1, s"all racers must attach one artifact: $dirs")
-      assert(Files.exists(
-        Paths.get(dirs.head.stripPrefix("file:"), "_DONE")))
-      // losers' stagings are cleaned up after the winner's marker lands
-      val leftover = Files.list(Paths.get(artRoot)).toArray.map(_.toString)
-        .filter(_.contains("-stage-"))
-      assert(leftover.isEmpty, s"no staging may leak: ${leftover.toSeq}")
-    } finally spark.conf.unset("spark.graft.persisted.root")
-  }
-
-  test("a base reclaimed between rename and mark fails loud, never a _DONE-only husk") {
-    // the r16 TOCTOU: two builders pass the staleness check; B deletes
-    // base AFTER A's publish rename but BEFORE A's _DONE. A blind
-    // f.create(done) would re-create base as a directory holding only
-    // _DONE — a corrupt artifact every reader attaches. The token
-    // check must fail loud instead.
-    val artRoot = PlanDsl.tempDir("graft-proot7").toString
-    spark.conf.set("spark.graft.persisted.root", s"file:$artRoot")
-    spark.conf.set("spark.graft.persisted.publishWaitMs", "200")
-    val base = Paths.get(s"$artRoot/spec-toctou-s1")
-    Persisted.testBetweenRenameAndMark = () => {
-      // simulate the concurrent reclaimer's delete landing post-rename
-      def rm(p: java.nio.file.Path): Unit = {
-        if (Files.isDirectory(p))
-          Files.list(p).forEach(c => rm(c))
-        Files.deleteIfExists(p)
-      }
-      rm(base)
-    }
-    try {
-      val e = intercept[java.io.IOException] {
-        Persisted.ensure(spark, "spec-toctou", "s1") { staging =>
-          write(s"$staging/data.bin", 8)
-        }
-      }
-      assert(e.getMessage.contains("reclaimed out from under"),
-        s"must name the reclaim race: ${e.getMessage}")
-      assert(!Files.exists(base.resolve("_DONE")),
-        "no _DONE may be written over a base this build no longer owns")
-    } finally {
-      Persisted.testBetweenRenameAndMark = () => ()
-      spark.conf.unset("spark.graft.persisted.root")
-      spark.conf.unset("spark.graft.persisted.publishWaitMs")
+      results.forEach(d => assert(marked(d), s"every racer returns a marked dir: $d"))
+      val complete = dirs(artRoot).filter(n => marked(s"$artRoot/$n"))
+      assert(dirs(artRoot) == complete, "no unmarked dir may be left behind")
+      var builds = 0
+      val fin = Persisted.ensure(spark, "spec-race2", "s1") { _ => builds += 1 }
+      assert(builds == 0)
+      assert(fin.split('/').last == complete.min)
     }
   }
 
-  test("a reclaim rename that nests (base re-created by a racer) is detected, not marked") {
-    // second half of the r16 TOCTOU: our reclaim deleted the stale
-    // base, a racing builder re-created it before our rename, so the
-    // rename NESTED our staging inside base. The r16 reclaim branch
-    // renamed blind and would have claimed the win; the detection must
-    // refuse, and the loud timeout error must name the NESTED path
-    // (the old message claimed the original staging path, which no
-    // longer exists).
-    val artRoot = PlanDsl.tempDir("graft-proot8").toString
-    spark.conf.set("spark.graft.persisted.root", s"file:$artRoot")
-    spark.conf.set("spark.graft.persisted.staleMs", "0")
-    spark.conf.set("spark.graft.persisted.publishWaitMs", "200")
-    val base = Paths.get(s"$artRoot/spec-nest-s1")
-    try {
-      write(s"$artRoot/spec-nest-s1/crash.bin", 4) // stale crashed base
-      Thread.sleep(20)
-      Persisted.testAfterReclaimDelete = () =>
-        // the racer's own rename lands first: base exists again, with
-        // the racer's (unmarked) build inside
-        write(s"$base/racer.bin", 8)
+  test("a build that fails throws an IOException naming its dir and publishes nothing") {
+    withRoot("graft-pfail") { artRoot =>
+      var seen = ""
       val e = intercept[java.io.IOException] {
-        Persisted.ensure(spark, "spec-nest", "s1") { staging =>
-          write(s"$staging/data.bin", 8)
+        Persisted.ensure(spark, "spec-fail", "s1") { d =>
+          seen = d
+          write(s"$d/data.bin", 8)
+          throw new IllegalStateException("boom")
         }
       }
-      assert(e.getMessage.contains("nested into base"),
-        s"must report the actual preserved (nested) path: ${e.getMessage}")
-      assert(!Files.exists(base.resolve("_DONE")),
-        "a nested-rename loser must never mark the racer's base done")
-    } finally {
-      Persisted.testAfterReclaimDelete = () => ()
-      spark.conf.unset("spark.graft.persisted.root")
-      spark.conf.unset("spark.graft.persisted.staleMs")
-      spark.conf.unset("spark.graft.persisted.publishWaitMs")
+      assert(e.getMessage.contains(seen), e.getMessage)
+      assert(e.getCause.getMessage == "boom")
+      assert(dirs(artRoot).forall(n => !marked(s"$artRoot/$n")))
     }
   }
 
-  test("a reclaim landing mid-mark is detected post-write; the marker is retracted") {
-    // the residual window the r17 token guard left open: the reclaimer
-    // deletes base AFTER our exists(token) check but BEFORE our
-    // create(done) — the create then re-creates base as a _DONE-only
-    // husk. The post-write verification must re-check the token,
-    // retract the marker and fail loud; no husk may stay attachable.
-    val artRoot = PlanDsl.tempDir("graft-proot9").toString
-    spark.conf.set("spark.graft.persisted.root", s"file:$artRoot")
-    spark.conf.set("spark.graft.persisted.publishWaitMs", "200")
-    val base = Paths.get(s"$artRoot/spec-midmark-s1")
-    def rm(p: java.nio.file.Path): Unit = {
-      if (Files.isDirectory(p)) Files.list(p).forEach(c => rm(c))
-      Files.deleteIfExists(p)
-    }
-    Persisted.testBetweenTokenCheckAndMark = () => rm(base)
-    try {
+  test("a build reaped by the janitor mid-build fails loud and leaves no _DONE") {
+    withRoot("graft-preap") { artRoot =>
+      // the fault comes from inside the build: a janitor at TTL 0 over
+      // the build's own, still unmarked dir (a build overrunning the
+      // stale TTL while another process sweeps)
       val e = intercept[java.io.IOException] {
-        Persisted.ensure(spark, "spec-midmark", "s1") { staging =>
-          write(s"$staging/data.bin", 8)
+        Persisted.ensure(spark, "spec-reap", "s1") { d =>
+          write(s"$d/data.bin", 8)
+          Thread.sleep(5)
+          Persisted.janitor(spark, "spec-reap", 0L)
+          assert(!Files.exists(Paths.get(d.stripPrefix("file:"))),
+            "the janitor must take the unmarked dir")
         }
       }
-      assert(e.getMessage.contains("retracted"),
-        s"must report the retracted marker: ${e.getMessage}")
-      assert(!Files.exists(base.resolve("_DONE")),
-        "the husk's _DONE must be retracted, never left attachable")
-    } finally {
-      Persisted.testBetweenTokenCheckAndMark = () => ()
-      spark.conf.unset("spark.graft.persisted.root")
-      spark.conf.unset("spark.graft.persisted.publishWaitMs")
+      assert(e.getMessage.contains("reaped"), e.getMessage)
+      assert(dirs(artRoot).isEmpty, s"nothing may be left: ${dirs(artRoot)}")
     }
   }
 
-  test("a successor's valid _DONE survives a loser's mid-mark failure") {
-    // the retraction path must only ever touch a marker THIS build
-    // wrote: if a reclaimer takes base mid-publish and a successor
-    // re-publishes (data + its own token + its own marker) before our
-    // marker write runs, the EXCLUSIVE create must fail loud and the
-    // successor's marker must survive — overwrite-then-retract would
-    // destroy a legitimate artifact whose builder already returned
-    val artRoot = PlanDsl.tempDir("graft-proot11").toString
-    spark.conf.set("spark.graft.persisted.root", s"file:$artRoot")
-    spark.conf.set("spark.graft.persisted.publishWaitMs", "200")
-    val base = Paths.get(s"$artRoot/spec-super-s1")
-    def rm(p: java.nio.file.Path): Unit = {
-      if (Files.isDirectory(p)) Files.list(p).forEach(c => rm(c))
-      Files.deleteIfExists(p)
-    }
-    Persisted.testBetweenTokenCheckAndMark = () => {
-      rm(base) // the reclaim takes our base...
-      Files.createDirectories(base) // ...and a successor re-publishes
-      Files.write(base.resolve("data.bin"), Array.fill[Byte](8)(9))
-      Files.write(base.resolve("_BUILD-other"), Array.emptyByteArray)
-      Files.write(base.resolve("_DONE"),
-        "_BUILD-other".getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    }
-    try {
-      val e = intercept[java.io.IOException] {
-        Persisted.ensure(spark, "spec-super", "s1") { staging =>
-          write(s"$staging/data.bin", 8)
+  test("a build that finds a marked sibling at mark time discards its own dir") {
+    withRoot("graft-psib") { artRoot =>
+      var inner = ""
+      val dir = Persisted.ensure(spark, "spec-sib", "s1") { d =>
+        write(s"$d/data.bin", 8)
+        // a concurrent builder publishes first
+        inner = Persisted.ensure(spark, "spec-sib", "s1") { d2 =>
+          write(s"$d2/data.bin", 9)
         }
       }
-      assert(e.getMessage.contains("concurrent"), e.getMessage)
-      assert(Files.exists(base.resolve("_DONE")),
-        "the successor's marker must survive the loser's failure")
-      assert(new String(Files.readAllBytes(base.resolve("_DONE")),
-        java.nio.charset.StandardCharsets.UTF_8) == "_BUILD-other",
-        "the successor's marker content must be untouched")
-      assert(Files.exists(base.resolve("data.bin")),
-        "the successor's data must be untouched")
-    } finally {
-      Persisted.testBetweenTokenCheckAndMark = () => ()
-      spark.conf.unset("spark.graft.persisted.root")
-      spark.conf.unset("spark.graft.persisted.publishWaitMs")
+      assert(dir == inner && marked(dir))
+      assert(dirs(artRoot) == Seq(dir.split('/').last))
+    }
+  }
+
+  test("a marked dir survives the janitor at TTL 0") {
+    withRoot("graft-pkeep") { artRoot =>
+      val dir = Persisted.ensure(spark, "spec-keep", "s1") { d =>
+        write(s"$d/data.bin", 8)
+      }
+      Thread.sleep(5)
+      Persisted.janitor(spark, "spec-keep", 0L)
+      assert(marked(dir) &&
+        Files.exists(Paths.get(dir.stripPrefix("file:"), "data.bin")))
+      assert(dirs(artRoot) == Seq(dir.split('/').last))
     }
   }
 
   test("stress: builders racing a TTL reclaim converge to one valid artifact") {
-    // N builders over a TTL-expired crashed base, with the janitor and
-    // the reclaim path live (staleMs shorter than a build, so racers
-    // genuinely reclaim each other mid-publish). Invariants: every
-    // failure is the loud IOException kind; every success hands back
-    // the one base path; the end state never shows _DONE without data
-    // (the husk); and an uncontended call afterwards converges to a
-    // valid marked artifact.
-    val artRoot = PlanDsl.tempDir("graft-proot10").toString
-    spark.conf.set("spark.graft.persisted.root", s"file:$artRoot")
-    spark.conf.set("spark.graft.persisted.staleMs", "40")
-    spark.conf.set("spark.graft.persisted.publishWaitMs", "2000")
-    val base = Paths.get(s"$artRoot/spec-stress-s1")
-    try {
-      write(s"$artRoot/spec-stress-s1/crash.bin", 4) // TTL-expired husk
+    // 8 builders over a TTL-expired crashed dir, with staleMs shorter
+    // than most builds, so each builder's janitor reaps the dirs of
+    // slower ones mid-build. Every failure is the loud IOException
+    // kind, every success holds _DONE and its data, no dir anywhere
+    // holds _DONE without data, and once contention ends every call
+    // attaches the same valid artifact.
+    withRoot("graft-proot10", "spark.graft.persisted.staleMs" -> "40") { artRoot =>
+      write(s"$artRoot/spec-stress-s1-crashed/crash.bin", 4)
       Thread.sleep(60)
       val successes = new java.util.concurrent.ConcurrentLinkedQueue[String]()
       val errors = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
@@ -342,10 +258,10 @@ class PersistedSpec extends SparkSpec {
       val threads = (1 to 8).map { i =>
         new Thread(() => {
           start.await()
-          try successes.add(Persisted.ensure(spark, "spec-stress", "s1") {
-            staging =>
-              Thread.sleep(30 + i * 7) // outlive the TTL, stagger racers
-              write(s"$staging/data.bin", 8)
+          try successes.add(Persisted.ensure(spark, "spec-stress", "s1") { d =>
+            write(s"$d/part1.bin", 8)
+            Thread.sleep(30 + i * 7) // outlive the TTL, stagger racers
+            write(s"$d/data.bin", 8)
           }) catch { case t: Throwable => errors.add(t) }
         }, s"stress-$i")
       }
@@ -356,52 +272,40 @@ class PersistedSpec extends SparkSpec {
         assert(t.isInstanceOf[java.io.IOException],
           s"every racer failure must be the loud kind, got: $t")
       }
-      successes.forEach { d =>
-        assert(d == s"file:$base", s"success must name the one base: $d")
+      // both parts: a dir reaped mid-build and re-created by the
+      // second write lacks part 1
+      def hasData(d: String) = Seq("part1.bin", "data.bin")
+        .forall(n => Files.exists(Paths.get(d.stripPrefix("file:"), n)))
+      successes.forEach(d => assert(marked(d) && hasData(d), s"success $d"))
+      dirs(artRoot).foreach { n =>
+        assert(!marked(s"$artRoot/$n") || hasData(s"$artRoot/$n"),
+          s"_DONE without data in $n")
       }
-      // end-state husk check: _DONE implies data
-      if (Files.exists(base.resolve("_DONE")))
-        assert(Files.exists(base.resolve("data.bin")),
-          "_DONE without data files — a corrupt husk survived the race")
-      // convergence: once contention ends (and any unmarked leftover
-      // ages past the TTL), one more call attaches or rebuilds valid
-      Thread.sleep(60)
-      val fin = Persisted.ensure(spark, "spec-stress", "s1") { staging =>
-        write(s"$staging/data.bin", 8)
+      val fin = Persisted.ensure(spark, "spec-stress", "s1") { d =>
+        write(s"$d/part1.bin", 8); write(s"$d/data.bin", 8)
       }
-      val fp = Paths.get(fin.stripPrefix("file:"))
-      assert(Files.exists(fp.resolve("_DONE")) &&
-        Files.exists(fp.resolve("data.bin")),
-        s"final state must be a marked, data-carrying artifact: $fin")
-    } finally {
-      spark.conf.unset("spark.graft.persisted.root")
-      spark.conf.unset("spark.graft.persisted.staleMs")
-      spark.conf.unset("spark.graft.persisted.publishWaitMs")
+      assert(marked(fin) && hasData(fin), s"final state must be valid: $fin")
+      assert(Persisted.ensure(spark, "spec-stress", "s1")(_ => ()) == fin)
     }
   }
 
   test("janitor sweeps stale orphaned stagings, keeps live ones") {
-    val artRoot = PlanDsl.tempDir("graft-proot5").toString
-    spark.conf.set("spark.graft.persisted.root", s"file:$artRoot")
-    spark.conf.set("spark.graft.persisted.staleMs", "60000")
-    try {
+    withRoot("graft-proot5", "spark.graft.persisted.staleMs" -> "60000") { artRoot =>
       // a crashed builder's orphan: older than the TTL
-      val stale = Paths.get(s"$artRoot/spec-jan-zz-stage-dead")
+      val stale = Paths.get(s"$artRoot/spec-jan-s0-dead")
       write(s"$stale/part.bin", 4)
       Files.setLastModifiedTime(stale,
         java.nio.file.attribute.FileTime.fromMillis(
           System.currentTimeMillis() - 120000))
       // a live concurrent build of the same label: younger than TTL
-      val live = Paths.get(s"$artRoot/spec-jan-yy-stage-live")
+      val live = Paths.get(s"$artRoot/spec-jan-s0-live")
       write(s"$live/part.bin", 4)
-      Persisted.ensure(spark, "spec-jan", "s1") { staging =>
-        write(s"$staging/data.bin", 8)
+      Persisted.ensure(spark, "spec-jan", "s1") { d =>
+        write(s"$d/data.bin", 8)
       }
       assert(!Files.exists(stale), "stale orphan must be vacuumed")
-      assert(Files.exists(live), "a live concurrent staging must survive")
-    } finally {
-      spark.conf.unset("spark.graft.persisted.root")
-      spark.conf.unset("spark.graft.persisted.staleMs")
+      assert(Files.exists(live), "a live concurrent build dir must survive")
+      assert(dirs(artRoot).forall(!_.startsWith(".")), "no reap dir may be left")
     }
   }
 }

@@ -282,7 +282,7 @@ class PipelineSpec extends SparkSpec {
       .collect()
     val bases = new java.io.File(sys.props("java.io.tmpdir")).listFiles()
       .filter(f => f.getName.startsWith("graft-medallion-base-") &&
-        !f.getName.contains("stage") && new java.io.File(f, "_DONE").exists())
+        new java.io.File(f, "_DONE").exists())
     assert(bases.nonEmpty, "no persisted medallion base after first call")
     val stamps = bases.map(b => b.getName ->
       new java.io.File(b, "mat/stg_events").lastModified).toMap

@@ -63,7 +63,7 @@ object ShardStagingPropertySpec extends Properties("graft.shardstaging") {
   private def snapshot(dir: Path): Seq[(String, Long, Long, Long)] = {
     import scala.jdk.CollectionConverters._
     // only the staged arrivals: the artifact dir also carries the
-    // Persisted publish-protocol markers (_DONE, _BUILD-*) and local-FS
+    // Persisted publish-protocol markers (_DONE, _BUILD) and local-FS
     // .crc sidecars, which are protocol state, not replayed data
     Files.list(dir).iterator.asScala.toSeq
       .filter(p => Files.isRegularFile(p) &&

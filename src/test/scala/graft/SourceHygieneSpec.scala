@@ -53,8 +53,8 @@ class SourceHygieneSpec extends AnyFunSuite {
     // name-based, like the recipe in the verify skill: a member counts
     // as reached when a non-comment line of src/main or perfbench/src
     // that does not define it names it as a whole word
-    val Member = """^\s*(?:private\[graft\] |protected )?(?:def|val|lazy val|object|class|case class|trait) ([A-Za-z0-9_]+)""".r
-    val Definer = """(?:def|val|object|class|trait) ([A-Za-z0-9_]+)""".r
+    val Member = """^\s*(?:private\[graft\] |protected )?(?:def|val|var|lazy val|object|class|case class|trait) ([A-Za-z0-9_]+)""".r
+    val Definer = """(?:def|val|var|object|class|trait) ([A-Za-z0-9_]+)""".r
     val Comment = """^\s*(?:\*|/\*\*|//).*""".r
     val members = mainSources.flatMap(p =>
       Files.readAllLines(p).asScala.flatMap(Member.findPrefixMatchOf(_))

@@ -17,18 +17,6 @@ class StreamingSpec extends SparkSpec {
     assert(stream.exceptAll(batch).isEmpty && batch.exceptAll(stream).isEmpty)
   }
 
-  test("multi-file-per-arrival landing == single-file landing == batch") {
-    // The production landing shape: each micro-batch arrives as N
-    // parallel part files (never serialized through one writer), the
-    // reader consumes N files per trigger so trigger boundaries still
-    // track arrivals. Watermark progression differs only in WHERE the
-    // arrival boundaries fall — the drained result must be identical
-    // to the single-file contract and to the batch twin.
-    val multi = Streams.dailyMetrics(spark, sf, filesPerBatch = 3)
-    val batch = ParityQueries.dailyMetrics(spark, sf)
-    assert(multi.exceptAll(batch).isEmpty && batch.exceptAll(multi).isEmpty)
-  }
-
   test("streaming latest-per-key == batch latest-per-key") {
     val stream = Streams.latestPerKey(spark, sf)
     val batch = ParityQueries.latestPerKey(spark, sf)
