@@ -47,10 +47,13 @@ object Bench {
     elapsed
   }
 
-  /** Published persisted-index dirs (`graft-<label>-<sig>-<uuid>`
-    * holding a `_DONE` marker) currently on the artifact root. Snapshot
-    * before/after each query so the artifact itself says whether a
-    * row ran against a warm pre-built index or paid a cold build —
+  /** Published persisted artifact dirs (`graft-<label>-<sig>-<uuid>`
+    * holding a `_DONE` marker) currently on the artifact root: indexes,
+    * bucketed layouts, medallion bases and stream landing zones, so a
+    * cold streaming row shows its zone's build in
+    * `persisted_index_state`. Snapshot before/after each query so the
+    * artifact itself says whether a row ran against a warm pre-built
+    * artifact or paid a cold build —
     * the r19 BENCH tail was unreadable without cross-referencing
     * exactly because a 6 s `similarity_recall` could be either a warm
     * 1.6 s probe or a cold 8 s build+probe depending on whether a

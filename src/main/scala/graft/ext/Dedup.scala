@@ -320,15 +320,6 @@ object Dedup {
       .withColumn("n_lsh", coalesce(col("n_lsh"), lit(0L)))
   }
 
-  /** Persisted-LSH-index roots, keyed by corpus identity. The
-    * corpus-sized signing pass is the index BUILD — once per corpus
-    * version, like IVF centroid training — so every access path
-    * (one-shot batch probe, streaming arrival path) shares the same
-    * persisted posting table instead of each re-signing the corpus.
-    */
-  private val lshIndexRoots =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Spread a to-be-signed frame to shuffle width. The md5 minhash
     * family is ~1 ms/doc of per-row work, and corpora/batches usually
     * arrive as few files — without this the signing pass runs at the
@@ -342,64 +333,48 @@ object Dedup {
       .get("spark.sql.shuffle.partitions").toInt)
 
   /** The build half of the persisted-index lifecycle: sign `corpus`
-    * into a versioned `(c_id, band_idx, band_key)` posting table
-    * (memoized per `cacheKey` for the process lifetime) and return the
-    * persisted postings for [[lshIndexProbe]].
+    * into a `(c_id, band_idx, band_key)` posting table, persisted as
+    * plain parquet under a [[graft.operators.Persisted]] dir, and
+    * return the postings for [[lshIndexProbe]].
     */
   def persistedLshIndex(spark: org.apache.spark.sql.SparkSession,
       cacheKey: String, corpus: DataFrame, idCol: String,
       textCol: String, shingleN: Int = 3, numHashes: Int = 16,
       numBands: Int = 4): DataFrame = {
     // signature parameters are part of the index IDENTITY: they join
-    // the memo key (two configs must never alias to one persisted
-    // index) and must be repeated to [[lshIndexProbe]] — same
-    // defaults there, so default callers stay coherent by
+    // the artifact signature (two configs must never alias to one
+    // persisted index) and must be repeated to [[lshIndexProbe]] —
+    // same defaults there, so default callers stay coherent by
     // construction.
     //
-    // CROSS-PROCESS persistence (r14, the join_bucketed contract
-    // applied to the index lifecycle): the index is immutable for a
-    // given corpus version, so it lives under a signature-keyed dir —
-    // cache key + parameters + the corpus PLAN's semantic hash (two
-    // different corpus filters over one dir never alias) + the
-    // documents table's data-file listing (a regenerated corpus can
-    // never silently re-attach a stale index). A fresh process
-    // re-ATTACHES (Versioned.read over the persisted postings)
-    // instead of re-signing the corpus; only the first process after
-    // a corpus change pays the build. Each build writes its own dir
-    // and marks it `_DONE` when complete; a concurrent first-builder
-    // attaches whichever marked dir `Persisted.ensure` returns.
-    // the corpus-definition discriminator is the CANONICALIZED plan's
-    // string, not semanticHash(): the hash is unstable across JVMs
-    // (measured: two processes, two values on the same query), which
-    // silently degraded every new process to a full index rebuild. The
-    // canonicalized string is stable and captures the filter
-    // structure; the source dir and its data files are covered by
-    // cacheKey + the listing. The plan term joins BOTH the on-disk
-    // signature and the in-process memo key — same identity on both
-    // levels, so two same-process calls with the same dir but
-    // different corpus filters can never alias either.
-    val planCrc = {
-      val crc = new java.util.zip.CRC32
-      crc.update(corpus.queryExecution.analyzed.canonicalized.toString
-        .getBytes("UTF-8"))
-      java.lang.Long.toHexString(crc.getValue)
+    // CROSS-PROCESS persistence (the join_bucketed contract applied to
+    // the index lifecycle): the index is immutable for a given corpus
+    // version, so it lives under a signature-keyed dir — cache key +
+    // parameters + the corpus plan + the documents table's data-file
+    // listing (a regenerated corpus can never silently re-attach a
+    // stale index) + the `plain` layout tag (a dir of the older
+    // versioned-table layout is never attached). Every call, in this
+    // process or a fresh one, re-ATTACHES instead of re-signing the
+    // corpus; only the first call after a corpus change pays the
+    // build. The corpus-definition discriminator is the CANONICALIZED
+    // plan's string, not semanticHash(): the hash is unstable across
+    // JVMs (measured: two processes, two values on the same query),
+    // which silently degraded every new process to a full index
+    // rebuild. The canonicalized string is stable and captures the
+    // filter structure, so two corpus filters over one dir never
+    // alias.
+    val root = graft.operators.Persisted.ensure(spark, "graft-lsh-idx",
+      graft.operators.Persisted.signature(spark,
+        Seq(cacheKey, shingleN.toString, numHashes.toString,
+          numBands.toString,
+          corpus.queryExecution.analyzed.canonicalized.toString, "plain"),
+        Seq(s"$cacheKey/documents.parquet"))) { staging =>
+      minhashBands(corpus, idCol, textCol, shingleN, numHashes, numBands)
+        .select(col(idCol).as("c_id"),
+          posexplode(col("bands")).as(Seq("band_idx", "band_key")))
+        .write.parquet(s"$staging/bands")
     }
-    val root = lshIndexRoots.computeIfAbsent(
-      s"$cacheKey|$shingleN|$numHashes|$numBands|$planCrc", { _ =>
-        graft.operators.Persisted.ensure(spark, "graft-lsh-idx",
-          graft.operators.Persisted.signature(spark,
-            Seq(cacheKey, shingleN.toString, numHashes.toString,
-              numBands.toString,
-              corpus.queryExecution.analyzed.canonicalized.toString),
-            Seq(s"$cacheKey/documents.parquet"))) { staging =>
-          graft.operators.Versioned.write(spark, s"$staging/bands",
-            minhashBands(corpus, idCol, textCol, shingleN, numHashes,
-              numBands)
-              .select(col(idCol).as("c_id"),
-                posexplode(col("bands")).as(Seq("band_idx", "band_key"))))
-        }
-      })
-    graft.operators.Versioned.read(spark, s"$root/bands")
+    graft.Tables.parquet(spark, s"$root/bands")
   }
 
   /** Fuzzy (edit-distance) near-dup pairs on a bounded key prefix,
@@ -423,6 +398,45 @@ object Dedup {
     // bit-parity with the joined twin (the oracle's derivation; its
     // test-scope copy `graft.ref.DedupRef.fuzzyPairsJoined` is the
     // spec's equality reference).
+    val p = df.select(col(blockCol), col(idCol),
+      substring(col(textCol), 1, prefixLen).as("_p"))
+    saltedGroups(p, idCol, blockCol, "_p", "p")
+      .select(
+        explode(column(EditPairs(expression(col("_a")), expression(col("_b")),
+          expression(col("_i") === col("_j")), maxDist))).as("e"))
+      .select(col("e.id_a").as("id_a"), col("e.id_b").as("id_b"),
+        col("e.edit_dist").as("edit_dist"))
+  }
+
+  /** Salt count of [[saltedGroups]]: each row is replicated to exactly
+    * this many pair tasks through one exchange.
+    */
+  private val PairSalts = 8
+
+  /** The salted block decomposition the grouped pair kernels
+    * ([[graft.plans.CosinePairs]], [[graft.plans.EditPairs]]) run on.
+    * Each row is salted by id hash into `salts` buckets; pair task
+    * (i, j), i ≤ j, receives bucket-i rows as side `_a` and bucket-j
+    * rows as side `_b` (empty when i = j), so every unordered pair of a
+    * block lands in exactly one group, parallelism is
+    * |blocks|·S(S+1)/2, and group state stays ~|block|/S rows. Side
+    * elements are `struct(id, <field> = payload)`. Output: (blockCol,
+    * _i, _j, _a, _b).
+    *
+    * Null semantics of the blocked self-join these kernels replace,
+    * made explicit: a null block key never matched (null ≠ null), a
+    * null payload produced a null metric the threshold dropped, and a
+    * null id never satisfied id_a < id_b — none may reach a kernel (a
+    * null-key GROUP would pair its members, and the kernel reads a
+    * null long slot as 0, aliasing a real id 0).
+    */
+  private[graft] def saltedGroups(df: DataFrame, idCol: String,
+      blockCol: String, payload: String, field: String,
+      salts: Int = PairSalts): DataFrame = {
+    // ids are packed into the kernel's long slots via cast("long"): a
+    // non-integral id column would cast to null row-by-row (never an
+    // analysis error) and the kernel's getLong would read 0 — garbage
+    // (0, 0) pairs instead of a loud failure
     val idType = df.schema(idCol).dataType
     require(idType match {
       case org.apache.spark.sql.types.ByteType |
@@ -430,41 +444,24 @@ object Dedup {
            org.apache.spark.sql.types.IntegerType |
            org.apache.spark.sql.types.LongType => true
       case _ => false
-    }, s"fuzzy near-dup ids ride the pair kernel as longs; '$idCol' " +
-      s"must be an integral column, got $idType — map string/UUID ids " +
-      "to a surrogate long first (a silent cast would null them out)")
+    }, s"near-dup ids ride the pair kernel as longs; '$idCol' must be " +
+      s"an integral column, got $idType — map string/UUID ids to a " +
+      "surrogate long first (a silent cast would null them out)")
     val spark = df.sparkSession
-    val s = spark.conf.getOption("spark.graft.pairs.salts")
-      .map(_.toInt).getOrElse(8)
     import spark.implicits._
     val tasks = broadcast(
-      (for { i <- 0 until s; j <- i until s } yield (i, j))
+      (for { i <- 0 until salts; j <- i until salts } yield (i, j))
         .toDF("_i", "_j"))
-    // null semantics of the joined twin, made explicit before the
-    // kernel: a null block never matched (null ≠ null), a null prefix
-    // (null text) produced a null distance the filter dropped, and a
-    // null id never satisfied id_a < id_b — none may reach the kernel
-    // (a null-key group would pair its members; the kernel reads a
-    // null long slot as 0, aliasing a real id 0)
-    val p = df.select(col(blockCol), col(idCol),
-        substring(col(textCol), 1, prefixLen).as("_p"))
-      .filter(col(blockCol).isNotNull && col("_p").isNotNull &&
+    def side(cond: org.apache.spark.sql.Column) =
+      collect_list(when(cond,
+        struct(col(idCol).cast("long").as("id"), col(payload).as(field))))
+    df.filter(col(blockCol).isNotNull && col(payload).isNotNull &&
         col(idCol).isNotNull)
-      .withColumn("_sa", pmod(hash(col(idCol)), lit(s)))
+      .withColumn("_sa", pmod(hash(col(idCol)), lit(salts)))
       .join(tasks, col("_sa") === col("_i") || col("_sa") === col("_j"))
-    val grouped = p.groupBy(col(blockCol), col("_i"), col("_j"))
-      .agg(
-        collect_list(when(col("_sa") === col("_i"),
-          struct(col(idCol).cast("long").as("id"), col("_p").as("p"))))
-          .as("_a"),
-        collect_list(when(col("_sa") === col("_j") && col("_i") =!= col("_j"),
-          struct(col(idCol).cast("long").as("id"), col("_p").as("p"))))
-          .as("_b"))
-    grouped.select(
-        explode(column(EditPairs(expression(col("_a")), expression(col("_b")),
-          expression(col("_i") === col("_j")), maxDist))).as("e"))
-      .select(col("e.id_a").as("id_a"), col("e.id_b").as("id_b"),
-        col("e.edit_dist").as("edit_dist"))
+      .groupBy(col(blockCol), col("_i"), col("_j"))
+      .agg(side(col("_sa") === col("_i")).as("_a"),
+        side(col("_sa") === col("_j") && col("_i") =!= col("_j")).as("_b"))
   }
 
   /** Embedding-cosine near-duplicate pairs within a blocking column
@@ -488,18 +485,13 @@ object Dedup {
     // pair kernel instead of the blocked self-join. The join capped
     // parallelism at |blocks| (10 labels on a 32-thread host left 2/3
     // of it idle) and paid ~2 µs/pair of join-row machinery per
-    // candidate — 40× the dot product's arithmetic. Each row is
-    // salted by id hash into S buckets; pair task (i, j), i ≤ j,
-    // receives bucket-i rows as side A and bucket-j rows as side B
-    // (every unordered pair lands in exactly one task), so
-    // parallelism is |blocks|·S(S+1)/2 and group state stays
-    // ~|block|/S vectors. graft_cosine_pairs unpacks each group's
-    // vectors ONCE into primitive arrays and runs the n² dots as
-    // tight scalar math. Measured at 30× (graft.Bench `dedup_embedding_cosine`):
-    // the join shape took 46.8 s; the DuckDB twin runs
-    // the same quadratic in 2.9 s, which the join shape missed 16×.
-    // S is a knob (spark.graft.pairs.salts); the replication factor
-    // is exactly S copies of each row through one exchange.
+    // candidate — 40× the dot product's arithmetic. The
+    // decomposition is [[saltedGroups]]'s; graft_cosine_pairs unpacks
+    // each group's vectors ONCE into primitive arrays and runs the n²
+    // dots as tight scalar math. Measured at 30× (graft.Bench
+    // `dedup_embedding_cosine`): the join shape took 46.8 s; the
+    // DuckDB twin runs the same quadratic in 2.9 s, which the join
+    // shape missed 16×.
     val e = Vectors.unitized(df, vecCol, idCol -> idCol,
         blockCol -> blockCol)
       .withColumnRenamed("_uv", "_u")
@@ -512,51 +504,10 @@ object Dedup {
     */
   private[graft] def embeddingNearDupsUnit(e: DataFrame, idCol: String,
       vecCol: String, blockCol: String, minCosine: Double): DataFrame = {
-    // ids are packed into the kernel's long slots via cast("long"): a
-    // non-integral id column would cast to null row-by-row (never an
-    // analysis error) and the kernel's getLong would read 0 — garbage
-    // (0, 0) pairs instead of a loud failure. Every public entry
-    // (embeddingNearDups, semantic, SignLsh) funnels through here.
-    val idType = e.schema(idCol).dataType
-    require(idType match {
-      case org.apache.spark.sql.types.ByteType |
-           org.apache.spark.sql.types.ShortType |
-           org.apache.spark.sql.types.IntegerType |
-           org.apache.spark.sql.types.LongType => true
-      case _ => false
-    }, s"embedding near-dup ids ride the pair kernel as longs; " +
-      s"'$idCol' must be an integral column, got $idType — map " +
-      "string/UUID ids to a surrogate long first (a silent cast " +
-      "would null them out)")
-    val spark = e.sparkSession
-    val s = spark.conf.getOption("spark.graft.pairs.salts")
-      .map(_.toInt).getOrElse(8)
-    import spark.implicits._
-    val tasks = broadcast(
-      (for { i <- 0 until s; j <- i until s } yield (i, j))
-        .toDF("_i", "_j"))
-    // join semantics, made explicit: a null block key never matched
-    // (null ≠ null) and a null vector produced a null cosine the
-    // threshold filter dropped — neither may reach the kernel (a
-    // null-key GROUP would otherwise pair its members). A null ID is
-    // excluded too: the kernel's getLong reads a null slot as 0, so
-    // null-id rows would pair under one shared fake identity 0 and
-    // alias any real id 0 — the join twin's `id_a < id_b` drops null
-    // ids the same way (null comparisons are never true).
-    val tagged = e
-      .filter(col(blockCol).isNotNull && col(vecCol).isNotNull &&
-        col(idCol).isNotNull)
-      .withColumn("_sa", pmod(hash(col(idCol)), lit(s)))
-      .join(tasks, col("_sa") === col("_i") || col("_sa") === col("_j"))
-    val grouped = tagged.groupBy(col(blockCol), col("_i"), col("_j"))
-      .agg(
-        collect_list(when(col("_sa") === col("_i"),
-          struct(col(idCol).cast("long").as("id"), col(vecCol).as("v"))))
-          .as("_a"),
-        collect_list(when(col("_sa") === col("_j") && col("_i") =!= col("_j"),
-          struct(col(idCol).cast("long").as("id"), col(vecCol).as("v"))))
-          .as("_b"))
-    grouped.select(col(blockCol),
+    // every public entry (embeddingNearDups, semantic, SignLsh)
+    // funnels through here
+    saltedGroups(e, idCol, blockCol, vecCol, "v")
+      .select(col(blockCol),
         explode(column(CosinePairs(expression(col("_a")), expression(col("_b")),
           expression(col("_i") === col("_j")), minCosine))).as("p"))
       .select(col(blockCol), col("p.id_a").as("id_a"),

@@ -29,9 +29,10 @@ import graft.plans.PqAdc
   *
   * Build/probe split (the 100 TB lifecycle): [[trainCodebook]] and
   * [[encode]] produce plain DataFrames — the PQ INDEX — that a caller
-  * persists once (e.g. `Versioned.write`) and probes many times via
-  * [[adcProbe]], which builds a pure plan: broadcast LUTs + map-only
-  * scoring, ZERO jobs at construction and no index-rebuild work.
+  * persists once (e.g. as parquet in a `Persisted` dir) and probes
+  * many times via [[adcProbe]], which builds a pure plan: broadcast
+  * LUTs + map-only scoring, ZERO jobs at construction and no
+  * index-rebuild work.
   * [[adcTopK]] composes all three for the one-shot convenience path.
   *
   * Scale shape: codebooks and query LUTs are tiny and broadcast; the

@@ -72,8 +72,9 @@ object Similarity {
     * which is what makes this approximate operator exactly
     * oracle-checkable.
     *
-    * Pure plan; callers persist once (e.g. `Versioned.write`) and
-    * probe many times with [[ivfProbe]]. Schema: (_cell, _centroid).
+    * Pure plan; callers persist once (e.g. as parquet in a
+    * `Persisted` dir) and probe many times with [[ivfProbe]].
+    * Schema: (_cell, _centroid).
     */
   def trainCentroids(corpus: DataFrame, vecCol: String,
       blockCol: String): DataFrame =

@@ -65,7 +65,7 @@ object Layout {
       col(s"max_$c") >= lo && col(s"min_$c") <= hi
     }.reduce(_ && _)
     val files = idx.filter(overlap).select("file")
-      .collect().map(_.getString(0))
+      .collect().toSeq.map(_.getString(0))
     val residual = bounds.map { case (c, lo, hi) =>
       col(c) >= lo && col(c) <= hi
     }.reduce(_ && _)

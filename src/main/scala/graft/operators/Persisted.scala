@@ -5,7 +5,7 @@ import org.apache.spark.sql.SparkSession
 
 /** Build-once, attach-everywhere staging for immutable derived
   * artifacts (bucketed layouts, medallion bases, LSH/IVF/PQ indexes,
-  * shard landing zones). Each build writes into its own fresh dir
+  * stream landing zones). Each build writes into its own fresh dir
   * `<label>-<sig>-<uuid>` under [[root]]; a `_DONE` file created after
   * the data marks it complete, and every later call, in this process
   * or any other, attaches the smallest-named marked dir. No dir is
@@ -38,6 +38,14 @@ object Persisted {
 
   private def fs(spark: SparkSession, p: Path): FileSystem =
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  /** `f` without the local FS's checksum layer: a file created or
+    * renamed through it gets no `.crc` sidecar.
+    */
+  private[graft] def raw(f: FileSystem): FileSystem = f match {
+    case c: ChecksumFileSystem => c.getRawFileSystem
+    case o => o
+  }
 
   private def glob(f: FileSystem, pattern: Path): Seq[FileStatus] =
     Option(f.globStatus(pattern)).toSeq.flatten
@@ -142,8 +150,7 @@ object Persisted {
           // non-recursive, so a reaped dir is never re-created as a
           // `_DONE`-only husk; the checksummed local FS checks for the
           // parent and then mkdirs it, so mark through its raw FS
-          val raw = f match { case c: ChecksumFileSystem => c.getRawFileSystem case o => o }
-          try raw.createFile(new Path(dir, "_DONE")).overwrite(false).build().close()
+          try raw(f).createFile(new Path(dir, "_DONE")).overwrite(false).build().close()
           catch { case e: java.io.IOException => throw fail(dir, "could not be marked", e) }
           dir
       }

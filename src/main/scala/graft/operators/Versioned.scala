@@ -14,19 +14,20 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * immutable, so readers pinned to a version see a consistent
   * snapshot regardless of concurrent writes; the pointer swap is the
   * ONLY mutation. Crash semantics: a crash mid-snapshot-write leaves
-  * a dir without `_SUCCESS` (ignored by the fallback and by vacuum's
-  * keep-count); a crash mid-pointer-swap leaves either the old
-  * pointer (old version stays live) or no pointer (readers fall back
-  * to the newest COMPLETE snapshot). At 100 TB this layout also makes
-  * rollback and audit O(1): point the pointer, nothing rewrites.
+  * a dir without `_SUCCESS` (ignored by the fallback); a crash
+  * mid-pointer-swap leaves either the old pointer (old version stays
+  * live) or no pointer (readers fall back to the newest COMPLETE
+  * snapshot). At 100 TB this layout also makes rollback and audit
+  * O(1): point the pointer, nothing rewrites.
   *
-  * Concurrency contract: SINGLE WRITER, single maintainer. `write`
-  * is read-increment-write on the version counter (two concurrent
-  * writers could claim the same version), and `vacuum` must not race
-  * an in-flight commit — vacuum therefore keeps incomplete snapshot
-  * dirs younger than a grace threshold (they may be mid-write), and
-  * only reclaims old ones. Readers are safe under this contract at
-  * any concurrency: they touch only immutable snapshots.
+  * Concurrency contract: SINGLE WRITER. `write` is
+  * read-increment-write on the version counter (two concurrent
+  * writers could claim the same version). Readers are safe at any
+  * concurrency: they touch only immutable snapshots.
+  *
+  * A build-once artifact needs no second commit: a
+  * [[Persisted]] dir is already complete and immutable once marked,
+  * so artifacts under it are plain parquet.
   */
 object Versioned {
 
@@ -94,49 +95,5 @@ object Versioned {
       throw new java.util.NoSuchElementException(
         s"version $v of $dir does not exist or is incomplete")
     spark.read.parquet(path.toString)
-  }
-
-  /** Latest write activity under `p`: a snapshot dir's own mtime is
-    * stamped at CREATION and never advances while task files land
-    * under `_temporary`, so in-flight-ness must be judged from the
-    * newest mtime in the subtree (bounded depth — task-attempt dirs
-    * sit 2-3 levels down).
-    */
-  private def lastActivity(f: org.apache.hadoop.fs.FileSystem,
-      p: Path, depth: Int = 3): Long = {
-    val st = f.getFileStatus(p)
-    if (!st.isDirectory || depth == 0) st.getModificationTime
-    else (st.getModificationTime +: f.listStatus(p).toSeq
-      .map(c => lastActivity(f, c.getPath, depth - 1))).max
-  }
-
-  /** Drop all but the newest `keep` committed versions, plus any
-    * incomplete snapshot dirs whose latest write activity is OLDER
-    * than `graceMs` — a recently-active incomplete dir is a commit in
-    * flight (see the concurrency contract above), so it is left
-    * alone regardless of how long ago it STARTED. The default grace
-    * is hours, not minutes: one LARGE file can be open for a long
-    * time with no mtime advance after creation, so a short grace
-    * could reclaim a live in-flight snapshot mid-write. The live
-    * pointer target is never dropped: keep is clamped to include it.
-    */
-  def vacuum(spark: SparkSession, dir: String, keep: Int,
-      graceMs: Long = 6L * 60 * 60 * 1000): Unit = {
-    require(keep >= 1, "vacuum must keep at least the live version")
-    val committed = versions(spark, dir)
-    val root = new Path(s"$dir/_versions")
-    val f = fs(spark, root)
-    val keepSet = committed.takeRight(keep).toSet ++
-      latestVersion(spark, dir).toSet
-    val now = System.currentTimeMillis()
-    if (f.exists(root)) f.listStatus(root).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("v="))
-      .foreach { s =>
-        val v = s.getPath.getName.stripPrefix("v=").toLong
-        val incomplete = !f.exists(new Path(s.getPath, "_SUCCESS"))
-        lazy val expired = now - lastActivity(f, s.getPath) > graceMs
-        if ((incomplete && expired) ||
-            (!incomplete && !keepSet.contains(v))) f.delete(s.getPath, true)
-      }
   }
 }

@@ -82,7 +82,7 @@ object PipelineQueries {
     */
   def streamingDedup(spark: SparkSession, dir: String): DataFrame = {
     val target = tempDir("graft-sdedup").resolve("t").toString
-    Streams.dedupToMergeSink(spark, dir, target, duplicated = true)
+    Streams.dedupToMergeSink(spark, dir, target)
       .select("event_id", "user_id", "event_type", "value")
       .orderBy("event_id")
   }

@@ -6,7 +6,6 @@ import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.ext.{Dedup, KMeans, Pq, Sampling, SignLsh, Similarity}
 import graft.functions.Vectors
-import graft.operators.Versioned
 
 /** Similarity-search surface over the `embeddings` table: brute-force
   * cosine top-k (exact baseline, oracle-checked), IVF-style probe
@@ -42,7 +41,7 @@ object SimilarityQueries {
   }
 
   /** The production IVF lifecycle: centroids trained ONCE, persisted
-    * as a versioned table, probes read the persisted index as pure
+    * as a parquet table, probes read the persisted index as pure
     * plans (zero re-training — IvfIndexSpec pins it). Identical
     * results to the one-shot `similarity_ivf`, which is exactly what
     * the shared oracle asserts.
@@ -55,14 +54,14 @@ object SimilarityQueries {
     // and process. The recurring cost is the probe, which is the
     // production lifecycle this query exists to measure.
     val root = graft.operators.Persisted.ensure(spark, "graft-ivfindex",
-      graft.operators.Persisted.signature(spark, Seq("ivf", "label"),
+      graft.operators.Persisted.signature(spark, Seq("ivf", "label", "plain"),
         Seq(s"$dir/embeddings.parquet"))) { staging =>
-      Versioned.write(spark, s"$staging/centroids",
-        Similarity.trainCentroids(emb, "embedding", "label"))
+      Similarity.trainCentroids(emb, "embedding", "label")
+        .write.parquet(s"$staging/centroids")
     }
     Similarity.ivfProbe(emb.filter(col("vec_id") < 100), emb, "vec_id",
         "vec_id", "embedding", "label",
-        Versioned.read(spark, s"$root/centroids"), k = 3, nprobe = 3)
+        Tables.parquet(spark, s"$root/centroids"), k = 3, nprobe = 3)
       .orderBy("q_id", "rank")
   }
 
@@ -163,9 +162,9 @@ object SimilarityQueries {
   }
 
   /** The production PQ lifecycle: train + encode ONCE, persist the
-    * index as versioned tables ([[Versioned]] — immutable snapshots,
-    * O(1) rollback), then answer queries by probing the persisted
-    * copy. The probe plan is pure (broadcast LUTs + map-only ADC,
+    * index as parquet tables under a [[graft.operators.Persisted]]
+    * dir (immutable once marked), then answer queries by probing the
+    * persisted copy. The probe plan is pure (broadcast LUTs + map-only ADC,
     * zero index-rebuild jobs — PqSpec pins it); results are identical
     * to the one-shot `similarity_pq` path, which is exactly what the
     * shared oracle asserts.
@@ -178,19 +177,19 @@ object SimilarityQueries {
     // codes) is the recurring cost
     val root = graft.operators.Persisted.ensure(spark, "graft-pqindex",
       graft.operators.Persisted.signature(spark,
-        Seq("pq", pqM.toString, embDim.toString, pqTrainHex),
+        Seq("pq", pqM.toString, embDim.toString, pqTrainHex, "plain"),
         Seq(s"$dir/embeddings.parquet"))) { staging =>
       val codebook = Pq.trainCodebook(
         Sampling.sample(pqCorpus(emb), col("vec_id"), lit(pqTrainHex)),
         "embedding", "_pqcell", pqM, embDim)
-      Versioned.write(spark, s"$staging/codebook", codebook)
-      Versioned.write(spark, s"$staging/codes",
-        Pq.encode(emb, "vec_id", "embedding",
-          Versioned.read(spark, s"$staging/codebook"), pqM, embDim))
+      codebook.write.parquet(s"$staging/codebook")
+      Pq.encode(emb, "vec_id", "embedding",
+          Tables.parquet(spark, s"$staging/codebook"), pqM, embDim)
+        .write.parquet(s"$staging/codes")
     }
-    val cb = Versioned.read(spark, s"$root/codebook")
+    val cb = Tables.parquet(spark, s"$root/codebook")
     Pq.adcProbe(emb.filter(col("vec_id") < 100), "vec_id", "embedding",
-        cb, Versioned.read(spark, s"$root/codes"), pqM, embDim, k = 3)
+        cb, Tables.parquet(spark, s"$root/codes"), pqM, embDim, k = 3)
       .orderBy("q_id", "rank")
   }
 

@@ -2,11 +2,14 @@ package graft.streaming
 
 import java.nio.file.Files
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.PlanDsl
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, Trigger}
 import org.apache.spark.sql.types._
+
+import graft.operators.Persisted
 
 /** Structured Streaming realization of the reference's
   * orchestration-level streaming semantics (SURVEY §2.9):
@@ -22,12 +25,20 @@ import org.apache.spark.sql.types._
   * source and returns the result as a DataFrame, so batch oracles can
   * check streaming output — semantic equivalence of the two modes is
   * part of the engine's contract (SURVEY §7.4).
+  *
+  * The streams replay landing zones: directories of mtime-ordered
+  * arrival files, the shape Structured Streaming's file source reads.
+  * A zone is a pure function of its shape and its source table's
+  * files, so it is a [[Persisted]] artifact ([[zone]]): the first call
+  * on an artifact root builds it, every later call in any process
+  * attaches it. Checkpoints and sinks are per run, under the stream
+  * scratch root.
   */
 object Streams {
 
-  /** Events schema as the stream's parquet reader sees the STAGED
-    * landing-zone files (ts = INT64 micros — normalized at staging
-    * time from whichever flavor the source parquet used; see
+  /** Events schema as the stream's parquet reader sees the events
+    * landing zones (ts = INT64 micros — normalized at staging time
+    * from whichever flavor the source parquet used; see
     * [[eventsStream]] and graft.Tables).
     */
   val eventsRawSchema: StructType = StructType(Seq(
@@ -38,18 +49,8 @@ object Streams {
   case class Ev(event_id: Long, ts: java.sql.Timestamp, user_id: Long,
       event_type: String, value: Double)
 
-  /** Staged landing zones, keyed by the full landing config
-    * (source dir, batches, flushSentinel, duplicated).
-    * The landing zone is test scaffolding standing in for the
-    * directory micro-batches arrive into — in production it exists
-    * once, shared by every stream reading it, so it is memoized per
-    * process.
-    */
-  private val stagedDirs =
-    new java.util.concurrent.ConcurrentHashMap[(String, Int, Boolean, Boolean), String]()
-
   /** Scratch root for the EPHEMERAL dirs these finite-replay streams
-    * create per run (landing zones, checkpoints, changelog sinks):
+    * create per run (checkpoints, changelog sinks, shard layouts):
     * created fresh, never reused across runs, deleted when the JVM
     * exits.
     * Their WAL/fsync durability buys nothing — a durable checkpoint is
@@ -74,30 +75,6 @@ object Streams {
   }
   private def scratch(prefix: String): java.nio.file.Path =
     PlanDsl.tempDir(prefix, scratchRoot.toString)
-
-  private val baseEventFiles =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** Per-source-dir normalized single-file events parquet: ts cast to
-    * long MICROS through the same loader the batch queries use
-    * (graft.Tables.events handles both driver parquet flavors —
-    * TIMESTAMP(NANOS)-as-long and TIMESTAMP(MICROS)), so staged files
-    * always carry INT64 micros and the stream's fixed read schema
-    * (`eventsRawSchema`) never depends on the landing zone's flavor.
-    * Written once, derived from by every landing-zone config.
-    */
-  private def baseEventsFile(spark: SparkSession,
-      dir: String): java.nio.file.Path =
-    java.nio.file.Paths.get(memoStage(baseEventFiles, dir) {
-      val tmp = scratch("graft-stream-base").toString
-      graft.Tables.events(spark, dir)
-        .withColumn("ts", unix_micros(col("ts")))
-        .coalesce(1).write.mode("overwrite").parquet(tmp)
-      val parts = new java.io.File(tmp).listFiles()
-        .filter(_.getName.startsWith("part-"))
-      require(parts.length == 1, s"coalesce(1) wrote ${parts.length} files")
-      parts.head.toString
-    })
 
   private val ShufflePartitions = "spark.sql.shuffle.partitions"
 
@@ -138,90 +115,95 @@ object Streams {
     q.awaitTermination()
   }
 
-  /** Memoize `build` under `key` WITHOUT holding the map's bin lock
-    * while it runs — staging executes multi-second Spark jobs, and
-    * `computeIfAbsent` would serialize unrelated keys sharing a bin
-    * (and deadlock on any re-entrant staging). Losing the putIfAbsent
-    * race just means one redundant temp-dir staging; the winner's dir
-    * is what every caller reads.
+  /** Build (or attach) the landing zone of `shape` over the source
+    * table dir `table`: `n` arrival files `bNNN.parquet`, file b
+    * stamped with mtime 1700000000000 + b·60 s. The file source replays
+    * a zone in mtime order, one file per trigger, so arrival b is
+    * micro-batch b in every process that attaches the zone.
+    *
+    * `arrivals` is the zone's rows with an arrival column `_b` in
+    * [0, n), each `_b` value held by ONE task, so one `partitionBy`
+    * write stages every arrival as one file; an arrival with no rows
+    * is staged as a zero-row file with the zone's schema, so the
+    * stream still sees its trigger. The zone dir ends up holding its
+    * arrival files and [[Persisted]]'s `_`-prefixed markers, which the
+    * file source skips.
     */
-  private def memoStage[K](map: java.util.concurrent.ConcurrentHashMap[K, String],
-      key: K)(build: => String): String = {
-    val hit = map.get(key)
-    if (hit != null) hit
-    else {
-      val built = build
-      val prev = map.putIfAbsent(key, built)
-      if (prev != null) prev else built
-    }
-  }
-
-  /** Stage the sentinel-FREE events landing zone for one config —
-    * the body every `eventsStream` config shares (the sentinel config
-    * copies this zone's files and appends its sentinels).
-    */
-  private def stagePlain(spark: SparkSession, dir: String, batches: Int,
-      duplicated: Boolean): String = {
-    val out = scratch("graft-stream-src")
-    // The normalized base file is written ONCE per source dir and
-    // shared by every landing-zone config: single-file and
-    // duplicated configs COPY it (no Spark job at all), range-split
-    // configs and the sentinel max-ts read scan the one local file
-    // instead of re-reading + re-normalizing the source table per
-    // config (was one full coalesce(1) write per config — a
-    // measurable slice of the streaming bench family's fixed cost).
-    val base = baseEventsFile(spark, dir)
-    val ev = spark.read.schema(eventsRawSchema).parquet(base.toString)
-    // write `src`, return its part files in name (= partition) order
-    def writeParts(src: DataFrame): Seq[java.nio.file.Path] = {
-      val tmp = scratch("graft-stream-split").toString
-      src.write.mode("overwrite").parquet(tmp)
-      new java.io.File(tmp).listFiles()
-        .filter(_.getName.startsWith("part-")).sortBy(_.getName)
-        .map(_.toPath).toSeq
-    }
-    // (source, staged name, arrival index): files of one arrival
-    // share a modification time, so arrival order == mtime order
-    // regardless of copy speed — the ONE home of the mtime
-    // convention (base 1700000000000L, 60 s per arrival) the
-    // sentinel offsets at 990/991 build on
-    def stage(files: Seq[(java.nio.file.Path, String, Int)]): Unit =
-      files.foreach { case (src, n, arrival) =>
-        val dst = out.resolve(n)
-        Files.copy(src, dst)
-        Files.setLastModifiedTime(dst,
-          java.nio.file.attribute.FileTime.fromMillis(
-            1700000000000L + arrival * 60000L))
+  private def zone(spark: SparkSession, shape: Seq[String], table: String,
+      n: Int)(arrivals: => DataFrame): String =
+    Persisted.ensure(spark, "graft-stream-src",
+      Persisted.signature(spark, shape, Seq(table))) { staging =>
+      val split = new Path(staging, "_split")
+      // through the raw FS: a renamed arrival leaves its `.crc`
+      // sidecar behind in `split`, deleted with it
+      val fs = Persisted.raw(
+        split.getFileSystem(spark.sparkContext.hadoopConfiguration))
+      val frame = arrivals
+      frame.write.partitionBy("_b").parquet(split.toString)
+      (0 until n).foreach { b =>
+        val dir = new Path(split, s"_b=$b")
+        if (!fs.exists(dir))
+          spark.createDataFrame(
+              java.util.Collections.emptyList[org.apache.spark.sql.Row](),
+              frame.drop("_b").schema)
+            .repartition(1).write.parquet(dir.toString)
+        val parts = fs.listStatus(dir).filter(_.getPath.getName.startsWith("part-"))
+        require(parts.length == 1,
+          s"landing zone $shape staged ${parts.length} files for arrival $b, need 1")
+        val dst = new Path(staging, f"b$b%03d.parquet")
+        val stamp = 1700000000000L + b * 60000L
+        if (!fs.rename(parts.head.getPath, dst))
+          throw new java.io.IOException(s"could not stage arrival $b as $dst")
+        fs.setTimes(dst, stamp, -1)
+        // the arrival order IS the mtime order: a root whose filesystem
+        // drops or rounds set mtimes (an object store) would replay the
+        // arrivals in write order, so it fails here, loud
+        val kept = fs.getFileStatus(dst).getModificationTime
+        require(kept == stamp,
+          s"landing zone root ${Persisted.root(spark)} does not keep the " +
+            s"mtimes it sets ($dst: set $stamp, read $kept); the file source " +
+            "orders arrivals by mtime, so stage zones on a root that keeps " +
+            "them (a file: root)")
       }
-    if (duplicated) {
-      // the whole log staged TWICE on purpose = at-least-once replay
-      stage(Seq((base, "a0.parquet", 0), (base, "a1.parquet", 1)))
-    } else if (batches <= 1) {
-      stage(Seq((base, "events.parquet", 0)))
-    } else {
-      // one ARRIVAL per range batch, each one ts-range part file. A
-      // range split with an empty partition yields fewer files, never
-      // replayed content (each part is copied exactly once).
-      stage(writeParts(ev.repartitionByRange(batches, col("ts")))
-        .zipWithIndex.map { case (f, a) => (f, f"b$a%03d.parquet", a) })
+      fs.delete(split, true)
     }
-    out.toString
-  }
 
-  /** Append the two flush-sentinel micro-batch files to a staged
-    * landing zone: the watermark a batch runs with comes from the
-    * PREVIOUS batch's max event time, so the first sentinel advances
-    * it and the second triggers the batch that actually emits the
-    * flushed windows. Both rows ride ONE Spark write
-    * (`repartitionByRange(2, ts)` puts the earlier sentinel in part 0
-    * — RangePartitioner ranges ascend with partition index), halving
-    * the staging jobs vs one coalesce(1) write per sentinel.
+  /** The micro-batched file-source read of a staged zone. */
+  private def replay(spark: SparkSession, zone: String,
+      schema: StructType): DataFrame =
+    spark.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(zone)
+
+  /** Replay an events zone: `arrivals` maps the events table, `ts`
+    * normalized to long micros through the loader the batch queries
+    * use (graft.Tables.events handles both driver parquet flavors —
+    * TIMESTAMP(NANOS)-as-long and TIMESTAMP(MICROS)), to its `_b`
+    * frame; the zone is replayed as [[eventsRawSchema]] with `ts` back
+    * as a timestamp.
     */
-  private def addSentinels(spark: SparkSession, dir: String,
-      out: java.nio.file.Path): Unit = {
+  private def replayEvents(spark: SparkSession, dir: String, shape: String,
+      n: Int)(arrivals: DataFrame => DataFrame): DataFrame =
+    replay(spark,
+      zone(spark, Seq("events", shape), s"$dir/events.parquet", n)(arrivals(
+        graft.Tables.events(spark, dir).withColumn("ts", unix_micros(col("ts"))))),
+      eventsRawSchema)
+      .withColumn("ts", expr("timestamp_micros(ts)"))
+
+  /** Three time-ordered arrivals: RangePartitioner's ranges ascend
+    * with partition index and equal keys share a partition, so every
+    * row of arrival b precedes every row of b+1 in `ts`. A range with
+    * no rows stages an empty arrival.
+    */
+  private def ranged(ev: DataFrame): DataFrame =
+    ev.repartitionByRange(3, col("ts")).withColumn("_b", spark_partition_id())
+
+  /** The two flush sentinels as arrivals 3 and 4: the watermark a
+    * batch runs with comes from the PREVIOUS batch's max event time,
+    * so the first sentinel advances it and the second triggers the
+    * batch that actually emits the flushed windows.
+    */
+  private def sentinels(ev: DataFrame): DataFrame = {
+    val spark = ev.sparkSession
     import spark.implicits._
-    val base = baseEventsFile(spark, dir)
-    val ev = spark.read.schema(eventsRawSchema).parquet(base.toString)
     // max over ZERO rows is null — getLong would throw a bare NPE
     // mid-staging; an empty events table gets a readable error
     val maxRow = ev.agg(max(col("ts"))).head()
@@ -229,95 +211,31 @@ object Streams {
       "cannot stage flush sentinels: events table is empty " +
         "(no max event time to advance the watermark past)")
     val maxTs = maxRow.getLong(0)
-    val sentTmp = scratch("graft-stream-sent").resolve("d").toString
     Seq(10L, 20L).zipWithIndex.map { case (days, i) =>
       (-1L - i, maxTs + days * 86400L * 1000000L, -1L, "sentinel",
-        0.0, null.asInstanceOf[String])
-    }
-      .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-      .repartitionByRange(2, col("ts"))
-      .write.parquet(sentTmp)
-    val parts = new java.io.File(sentTmp).listFiles()
-      .filter(_.getName.startsWith("part-")).sortBy(_.getName)
-    // the two sentinels MUST occupy two files (two triggers:
-    // advance, then flush) — fail loudly if the range split ever
-    // collapses them
-    require(parts.length == 2,
-      s"sentinel staging wrote ${parts.length} part files, need 2")
-    parts.zipWithIndex.foreach { case (part, i) =>
-      val dst = out.resolve(s"zzz-sentinel$i.parquet")
-      Files.copy(part.toPath, dst)
-      Files.setLastModifiedTime(dst,
-        java.nio.file.attribute.FileTime.fromMillis(
-          1700000000000L + (990 + i) * 60000L))
-    }
+        0.0, null.asInstanceOf[String], 3 + i)
+    }.toDF("event_id", "ts", "user_id", "event_type", "value", "props", "_b")
   }
 
-  /** Streaming read of the events table (micro-batched file source).
-    * The file source requires a directory, so the parquet data is
-    * staged into a temp dir (in production the landing zone IS a
-    * directory that micro-batches arrive into).
-    *
-    * With `batches > 1` the events are split into that many
-    * ts-range-ordered files (via `repartitionByRange`, so part-file
-    * index == time order) staged with strictly increasing modification
-    * times: the file source then replays them as time-ordered
-    * micro-batches, which means the event-time watermark genuinely
+  /** Streaming read of the events table (micro-batched file source)
+    * over a persisted landing zone ([[zone]]) of three time-ordered
+    * arrivals ([[ranged]]): the file source replays them as
+    * time-ordered micro-batches, so the event-time watermark genuinely
     * advances between batches and evicts closed-window state — the
     * shape a production landing zone has.
     *
-    * With `flushSentinel` the landing zone gets one final single-row
-    * micro-batch far in event-time future (user_id = -1; filter it
-    * from results): its only job is to advance the watermark past
-    * every open window so append-mode aggregations flush their
-    * trailing state — the finite-replay analogue of the stream
-    * staying live past the last real event.
-    *
-    * With `duplicated` the whole events file is staged TWICE (two
-    * micro-batches of identical content): the at-least-once delivery
-    * shape whose duplicates a streaming `dropDuplicates` must absorb
-    * through its keyed state.
-    *
-    * The reader takes one file per trigger, so trigger boundaries
-    * align with arrivals (and the two sentinels land in separate
-    * triggers: advance, then flush).
+    * With `flushSentinel` the zone gets two more arrivals, single
+    * rows far in event-time future (user_id = -1; filter them from
+    * results): their only job is to advance the watermark past every
+    * open window so append-mode aggregations flush their trailing
+    * state — the finite-replay analogue of the stream staying live
+    * past the last real event.
     */
-  def eventsStream(spark: SparkSession, dir: String, batches: Int = 1,
-      flushSentinel: Boolean = false, duplicated: Boolean = false): DataFrame = {
-    // The sentinel config DERIVES from the sentinel-free landing zone
-    // (r22, VERDICT r21 #3): the plain (dir, batches)
-    // zone is what every update-mode stream shares, so its range-split
-    // job runs once per process; the sentinel consumer copies those
-    // arrival files verbatim driver-side (names + mtimes preserved, no
-    // Spark job) and appends its two sentinel batches. Was: a fully
-    // redundant second range split for the one sentinel config
-    // (1.13 s of the graft.Bench `streaming_sessionize` row).
-    val staged = memoStage(stagedDirs,
-        (dir, batches, flushSentinel, duplicated)) {
-      if (!flushSentinel) stagePlain(spark, dir, batches, duplicated)
-      else {
-        val plain = java.nio.file.Paths.get(memoStage(stagedDirs,
-          (dir, batches, false, duplicated)) {
-          stagePlain(spark, dir, batches, duplicated)
-        })
-        val out = scratch("graft-stream-src")
-        new java.io.File(plain.toString).listFiles()
-          .filter(_.getName.endsWith(".parquet")).foreach { f =>
-            val dst = out.resolve(f.getName)
-            Files.copy(f.toPath, dst)
-            Files.setLastModifiedTime(dst,
-              java.nio.file.attribute.FileTime.fromMillis(f.lastModified()))
-          }
-        addSentinels(spark, dir, out)
-        out.toString
-      }
-    }
-    spark.readStream
-      .schema(eventsRawSchema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(staged.toString)
-      .withColumn("ts", expr("timestamp_micros(ts)"))
-  }
+  def eventsStream(spark: SparkSession, dir: String,
+      flushSentinel: Boolean = false): DataFrame =
+    if (!flushSentinel) replayEvents(spark, dir, "ranged", 3)(ranged)
+    else replayEvents(spark, dir, "ranged+sentinels", 5)(ev =>
+      ranged(ev).unionByName(sentinels(ev)))
 
   /** Production sink shape: the stream runs in append/update mode
     * through `foreachBatch` into the idempotent keyed merge
@@ -404,7 +322,7 @@ object Streams {
     * newest version per (user_id, day).
     */
   def dailyMetrics(spark: SparkSession, dir: String): DataFrame = {
-    val agg = eventsStream(spark, dir, batches = 3)
+    val agg = eventsStream(spark, dir)
       .withWatermark("ts", "1 day")
       .groupBy(col("user_id"), window(col("ts"), "1 day"))
       .agg(
@@ -437,7 +355,7 @@ object Streams {
     * parquet changelog; nothing driver-resident, state ∝ open sessions.
     */
   def sessionWindows(spark: SparkSession, dir: String, gap: String = "30 minutes"): DataFrame = {
-    val agg = eventsStream(spark, dir, batches = 3, flushSentinel = true)
+    val agg = eventsStream(spark, dir, flushSentinel = true)
       .withWatermark("ts", gap)
       .groupBy(col("user_id"), session_window(col("ts"), gap))
       .agg(count(lit(1)).as("n_events"),
@@ -468,10 +386,15 @@ object Streams {
     * passes its first-seen event time + delay, which is exactly the
     * at-least-once redelivery bound (a collector retry lands within
     * its delivery window, not a day later).
+    *
+    * The zone holds the whole events log TWICE (two arrivals of
+    * identical content): the at-least-once delivery shape whose
+    * duplicates the keyed dedup state must absorb.
     */
-  def dedupToMergeSink(spark: SparkSession, dir: String, targetDir: String,
-      duplicated: Boolean = false): DataFrame = {
-    val deduped = eventsStream(spark, dir, duplicated = duplicated)
+  def dedupToMergeSink(spark: SparkSession, dir: String,
+      targetDir: String): DataFrame = {
+    val deduped = replayEvents(spark, dir, "twice", 2)(
+        _.withColumn("_b", explode(array(lit(0), lit(1)))).repartition(col("_b")))
       .withWatermark("ts", "1 day")
       .dropDuplicatesWithinWatermark("event_id")
     runToMergeSink(deduped, "append", targetDir,
@@ -479,49 +402,29 @@ object Streams {
     spark.read.parquet(targetDir)
   }
 
-  /** Staged document landing zones, keyed by (source dir, batches) —
-    * same memoization rationale as [[stagedDirs]].
+  /** The persisted landing zone ([[zone]]) of the documents table in
+    * `batches` arrivals, arrival b holding exactly the docs with
+    * `doc_id % batches == b`: a mod split, not a range split, so an
+    * oracle can name each batch's membership (a range split's sampled
+    * boundaries it cannot replay). ShardStagingPropertySpec pins the
+    * replay invariant.
     */
-  private val stagedDocDirs =
-    new java.util.concurrent.ConcurrentHashMap[(String, Int), String]()
+  private[graft] def documentsZone(spark: SparkSession, dir: String,
+      batches: Int): String =
+    zone(spark, Seq("documents-mod", batches.toString),
+        s"$dir/documents.parquet", batches) {
+      graft.Tables.documents(spark, dir)
+        .withColumn("_b", pmod(col("doc_id"), lit(batches)))
+        .repartition(col("_b"))
+    }
 
-  /** Streaming read of the documents table, split into `batches`
-    * doc_id-range micro-batch files (the staging discipline of
-    * [[eventsStream]]: part-file index == arrival order via strictly
-    * increasing modification times).
+  /** Streaming read of the documents table in `batches` arrivals
+    * ([[documentsZone]]).
     */
   def documentsStream(spark: SparkSession, dir: String,
-      batches: Int): DataFrame = {
-    val staged = memoStage(stagedDocDirs, (dir, batches)) {
-      val out = scratch("graft-doc-src")
-      val tmp = scratch("graft-doc-split").toString
-      spark.read.parquet(s"$dir/documents.parquet")
-        .repartitionByRange(batches, col("doc_id"))
-        .write.mode("overwrite").parquet(tmp)
-      val parts = new java.io.File(tmp).listFiles()
-        .filter(_.getName.startsWith("part-")).sortBy(_.getName)
-      parts.zipWithIndex.foreach { case (f, i) =>
-        val dst = out.resolve(f"b$i%03d.parquet")
-        Files.copy(f.toPath, dst)
-        Files.setLastModifiedTime(dst,
-          java.nio.file.attribute.FileTime.fromMillis(
-            1700000000000L + i * 60000L))
-      }
-      out.toString
-    }
-    spark.readStream
-      .schema(spark.read.parquet(s"$dir/documents.parquet").schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(staged)
-  }
-
-  /** Deterministic mod-split staging for the shard-append stream: the
-    * oracle must be able to name each batch's membership, so batch b =
-    * documents with `doc_id % batches == b` (not a range split, whose
-    * sampled boundaries an oracle cannot replay).
-    */
-  private val stagedModDirs =
-    new java.util.concurrent.ConcurrentHashMap[(String, Int), String]()
+      batches: Int): DataFrame =
+    replay(spark, documentsZone(spark, dir, batches),
+      graft.Tables.documents(spark, dir).schema)
 
   /** The shard-append sink's per-batch apply — exposed so the replay
     * spec can drive it directly. Deterministic in (batch content, id,
@@ -619,75 +522,6 @@ object Streams {
     finally out.close()
   }
 
-  /** Build (or re-attach to) the persisted mod-arrival landing zone for
-    * (`dir`, `batches`): `batches` mtime-ordered single-file parquet
-    * arrivals, file b holding exactly the docs with doc_id % batches
-    * == b (a zero-row file for an empty residue). The artifact is a
-    * pure function of the corpus bytes and the batch rule, so it is
-    * published under a corpus-signature key and every attaching
-    * process replays the identical arrival sequence
-    * (ShardStagingPropertySpec pins this invariant).
-    */
-  private[graft] def stageShardArrivals(spark: SparkSession, dir: String,
-      batches: Int): String =
-    graft.operators.Persisted.ensure(spark, "graft-shard-src",
-      graft.operators.Persisted.signature(spark,
-        Seq("mod-arrival", batches.toString),
-        Seq(s"$dir/documents.parquet"))) { staging =>
-      // This build block manipulates the staging dir with java.nio
-      // (mtime stamping below — arrival order for maxFilesPerTrigger),
-      // which only works on a LOCAL artifact root. Persisted.ensure's
-      // contract allows hdfs/s3a roots; fail loud here instead of
-      // letting Paths.get throw a bare provider error mid-staging.
-      val scheme = new org.apache.hadoop.fs.Path(staging).toUri.getScheme
-      require(scheme == null || scheme == "file",
-        s"shardAppendStream stages its landing zone with local NIO file " +
-          s"ops (mtime-ordered arrivals) but spark.graft.persisted.root " +
-          s"resolves to scheme '$scheme' ($staging); use a file: root " +
-          "for this operator or stage the landing zone elsewhere")
-      val out = java.nio.file.Paths.get(staging.stripPrefix("file:"))
-      // ONE scan+write job stages every batch (was one full documents
-      // scan + coalesce(1) per batch): each _b value lives entirely in
-      // one shuffle partition after repartition(col), so partitionBy
-      // writes exactly one part file per batch dir, with _b dropped
-      // from the data schema
-      val tmp = scratch("graft-shard-split").toString
-      graft.Tables.documents(spark, dir)
-        .withColumn("_b", pmod(col("doc_id"), lit(batches)))
-        .repartition(col("_b"))
-        .write.mode("overwrite").partitionBy("_b").parquet(tmp)
-      (0 until batches).foreach { b =>
-        // listFiles() is null (not empty) for a missing dir — an EMPTY
-        // batch (a pmod residue with no doc_ids) gets no partition dir
-        // from partitionBy, where the old per-batch writer emitted a
-        // zero-row parquet; recover that batch by writing a zero-row
-        // frame WITH the staged schema (the pmod proved the residue
-        // empty — re-scanning the corpus per empty batch, as the first
-        // version of this path did, buys nothing and hides a full scan
-        // inside a recovery loop)
-        val bdir = new java.io.File(s"$tmp/_b=$b")
-        if (!bdir.exists()) {
-          spark.createDataFrame(
-              java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-              graft.Tables.documents(spark, dir).schema)
-            .repartition(1).write.mode("overwrite")
-            .parquet(bdir.getPath)
-        }
-        val parts = bdir.listFiles()
-          .filter(_.getName.startsWith("part-"))
-        require(parts.length == 1,
-          s"shard staging wrote ${parts.length} files for batch $b")
-        val dst = out.resolve(f"b$b%03d.parquet")
-        Files.copy(parts.head.toPath, dst)
-        // fixed mtimes: maxFilesPerTrigger orders batches by mtime,
-        // and the persisted artifact must replay identically in every
-        // attaching process
-        Files.setLastModifiedTime(dst,
-          java.nio.file.attribute.FileTime.fromMillis(
-            1700000000000L + b * 60000L))
-      }
-    }
-
   /** Incremental training-shard building on streaming arrival — the
     * production path for a corpus that keeps growing: you do NOT
     * re-shuffle 100 TB when a new crawl lands; each arriving batch is
@@ -718,24 +552,14 @@ object Streams {
   def shardAppendStream(spark: SparkSession, dir: String,
       batches: Int = 3, docsPerShard: Int = 100,
       seed: String = "e0"): DataFrame = {
-    // cross-PROCESS staging reuse (the join_bucketed / medallion-base
-    // discipline, r14): the staged arrival files are a pure function
-    // of the corpus bytes and the batch rule (doc_id % batches), so
-    // they persist under a corpus-signature key — only the first
-    // process after a corpus change pays the scan + partitioned write;
-    // every later process re-attaches. The streamed work itself (the
-    // checkpointed micro-batches, the shard writes, the read-back) is
-    // NOT persisted — every call still runs the real stream.
-    val staged = memoStage(stagedModDirs, (dir, batches)) {
-      stageShardArrivals(spark, dir, batches)
-    }
+    // the arrivals come from the persisted mod-split zone
+    // ([[documentsZone]]); the streamed work itself (the checkpointed
+    // micro-batches, the shard writes, the read-back) is NOT persisted
+    // — every call still runs the real stream
     val root = scratch("graft-shard-append").toString
     val data = s"$root/data"
     val counts = s"$root/counts"
-    val arriving = spark.readStream
-      .schema(graft.Tables.documents(spark, dir).schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(staged)
+    val arriving = documentsStream(spark, dir, batches)
     // batch-sized shuffles (see lshDedupIncremental's sizing note)
     runDrained(spark, ShufflePartitions -> "8") {
       arriving.writeStream
@@ -761,7 +585,7 @@ object Streams {
 
   /** Incremental corpus dedup as a stream — the arrival path of the
     * persisted-LSH-index lifecycle: the already-deduped corpus is
-    * signed ONCE into a versioned `(band_idx, band_key, c_id)` posting
+    * signed ONCE into a persisted `(band_idx, band_key, c_id)` posting
     * index; new documents then arrive as micro-batches and each batch
     * probes the index via [[graft.ext.Dedup.lshIndexProbe]] (signing
     * only itself, re-reading corpus text candidate-bounded), appending
@@ -776,9 +600,9 @@ object Streams {
     val corpus = docs.filter(col("doc_id") % 5 =!= 0)
     // The corpus-sized signing pass is the index BUILD, paid once per
     // corpus version — not an arrival-path cost. In production the
-    // persisted index exists before the stream starts; here it is
-    // memoized per source dir inside Dedup (shared with the one-shot
-    // `dedup_lsh_index`, which constructs the identical index), so
+    // persisted index exists before the stream starts; here it is a
+    // [[Persisted]] artifact shared with the one-shot
+    // `dedup_lsh_index` (which constructs the identical index), so
     // only the micro-batch probe loop below is the arrival path.
     val idx = graft.ext.Dedup.persistedLshIndex(spark, dir, corpus,
       "doc_id", "text")
@@ -842,7 +666,7 @@ object Streams {
     */
   def cdcToMergeSink(spark: SparkSession, dir: String): DataFrame = {
     val log = scratch("graft-cdc").resolve("t").toString
-    val changes = eventsStream(spark, dir, batches = 3)
+    val changes = eventsStream(spark, dir)
       .select(col("user_id").as("k"), col("event_id"),
         when(col("event_type") === "purchase", lit("D")).otherwise(lit("U"))
           .as("op"),
@@ -874,7 +698,7 @@ object Streams {
     * final; compaction keys on the pair id); nothing driver-resident.
     */
   def purchasesAfterSignups(spark: SparkSession, dir: String): DataFrame = {
-    val base = eventsStream(spark, dir, batches = 3)
+    val base = eventsStream(spark, dir)
     val purchases = base.filter(col("event_type") === "purchase")
       .select(col("event_id").as("p_id"), col("user_id"), col("ts").as("p_ts"))
       .withWatermark("p_ts", "1 hour")
@@ -918,7 +742,7 @@ object Streams {
         .agg(count(lit(1)).as("n_events"), sum(col("cents")).as("value_cents")))
     val ckpt = scratch("graft-ckpt").toString
     runDrained(spark, ShufflePartitions -> "4") {
-      eventsStream(spark, dir, batches = 3).writeStream
+      eventsStream(spark, dir).writeStream
         .outputMode("append")
         .option("checkpointLocation", ckpt)
         .foreachBatch { (batch: DataFrame, id: Long) =>
@@ -952,7 +776,7 @@ object Streams {
   def enrichWithDim(spark: SparkSession, dir: String): DataFrame = {
     val dim = spark.read.parquet(s"$dir/customer.parquet")
       .select(col("c_custkey"), col("c_mktsegment"))
-    val enriched = eventsStream(spark, dir, batches = 3)
+    val enriched = eventsStream(spark, dir)
       .filter(col("event_type") === "purchase")
       .join(broadcast(dim), col("user_id") === col("c_custkey"), "left")
       .select(col("event_id"), col("user_id"), col("c_mktsegment"),
@@ -984,7 +808,7 @@ object Streams {
     */
   def latestPerKey(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val evs: Dataset[Ev] = eventsStream(spark, dir, batches = 3)
+    val evs: Dataset[Ev] = eventsStream(spark, dir)
       .select("event_id", "ts", "user_id", "event_type", "value").as[Ev]
 
     val newer: (Ev, Ev) => Ev = EvOrder.newer
@@ -1014,7 +838,7 @@ object Streams {
     */
   def latestPerKeyTws(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val evs: Dataset[Ev] = eventsStream(spark, dir, batches = 3)
+    val evs: Dataset[Ev] = eventsStream(spark, dir)
       .select("event_id", "ts", "user_id", "event_type", "value").as[Ev]
     val updates = evs
       .groupByKey(_.user_id)

@@ -169,7 +169,7 @@ class PipelineSpec extends SparkSpec {
       .filter(to_date(col("ts")) === lit("2024-01-20").cast("date"))
       .join(landed.groupBy("user_id").agg(max(col("ts")).as("latest")), "user_id")
       .filter(col("ts") < col("latest"))
-      .orderBy("ts").limit(1).select(landed.columns.map(col): _*)
+      .orderBy("ts").limit(1).select(landed.columns.toSeq.map(col): _*)
     assert(moved.count() === 1)
     // re-emitted later that day under a user no other event has: stg's
     // (day, event_id) key keeps only the correction

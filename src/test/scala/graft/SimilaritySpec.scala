@@ -1,8 +1,10 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.PlanDsl.{column, expression}
 
 import graft.ext.{Dedup, Similarity, SignLsh}
+import graft.plans.{CosinePairs, EditPairs}
 import graft.ref.{DedupRef, SignLshRef}
 
 /** ANN contracts: brute force is sane (no self-matches, scores in
@@ -22,13 +24,15 @@ class SimilaritySpec extends SparkSpec {
     val tw = DedupRef.embeddingNearDupsJoined(emb, "vec_id", "embedding",
       blockCol = "label", minCosine = 0.3)
     assert(nd.exceptAll(tw).isEmpty && tw.exceptAll(nd).isEmpty)
-    spark.conf.set("spark.graft.pairs.salts", "3")
-    try {
-      val nd3 = Dedup.embeddingNearDups(emb, "vec_id", "embedding",
-        blockCol = "label", minCosine = 0.3)
-      assert(nd3.exceptAll(tw).isEmpty && tw.exceptAll(nd3).isEmpty,
-        "the pair set must be salt-count invariant")
-    } finally spark.conf.unset("spark.graft.pairs.salts")
+    val unit = graft.functions.Vectors.unitized(emb, "embedding",
+      "vec_id" -> "vec_id", "label" -> "label")
+    val nd3 = Dedup.saltedGroups(unit, "vec_id", "label", "_uv", "v", salts = 3)
+      .select(col("label"), explode(column(CosinePairs(expression(col("_a")),
+        expression(col("_b")), expression(col("_i") === col("_j")), 0.3))).as("p"))
+      .select(col("label"), col("p.id_a").as("id_a"), col("p.id_b").as("id_b"),
+        col("p.cosine").as("cosine"))
+    assert(nd3.exceptAll(tw).isEmpty && tw.exceptAll(nd3).isEmpty,
+      "the pair set must be salt-count invariant")
   }
 
   test("fuzzy near-dups: salted grouped edit kernel equals the blocked self-join") {
@@ -44,13 +48,15 @@ class SimilaritySpec extends SparkSpec {
     val tw = DedupRef.fuzzyPairsJoined(docs, "doc_id", "text",
       blockCol = "source", prefixLen = 40, maxDist = 12)
     assert(nd.exceptAll(tw).isEmpty && tw.exceptAll(nd).isEmpty)
-    spark.conf.set("spark.graft.pairs.salts", "3")
-    try {
-      val nd3 = Dedup.fuzzyPairsBlocked(docs, "doc_id", "text",
-        blockCol = "source", prefixLen = 40, maxDist = 12)
-      assert(nd3.exceptAll(tw).isEmpty && tw.exceptAll(nd3).isEmpty,
-        "the pair set must be salt-count invariant")
-    } finally spark.conf.unset("spark.graft.pairs.salts")
+    val prefixes = docs.select(col("source"), col("doc_id"),
+      substring(col("text"), 1, 40).as("_p"))
+    val nd3 = Dedup.saltedGroups(prefixes, "doc_id", "source", "_p", "p", salts = 3)
+      .select(explode(column(EditPairs(expression(col("_a")),
+        expression(col("_b")), expression(col("_i") === col("_j")), 12))).as("e"))
+      .select(col("e.id_a").as("id_a"), col("e.id_b").as("id_b"),
+        col("e.edit_dist").as("edit_dist"))
+    assert(nd3.exceptAll(tw).isEmpty && tw.exceptAll(nd3).isEmpty,
+      "the pair set must be salt-count invariant")
   }
 
   test("fuzzy kernel: ASCII banded DP is bit-parity with Spark's levenshtein across random strings") {

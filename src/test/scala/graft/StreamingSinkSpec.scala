@@ -67,7 +67,7 @@ class StreamingSinkSpec extends SparkSpec {
     // here side by side via the state-store operator metrics.
     def finalStateRows(dedup: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame): Long = {
       val ckpt = PlanDsl.tempDir("graft-dedup-state").toString
-      val src = Streams.eventsStream(spark, sf, batches = 3)
+      val src = Streams.eventsStream(spark, sf)
         .withWatermark("ts", "1 day")
       val q = dedup(src).writeStream
         .outputMode("append")
@@ -100,7 +100,7 @@ class StreamingSinkSpec extends SparkSpec {
     val ckpt = PlanDsl.tempDir("graft-crash-ckpt").toString
     val target = PlanDsl.tempDir("graft-crash").resolve("t").toString
     def run(crashAtBatch: Option[Long]) = {
-      val ev = Streams.eventsStream(spark, sf, batches = 3)
+      val ev = Streams.eventsStream(spark, sf)
         .select("user_id", "ts", "event_id", "event_type", "value")
       ev.writeStream
         .outputMode("append")

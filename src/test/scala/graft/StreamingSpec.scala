@@ -1,5 +1,7 @@
 package graft
 
+import java.nio.file.{Files, Path}
+
 import org.apache.spark.sql.graft.PlanDsl
 
 import graft.queries.ParityQueries
@@ -52,17 +54,54 @@ class StreamingSpec extends SparkSpec {
       }
       tmp
     }
-    for (flavor <- Seq("nanos", "micros")) {
-      val dir = fixture(flavor)
-      // the batch loader recovers identical instants from the fixture
-      val batchEv = Tables.events(spark, dir)
-      assert(batchEv.exceptAll(real).isEmpty && real.exceptAll(batchEv).isEmpty,
-        s"$flavor: Tables.events must recover the original instants")
-      // and the STREAMING staging path agrees with batch on the same dir
-      val stream = Streams.dailyMetrics(spark, dir)
-      val batch = ParityQueries.dailyMetrics(spark, dir)
-      assert(stream.exceptAll(batch).isEmpty && batch.exceptAll(stream).isEmpty,
-        s"$flavor: staged stream must equal batch")
+    // the fixtures are per run, so their landing zones are too: they
+    // go to a spec-scoped artifact root, deleted with the JVM
+    withRoot { _ =>
+      for (flavor <- Seq("nanos", "micros")) {
+        val dir = fixture(flavor)
+        // the batch loader recovers identical instants from the fixture
+        val batchEv = Tables.events(spark, dir)
+        assert(batchEv.exceptAll(real).isEmpty && real.exceptAll(batchEv).isEmpty,
+          s"$flavor: Tables.events must recover the original instants")
+        // and the STREAMING staging path agrees with batch on the same dir
+        val stream = Streams.dailyMetrics(spark, dir)
+        val batch = ParityQueries.dailyMetrics(spark, dir)
+        assert(stream.exceptAll(batch).isEmpty && batch.exceptAll(stream).isEmpty,
+          s"$flavor: staged stream must equal batch")
+      }
     }
+  }
+
+  test("a landing zone is built once per root, however many streams replay it") {
+    withRoot { root =>
+      import scala.jdk.CollectionConverters._
+      def zones() = Files.list(root).iterator.asScala.toSeq
+        .filter(d => d.getFileName.toString.startsWith("graft-stream-src-") &&
+          Files.exists(d.resolve("_DONE")))
+      // two streams over the same zone in one process
+      val first = Streams.latestPerKey(spark, sf).collect()
+      val second = Streams.dailyMetrics(spark, sf)
+      assert(zones().size === 1)
+      // nothing in the process remembers the zone: this call finds it
+      // by the artifact glob alone, as a fresh process would
+      assert(Streams.latestPerKey(spark, sf).collect().toSeq === first.toSeq)
+      assert(second.count() > 0)
+      assert(zones().size === 1)
+      // the zone holds its arrivals and Persisted's markers, nothing else
+      val names = Files.list(zones().head).iterator.asScala
+        .map(_.getFileName.toString).toSeq
+      assert(names.filterNot(n => n.matches("""b\d{3}\.parquet""") ||
+        n.startsWith("_") || n.startsWith("._")).isEmpty, names)
+      assert(names.count(_.endsWith(".parquet")) === 3, names)
+    }
+  }
+
+  /** Run `f` with the persisted artifact root at a fresh temp dir. */
+  private def withRoot[A](f: Path => A): A = {
+    val key = "spark.graft.persisted.root"
+    val saved = spark.conf.getOption(key)
+    val root = PlanDsl.tempDir("graft-stream-root")
+    spark.conf.set(key, s"file:$root")
+    try f(root) finally saved.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.graft.PlanDsl
 
 import graft.operators.Versioned
 
-/** Versioned table: time-travel reads, pointer fallback, vacuum. */
+/** Versioned table: time-travel reads, pointer fallback. */
 class VersionedSpec extends SparkSpec {
 
   private def tmp(): String =
@@ -39,32 +39,6 @@ class VersionedSpec extends SparkSpec {
     intercept[java.util.NoSuchElementException] {
       Versioned.read(spark, dir, Some(3L))
     }
-  }
-
-  test("vacuum drops old and incomplete versions but never the live one") {
-    import spark.implicits._
-    val dir = tmp()
-    (1 to 4).foreach(i => Versioned.write(spark, dir, Seq(i).toDF("x")))
-    val junk = new java.io.File(dir, "_versions/v=99") // crashed write
-    assert(junk.mkdirs())
-    Versioned.vacuum(spark, dir, keep = 2, graceMs = 0L)
-    assert(Versioned.versions(spark, dir) === Seq(3L, 4L))
-    assert(!junk.exists())
-    assert(Versioned.read(spark, dir).head().getInt(0) === 4)
-    intercept[java.util.NoSuchElementException] {
-      Versioned.read(spark, dir, Some(1L))
-    }
-  }
-
-  test("vacuum leaves a young incomplete dir alone (commit may be in flight)") {
-    import spark.implicits._
-    val dir = tmp()
-    Versioned.write(spark, dir, Seq(1).toDF("x"))
-    val inflight = new java.io.File(dir, "_versions/v=2") // being written NOW
-    assert(inflight.mkdirs())
-    Versioned.vacuum(spark, dir, keep = 1) // default multi-hour grace
-    assert(inflight.exists())
-    assert(Versioned.versions(spark, dir) === Seq(1L))
   }
 
   test("dangling pointer falls back to newest complete snapshot") {
